@@ -18,7 +18,10 @@ tenths of them and the medians differ by more than the base's own
 interquartile range; a regression is a change median worse than the
 base median by more than the metric's bound in ``BENCHMARK.json``; a
 base spread wider than the bound leaves the metric unresolved unless
-every change run beats every base run.
+every change run beats every base run.  Each workload's failed
+operations (``ok=false`` rows plus failed Spark tasks, the result's
+``failed``) are totalled on both sides; where the change fails more than
+the base, no gain on that workload is claimed.
 """
 
 from __future__ import annotations
@@ -123,10 +126,22 @@ def main(argv: list[str] | None = None) -> int:
 
     report = {}
     for w in workloads:
+        failed = {side: sum(r["failed"] for r in results[(w, side)])
+                  for side in ("base", "change")}
+        attempted = {side: sum(r["attempted"] for r in results[(w, side)])
+                     for side in ("base", "change")}
+        more_failures = failed["change"] > failed["base"]
+        report[f"{w}/failed"] = {"failed": failed, "attempted": attempted,
+                                 "change_fails_more": more_failures}
+        print(f"{w:14s} failed           base {failed['base']} of {attempted['base']}  "
+              f"change {failed['change']} of {attempted['change']}"
+              + ("  change fails more: no gain claimed" if more_failures else ""))
         for m in spec["end_to_end"]:
             base = [r["metrics"][m["name"]]["value"] for r in results[(w, "base")]]
             change = [r["metrics"][m["name"]]["value"] for r in results[(w, "change")]]
             v = verdict(base, change, m["better"], m["bound"])
+            if more_failures and v["verdict"] == "gain":
+                v["verdict"] = "no gain: change fails more"
             report[f"{w}/{m['name']}"] = v
             print(f"{w:14s} {m['name']:16s} base {v['base_q'][1]:12.4f} "
                   f"[{v['base_q'][0]:.4f}, {v['base_q'][2]:.4f}]  change "

@@ -30,8 +30,8 @@ import statistics
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-__all__ = ["WORKLOAD_CORPUS", "pages_path", "read_sample", "stats", "urls",
-           "sample_urls"]
+__all__ = ["WORKLOAD_CORPUS", "WARMUP_CORPUS", "pages_path", "warmup_path",
+           "read_sample", "stats", "urls", "sample_urls"]
 
 VOCAB = ("spark", "window", "merge", "table", "column", "vector", "stream",
          "value", "data", "small", "join", "filter", "big", "group", "hash",
@@ -223,9 +223,12 @@ WORKLOAD_CORPUS = {
     # workload -> (generator, kwargs)
     "template_1k": ("template", {"repeat": 2}),
     "crawl_mix": ("crawl_mix", {"n_docs": 1_000}),
-    "commit_groups": ("template", {"repeat": 1, "n_docs": 2_500}),
-    # the fixed, seed-independent table every session warms up on
-    "warmup": ("template", {"repeat": 1, "n_docs": 400}),
+}
+# each workload's small, fixed, seed-independent table that the session
+# set-up warms the Python workers on
+WARMUP_CORPUS = {
+    "template_1k": ("template", {"repeat": 1, "n_docs": 400}),
+    "crawl_mix": ("crawl_mix", {"n_docs": 100}),
 }
 MAX_CACHED = 16  # tables kept in the cache; the least recently used go
 
@@ -237,7 +240,15 @@ def _rows(kind: str, seed: int, **kw) -> list[tuple]:
 def pages_path(cache_dir: str, workload: str, seed: int) -> str:
     """Directory of the workload's pages table for ``seed``, generating
     and caching it on first use."""
-    kind, kw = WORKLOAD_CORPUS[workload]
+    return _table(cache_dir, *WORKLOAD_CORPUS[workload], seed)
+
+
+def warmup_path(cache_dir: str, workload: str) -> str:
+    """Directory of the workload's warm-up table (the same for every seed)."""
+    return _table(cache_dir, *WARMUP_CORPUS[workload], 0)
+
+
+def _table(cache_dir: str, kind: str, kw: dict, seed: int) -> str:
     tag = "_".join([kind, f"v{GENERATOR_VERSION}", f"s{seed}"]
                    + [f"{k}{v}" for k, v in sorted(kw.items())])
     path = os.path.join(cache_dir, tag)

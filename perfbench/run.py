@@ -14,9 +14,6 @@ flight, the next submitted when the previous one returns, for
 * ``crawl_mix``     ``extract_pages`` over 1,000 heavy-tailed crawl-like
                     pages (median 16 KB, 1% ~2 MB, hostile shapes),
                     ``noop`` sink.
-* ``commit_groups`` ``run_job(n_groups=4)`` over 2,500 template pages into
-                    a fresh directory per iteration (runs by hand; not a
-                    ``BENCHMARK.json`` workload, see ``README.md``).
 
 With ``--trace 0`` the last stdout line is the JSON result with the
 end-to-end metrics; with ``--trace 1`` it carries the per-layer metrics of
@@ -24,8 +21,10 @@ a traced run (event log, subtraction ladder, serial stage tracer), whose
 spans and ledger are written under ``.perfbench/trace/``.  Correctness is
 checked after timing: a seeded sample is compared byte for byte with the
 serial ``extract_document``, and an order-independent digest of the whole
-output must repeat for a repeated seed.  The exit code is non-zero on any
-mismatch, and when the program cannot be imported.
+output must repeat for a repeated seed; a traced run also requires the
+serial stage tracer's staged result to equal ``extract_document`` on every
+page it times.  The exit code is non-zero on any mismatch, and when the
+program cannot be imported.
 """
 
 from __future__ import annotations
@@ -44,7 +43,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORK = os.path.join(ROOT, ".perfbench")
 CACHE = os.path.join(WORK, "cache")
 
-WORKLOADS = ("template_1k", "crawl_mix", "commit_groups")
+WORKLOADS = ("template_1k", "crawl_mix")
 SETUP_REPS = 3
 LADDER_REPS = 3
 N_GROUPS = 4
@@ -52,6 +51,11 @@ SAMPLE_DOCS = 150
 STAGE_SAMPLE_DOCS = 400
 STAGE_SAMPLE_BYTES = 3_000_000
 TIMED_GROUP = "perfbench-timed"
+# the range each of a traced run's accounting ratios must fall in to read
+# "ok" (the two sides of each are timed separately on a shared host)
+ACCOUNT_RANGE = {"kernel_rung_over_loop_iteration": (0.8, 1.25),
+                 "serial_over_spark_kernel_us": (0.5, 1.5),
+                 "stages_over_extract_document": (0.5, 1.05)}
 
 E2E_UNITS = {"docs_per_s": "1/s", "mb_per_s": "MB/s", "cpu_us_per_doc": "us",
              "rss_peak_mb": "MB", "setup_s": "s"}
@@ -96,7 +100,7 @@ class Bench:
         self.run_id = f"{workload}-s{seed}-{int(time.time())}-{os.getpid()}"
         self.out_root = os.path.join(WORK, "out", self.run_id)
         self.pages_path = corpus.pages_path(CACHE, workload, seed)
-        self.warm_path = corpus.pages_path(CACHE, "warmup", 0)
+        self.warm_path = corpus.warmup_path(CACHE, workload)
         st = corpus.stats(self.pages_path)
         self.n_docs, self.html_mb = st["docs"], st["html_bytes"] / 1e6
         self.scan_mb = st["scan_bytes"] / 1e6
@@ -104,55 +108,41 @@ class Bench:
 
     # -- session -------------------------------------------------------------
 
-    def start(self, reps: int, event_log_dir: str | None = None) -> list[float]:
-        """Start the session ``reps`` times (all but the last are stopped
-        again); return each start's wall including worker warm-up."""
+    def start(self, event_log_dir: str | None = None) -> float:
+        """Stop the current session, if any (the JVM stays up), and start
+        a new one with its Python workers warmed up on the workload's
+        warm-up table; return the wall of the start and warm-up.  The
+        first call also launches the JVM."""
         from perfbench import session
-        walls = []
-        for rep in range(reps):
-            if self.spark is not None:
-                self.spark.stop()  # the JVM stays up for the next session
-            t0 = time.perf_counter()
-            self.spark = session.start(WORK, event_log_dir)
-            session.warm_up(self.spark, self.warm_path,
-                            os.path.join(self.out_root, "warmup"))
-            walls.append(time.perf_counter() - t0)
+        if self.spark is not None:
+            self.spark.stop()
+        t0 = time.perf_counter()
+        self.spark = session.start(WORK, event_log_dir)
+        session.warm_up(self.spark, self.warm_path,
+                        os.path.join(self.out_root, "warmup"))
+        wall = time.perf_counter() - t0
         self.pages = self.spark.read.parquet(self.pages_path)
-        return walls
+        return wall
 
     # -- the timed closed loop -----------------------------------------------
 
-    def once(self, i: int) -> str | None:
-        from lexor_spark.job import extract_pages, run_job
-        if self.workload == "commit_groups":
-            out = os.path.join(self.out_root, f"commit-{i}")
-            run_job(self.spark, self.pages, out, n_groups=N_GROUPS)
-            return out
+    def once(self) -> None:
+        from lexor_spark.job import extract_pages
         extract_pages(self.pages).write.format("noop").mode("overwrite").save()
-        return None
 
     def warm_iteration(self):
-        """One untimed iteration before timing.  Where the timed iterations
-        write to the ``noop`` sink, this one keeps its output (a local
-        checkpoint) for the verification after timing and returns it."""
+        """One untimed iteration before timing.  The timed iterations write
+        to the ``noop`` sink; this one keeps its output (a local checkpoint)
+        for the verification after timing and returns it."""
         from lexor_spark.job import extract_pages
-        if self.workload == "commit_groups":
-            shutil.rmtree(self.once(-1), ignore_errors=True)
-            return None
         return (extract_pages(self.pages).select("url", "text", "ok", "kernel_us")
                 .localCheckpoint())
-
-    def output(self, warm, loop: dict):
-        """The output the verification checks: the warm iteration's, or
-        the files the last timed iteration wrote."""
-        return warm if warm is not None else self.spark.read.parquet(loop["last_out"])
 
     def timed_loop(self, tracer=None) -> dict:
         from perfbench.procsample import TreeSampler
         sc = self.spark.sparkContext
         sc.setLocalProperty("spark.jobGroup.id", TIMED_GROUP)
         walls: list[float] = []
-        last_out = None
         sampler = TreeSampler().start()
         t_start = time.perf_counter()
         while not walls or time.perf_counter() - t_start < self.seconds:
@@ -160,11 +150,8 @@ class Bench:
                     else contextlib.nullcontext())
             with span:
                 t0 = time.perf_counter()
-                out = self.once(len(walls))
+                self.once()
                 walls.append(time.perf_counter() - t0)
-            if last_out:
-                shutil.rmtree(last_out, ignore_errors=True)
-            last_out = out
         sampler.stop()
         failed_tasks = 0
         tracker = sc.statusTracker()
@@ -176,7 +163,7 @@ class Bench:
         sc.setLocalProperty("spark.jobGroup.id", None)
         docs = self.n_docs * len(walls)
         return {
-            "iterations": len(walls), "walls_s": walls, "last_out": last_out,
+            "iterations": len(walls), "walls_s": walls,
             "docs_per_s": median([self.n_docs / w for w in walls]),
             "mb_per_s": median([self.html_mb / w for w in walls]),
             "cpu_us_per_doc": sampler.cpu_s * 1e6 / docs,
@@ -232,18 +219,20 @@ class Bench:
 
     def run_untraced(self) -> tuple[dict, dict]:
         t0 = time.perf_counter()
-        setup = self.start(SETUP_REPS)
+        launch = self.start()
+        setup = [self.start() for _ in range(SETUP_REPS)]
         t1 = time.perf_counter()
         warm = self.warm_iteration()
         t2 = time.perf_counter()
         loop = self.timed_loop()
         t3 = time.perf_counter()
-        check = self.verify(self.output(warm, loop))
+        check = self.verify(warm)
         t4 = time.perf_counter()
         metrics = {k: loop[k] for k in ("docs_per_s", "mb_per_s", "cpu_us_per_doc",
                                         "rss_peak_mb")}
         metrics["setup_s"] = median(setup)
-        detail = {"setup_walls_s": setup, "loop": loop, "verify": check,
+        detail = {"launch_s": launch, "setup_walls_s": setup, "loop": loop,
+                  "verify": check,
                   "phases_s": {"setup": t1 - t0, "warm_iteration": t2 - t1,
                                "timed_loop": t3 - t2, "verify": t4 - t3}}
         return metrics, detail
@@ -256,10 +245,11 @@ class Bench:
         # each loop runs on a restarted session in a JVM that has run the
         # warm-up before, after one untimed iteration, so the two loops
         # differ only in the tracing
-        self.start(2)
+        self.start()
+        self.start()
         self.warm_iteration()
         untraced = self.timed_loop()
-        self.start(1, event_log_dir=log_dir)
+        self.start(event_log_dir=log_dir)
         tracer = ledger.Tracer(self.run_id, self.spark.sparkContext)
         with tracer.span("warm_iteration"):
             warm = self.warm_iteration()
@@ -273,7 +263,7 @@ class Bench:
             run_job(self.spark, self.pages, os.path.join(self.out_root, "commit"),
                     n_groups=N_GROUPS)
         with tracer.span("verify"):
-            check = self.verify(self.output(warm, traced))
+            check = self.verify(warm)
         with tracer.span("serial_stages"):
             import random
             all_urls = corpus.urls(self.pages_path)
@@ -287,6 +277,9 @@ class Bench:
                 docs.append((u, htmls[u]))
                 size += len(htmls[u])
             serial = stages.stage_costs(docs)
+            from pyspark.sql import functions as F
+            spark_kernel_us = warm.filter(F.col("url").isin([u for u, _ in docs])).agg(
+                F.avg("kernel_us")).collect()[0][0]
         self.spark.stop()  # flushes and closes the event log
         self.spark = None
         (log_file,) = [os.path.join(log_dir, n) for n in os.listdir(log_dir)]
@@ -306,22 +299,35 @@ class Bench:
             m[f"kernel.{k}"] = serial[k]
         m["trace.overhead_share"] = 1 - traced["docs_per_s"] / untraced["docs_per_s"]
 
-        ladder_total = sum(m[f"{r}.wall_s"] for r in ledger.RUNGS)
         stage_total = sum(serial[f"{s}_us_per_doc"] for s in stages.STAGES)
+        # each check compares two separately timed measures of the same
+        # work; the layer split holds only where they agree
+        ratios = {
+            # the ladder's kernel rung runs the job the untraced loop times
+            "kernel_rung_over_loop_iteration":
+                median(walls["kernel"]) / median(untraced["walls_s"]),
+            # extract_document on the same pages: serially in this process,
+            # and in the Spark workers (their own ``kernel_us`` column)
+            "serial_over_spark_kernel_us":
+                serial["serial_us_per_doc"] / spark_kernel_us,
+            # the stages, timed one by one, against extract_document whole
+            "stages_over_extract_document": stage_total / serial["serial_us_per_doc"],
+        }
+        accounting = {name: {"ratio": r, "range": ACCOUNT_RANGE[name],
+                             "ok": ACCOUNT_RANGE[name][0] <= r <= ACCOUNT_RANGE[name][1]}
+                      for name, r in ratios.items()}
+        accounting["totals"] = {
+            "kernel_rung_median_s": median(walls["kernel"]),
+            "untraced_iteration_median_s": median(untraced["walls_s"]),
+            "serial_extract_document_us": serial["serial_us_per_doc"],
+            "spark_kernel_us_mean": spark_kernel_us,
+            "serial_stages_us": stage_total,
+        }
         detail = {
             "untraced_loop": untraced, "traced_loop": traced, "verify": check,
             "serial": serial, "ladder_walls_s": walls,
             "ladder_iqr_s": {r: ledger.iqr(w) for r, w in walls.items()},
-            "accounting": {
-                "ladder_increments_sum_s": ladder_total,
-                "sink_rung_median_s": median(walls["sink"]),
-                # the kernel rung is the untraced loop's job on noop workloads
-                "kernel_rung_median_s": median(walls["kernel"]),
-                "untraced_iteration_median_s": median(untraced["walls_s"]),
-                "serial_stages_plus_unattributed_us": stage_total
-                + serial["unattributed_us_per_doc"],
-                "serial_extract_document_us": serial["serial_us_per_doc"],
-            },
+            "accounting": accounting,
             "docs_per_s_untraced": untraced["docs_per_s"],
             "docs_per_s_traced": traced["docs_per_s"],
             "failed_tasks_in_log": log.failed_tasks(),
@@ -363,7 +369,8 @@ def main(argv: list[str] | None = None) -> int:
     check = detail["verify"]
     loop = detail.get("loop") or detail["traced_loop"]
     failed = check["error_rows"] * loop["iterations"] + loop["failed_tasks"]
-    correct = check["output_mismatches"] == 0 and check["digest_repeats"]
+    correct = (check["output_mismatches"] == 0 and check["digest_repeats"]
+               and (not args.trace or detail["serial"]["mismatches"] == 0))
     record = {"run_id": bench.run_id, "workload": args.workload, "seed": args.seed,
               "seconds": args.seconds, "trace": args.trace, "host": host.read(),
               "metrics": metrics, "detail": detail}
@@ -384,7 +391,13 @@ def main(argv: list[str] | None = None) -> int:
     if args.trace:
         print(f"  traced docs/s {detail['docs_per_s_traced']:.1f} vs untraced "
               f"{detail['docs_per_s_untraced']:.1f}; ledger in {detail['trace_dir']}")
-        print(f"  accounting {json.dumps(detail['accounting'])}")
+        print(f"  serial stage mismatches {detail['serial']['mismatches']} "
+              f"(of {detail['serial']['docs']} pages)")
+        for name, a in detail["accounting"].items():
+            if "ratio" in a:
+                print(f"  accounting {name:34s} {a['ratio']:8.3f} "
+                      f"(range {a['range'][0]}-{a['range'][1]}) "
+                      f"{'ok' if a['ok'] else 'OUT OF RANGE'}")
     print(json.dumps({
         "correct": correct, "attempted": loop["docs"], "failed": failed,
         "metrics": {k: {"value": v, "unit": units[k]} for k, v in metrics.items()},

@@ -49,12 +49,12 @@ def start(work: str, event_log_dir: str | None = None):
          .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
          .config("spark.sql.adaptive.enabled", "true")
          .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-         # a fixed, pre-touched heap: no heap-growth phase early in the
-         # run, and the JVM's share of the tree's RSS is the same every run;
-         # no perf-data file, which the JVM would write outside ``work``
+         # the heap may grow to 2 GB as the job needs it, so the tree's
+         # RSS follows the job's memory; no perf-data file, which the JVM
+         # would write outside ``work``
          .config("spark.driver.memory", "2g")
          .config("spark.driver.extraJavaOptions",
-                 f"-Xms2g -XX:+AlwaysPreTouch -XX:-UsePerfData "
+                 f"-XX:-UsePerfData "
                  f"-Djava.io.tmpdir={tmp} -Dderby.system.home={tmp}")
          .config("spark.local.dir", os.path.join(work, "spark-local"))
          .config("spark.sql.warehouse.dir", os.path.join(work, "warehouse"))
