@@ -16,4 +16,10 @@ Plus the large-scale training-data operators a 100 TB pipeline needs
 (``lexor_spark.dedup``, ``lexor_spark.sim``, ``lexor_spark.textfns``).
 """
 
+from lexor_spark import worker_imports
+
 __version__ = "0.1.0"
+
+# Every Python worker that unpickles one of the package's UDFs imports
+# this package, so each worker process installs it once.
+worker_imports.install()

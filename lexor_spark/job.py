@@ -47,7 +47,9 @@ __all__ = [
 ]
 
 # Output schema of the extraction stage (strings here so the schema lives
-# in one greppable place; driver parses it once).
+# in one greppable place; driver parses it once).  ``n_chars_in`` counts
+# the input html in *bytes* (before charset decoding), ``n_chars_out``
+# the output text in characters; the column keeps its historical name.
 OUTPUT_SCHEMA = (
     "url string, text string, "
     "spans array<struct<start:long,end:long,path:string>>, "
@@ -71,7 +73,7 @@ _ARROW_SCHEMA = pa.schema([
     ("truncated", pa.bool_()),
     ("ok", pa.bool_()),
     ("err", pa.string()),
-    ("n_chars_in", pa.int64()),
+    ("n_chars_in", pa.int64()),  # input html bytes, see OUTPUT_SCHEMA
     ("n_chars_out", pa.int64()),
     ("kernel_us", pa.int64()),
 ])
@@ -93,7 +95,11 @@ def _salted_pages(pages: DataFrame, salt_buckets: int,
     (``slots_mult``× slots) hide per-task tail latency: a giant
     document delays one small task, not 1/cores of the corpus —
     measured +30% at local[32] over 2× slots (sweep: 4×≈8×, 16×
-    worse)."""
+    worse).  That sweep was measured while every task also paid
+    ~235 ms of worker CPU re-reading pyspark.zip (removed since by
+    ``lexor_spark.worker_imports``), a per-task cost that weighs on
+    more slots; the sweep after that fix, on a 4-vCPU host, is in
+    BENCH/BASELINE.md."""
     sc = pages.sparkSession.sparkContext
     if partitions is None:
         partitions = sc.defaultParallelism * slots_mult
@@ -138,21 +144,14 @@ def _extract_batches_inner(batches: Iterator[pa.RecordBatch],
 
 
 def _extract_batches_wrapped(width: Optional[int], indent: str,
-                             kernel: Optional[str] = None,
                              style: Optional[str] = None):
     """Batch-UDF factory for the extraction kernel; ``(None, "")`` is
     the default raw-output path (bound once at module level below as
     ``_extract_batches`` — a stable reference, no per-call closure).
 
-    ``kernel`` ('fast'/'object') pins the worker-side kernel choice for
-    interleaved A/B benchmarking; None keeps the module default (the
-    array-backed fast path — byte-identical, differential-pinned).
     ``style`` names a W2 writer-rule registry (`kernel/styles.py`),
     resolved worker-side so only the string crosses the closure."""
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        if kernel is not None:
-            from lexor_spark.kernel import pipeline as _pl
-            _pl.USE_FASTPATH = kernel != "object"
         gc_was_enabled = gc.isenabled()
         gc.disable()
         try:
@@ -170,7 +169,6 @@ def extract_pages(pages: DataFrame, salt_buckets: int = 256,
                   partitions: Optional[int] = None,
                   width: Optional[int] = None,
                   indent: str = "",
-                  kernel: Optional[str] = None,
                   style: Optional[str] = None) -> DataFrame:
     """pages (url, html, ...) → extraction output DataFrame.
 
@@ -180,8 +178,7 @@ def extract_pages(pages: DataFrame, salt_buckets: int = 256,
 
     ``width``/``indent`` switch the writer stage into the W5 wrap/indent
     mode (corpus-scale `lexor FILE to text --width`); defaults produce
-    the byte-pinned raw text of the north rule.  ``kernel`` pins the
-    worker-side kernel ('fast'/'object') for A/B runs.  ``style`` names
+    the byte-pinned raw text of the north rule.  ``style`` names
     a W2 writer-rule registry (`kernel/styles.py` — e.g.
     'training_text': visible link targets, image placeholders, table
     omission markers); the name is validated on the driver so a typo
@@ -190,11 +187,10 @@ def extract_pages(pages: DataFrame, salt_buckets: int = 256,
         from lexor_spark.kernel.styles import style_rules
         style_rules(style)  # driver-side validation
     salted = _salted_pages(pages, salt_buckets, partitions)
-    if width is None and not indent and kernel is None and style is None:
+    if width is None and not indent and style is None:
         return salted.mapInArrow(_extract_batches, OUTPUT_SCHEMA)
-    return salted.mapInArrow(
-        _extract_batches_wrapped(width, indent, kernel, style),
-        OUTPUT_SCHEMA)
+    return salted.mapInArrow(_extract_batches_wrapped(width, indent, style),
+                             OUTPUT_SCHEMA)
 
 
 def partition_metrics(extracted: DataFrame) -> DataFrame:

@@ -511,8 +511,8 @@ def mixture_apply_sql(table: str, weights_sql: str,
                       group_col: str = "source",
                       id_col: str = "doc_id") -> str:
     """DuckDB mirror of :func:`mixture_apply` over a weights SELECT
-    producing (domain, share, weight) — identical rounding ladder and
-    draw."""
+    producing (domain, share, weight) — identical rounding ladder, draw
+    and missing-domain contract (left join, keep_rate 0)."""
     u = _hash_fraction_sql(f"t.{id_col}", "#mix")
     return f"""
 with w as ({weights_sql}),
@@ -528,8 +528,9 @@ rates as (
               else 0.0 end as keep_rate
   from r
 )
-select t.{id_col}, rates.domain, rates.keep_rate
-from {table} t join rates on t.{group_col} = rates.domain
-where {u} < rates.keep_rate
+select t.{id_col}, coalesce(rates.domain, t.{group_col}) as domain,
+       coalesce(rates.keep_rate, 0.0) as keep_rate
+from {table} t left join rates on t.{group_col} = rates.domain
+where {u} < coalesce(rates.keep_rate, 0.0)
 order by t.{id_col}
 """
