@@ -96,7 +96,7 @@ def _salted_pages(pages: DataFrame, salt_buckets: int,
     document delays one small task, not 1/cores of the corpus —
     measured +30% at local[32] over 2× slots (sweep: 4×≈8×, 16×
     worse).  That sweep was measured while every task also paid
-    ~235 ms of worker CPU re-reading pyspark.zip (removed since by
+    160-230 ms of worker CPU re-reading pyspark.zip (removed since by
     ``lexor_spark.worker_imports``), a per-task cost that weighs on
     more slots; the sweep after that fix, on a 4-vCPU host, is in
     BENCH/BASELINE.md."""

@@ -4,9 +4,10 @@ PySpark's Python worker calls ``importlib.invalidate_caches()`` at the
 start of every task (``pyspark.worker_util.setup_spark_files``).  Before
 CPython 3.13, ``zipimport.zipimporter.invalidate_caches`` eagerly
 re-reads its archive's whole central directory, and a reused worker holds
-a dozen importers into ``pyspark.zip`` plus two into the spark-core jar:
-about 235 ms of CPU per task on a 4-vCPU Xeon, against a kernel batch
-that runs in about 1 ms.  CPython 3.13 made the re-read lazy.
+twelve importers into ``pyspark.zip`` and two into the spark-core jar:
+160-230 ms of CPU per task on a 4-vCPU Xeon host, where a task of 625
+template pages otherwise takes about 300 ms.  CPython 3.13 made the
+re-read lazy.
 
 ``install`` (called once when ``lexor_spark`` is imported, so every worker
 that unpickles one of the package's UDFs has it) wraps the method so that
@@ -46,5 +47,6 @@ def _invalidate_caches(self: zipimport.zipimporter) -> None:
 
 
 def install() -> None:
+    """Wrap ``zipimporter.invalidate_caches`` in this process (CPython < 3.13)."""
     if sys.version_info < (3, 13):
         zipimport.zipimporter.invalidate_caches = _invalidate_caches
