@@ -47,9 +47,10 @@ __all__ = [
 ]
 
 # Output schema of the extraction stage (strings here so the schema lives
-# in one greppable place; driver parses it once).  ``n_chars_in`` counts
-# the input html in *bytes* (before charset decoding), ``n_chars_out``
-# the output text in characters; the column keeps its historical name.
+# in one greppable place; driver parses it once).
+# ``n_chars_in`` counts the input html in *bytes* (before charset
+# decoding), ``n_chars_out`` the output text in characters; the column
+# keeps its historical name.
 OUTPUT_SCHEMA = (
     "url string, text string, "
     "spans array<struct<start:long,end:long,path:string>>, "
