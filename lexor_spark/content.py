@@ -26,11 +26,14 @@ exchange every kernel pass shares.
 from __future__ import annotations
 
 import html as _htmllib
-from typing import Iterator, Optional
+from typing import Optional
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+
+from lexor_spark.job import _on_dom, _page_udf, _salted_pages
 
 __all__ = ["extract_tables", "extract_meta", "extract_jsonld",
            "extract_microdata", "extract_rdfa", "extract_outline",
@@ -40,19 +43,13 @@ __all__ = ["extract_tables", "extract_meta", "extract_jsonld",
            "MICRODATA_SCHEMA", "RDFA_SCHEMA", "OUTLINE_SCHEMA",
            "IMAGES_SCHEMA"]
 
-TABLES_SCHEMA = ("url string, table_idx int, row_idx int, col_idx int, "
-                 "is_header boolean, colspan int, rowspan int, cell string")
-
 _TABLES_ARROW = pa.schema([
     ("url", pa.string()), ("table_idx", pa.int32()),
     ("row_idx", pa.int32()), ("col_idx", pa.int32()),
     ("is_header", pa.bool_()), ("colspan", pa.int32()),
     ("rowspan", pa.int32()), ("cell", pa.string()),
 ])
-
-META_SCHEMA = ("url string, title string, description string, "
-               "og_title string, og_description string, og_image string, "
-               "og_type string, twitter_card string")
+TABLES_SCHEMA = from_arrow_schema(_TABLES_ARROW)
 
 _META_ARROW = pa.schema([
     ("url", pa.string()), ("title", pa.string()),
@@ -60,6 +57,7 @@ _META_ARROW = pa.schema([
     ("og_description", pa.string()), ("og_image", pa.string()),
     ("og_type", pa.string()), ("twitter_card", pa.string()),
 ])
+META_SCHEMA = from_arrow_schema(_META_ARROW)
 
 
 def _node_text(el, *, skip_tables: bool = False) -> str:
@@ -122,51 +120,19 @@ def _cells_of(tr) -> list:
     return cells
 
 
-def _tables_batches(batches: Iterator[pa.RecordBatch]
-                    ) -> Iterator[pa.RecordBatch]:
-    import gc
+def _table_cells(url, doc) -> list[tuple]:
+    rows = []
+    for t_idx, table in enumerate(doc.get_nodes_by_name("table")):
+        for r_idx, tr in enumerate(_table_rows(table)):
+            for c_idx, cell in enumerate(_cells_of(tr)):
+                a = cell.attrs or {}
+                rows.append((url, t_idx, r_idx, c_idx, cell.name == "th",
+                             _int_attr(a, "colspan"), _int_attr(a, "rowspan"),
+                             _node_text(cell, skip_tables=True)))
+    return rows
 
-    from lexor_spark.kernel.dom import dispose
-    from lexor_spark.kernel.encoding import decode_html
-    from lexor_spark.kernel.htmlparser import parse_html
-    gc_was_enabled = gc.isenabled()
-    gc.disable()
-    try:
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            cols: dict[str, list] = {n: [] for n in _TABLES_ARROW.names}
-            for url, html in zip(urls, htmls):
-                doc = None
-                try:
-                    doc, _ = parse_html(decode_html(html or b"")[0], url)
-                    for t_idx, table in enumerate(
-                            doc.get_nodes_by_name("table")):
-                        for r_idx, tr in enumerate(_table_rows(table)):
-                            for c_idx, cell in enumerate(_cells_of(tr)):
-                                a = cell.attrs or {}
-                                cols["url"].append(url)
-                                cols["table_idx"].append(t_idx)
-                                cols["row_idx"].append(r_idx)
-                                cols["col_idx"].append(c_idx)
-                                cols["is_header"].append(cell.name == "th")
-                                cols["colspan"].append(
-                                    _int_attr(a, "colspan"))
-                                cols["rowspan"].append(
-                                    _int_attr(a, "rowspan"))
-                                cols["cell"].append(
-                                    _node_text(cell, skip_tables=True))
-                except Exception:
-                    pass
-                finally:
-                    if doc is not None:
-                        dispose(doc)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[n], type=_TABLES_ARROW.field(n).type)
-                 for n in _TABLES_ARROW.names], schema=_TABLES_ARROW)
-    finally:
-        if gc_was_enabled:
-            gc.enable()
+
+_tables_batches = _page_udf(_TABLES_ARROW, _on_dom(_table_cells))
 
 
 def extract_tables(pages: DataFrame, salt_buckets: int = 256,
@@ -179,7 +145,6 @@ def extract_tables(pages: DataFrame, salt_buckets: int = 256,
     <td>/<th> children).  colspan/rowspan are reported as parsed (>=1,
     malformed -> 1), not grid-expanded: expansion is presentation
     logic downstream consumers apply when they need the dense grid."""
-    from lexor_spark.job import _salted_pages
     salted = _salted_pages(pages, salt_buckets, partitions)
     return salted.mapInArrow(_tables_batches, TABLES_SCHEMA)
 
@@ -226,41 +191,9 @@ def meta_of_doc(doc) -> dict[str, Optional[str]]:
     return out
 
 
-def _meta_batches(batches: Iterator[pa.RecordBatch]
-                  ) -> Iterator[pa.RecordBatch]:
-    import gc
-
-    from lexor_spark.kernel.dom import dispose
-    from lexor_spark.kernel.encoding import decode_html
-    from lexor_spark.kernel.htmlparser import parse_html
-    gc_was_enabled = gc.isenabled()
-    gc.disable()
-    try:
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            cols: dict[str, list] = {n: [] for n in _META_ARROW.names}
-            for url, html in zip(urls, htmls):
-                out: dict[str, Optional[str]] = {
-                    n: None for n in _META_ARROW.names[1:]}
-                doc = None
-                try:
-                    doc, _ = parse_html(decode_html(html or b"")[0], url)
-                    out = meta_of_doc(doc)
-                except Exception:
-                    pass
-                finally:
-                    if doc is not None:
-                        dispose(doc)
-                cols["url"].append(url)
-                for n in _META_ARROW.names[1:]:
-                    cols[n].append(out[n])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[n], type=_META_ARROW.field(n).type)
-                 for n in _META_ARROW.names], schema=_META_ARROW)
-    finally:
-        if gc_was_enabled:
-            gc.enable()
+_meta_batches = _page_udf(_META_ARROW, _on_dom(
+    lambda url, doc: [(url, *meta_of_doc(doc).values())],
+    lambda url, _: [(url,) + (None,) * (len(_META_ARROW) - 1)]))
 
 
 def extract_meta(pages: DataFrame, salt_buckets: int = 256,
@@ -271,17 +204,15 @@ def extract_meta(pages: DataFrame, salt_buckets: int = 256,
     order (crawler convention for duplicated metas).  Missing -> null.
     The head-metadata sidecar a search/preview/snippet pipeline keeps
     next to the extracted main content."""
-    from lexor_spark.job import _salted_pages
     salted = _salted_pages(pages, salt_buckets, partitions)
     return salted.mapInArrow(_meta_batches, META_SCHEMA)
 
-
-JSONLD_SCHEMA = "url string, block_idx int, path string, value string"
 
 _JSONLD_ARROW = pa.schema([
     ("url", pa.string()), ("block_idx", pa.int32()),
     ("path", pa.string()), ("value", pa.string()),
 ])
+JSONLD_SCHEMA = from_arrow_schema(_JSONLD_ARROW)
 
 
 def _flatten_json(obj, path: str, out: list) -> None:
@@ -303,57 +234,30 @@ def _flatten_json(obj, path: str, out: list) -> None:
         out.append((path, str(obj)))
 
 
-def _jsonld_batches(batches: Iterator[pa.RecordBatch]
-                    ) -> Iterator[pa.RecordBatch]:
-    import gc
+def _jsonld_rows(url, doc) -> list[tuple]:
     import json as _json
+    rows = []
+    blk = 0
+    for el in doc.get_nodes_by_name("script"):
+        a = el.attrs or {}
+        typ = (a.get("type") or "").strip().lower()
+        if typ != "application/ld+json":
+            continue
+        raw = getattr(el, "data", None)
+        idx, blk = blk, blk + 1
+        if not isinstance(raw, str) or not raw.strip():
+            continue
+        try:
+            parsed = _json.loads(raw)
+        except ValueError:
+            continue  # malformed block: no rows, idx spent
+        leaves: list = []
+        _flatten_json(parsed, "", leaves)
+        rows += [(url, idx, path, value) for path, value in leaves]
+    return rows
 
-    from lexor_spark.kernel.dom import dispose
-    from lexor_spark.kernel.encoding import decode_html
-    from lexor_spark.kernel.htmlparser import parse_html
-    gc_was_enabled = gc.isenabled()
-    gc.disable()
-    try:
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            cols: dict[str, list] = {n: [] for n in _JSONLD_ARROW.names}
-            for url, html in zip(urls, htmls):
-                doc = None
-                try:
-                    doc, _ = parse_html(decode_html(html or b"")[0], url)
-                    blk = 0
-                    for el in doc.get_nodes_by_name("script"):
-                        a = el.attrs or {}
-                        typ = (a.get("type") or "").strip().lower()
-                        if typ != "application/ld+json":
-                            continue
-                        raw = getattr(el, "data", None)
-                        idx, blk = blk, blk + 1
-                        if not isinstance(raw, str) or not raw.strip():
-                            continue
-                        try:
-                            parsed = _json.loads(raw)
-                        except ValueError:
-                            continue  # malformed block: no rows, idx spent
-                        leaves: list = []
-                        _flatten_json(parsed, "", leaves)
-                        for path, value in leaves:
-                            cols["url"].append(url)
-                            cols["block_idx"].append(idx)
-                            cols["path"].append(path)
-                            cols["value"].append(value)
-                except Exception:
-                    pass
-                finally:
-                    if doc is not None:
-                        dispose(doc)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[n], type=_JSONLD_ARROW.field(n).type)
-                 for n in _JSONLD_ARROW.names], schema=_JSONLD_ARROW)
-    finally:
-        if gc_was_enabled:
-            gc.enable()
+
+_jsonld_batches = _page_udf(_JSONLD_ARROW, _on_dom(_jsonld_rows))
 
 
 def extract_jsonld(pages: DataFrame, salt_buckets: int = 256,
@@ -368,19 +272,16 @@ def extract_jsonld(pages: DataFrame, salt_buckets: int = 256,
     verbatim (no entity decoding, per HTML raw-text rules).  Same fused
     plan shape as every kernel pass: scan-side projection -> salted
     exchange -> one mapInArrow, zero additional shuffles at 10^12 pages."""
-    from lexor_spark.job import _salted_pages
     salted = _salted_pages(pages, salt_buckets, partitions)
     return salted.mapInArrow(_jsonld_batches, JSONLD_SCHEMA)
 
-
-MICRODATA_SCHEMA = ("url string, item_idx int, itemtype string, "
-                    "prop_idx int, path string, value string")
 
 _MICRODATA_ARROW = pa.schema([
     ("url", pa.string()), ("item_idx", pa.int32()),
     ("itemtype", pa.string()), ("prop_idx", pa.int32()),
     ("path", pa.string()), ("value", pa.string()),
 ])
+MICRODATA_SCHEMA = from_arrow_schema(_MICRODATA_ARROW)
 
 # microdata value extraction per element kind (WHATWG HTML §5.2.4:
 # "values" — url-valued elements read their url attribute, <meta> reads
@@ -450,53 +351,31 @@ def _md_props(item, out: list) -> None:
                 stack.extend((c, pfx) for c in reversed(kids))
 
 
-def _microdata_batches(batches: Iterator[pa.RecordBatch]
-                       ) -> Iterator[pa.RecordBatch]:
-    import gc
+def _item_rows(url, doc, scope: str, prop: str, type_attr: str,
+               props_of) -> list[tuple]:
+    """Rows of every top-level item — an element carrying the ``scope``
+    attribute but not the ``prop`` one — numbered in document order,
+    typed by its ``type_attr`` value, with ``props_of(item, out)``
+    supplying its (path, value) pairs."""
+    rows = []
+    item_idx = 0
+    for el in doc.iter():
+        attrs = getattr(el, "attrs", None)
+        if not attrs or scope not in attrs or prop in attrs:
+            continue
+        kind = attrs.get(type_attr)
+        kind = kind.strip() if kind else None
+        props: list = []
+        props_of(el, props)
+        rows += [(url, item_idx, kind, prop_idx, path, value)
+                 for prop_idx, (path, value) in enumerate(props)]
+        item_idx += 1
+    return rows
 
-    from lexor_spark.kernel.dom import dispose
-    from lexor_spark.kernel.encoding import decode_html
-    from lexor_spark.kernel.htmlparser import parse_html
-    gc_was_enabled = gc.isenabled()
-    gc.disable()
-    try:
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            cols: dict[str, list] = {n: [] for n in _MICRODATA_ARROW.names}
-            for url, html in zip(urls, htmls):
-                doc = None
-                try:
-                    doc, _ = parse_html(decode_html(html or b"")[0], url)
-                    item_idx = 0
-                    for el in doc.iter():
-                        attrs = getattr(el, "attrs", None)
-                        if (not attrs or "itemscope" not in attrs
-                                or "itemprop" in attrs):
-                            continue
-                        itype = attrs.get("itemtype")
-                        itype = itype.strip() if itype else None
-                        props: list = []
-                        _md_props(el, props)
-                        for prop_idx, (path, value) in enumerate(props):
-                            cols["url"].append(url)
-                            cols["item_idx"].append(item_idx)
-                            cols["itemtype"].append(itype)
-                            cols["prop_idx"].append(prop_idx)
-                            cols["path"].append(path)
-                            cols["value"].append(value)
-                        item_idx += 1
-                except Exception:
-                    pass
-                finally:
-                    if doc is not None:
-                        dispose(doc)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[n], type=_MICRODATA_ARROW.field(n).type)
-                 for n in _MICRODATA_ARROW.names], schema=_MICRODATA_ARROW)
-    finally:
-        if gc_was_enabled:
-            gc.enable()
+
+_microdata_batches = _page_udf(_MICRODATA_ARROW, _on_dom(
+    lambda url, doc: _item_rows(url, doc, "itemscope", "itemprop",
+                                "itemtype", _md_props)))
 
 
 def extract_microdata(pages: DataFrame, salt_buckets: int = 256,
@@ -515,19 +394,16 @@ def extract_microdata(pages: DataFrame, salt_buckets: int = 256,
     single-document text converter); this is a corpus operator on the
     same parse.  Plan shape: scan-side projection -> salted exchange ->
     one mapInArrow kernel pass — zero extra shuffles at 10^12 pages."""
-    from lexor_spark.job import _salted_pages
     salted = _salted_pages(pages, salt_buckets, partitions)
     return salted.mapInArrow(_microdata_batches, MICRODATA_SCHEMA)
 
-
-RDFA_SCHEMA = ("url string, item_idx int, typeof string, "
-               "prop_idx int, path string, value string")
 
 _RDFA_ARROW = pa.schema([
     ("url", pa.string()), ("item_idx", pa.int32()),
     ("typeof", pa.string()), ("prop_idx", pa.int32()),
     ("path", pa.string()), ("value", pa.string()),
 ])
+RDFA_SCHEMA = from_arrow_schema(_RDFA_ARROW)
 
 
 def _rdfa_value(el) -> str:
@@ -594,53 +470,9 @@ def _rdfa_props(item, out: list) -> None:
                 stack.extend((c, pfx) for c in reversed(kids))
 
 
-def _rdfa_batches(batches: Iterator[pa.RecordBatch]
-                  ) -> Iterator[pa.RecordBatch]:
-    import gc
-
-    from lexor_spark.kernel.dom import dispose
-    from lexor_spark.kernel.encoding import decode_html
-    from lexor_spark.kernel.htmlparser import parse_html
-    gc_was_enabled = gc.isenabled()
-    gc.disable()
-    try:
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            cols: dict[str, list] = {n: [] for n in _RDFA_ARROW.names}
-            for url, html in zip(urls, htmls):
-                doc = None
-                try:
-                    doc, _ = parse_html(decode_html(html or b"")[0], url)
-                    item_idx = 0
-                    for el in doc.iter():
-                        attrs = getattr(el, "attrs", None)
-                        if (not attrs or "typeof" not in attrs
-                                or "property" in attrs):
-                            continue
-                        ty = attrs.get("typeof")
-                        ty = ty.strip() if ty else None
-                        props: list = []
-                        _rdfa_props(el, props)
-                        for prop_idx, (path, value) in enumerate(props):
-                            cols["url"].append(url)
-                            cols["item_idx"].append(item_idx)
-                            cols["typeof"].append(ty)
-                            cols["prop_idx"].append(prop_idx)
-                            cols["path"].append(path)
-                            cols["value"].append(value)
-                        item_idx += 1
-                except Exception:
-                    pass
-                finally:
-                    if doc is not None:
-                        dispose(doc)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[n], type=_RDFA_ARROW.field(n).type)
-                 for n in _RDFA_ARROW.names], schema=_RDFA_ARROW)
-    finally:
-        if gc_was_enabled:
-            gc.enable()
+_rdfa_batches = _page_udf(_RDFA_ARROW, _on_dom(
+    lambda url, doc: _item_rows(url, doc, "typeof", "property", "typeof",
+                                _rdfa_props)))
 
 
 def extract_rdfa(pages: DataFrame, salt_buckets: int = 256,
@@ -661,19 +493,16 @@ def extract_rdfa(pages: DataFrame, salt_buckets: int = 256,
     semantics per reference core/parser.py).  Plan shape: scan-side
     projection -> salted exchange -> one mapInArrow kernel pass —
     zero extra shuffles at 10^12 pages."""
-    from lexor_spark.job import _salted_pages
     salted = _salted_pages(pages, salt_buckets, partitions)
     return salted.mapInArrow(_rdfa_batches, RDFA_SCHEMA)
 
-
-OUTLINE_SCHEMA = ("url string, heading_idx int, level int, "
-                  "section string, heading string")
 
 _OUTLINE_ARROW = pa.schema([
     ("url", pa.string()), ("heading_idx", pa.int32()),
     ("level", pa.int32()), ("section", pa.string()),
     ("heading", pa.string()),
 ])
+OUTLINE_SCHEMA = from_arrow_schema(_OUTLINE_ARROW)
 
 _H_LEVEL = {"h1": 1, "h2": 2, "h3": 3, "h4": 4, "h5": 5, "h6": 6}
 
@@ -698,42 +527,9 @@ def outline_of_doc(doc) -> list[tuple[int, str, str]]:
     return out
 
 
-def _outline_batches(batches: Iterator[pa.RecordBatch]
-                     ) -> Iterator[pa.RecordBatch]:
-    import gc
-
-    from lexor_spark.kernel.dom import dispose
-    from lexor_spark.kernel.encoding import decode_html
-    from lexor_spark.kernel.htmlparser import parse_html
-    gc_was_enabled = gc.isenabled()
-    gc.disable()
-    try:
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            cols: dict[str, list] = {n: [] for n in _OUTLINE_ARROW.names}
-            for url, html in zip(urls, htmls):
-                doc = None
-                try:
-                    doc, _ = parse_html(decode_html(html or b"")[0], url)
-                    for idx, (lvl, section, text) in enumerate(
-                            outline_of_doc(doc)):
-                        cols["url"].append(url)
-                        cols["heading_idx"].append(idx)
-                        cols["level"].append(lvl)
-                        cols["section"].append(section)
-                        cols["heading"].append(text)
-                except Exception:
-                    pass
-                finally:
-                    if doc is not None:
-                        dispose(doc)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[n], type=_OUTLINE_ARROW.field(n).type)
-                 for n in _OUTLINE_ARROW.names], schema=_OUTLINE_ARROW)
-    finally:
-        if gc_was_enabled:
-            gc.enable()
+_outline_batches = _page_udf(_OUTLINE_ARROW, _on_dom(
+    lambda url, doc: [(url, idx, *heading)
+                      for idx, heading in enumerate(outline_of_doc(doc))]))
 
 
 def extract_outline(pages: DataFrame, salt_buckets: int = 256,
@@ -748,13 +544,9 @@ def extract_outline(pages: DataFrame, salt_buckets: int = 256,
     salted exchange -> one mapInArrow, zero extra shuffles at 10^12
     pages.  The reference kernel has no outline surface (single-document
     converter, reference `lexor/command/to.py`)."""
-    from lexor_spark.job import _salted_pages
     salted = _salted_pages(pages, salt_buckets, partitions)
     return salted.mapInArrow(_outline_batches, OUTLINE_SCHEMA)
 
-
-IMAGES_SCHEMA = ("url string, img_idx int, src string, srcset string, "
-                 "alt string, width string, height string")
 
 _IMAGES_ARROW = pa.schema([
     ("url", pa.string()), ("img_idx", pa.int32()),
@@ -762,46 +554,19 @@ _IMAGES_ARROW = pa.schema([
     ("alt", pa.string()), ("width", pa.string()),
     ("height", pa.string()),
 ])
+IMAGES_SCHEMA = from_arrow_schema(_IMAGES_ARROW)
 
 
-def _images_batches(batches: Iterator[pa.RecordBatch]
-                    ) -> Iterator[pa.RecordBatch]:
-    import gc
+def _image_rows(url, doc) -> list[tuple]:
+    rows = []
+    for i, el in enumerate(doc.get_nodes_by_name("img")):
+        a = el.attrs or {}
+        rows.append((url, i, a.get("src"), a.get("srcset"), a.get("alt"),
+                     a.get("width"), a.get("height")))
+    return rows
 
-    from lexor_spark.kernel.dom import dispose
-    from lexor_spark.kernel.encoding import decode_html
-    from lexor_spark.kernel.htmlparser import parse_html
-    gc_was_enabled = gc.isenabled()
-    gc.disable()
-    try:
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            cols: dict[str, list] = {n: [] for n in _IMAGES_ARROW.names}
-            for url, html in zip(urls, htmls):
-                doc = None
-                try:
-                    doc, _ = parse_html(decode_html(html or b"")[0], url)
-                    for i, el in enumerate(doc.get_nodes_by_name("img")):
-                        a = el.attrs or {}
-                        cols["url"].append(url)
-                        cols["img_idx"].append(i)
-                        cols["src"].append(a.get("src"))
-                        cols["srcset"].append(a.get("srcset"))
-                        cols["alt"].append(a.get("alt"))
-                        cols["width"].append(a.get("width"))
-                        cols["height"].append(a.get("height"))
-                except Exception:
-                    pass
-                finally:
-                    if doc is not None:
-                        dispose(doc)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[n], type=_IMAGES_ARROW.field(n).type)
-                 for n in _IMAGES_ARROW.names], schema=_IMAGES_ARROW)
-    finally:
-        if gc_was_enabled:
-            gc.enable()
+
+_images_batches = _page_udf(_IMAGES_ARROW, _on_dom(_image_rows))
 
 
 def extract_images(pages: DataFrame, salt_buckets: int = 256,
@@ -812,7 +577,6 @@ def extract_images(pages: DataFrame, salt_buckets: int = 256,
     (image-text pair mining à la LAION keys on exactly (page url,
     img src, alt)).  Same fused one-pass ``mapInArrow`` plan as every
     kernel pass."""
-    from lexor_spark.job import _salted_pages
     salted = _salted_pages(pages, salt_buckets, partitions)
     return salted.mapInArrow(_images_batches, IMAGES_SCHEMA)
 

@@ -28,11 +28,14 @@ not run-to-convergence, which is what makes the value oracle possible.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+
+from lexor_spark.job import _on_dom, _page_udf, _salted_pages
 
 __all__ = ["extract_links", "extract_directives", "pagerank",
            "pagerank_sql", "pagerank_links", "hits", "hits_sql",
@@ -45,14 +48,12 @@ __all__ = ["extract_links", "extract_directives", "pagerank",
            "host_edges", "host_rank"]
 
 
-LINKS_SCHEMA = ("url string, href string, abs_url string, anchor string, "
-                "nofollow boolean, dropped boolean")
-
 _LINKS_ARROW = pa.schema([
     ("url", pa.string()), ("href", pa.string()),
     ("abs_url", pa.string()), ("anchor", pa.string()),
     ("nofollow", pa.bool_()), ("dropped", pa.bool_()),
 ])
+LINKS_SCHEMA = from_arrow_schema(_LINKS_ARROW)
 
 
 def _resolve(base: str, href: str) -> str:
@@ -60,9 +61,8 @@ def _resolve(base: str, href: str) -> str:
     / root-relative / path-relative) — the subset a frontier needs; the
     full RFC 3986 merge is a data-cleaning refinement, not engine
     work.  NULL-safe: a None base (hostile input row) or None href must
-    degrade, never raise — every kernel batch builder calls this while
-    its per-page column lists are mid-append, so an exception here
-    would leave the lists ragged and kill the whole Arrow batch."""
+    degrade, never raise — a raise would turn the whole page into its
+    operator's error row."""
     if not href:
         return None
     if not base:
@@ -155,50 +155,9 @@ def links_of_doc(doc, url: str
     return out
 
 
-def _links_batches(batches: Iterator[pa.RecordBatch]
-                   ) -> Iterator[pa.RecordBatch]:
-    import gc
+_links_batches = _page_udf(_LINKS_ARROW, _on_dom(
+    lambda url, doc: [(url, *link) for link in links_of_doc(doc, url)]))
 
-    from lexor_spark.kernel.dom import dispose
-    from lexor_spark.kernel.encoding import decode_html
-    from lexor_spark.kernel.htmlparser import parse_html
-    gc_was_enabled = gc.isenabled()
-    gc.disable()
-    try:
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            cols: dict[str, list] = {n: [] for n in _LINKS_ARROW.names}
-            for url, html in zip(urls, htmls):
-                doc = None
-                try:
-                    doc, _ = parse_html(decode_html(html or b"")[0], url)
-                    for (href, abs_url, anchor, nofollow,
-                         dropped) in links_of_doc(doc, url):
-                        cols["url"].append(url)
-                        cols["href"].append(href)
-                        cols["abs_url"].append(abs_url)
-                        cols["anchor"].append(anchor)
-                        cols["nofollow"].append(nofollow)
-                        cols["dropped"].append(dropped)
-                except Exception:
-                    pass
-                finally:
-                    if doc is not None:
-                        dispose(doc)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[n], type=_LINKS_ARROW.field(n).type)
-                 for n in _LINKS_ARROW.names], schema=_LINKS_ARROW)
-    finally:
-        if gc_was_enabled:
-            gc.enable()
-
-
-DIRECTIVES_SCHEMA = ("url string, meta_robots string, noindex boolean, "
-                     "nofollow boolean, canonical string, "
-                     "canonical_abs string, n_hreflang int, "
-                     "html_lang string, rel_next_abs string, "
-                     "rel_prev_abs string")
 
 _DIRECTIVES_ARROW = pa.schema([
     ("url", pa.string()), ("meta_robots", pa.string()),
@@ -207,80 +166,51 @@ _DIRECTIVES_ARROW = pa.schema([
     ("n_hreflang", pa.int32()), ("html_lang", pa.string()),
     ("rel_next_abs", pa.string()), ("rel_prev_abs", pa.string()),
 ])
+DIRECTIVES_SCHEMA = from_arrow_schema(_DIRECTIVES_ARROW)
 
 
-def _directives_batches(batches: Iterator[pa.RecordBatch]
-                        ) -> Iterator[pa.RecordBatch]:
-    import gc
+def _directives_rows(url, doc) -> list[tuple]:
+    robots: list[str] = []
+    canonical = None
+    n_hreflang = 0
+    html_lang = None
+    rel_next = None
+    rel_prev = None
+    for el in doc.get_nodes_by_name("html"):
+        lang = (el.attrs or {}).get("lang")
+        if lang and lang.strip():
+            html_lang = lang.strip().lower()
+        break  # root element only
+    for el in doc.get_nodes_by_name("meta"):
+        a = el.attrs or {}
+        if (a.get("name") or "").strip().lower() == "robots":
+            robots.append((a.get("content") or "").strip().lower())
+    for el in doc.get_nodes_by_name("link"):
+        a = el.attrs or {}
+        rel = (a.get("rel") or "").strip().lower()
+        href = a.get("href")
+        if rel == "canonical" and href and canonical is None:
+            canonical = href
+        elif rel == "alternate" and a.get("hreflang"):
+            n_hreflang += 1
+        elif rel == "next" and href and rel_next is None:
+            rel_next = href
+        elif rel == "prev" and href and rel_prev is None:
+            rel_prev = href
+    combined = ",".join(r for r in robots if r) or None
+    toks = {t.strip() for t in (combined or "").split(",")}
+    return [(url, combined, bool({"noindex", "none"} & toks),
+             bool({"nofollow", "none"} & toks), canonical,
+             _resolve(url, canonical) if canonical else None, n_hreflang,
+             html_lang, _resolve(url, rel_next) if rel_next else None,
+             _resolve(url, rel_prev) if rel_prev else None)]
 
-    from lexor_spark.kernel.dom import dispose
-    from lexor_spark.kernel.encoding import decode_html
-    from lexor_spark.kernel.htmlparser import parse_html
-    gc_was_enabled = gc.isenabled()
-    gc.disable()
-    try:
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            cols: dict[str, list] = {n: [] for n in _DIRECTIVES_ARROW.names}
-            for url, html in zip(urls, htmls):
-                robots: list[str] = []
-                canonical = None
-                n_hreflang = 0
-                html_lang = None
-                rel_next = None
-                rel_prev = None
-                doc = None
-                try:
-                    doc, _ = parse_html(decode_html(html or b"")[0], url)
-                    for el in doc.get_nodes_by_name("html"):
-                        lang = (el.attrs or {}).get("lang")
-                        if lang and lang.strip():
-                            html_lang = lang.strip().lower()
-                        break  # root element only
-                    for el in doc.get_nodes_by_name("meta"):
-                        a = el.attrs or {}
-                        if (a.get("name") or "").strip().lower() == "robots":
-                            robots.append((a.get("content") or "")
-                                          .strip().lower())
-                    for el in doc.get_nodes_by_name("link"):
-                        a = el.attrs or {}
-                        rel = (a.get("rel") or "").strip().lower()
-                        href = a.get("href")
-                        if rel == "canonical" and href and canonical is None:
-                            canonical = href
-                        elif rel == "alternate" and a.get("hreflang"):
-                            n_hreflang += 1
-                        elif rel == "next" and href and rel_next is None:
-                            rel_next = href
-                        elif rel == "prev" and href and rel_prev is None:
-                            rel_prev = href
-                except Exception:
-                    pass
-                finally:
-                    if doc is not None:
-                        dispose(doc)
-                combined = ",".join(r for r in robots if r) or None
-                toks = {t.strip() for t in (combined or "").split(",")}
-                cols["url"].append(url)
-                cols["meta_robots"].append(combined)
-                cols["noindex"].append(bool({"noindex", "none"} & toks))
-                cols["nofollow"].append(bool({"nofollow", "none"} & toks))
-                cols["canonical"].append(canonical)
-                cols["canonical_abs"].append(
-                    _resolve(url, canonical) if canonical else None)
-                cols["n_hreflang"].append(n_hreflang)
-                cols["html_lang"].append(html_lang)
-                cols["rel_next_abs"].append(
-                    _resolve(url, rel_next) if rel_next else None)
-                cols["rel_prev_abs"].append(
-                    _resolve(url, rel_prev) if rel_prev else None)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[n], type=_DIRECTIVES_ARROW.field(n).type)
-                 for n in _DIRECTIVES_ARROW.names], schema=_DIRECTIVES_ARROW)
-    finally:
-        if gc_was_enabled:
-            gc.enable()
+
+# a page that fails to parse still gets its row: no directives found
+_directives_batches = _page_udf(_DIRECTIVES_ARROW, _on_dom(
+    _directives_rows,
+    lambda url, _: [(url, None, False, False, None, None, 0, None, None,
+                     None)]))
 
 
 def extract_directives(pages: DataFrame, salt_buckets: int = 256,
@@ -299,7 +229,6 @@ def extract_directives(pages: DataFrame, salt_buckets: int = 256,
     ``mapInArrow`` plan as :func:`extract_links` — at 10^12 pages this
     adds zero shuffles beyond the salted exchange it shares with every
     kernel pass."""
-    from lexor_spark.job import _salted_pages
     salted = _salted_pages(pages, salt_buckets, partitions)
     return salted.mapInArrow(_directives_batches, DIRECTIVES_SCHEMA)
 
@@ -309,7 +238,6 @@ def extract_links(pages: DataFrame, salt_buckets: int = 256,
     """(url, href, abs_url, anchor) per anchor element, corpus-wide —
     the link-graph/anchor-text source table (crawl frontier, link-based
     quality priors, anchor-text training signal)."""
-    from lexor_spark.job import _salted_pages
     salted = _salted_pages(pages, salt_buckets, partitions)
     return salted.mapInArrow(_links_batches, LINKS_SCHEMA)
 
@@ -748,56 +676,26 @@ def alias_collapse(directives: DataFrame, redirects: DataFrame,
             .orderBy("url"))
 
 
-ALTERNATES_SCHEMA = "url string, hreflang string, href string, abs_url string"
-
 _ALTERNATES_ARROW = pa.schema([
     ("url", pa.string()), ("hreflang", pa.string()),
     ("href", pa.string()), ("abs_url", pa.string()),
 ])
+ALTERNATES_SCHEMA = from_arrow_schema(_ALTERNATES_ARROW)
 
 
-def _alternates_batches(batches: Iterator[pa.RecordBatch]
-                        ) -> Iterator[pa.RecordBatch]:
-    import gc
+def _alternates_rows(url, doc) -> list[tuple]:
+    rows = []
+    for el in doc.get_nodes_by_name("link"):
+        a = el.attrs or {}
+        rel = (a.get("rel") or "").strip().lower()
+        href = a.get("href")
+        lang = (a.get("hreflang") or "").strip().lower()
+        if rel == "alternate" and href and lang:
+            rows.append((url, lang, href, _resolve(url, href)))
+    return rows
 
-    from lexor_spark.kernel.dom import dispose
-    from lexor_spark.kernel.encoding import decode_html
-    from lexor_spark.kernel.htmlparser import parse_html
-    gc_was_enabled = gc.isenabled()
-    gc.disable()
-    try:
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            cols: dict[str, list] = {n: [] for n in _ALTERNATES_ARROW.names}
-            for url, html in zip(urls, htmls):
-                doc = None
-                try:
-                    doc, _ = parse_html(decode_html(html or b"")[0], url)
-                    for el in doc.get_nodes_by_name("link"):
-                        a = el.attrs or {}
-                        rel = (a.get("rel") or "").strip().lower()
-                        href = a.get("href")
-                        lang = (a.get("hreflang") or "").strip().lower()
-                        if rel == "alternate" and href and lang:
-                            # resolve BEFORE any append: a raise here
-                            # must not leave the column lists ragged
-                            resolved = _resolve(url, href)
-                            cols["url"].append(url)
-                            cols["hreflang"].append(lang)
-                            cols["href"].append(href)
-                            cols["abs_url"].append(resolved)
-                except Exception:
-                    pass
-                finally:
-                    if doc is not None:
-                        dispose(doc)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[n], type=_ALTERNATES_ARROW.field(n).type)
-                 for n in _ALTERNATES_ARROW.names], schema=_ALTERNATES_ARROW)
-    finally:
-        if gc_was_enabled:
-            gc.enable()
+
+_alternates_batches = _page_udf(_ALTERNATES_ARROW, _on_dom(_alternates_rows))
 
 
 def extract_alternates(pages: DataFrame, salt_buckets: int = 256,
@@ -806,7 +704,6 @@ def extract_alternates(pages: DataFrame, salt_buckets: int = 256,
     declaration: (url, hreflang, href, abs_url) — the language-cluster
     channel (Google's hreflang spec).  Same fused ``mapInArrow`` plan
     as :func:`extract_links`."""
-    from lexor_spark.job import _salted_pages
     salted = _salted_pages(pages, salt_buckets, partitions)
     return salted.mapInArrow(_alternates_batches, ALTERNATES_SCHEMA)
 

@@ -22,6 +22,15 @@ Architecture (SURVEY.md §7, BASELINE.json ``north_rule``):
   snapshot append (``df.writeTo(tbl).append()``); this sandbox has no
   Iceberg runtime, so the fallback is a parquet dir per group + a
   ``_COMMITTED_<g>`` marker — same atomicity contract, same resume logic.
+
+**Adding a page operator.**  Declare the output once as a ``pa.schema``
+(the public Spark schema is ``from_arrow_schema`` of it).  Write the
+per-page body: ``per_page(url, payload)`` returning that page's complete
+rows as tuples in schema order — or, for a body that walks the parsed
+DOM, ``_on_dom(fn, on_error)`` around ``fn(url, doc)``.  The operator is
+``_salted_pages(pages, ...).mapInArrow(_page_udf(schema, per_page), ...)``:
+``_page_udf`` owns the GC switch, the column reads and the batch build,
+so no operator repeats them.
 """
 
 from __future__ import annotations
@@ -30,14 +39,19 @@ import gc
 import json
 import os
 import time
+from bisect import bisect_left
 from typing import Iterator, Optional
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from lexor_spark.kernel.pipeline import extract_document
+from lexor_spark.kernel.dom import CharacterData, Element, dispose
 from lexor_spark.kernel.encoding import decode_html
+from lexor_spark.kernel.htmlparser import parse_html
+from lexor_spark.kernel.pipeline import extract_document
 
 __all__ = [
     "OUTPUT_SCHEMA", "NODES_SCHEMA", "extract_pages", "export_nodes", "extract_density_pages",
@@ -46,20 +60,10 @@ __all__ = [
     "css_select", "css_rewrite", "normalize_html", "convert_markdown",
 ]
 
-# Output schema of the extraction stage (strings here so the schema lives
-# in one greppable place; driver parses it once).
+# Output schema of the extraction stage.
 # ``n_chars_in`` counts the input html in *bytes* (before charset
 # decoding), ``n_chars_out`` the output text in characters; the column
 # keeps its historical name.
-OUTPUT_SCHEMA = (
-    "url string, text string, "
-    "spans array<struct<start:long,end:long,path:string>>, "
-    "title string, description string, lang_attr string, "
-    "codes array<string>, n_nodes int, truncated boolean, "
-    "ok boolean, err string, n_chars_in long, n_chars_out long, "
-    "kernel_us long"
-)
-
 _ARROW_SCHEMA = pa.schema([
     ("url", pa.string()),
     ("text", pa.string()),
@@ -74,24 +78,20 @@ _ARROW_SCHEMA = pa.schema([
     ("truncated", pa.bool_()),
     ("ok", pa.bool_()),
     ("err", pa.string()),
-    ("n_chars_in", pa.int64()),  # input html bytes, see OUTPUT_SCHEMA
+    ("n_chars_in", pa.int64()),  # input html bytes, see above
     ("n_chars_out", pa.int64()),
     ("kernel_us", pa.int64()),
 ])
-
-
-# The cyclic GC is disabled for the duration of every batch UDF here:
-# DOM trees are explicitly cycle-broken by the kernel (``dom.dispose``)
-# so everything frees by refcount, and turning the collector off removes
-# its cache-thrashing scans — measured ~+50% throughput at 32 workers.
+OUTPUT_SCHEMA = from_arrow_schema(_ARROW_SCHEMA)
 
 
 def _salted_pages(pages: DataFrame, salt_buckets: int,
                   partitions: Optional[int],
-                  slots_mult: int = 4) -> DataFrame:
+                  slots_mult: int = 4,
+                  cols: tuple[str, ...] = ("url", "html")) -> DataFrame:
     """The shared scan-side preamble of every kernel job: column-prune
-    to (url, html) BEFORE the exchange (the shuffle moves only what the
-    kernel needs), then one salted repartition on
+    to ``cols`` (url and the payload) BEFORE the exchange (the shuffle
+    moves only what the kernel needs), then one salted repartition on
     ``pmod(xxhash64(url), salt_buckets)``.  Fine-grained tasks
     (``slots_mult``× slots) hide per-task tail latency: a giant
     document delays one small task, not 1/cores of the corpus —
@@ -104,44 +104,67 @@ def _salted_pages(pages: DataFrame, salt_buckets: int,
     sc = pages.sparkSession.sparkContext
     if partitions is None:
         partitions = sc.defaultParallelism * slots_mult
-    return (pages.select("url", "html")
+    return (pages.select(*cols)
             .repartition(partitions,
                          F.pmod(F.xxhash64("url"), F.lit(salt_buckets))))
 
 
-def _extract_batches_inner(batches: Iterator[pa.RecordBatch],
-                           width: Optional[int] = None,
-                           indent: str = "",
-                           style: Optional[str] = None
-                           ) -> Iterator[pa.RecordBatch]:
-    for batch in batches:
-        urls = batch.column("url").to_pylist()
-        htmls = batch.column("html").to_pylist()
-        out: dict[str, list] = {name: [] for name in _ARROW_SCHEMA.names}
-        for url, html in zip(urls, htmls):
-            t0 = time.perf_counter_ns()
-            res = extract_document(html if html is not None else b"", url,
-                                   width, indent, style)
-            dt_us = (time.perf_counter_ns() - t0) // 1000
-            out["url"].append(url)
-            out["text"].append(res.text)
-            out["spans"].append(
-                [{"start": s, "end": e, "path": p} for (s, e, p) in res.spans])
-            out["title"].append(res.title)
-            out["description"].append(res.description)
-            out["lang_attr"].append(res.lang_attr)
-            out["codes"].append(res.codes)
-            out["n_nodes"].append(res.n_nodes)
-            out["truncated"].append(res.truncated)
-            out["ok"].append(res.ok)
-            out["err"].append(res.err)
-            out["n_chars_in"].append(len(html) if html is not None else 0)
-            out["n_chars_out"].append(len(res.text))
-            out["kernel_us"].append(dt_us)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(out[name], type=_ARROW_SCHEMA.field(name).type)
-             for name in _ARROW_SCHEMA.names],
-            schema=_ARROW_SCHEMA)
+def _page_udf(schema: pa.Schema, per_page):
+    """The ``mapInArrow`` function of a per-page operator — the one
+    engine↔UDF boundary every page kernel shares.
+
+    For each input batch it reads column 0 (``url``) and column 1 (the
+    payload) with ``to_pylist``, calls ``per_page(url, payload)`` — which
+    returns that page's complete output rows as tuples in ``schema``
+    order — and builds one output batch of ``schema`` column by column
+    from the rows.
+
+    The cyclic GC is off while the batches run: DOM trees are
+    explicitly cycle-broken by the kernel (``dom.dispose``) so
+    everything frees by refcount, and turning the collector off removes
+    its cache-thrashing scans — measured ~+50% throughput at 32
+    workers.  Save/restore, not a blind enable: the outer task context
+    may itself run with the collector off."""
+    types = [field.type for field in schema]
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        gc_was_enabled = gc.isenabled()
+        gc.disable()
+        try:
+            for batch in batches:
+                rows: list[tuple] = []
+                for url, payload in zip(batch.column(0).to_pylist(),
+                                        batch.column(1).to_pylist()):
+                    rows += per_page(url, payload)
+                cols = list(zip(*rows)) or [()] * len(types)
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(col, type=t) for col, t in zip(cols, types)],
+                    schema=schema)
+        finally:
+            if gc_was_enabled:
+                gc.enable()
+    return run
+
+
+def _on_dom(fn, on_error=None):
+    """``per_page`` for an operator body that works on the parsed DOM:
+    decode → ``parse_html`` → ``fn(url, doc)``, which returns the page's
+    rows.  The tree is disposed on every path (with the cyclic GC off,
+    an undisposed tree never frees).  Any exception returns
+    ``on_error(url, payload)`` instead — by default no rows — so a
+    hostile page is data, never a task failure, and a page's rows
+    appear only when all of them were built."""
+    def per_page(url, payload):
+        doc = None
+        try:
+            doc, _ = parse_html(decode_html(payload or b"")[0], url)
+            return fn(url, doc)
+        except Exception:
+            return on_error(url, payload) if on_error else []
+        finally:
+            if doc is not None:
+                dispose(doc)
+    return per_page
 
 
 def _extract_batches_wrapped(width: Optional[int], indent: str,
@@ -151,19 +174,22 @@ def _extract_batches_wrapped(width: Optional[int], indent: str,
     ``_extract_batches`` — a stable reference, no per-call closure).
 
     ``style`` names a W2 writer-rule registry (`kernel/styles.py`),
-    resolved worker-side so only the string crosses the closure."""
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        gc_was_enabled = gc.isenabled()
-        gc.disable()
-        try:
-            yield from _extract_batches_inner(batches, width, indent, style)
-        finally:
-            if gc_was_enabled:
-                gc.enable()
-    return run
+    resolved worker-side so only the string crosses the closure.
+    ``kernel_us`` times the ``extract_document`` call alone."""
+    def per_page(url, html):
+        t0 = time.perf_counter_ns()
+        res = extract_document(html if html is not None else b"", url,
+                               width, indent, style)
+        dt_us = (time.perf_counter_ns() - t0) // 1000
+        return [(url, res.text, res.spans, res.title, res.description,
+                 res.lang_attr, res.codes, res.n_nodes, res.truncated,
+                 res.ok, res.err, len(html) if html is not None else 0,
+                 len(res.text), dt_us)]
+    return _page_udf(_ARROW_SCHEMA, per_page)
 
 
-_extract_batches = _extract_batches_wrapped(None, "")
+# ``_extract_batches_inner`` is the name perfbench's stage tracer times
+_extract_batches = _extract_batches_inner = _extract_batches_wrapped(None, "")
 
 
 def extract_pages(pages: DataFrame, salt_buckets: int = 256,
@@ -194,30 +220,31 @@ def extract_pages(pages: DataFrame, salt_buckets: int = 256,
                              OUTPUT_SCHEMA)
 
 
+def _metrics_aggs(count_as: str) -> list[Column]:
+    """The seven aggregates of extraction output that both
+    `partition_metrics` and the lineage record report; the row count is
+    named ``count_as``."""
+    return [
+        F.count("*").alias(count_as),
+        F.sum("n_chars_in").alias("bytes_in"),
+        F.sum("n_chars_out").alias("chars_out"),
+        F.sum("kernel_us").alias("kernel_us_total"),
+        F.max("kernel_us").alias("kernel_us_max"),
+        F.sum(F.when(~F.col("ok"), 1).otherwise(0)).alias("n_errors"),
+        F.sum(F.when(F.col("truncated"), 1).otherwise(0)).alias("n_truncated"),
+    ]
+
+
 def partition_metrics(extracted: DataFrame) -> DataFrame:
     """Per-partition skew/latency metrics (one map-side-combinable agg)."""
-    return (
-        extracted
-        .groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_chars_in").alias("bytes_in"),
-            F.sum("n_chars_out").alias("chars_out"),
-            F.sum("kernel_us").alias("kernel_us_total"),
-            F.max("kernel_us").alias("kernel_us_max"),
-            F.sum(F.when(~F.col("ok"), 1).otherwise(0)).alias("n_errors"),
-            F.sum(F.when(F.col("truncated"), 1).otherwise(0)).alias("n_truncated"),
-        )
-    )
+    return (extracted
+            .groupBy(F.spark_partition_id().alias("partition_id"))
+            .agg(*_metrics_aggs("n_docs")))
 
 
 # ---------------------------------------------------------------------------
 # DOM flatten-export (SURVEY.md §1.3): the node tree as a corpus-level table
 # ---------------------------------------------------------------------------
-
-NODES_SCHEMA = ("url string, node_id int, parent_id int, name string, "
-                "kind string, n_attrs int, class string, id string, "
-                "data_prefix string, line int, col int")
 
 _NODES_ARROW = pa.schema([
     ("url", pa.string()), ("node_id", pa.int32()), ("parent_id", pa.int32()),
@@ -225,76 +252,45 @@ _NODES_ARROW = pa.schema([
     ("class", pa.string()), ("id", pa.string()),
     ("data_prefix", pa.string()), ("line", pa.int32()), ("col", pa.int32()),
 ])
+NODES_SCHEMA = from_arrow_schema(_NODES_ARROW)
 
 
-def _flatten_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    import gc
-    from bisect import bisect_left
+def _node_rows(url: str, doc, text: str) -> list[tuple]:
+    # node.pos is a source offset; derive (line, col) in bulk from one
+    # newline index per document
+    nls = [k for k, ch in enumerate(text) if ch == "\n"]
 
-    from lexor_spark.kernel.dom import CharacterData, Element, dispose
-    from lexor_spark.kernel.htmlparser import parse_html
-    # save/restore (not blind enable): the outer task context may itself
-    # run with the collector off
-    gc_was_enabled = gc.isenabled()
-    gc.disable()
-    try:
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            cols: dict[str, list] = {n: [] for n in _NODES_ARROW.names}
-            for url, html in zip(urls, htmls):
-                doc = None
-                mark = len(cols["url"])  # rollback point: a mid-walk
-                # exception must not leave ragged column lists
-                try:
-                    text = decode_html(html or b"")[0]
-                    doc, _ = parse_html(text, url)
-                    # node.pos is a source offset; derive (line, col) in
-                    # bulk from one newline index per document
-                    nls = [k for k, ch in enumerate(text) if ch == "\n"]
+    def _lc(off: int) -> tuple[int, int]:
+        if off < 0:
+            return (0, 0)
+        idx = bisect_left(nls, off)
+        prev = nls[idx - 1] if idx else -1
+        return (idx + 1, off - prev)
+    # preorder DFS ⇒ a parent is always numbered before its children;
+    # node_id = visit order
+    ids: dict[int, int] = {}
+    rows = []
+    for nid, node in enumerate(doc.iter()):
+        ids[id(node)] = nid
+        parent = node.parent
+        is_el = isinstance(node, Element)
+        data = node.data if isinstance(node, CharacterData) else None
+        rows.append((url, nid, ids[id(parent)] if parent is not None else -1,
+                     node.name, type(node).__name__,
+                     len(node.attrs) if is_el else 0,
+                     node.attrs.get("class") if is_el else None,
+                     node.attrs.get("id") if is_el else None,
+                     data[:64] if data else None, *_lc(node.pos)))
+    return rows
 
-                    def _lc(off: int) -> tuple[int, int]:
-                        if off < 0:
-                            return (0, 0)
-                        idx = bisect_left(nls, off)
-                        prev = nls[idx - 1] if idx else -1
-                        return (idx + 1, off - prev)
-                    # preorder DFS ⇒ a parent is always numbered before
-                    # its children; node_id = visit order
-                    ids: dict[int, int] = {}
-                    for nid, node in enumerate(doc.iter()):
-                        ids[id(node)] = nid
-                        parent = node.parent
-                        pid = ids[id(parent)] if parent is not None else -1
-                        is_el = isinstance(node, Element)
-                        cols["url"].append(url)
-                        cols["node_id"].append(nid)
-                        cols["parent_id"].append(pid)
-                        cols["name"].append(node.name)
-                        cols["kind"].append(type(node).__name__)
-                        cols["n_attrs"].append(len(node.attrs) if is_el else 0)
-                        cols["class"].append(node.attrs.get("class") if is_el else None)
-                        cols["id"].append(node.attrs.get("id") if is_el else None)
-                        data = node.data if isinstance(node, CharacterData) else None
-                        cols["data_prefix"].append(data[:64] if data else None)
-                        line, col = _lc(node.pos)
-                        cols["line"].append(line)
-                        cols["col"].append(col)
-                except Exception:
-                    for lst in cols.values():
-                        del lst[mark:]
-                    continue
-                finally:
-                    # dispose on every path: with the cyclic GC off, an
-                    # undisposed tree never frees
-                    if doc is not None:
-                        dispose(doc)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[n], type=_NODES_ARROW.field(n).type)
-                 for n in _NODES_ARROW.names], schema=_NODES_ARROW)
-    finally:
-        if gc_was_enabled:
-            gc.enable()
+
+def _nodes_page(url, html):
+    # decoded once here: the rows need the source text for (line, col)
+    text = decode_html(html or b"")[0]
+    return _on_dom(lambda u, doc: _node_rows(u, doc, text))(url, text)
+
+
+_flatten_batches = _page_udf(_NODES_ARROW, _nodes_page)
 
 
 def export_nodes(pages: DataFrame, salt_buckets: int = 256,
@@ -310,48 +306,24 @@ def export_nodes(pages: DataFrame, salt_buckets: int = 256,
 # HTML normalization (parse → serialize: the reference's writer path)
 # ---------------------------------------------------------------------------
 
-NORMALIZE_SCHEMA = "url string, norm_html string, n_in long, n_out long"
-
 _NORM_ARROW = pa.schema([
     ("url", pa.string()), ("norm_html", pa.string()),
     ("n_in", pa.int64()), ("n_out", pa.int64()),
 ])
+NORMALIZE_SCHEMA = from_arrow_schema(_NORM_ARROW)
 
 
-def _normalize_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    import gc
-
-    from lexor_spark.kernel.dom import dispose
-    from lexor_spark.kernel.htmlparser import parse_html
+def _normalize_page(url, html):
     from lexor_spark.kernel.htmlwriter import write_html
-    gc_was_enabled = gc.isenabled()
-    gc.disable()
-    try:
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            cols: dict[str, list] = {n: [] for n in _NORM_ARROW.names}
-            for url, html in zip(urls, htmls):
-                raw = bytes(html or b"")
-                doc = None
-                try:
-                    doc, _ = parse_html(decode_html(raw)[0], url)
-                    norm = write_html(doc)
-                except Exception:
-                    norm = ""
-                finally:
-                    if doc is not None:
-                        dispose(doc)
-                cols["url"].append(url)
-                cols["norm_html"].append(norm)
-                cols["n_in"].append(len(raw))
-                cols["n_out"].append(len(norm))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[n], type=_NORM_ARROW.field(n).type)
-                 for n in _NORM_ARROW.names], schema=_NORM_ARROW)
-    finally:
-        if gc_was_enabled:
-            gc.enable()
+    n_in = len(html or b"")
+
+    def rows(url, doc):
+        norm = write_html(doc)
+        return [(url, norm, n_in, len(norm))]
+    return _on_dom(rows, lambda url, _: [(url, "", n_in, 0)])(url, html)
+
+
+_normalize_batches = _page_udf(_NORM_ARROW, _normalize_page)
 
 
 def normalize_html(pages: DataFrame, salt_buckets: int = 256,
@@ -366,66 +338,30 @@ def normalize_html(pages: DataFrame, salt_buckets: int = 256,
 # Corpus-level CSS selection (reference selector.py S1-S4, Spark-side)
 # ---------------------------------------------------------------------------
 
-CSS_SCHEMA = ("url string, selector string, n_matches int, "
-              "first_text string")
-
 _CSS_ARROW = pa.schema([
     ("url", pa.string()), ("selector", pa.string()),
     ("n_matches", pa.int32()), ("first_text", pa.string()),
 ])
+CSS_SCHEMA = from_arrow_schema(_CSS_ARROW)
 
 
 def _css_batches(selectors: list[str]):
     """Batch UDF factory: parse each page once, evaluate every selector
     against the same tree (amortizes the parse — the dominant cost —
-    across the selector list)."""
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import gc
+    across the selector list).  A page that fails yields one zero row
+    per selector."""
+    from lexor_spark.kernel.selector import query
 
-        from lexor_spark.kernel.dom import dispose
-        from lexor_spark.kernel.htmlparser import parse_html
-        from lexor_spark.kernel.selector import query
-        gc_was_enabled = gc.isenabled()
-        gc.disable()
-        try:
-            for batch in batches:
-                urls = batch.column("url").to_pylist()
-                htmls = batch.column("html").to_pylist()
-                cols: dict[str, list] = {n: [] for n in _CSS_ARROW.names}
-                for url, html in zip(urls, htmls):
-                    doc = None
-                    mark = len(cols["url"])  # rollback point: an
-                    # exception mid-selector-loop must not leave a
-                    # partial row set that the except block then doubles
-                    try:
-                        text = decode_html(html or b"")[0]
-                        doc, _ = parse_html(text, url)
-                        for sel in selectors:
-                            found = query(doc, sel)
-                            first = (found[0].text_content().strip()[:128]
-                                     if found else None)
-                            cols["url"].append(url)
-                            cols["selector"].append(sel)
-                            cols["n_matches"].append(len(found))
-                            cols["first_text"].append(first)
-                    except Exception:
-                        for lst in cols.values():
-                            del lst[mark:]
-                        for sel in selectors:
-                            cols["url"].append(url)
-                            cols["selector"].append(sel)
-                            cols["n_matches"].append(0)
-                            cols["first_text"].append(None)
-                    finally:
-                        if doc is not None:
-                            dispose(doc)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[n], type=_CSS_ARROW.field(n).type)
-                     for n in _CSS_ARROW.names], schema=_CSS_ARROW)
-        finally:
-            if gc_was_enabled:
-                gc.enable()
-    return run
+    def rows(url, doc):
+        out = []
+        for sel in selectors:
+            found = query(doc, sel)
+            out.append((url, sel, len(found),
+                        found[0].text_content().strip()[:128]
+                        if found else None))
+        return out
+    return _page_udf(_CSS_ARROW, _on_dom(
+        rows, lambda url, _: [(url, sel, 0, None) for sel in selectors]))
 
 
 def css_select(pages: DataFrame, selectors: list[str],
@@ -446,60 +382,32 @@ def css_select(pages: DataFrame, selectors: list[str],
     return salted.mapInArrow(_css_batches(selectors), CSS_SCHEMA)
 
 
-REWRITE_SCHEMA = ("url string, html_out string, n_removed int, "
-                  "n_in long, n_out long")
-
 _REWRITE_ARROW = pa.schema([
     ("url", pa.string()), ("html_out", pa.string()),
     ("n_removed", pa.int32()), ("n_in", pa.int64()), ("n_out", pa.int64()),
 ])
+REWRITE_SCHEMA = from_arrow_schema(_REWRITE_ARROW)
 
 
 def _rewrite_batches(selectors: list[str]):
     """Batch UDF factory for `css_rewrite`: parse → Selector.remove()
     per probe → re-serialize."""
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import gc
+    from lexor_spark.kernel.htmlwriter import write_html
+    from lexor_spark.kernel.selector import Selector
 
-        from lexor_spark.kernel.dom import dispose
-        from lexor_spark.kernel.htmlparser import parse_html
-        from lexor_spark.kernel.htmlwriter import write_html
-        from lexor_spark.kernel.selector import Selector
-        gc_was_enabled = gc.isenabled()
-        gc.disable()
-        try:
-            for batch in batches:
-                urls = batch.column("url").to_pylist()
-                htmls = batch.column("html").to_pylist()
-                cols: dict[str, list] = {n: [] for n in _REWRITE_ARROW.names}
-                for url, html in zip(urls, htmls):
-                    doc = None
-                    raw = bytes(html or b"")
-                    try:
-                        doc, _ = parse_html(decode_html(raw)[0], url)
-                        n_removed = 0
-                        for sel in selectors:
-                            hit = Selector(sel, doc)
-                            n_removed += len(hit)
-                            hit.remove()
-                        out = write_html(doc)
-                    except Exception:
-                        out, n_removed = "", 0
-                    finally:
-                        if doc is not None:
-                            dispose(doc)
-                    cols["url"].append(url)
-                    cols["html_out"].append(out)
-                    cols["n_removed"].append(n_removed)
-                    cols["n_in"].append(len(raw))
-                    cols["n_out"].append(len(out))
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[n], type=_REWRITE_ARROW.field(n).type)
-                     for n in _REWRITE_ARROW.names], schema=_REWRITE_ARROW)
-        finally:
-            if gc_was_enabled:
-                gc.enable()
-    return run
+    def per_page(url, html):
+        n_in = len(html or b"")
+
+        def rows(url, doc):
+            n_removed = 0
+            for sel in selectors:
+                hit = Selector(sel, doc)
+                n_removed += len(hit)
+                hit.remove()
+            out = write_html(doc)
+            return [(url, out, n_removed, n_in, len(out))]
+        return _on_dom(rows, lambda url, _: [(url, "", 0, n_in, 0)])(url, html)
+    return _page_udf(_REWRITE_ARROW, per_page)
 
 
 def css_rewrite(pages: DataFrame, remove_selectors: list[str],
@@ -524,48 +432,21 @@ def css_rewrite(pages: DataFrame, remove_selectors: list[str],
 # HTML → Markdown conversion (the reference's flagship target)
 # ---------------------------------------------------------------------------
 
-MARKDOWN_SCHEMA = "url string, markdown string, n_chars long, ok boolean"
-
 _MD_ARROW = pa.schema([
     ("url", pa.string()), ("markdown", pa.string()),
     ("n_chars", pa.int64()), ("ok", pa.bool_()),
 ])
+MARKDOWN_SCHEMA = from_arrow_schema(_MD_ARROW)
 
 
-def _markdown_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    import gc
-
-    from lexor_spark.kernel.dom import dispose
-    from lexor_spark.kernel.htmlparser import parse_html
+def _markdown_rows(url, doc):
     from lexor_spark.kernel.mdwriter import write_markdown
-    gc_was_enabled = gc.isenabled()
-    gc.disable()
-    try:
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            cols: dict[str, list] = {n: [] for n in _MD_ARROW.names}
-            for url, html in zip(urls, htmls):
-                ok = True
-                doc = None
-                try:
-                    doc, _ = parse_html(decode_html(html or b"")[0], url)
-                    text = write_markdown(doc)
-                except Exception:
-                    text, ok = "", False
-                finally:
-                    if doc is not None:
-                        dispose(doc)
-                cols["url"].append(url)
-                cols["markdown"].append(text)
-                cols["n_chars"].append(len(text))
-                cols["ok"].append(ok)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[n], type=_MD_ARROW.field(n).type)
-                 for n in _MD_ARROW.names], schema=_MD_ARROW)
-    finally:
-        if gc_was_enabled:
-            gc.enable()
+    text = write_markdown(doc)
+    return [(url, text, len(text), True)]
+
+
+_markdown_batches = _page_udf(_MD_ARROW, _on_dom(
+    _markdown_rows, lambda url, _: [(url, "", 0, False)]))
 
 
 def convert_markdown(pages: DataFrame, salt_buckets: int = 256,
@@ -576,31 +457,19 @@ def convert_markdown(pages: DataFrame, salt_buckets: int = 256,
     return salted.mapInArrow(_markdown_batches, MARKDOWN_SCHEMA)
 
 
-CHARSET_SCHEMA = ("url string, encoding string, source string, "
-                  "n_chars int, decoded_prefix string")
-
 _CHARSET_ARROW = pa.schema([
     ("url", pa.string()), ("encoding", pa.string()), ("source", pa.string()),
     ("n_chars", pa.int32()), ("decoded_prefix", pa.string()),
 ])
+CHARSET_SCHEMA = from_arrow_schema(_CHARSET_ARROW)
 
 
-def _charset_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from lexor_spark.kernel.encoding import decode_html
-    for batch in batches:
-        urls = batch.column("url").to_pylist()
-        htmls = batch.column("html").to_pylist()
-        cols: dict[str, list] = {n: [] for n in _CHARSET_ARROW.names}
-        for url, html in zip(urls, htmls):
-            text, codec, source = decode_html(html or b"")
-            cols["url"].append(url)
-            cols["encoding"].append(codec)
-            cols["source"].append(source)
-            cols["n_chars"].append(len(text))
-            cols["decoded_prefix"].append(text[:2000])
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(cols[n], type=_CHARSET_ARROW.field(n).type)
-             for n in _CHARSET_ARROW.names], schema=_CHARSET_ARROW)
+def _charset_page(url, html):
+    text, codec, source = decode_html(html or b"")
+    return [(url, codec, source, len(text), text[:2000])]
+
+
+_charset_batches = _page_udf(_CHARSET_ARROW, _charset_page)
 
 
 def sniff_charsets(pages: DataFrame, salt_buckets: int = 256,
@@ -620,47 +489,27 @@ def sniff_charsets(pages: DataFrame, salt_buckets: int = 256,
 
 
 # ---------------------------------------------------------------------------
-# Checkpointed, resumable run
+# Density-based extraction (the second extractor) and cross-extractor QA
 # ---------------------------------------------------------------------------
-
-DENSITY_SCHEMA = ("url string, text string, n_blocks int, "
-                  "n_good int, ok boolean")
 
 _DENSITY_ARROW = pa.schema([
     ("url", pa.string()), ("text", pa.string()),
     ("n_blocks", pa.int32()), ("n_good", pa.int32()),
     ("ok", pa.bool_()),
 ])
+DENSITY_SCHEMA = from_arrow_schema(_DENSITY_ARROW)
 
 
-def _density_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    import gc
-
-    from lexor_spark.kernel.density import extract_density as _dens
-    gc_was_enabled = gc.isenabled()
-    gc.disable()
+def _density_page(url, html):
+    from lexor_spark.kernel.density import extract_density
     try:
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            cols: dict[str, list] = {n: [] for n in _DENSITY_ARROW.names}
-            for url, html in zip(urls, htmls):
-                try:
-                    r = _dens(html or b"", url)
-                    text, nb, ng, ok = r.text, r.n_blocks, r.n_good, True
-                except Exception:
-                    text, nb, ng, ok = "", 0, 0, False
-                cols["url"].append(url)
-                cols["text"].append(text)
-                cols["n_blocks"].append(nb)
-                cols["n_good"].append(ng)
-                cols["ok"].append(ok)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[n], type=_DENSITY_ARROW.field(n).type)
-                 for n in _DENSITY_ARROW.names], schema=_DENSITY_ARROW)
-    finally:
-        if gc_was_enabled:
-            gc.enable()
+        r = extract_density(html or b"", url)
+    except Exception:
+        return [(url, "", 0, 0, False)]
+    return [(url, r.text, r.n_blocks, r.n_good, True)]
+
+
+_density_batches = _page_udf(_DENSITY_ARROW, _density_page)
 
 
 def extract_density_pages(pages: DataFrame, salt_buckets: int = 256,
@@ -784,6 +633,10 @@ def extract_consensus(pages: DataFrame, lo_f1: float = 0.5,
                     review.alias("needs_review"), f1.alias("f1"))
 
 
+# ---------------------------------------------------------------------------
+# Checkpointed, resumable run
+# ---------------------------------------------------------------------------
+
 def committed_groups(output_dir: str) -> set[int]:
     """Groups already committed by a previous (possibly killed) run."""
     done: set[int] = set()
@@ -826,26 +679,12 @@ def _group_record(written: DataFrame, g: int, n_groups: int,
                   t0: float, salt_buckets: int) -> dict:
     """One committed group's lineage record, aggregated from the rows
     actually on disk/in the table (no kernel recompute)."""
-    stats = written.agg(
-        F.count("*").alias("n_rows"),
-        F.sum("n_chars_in").alias("bytes_in"),
-        F.sum("n_chars_out").alias("chars_out"),
-        F.sum("kernel_us").alias("kernel_us_total"),
-        F.max("kernel_us").alias("kernel_us_max"),
-        F.sum(F.when(~F.col("ok"), 1).otherwise(0)).alias("n_errors"),
-        F.sum(F.when(F.col("truncated"), 1).otherwise(0))
-         .alias("n_truncated"),
-    ).collect()[0]
+    stats = written.agg(*_metrics_aggs("n_rows")).collect()[0].asDict()
     return {
         "group": g,
         "n_groups": n_groups,
-        "n_rows": stats["n_rows"],
-        "bytes_in": int(stats["bytes_in"] or 0),
-        "chars_out": int(stats["chars_out"] or 0),
-        "kernel_us_total": int(stats["kernel_us_total"] or 0),
-        "kernel_us_max": int(stats["kernel_us_max"] or 0),
-        "n_errors": int(stats["n_errors"] or 0),
-        "n_truncated": int(stats["n_truncated"] or 0),
+        "n_rows": stats.pop("n_rows"),
+        **{k: int(v or 0) for k, v in stats.items()},
         "wall_s": round(time.time() - t0, 3),
         "salt_buckets": salt_buckets,
     }
@@ -910,6 +749,11 @@ def committed_groups_table(spark: SparkSession, table: str) -> set[int]:
             for r in spark.table(table).select("group").distinct().collect()}
 
 
+# "Cannot write into v1 table": the V2 writer's refusal of a session-
+# catalog (V1) table
+_V1_TABLE_WRITE_REFUSED = "_LEGACY_ERROR_TEMP_1012"
+
+
 def run_job_table(spark: SparkSession, pages: DataFrame, table: str,
                   n_groups: int = 8, salt_buckets: int = 256,
                   partitions: Optional[int] = None,
@@ -947,13 +791,14 @@ def run_job_table(spark: SparkSession, pages: DataFrame, table: str,
         if spark.catalog.tableExists(table):
             try:
                 extracted.writeTo(table).append()
-            except Exception:
-                # the sandbox's session catalog serves V1 tables, which
-                # the V2 writer refuses; a real Iceberg/V2 catalog takes
-                # the writeTo path above.  Error TEXT is Spark-version-
-                # fragile, so fall back on behavior: try the V1 writer
-                # (its own failure propagates).  insertInto matches the
+            except AnalysisException as exc:
+                # the session catalog serves V1 tables, which the V2
+                # writer refuses with this error class; a real
+                # Iceberg/V2 catalog takes the writeTo path above.  Any
+                # other error propagates.  insertInto matches the
                 # table's existing partitioning positionally.
+                if exc.getCondition() != _V1_TABLE_WRITE_REFUSED:
+                    raise
                 extracted.write.mode("append").insertInto(table)
         else:
             # partition by group so the per-group stats scan and any
@@ -974,8 +819,6 @@ def run_job_table(spark: SparkSession, pages: DataFrame, table: str,
 # ---------------------------------------------------------------------------
 # Multi-format routed extraction: sniff → per-type extractor
 # ---------------------------------------------------------------------------
-
-ROUTED_SCHEMA = "url string, route string, ok boolean, text string"
 
 _DECODED_ARROW = pa.schema([
     ("url", pa.string()), ("route", pa.string()), ("body", pa.string()),
@@ -1041,13 +884,11 @@ def extract_routed(pages: DataFrame, salt_buckets: int = 256,
                .select("url", F.lit("pdf_text").alias("route"),
                        "ok", "text"))
 
-    sc = pages.sparkSession.sparkContext
-    n_parts = partitions or sc.defaultParallelism * 4
-    textual = (routed.filter(route.isin("plain_text", "feed_parser"))
-               .repartition(n_parts, F.pmod(F.xxhash64("url"),
-                                            F.lit(salt_buckets)))
-               .mapInArrow(_decode_routed_batches,
-                           "url string, route string, body string"))
+    textual = (_salted_pages(
+        routed.filter(route.isin("plain_text", "feed_parser")),
+        salt_buckets, partitions, cols=("url", "payload", "route"))
+        .mapInArrow(_decode_routed_batches,
+                    from_arrow_schema(_DECODED_ARROW)))
     plain_out = (textual.filter(route == "plain_text")
                  .select("url", "route", F.lit(True).alias("ok"),
                          F.col("body").alias("text")))

@@ -16,17 +16,11 @@ from typing import Optional, Union
 
 from lexor_spark.kernel.dom import dispose
 from lexor_spark.kernel.extractor import collect_meta, convert, select_main
+from lexor_spark.kernel.fastpath import fast_extract
 from lexor_spark.kernel.htmlparser import parse_html
 from lexor_spark.kernel.textwriter import write_text
 
 __all__ = ["ExtractResult", "extract_document"]
-
-# Default extraction runs on the array-backed kernel (`fastpath`), which
-# is byte-identical to the object path (differential-pinned by
-# tests/test_fastpath.py) and ~1.5× faster serially.  The object path
-# remains for width/indent writer modes and as the A/B reference.
-USE_FASTPATH = True
-_fast_extract = None  # lazy import (fastpath imports this module's peers)
 
 # Hard ceiling on document size (decoded chars); larger inputs are truncated
 # and flagged — a 100 MB single blob must degrade to an error-ish row, not a
@@ -84,36 +78,15 @@ def _decode(html: Union[bytes, bytearray, memoryview, str]) -> str:
     raise TypeError(f"html must be str or bytes-like, got {type(html).__name__}")
 
 
-def extract_document(html: Union[bytes, str], uri: str = "",
-                     width: Optional[int] = None,
-                     indent: str = "",
-                     style: Optional[str] = None) -> ExtractResult:
-    """Extract main-content text + spans from one HTML document.
-
-    ``width``/``indent`` opt into the W5 wrap/indent writer engine
-    (reference `writer.py:233-346`); ``style`` selects a named W2
-    NodeWriter-rule registry (`kernel/styles.py` — writer styles as
-    config, the reference's style-plugin premise, `writer.py:419-445`).
-    The defaults keep the byte-pinned raw output the extraction oracle
-    verifies."""
-    res = ExtractResult()
+def _object_extract(res: ExtractResult, text: str, uri: str,
+                    width: Optional[int], indent: str,
+                    rules: Optional[dict]) -> None:
+    """Fill ``res`` from the object pipeline: ``htmlparser`` → node tree
+    → ``extractor.convert`` → ``textwriter``.  It serves the width/indent
+    writer modes and the W2 styles, and is the differential oracle of
+    ``fastpath.fast_extract`` (tests/test_fastpath.py)."""
     doc = converted = None
     try:
-        rules = None
-        if style is not None:
-            from lexor_spark.kernel.styles import style_rules
-            rules = style_rules(style)
-        text = _decode(html)
-        if len(text) > MAX_CHARS:
-            text = text[:MAX_CHARS]
-            res.truncated = True
-        if USE_FASTPATH and width is None and not indent and rules is None:
-            global _fast_extract
-            if _fast_extract is None:
-                from lexor_spark.kernel.fastpath import fast_extract
-                _fast_extract = fast_extract
-            _fast_extract(res, text)
-            return res
         doc, log = parse_html(text, uri)
         res.codes = [e.code for e in log]
         meta = collect_meta(doc)
@@ -138,9 +111,6 @@ def extract_document(html: Union[bytes, str], uri: str = "",
         res.text, spans = write_text(main, width=width, indent=indent,
                                      rules=rules)
         res.spans = [s.as_tuple() for s in spans]
-    except Exception as exc:  # hostile input → error row, not task failure
-        res.ok = False
-        res.err = f"{type(exc).__name__}: {exc}"[:500]
     finally:
         # break parent↔child cycles so both trees free by refcount — the
         # batch UDF runs with the cyclic GC disabled (see dom.dispose)
@@ -148,4 +118,38 @@ def extract_document(html: Union[bytes, str], uri: str = "",
             dispose(doc)
         if converted is not None:
             dispose(converted)
+
+
+def extract_document(html: Union[bytes, str], uri: str = "",
+                     width: Optional[int] = None,
+                     indent: str = "",
+                     style: Optional[str] = None) -> ExtractResult:
+    """Extract main-content text + spans from one HTML document.
+
+    ``width``/``indent`` opt into the W5 wrap/indent writer engine
+    (reference `writer.py:233-346`); ``style`` selects a named W2
+    NodeWriter-rule registry (`kernel/styles.py` — writer styles as
+    config, the reference's style-plugin premise, `writer.py:419-445`).
+    The defaults keep the byte-pinned raw output the extraction oracle
+    verifies, and run on the array-backed kernel (`fastpath`), which is
+    byte-identical to the object path (differential-pinned by
+    tests/test_fastpath.py) and ~1.5× faster serially; the writer modes
+    and styles take the object path (`_object_extract`)."""
+    res = ExtractResult()
+    try:
+        rules = None
+        if style is not None:
+            from lexor_spark.kernel.styles import style_rules
+            rules = style_rules(style)
+        text = _decode(html)
+        if len(text) > MAX_CHARS:
+            text = text[:MAX_CHARS]
+            res.truncated = True
+        if width is None and not indent and rules is None:
+            fast_extract(res, text)
+        else:
+            _object_extract(res, text, uri, width, indent, rules)
+    except Exception as exc:  # hostile input → error row, not task failure
+        res.ok = False
+        res.err = f"{type(exc).__name__}: {exc}"[:500]
     return res

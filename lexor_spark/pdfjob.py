@@ -13,26 +13,24 @@ bytes on every run, so extraction results are pinned by tests.
 
 from __future__ import annotations
 
-import gc
 from typing import Iterator, Optional
 
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
+from lexor_spark.job import _page_udf, _salted_pages
 from lexor_spark.kernel.pdftext import build_simple_pdf, extract_pdf_text
 
 __all__ = ["pdf_pages_df", "extract_pdfs", "PDF_OUTPUT_SCHEMA"]
-
-PDF_OUTPUT_SCHEMA = ("url string, text string, n_pages int, n_streams int, "
-                     "n_bytes_in long, ok boolean, err string")
 
 _PDF_ARROW = pa.schema([
     ("url", pa.string()), ("text", pa.string()), ("n_pages", pa.int32()),
     ("n_streams", pa.int32()), ("n_bytes_in", pa.int64()),
     ("ok", pa.bool_()), ("err", pa.string()),
 ])
+PDF_OUTPUT_SCHEMA = from_arrow_schema(_PDF_ARROW)
 
 
 def pdf_pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -58,39 +56,18 @@ def pdf_pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.mapInPandas(_gen, "url string, pdf binary")
 
 
-def _extract_pdf_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    gc_was_enabled = gc.isenabled()
-    gc.disable()
-    try:
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            blobs = batch.column("pdf").to_pylist()
-            cols: dict[str, list] = {n: [] for n in _PDF_ARROW.names}
-            for url, blob in zip(urls, blobs):
-                res = extract_pdf_text(bytes(blob) if blob is not None else b"")
-                cols["url"].append(url)
-                cols["text"].append(res.text)
-                cols["n_pages"].append(res.n_pages)
-                cols["n_streams"].append(res.n_streams)
-                cols["n_bytes_in"].append(len(blob) if blob is not None else 0)
-                cols["ok"].append(res.ok)
-                cols["err"].append(res.err)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[n], type=_PDF_ARROW.field(n).type)
-                 for n in _PDF_ARROW.names], schema=_PDF_ARROW)
-    finally:
-        if gc_was_enabled:
-            gc.enable()
+def _pdf_page(url, blob):
+    res = extract_pdf_text(bytes(blob) if blob is not None else b"")
+    return [(url, res.text, res.n_pages, res.n_streams,
+             len(blob) if blob is not None else 0, res.ok, res.err)]
+
+
+_extract_pdf_batches = _page_udf(_PDF_ARROW, _pdf_page)
 
 
 def extract_pdfs(pdfs: DataFrame, salt_buckets: int = 256,
                  partitions: Optional[int] = None) -> DataFrame:
     """(url, pdf) → extracted text, salted + Arrow-batched like the HTML
     job."""
-    sc = pdfs.sparkSession.sparkContext
-    if partitions is None:
-        partitions = sc.defaultParallelism * 4
-    salted = (pdfs.select("url", "pdf")
-              .repartition(partitions,
-                           F.pmod(F.xxhash64("url"), F.lit(salt_buckets))))
+    salted = _salted_pages(pdfs, salt_buckets, partitions, cols=("url", "pdf"))
     return salted.mapInArrow(_extract_pdf_batches, PDF_OUTPUT_SCHEMA)

@@ -33,12 +33,19 @@ from __future__ import annotations
 
 import gzip
 import io
+import json
 from typing import Iterator, Optional
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import (BinaryType, StringType, StructField,
                                StructType, TimestampType)
+
+from lexor_spark.content import extract_meta, meta_of_doc
+from lexor_spark.graph import extract_links, links_of_doc
+from lexor_spark.job import _on_dom, _page_udf, _salted_pages
 
 __all__ = ["parse_warc", "warc_records", "read_warc", "build_warc",
            "build_wet", "wet_shards", "write_wet",
@@ -432,73 +439,42 @@ def wat_shards(meta: DataFrame, url_col: str = "url",
         _pack, schema="shard long, n_records long, wat binary")
 
 
-_WAT_PAYLOAD_SCHEMA = "url string, wat_json string"
+_WAT_ARROW = pa.schema([("url", pa.string()), ("wat_json", pa.string())])
+_WAT_PAYLOAD_SCHEMA = from_arrow_schema(_WAT_ARROW)
 
 
-def _wat_payload_batches(batches) -> "Iterator":
-    """Fused WAT kernel: ONE parse per page feeds both the head-
-    metadata and the outlink extraction (the per-document logic is
-    imported from `content.meta_of_doc` / `graph.links_of_doc` — same
-    source of truth as the standalone operators), and the envelope is
-    serialized in-kernel.  Versus the compositional plan (two full
-    parse passes + a corpus-sized url equi-join) this halves the
-    dominant cost — the HTML parse — and deletes the join shuffle
-    entirely; differential-pinned semantically identical by
-    `tests/test_warc.py::test_wat_fused_matches_compositional`."""
-    import gc
-    import json as _json
+def _wat_row(url: str, meta: dict, links: list) -> tuple:
+    """One page's (url, wat_json) — mirrors to_json(struct(...))
+    semantics: null fields omitted, field order fixed, links sorted
+    (url, text)."""
+    head = {k: v for k, v in (
+        ("Title", meta.get("title")),
+        ("Description", meta.get("description")),
+        ("OG-Title", meta.get("og_title")),
+        ("OG-Type", meta.get("og_type"))) if v is not None}
+    link_objs = sorted(
+        ({"url": a, "text": t} for _, a, t, _nf, _dp in links),
+        key=lambda l: (l["url"], l["text"]))
+    env = {"Envelope": {
+        "WARC-Header-Metadata": {"WARC-Target-URI": url},
+        "Payload-Metadata": {"HTML-Metadata": {
+            "Head": head, "Links": link_objs}}}}
+    return (url, json.dumps(env, ensure_ascii=False, separators=(",", ":")))
 
-    import pyarrow as pa
 
-    from lexor_spark.content import meta_of_doc
-    from lexor_spark.graph import links_of_doc
-    from lexor_spark.kernel.dom import dispose
-    from lexor_spark.kernel.encoding import decode_html
-    from lexor_spark.kernel.htmlparser import parse_html
-    gc_was_enabled = gc.isenabled()
-    gc.disable()
-    try:
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            out_urls, out_jsons = [], []
-            for url, html in zip(urls, htmls):
-                meta: dict = {}
-                links: list = []
-                doc = None
-                try:
-                    doc, _ = parse_html(decode_html(html or b"")[0], url)
-                    meta = meta_of_doc(doc)
-                    links = links_of_doc(doc, url)
-                except Exception:
-                    pass
-                finally:
-                    if doc is not None:
-                        dispose(doc)
-                # mirror to_json(struct(...)) semantics: null fields
-                # omitted, field order fixed, links sorted (url, text)
-                head = {k: v for k, v in (
-                    ("Title", meta.get("title")),
-                    ("Description", meta.get("description")),
-                    ("OG-Title", meta.get("og_title")),
-                    ("OG-Type", meta.get("og_type"))) if v is not None}
-                link_objs = sorted(
-                    ({"url": a, "text": t} for _, a, t, _nf, _dp in links),
-                    key=lambda l: (l["url"], l["text"]))
-                env = {"Envelope": {
-                    "WARC-Header-Metadata": {"WARC-Target-URI": url},
-                    "Payload-Metadata": {"HTML-Metadata": {
-                        "Head": head, "Links": link_objs}}}}
-                out_urls.append(url)
-                out_jsons.append(_json.dumps(
-                    env, ensure_ascii=False, separators=(",", ":")))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_urls, type=pa.string()),
-                 pa.array(out_jsons, type=pa.string())],
-                names=["url", "wat_json"])
-    finally:
-        if gc_was_enabled:
-            gc.enable()
+# Fused WAT kernel: ONE parse per page feeds both the head-metadata and
+# the outlink extraction (the per-document logic is imported from
+# `content.meta_of_doc` / `graph.links_of_doc` — same source of truth as
+# the standalone operators), and the envelope is serialized in-kernel.
+# Versus the compositional plan (two full parse passes + a corpus-sized
+# url equi-join) this halves the dominant cost — the HTML parse — and
+# deletes the join shuffle entirely; differential-pinned semantically
+# identical by `tests/test_warc.py::test_wat_fused_matches_compositional`.
+# A page that fails to parse gets the envelope with no metadata and no
+# links.
+_wat_payload_batches = _page_udf(_WAT_ARROW, _on_dom(
+    lambda url, doc: [_wat_row(url, meta_of_doc(doc), links_of_doc(doc, url))],
+    lambda url, _: [_wat_row(url, {}, [])]))
 
 
 def wat_payload_df(pages: DataFrame, fused: bool = True) -> DataFrame:
@@ -511,11 +487,7 @@ def wat_payload_df(pages: DataFrame, fused: bool = True) -> DataFrame:
     parse, no url join.  ``fused=False`` keeps the compositional plan
     (extract_meta ⋈ extract_links combined scan-side via ``to_json``)
     as the differential twin that pins the fused kernel's semantics."""
-    from lexor_spark.content import extract_meta
-    from lexor_spark.graph import extract_links
-
     if fused:
-        from lexor_spark.job import _salted_pages
         salted = _salted_pages(pages, 256, None)
         return salted.mapInArrow(_wat_payload_batches, _WAT_PAYLOAD_SCHEMA)
 

@@ -15,6 +15,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from lexor_spark.kernel import pipeline
+from lexor_spark.kernel.fastpath import fast_extract
 from lexor_spark.kernel.pipeline import ExtractResult, extract_document
 
 SF = "/root/testdata/sf0.001"
@@ -52,23 +53,35 @@ def _page_html(doc_id: int, text: str, lang: str) -> str:
     return head + shell_top + main_block + shell_bottom
 
 
-def _object_path(html, uri=""):
-    """Run the OBJECT pipeline regardless of the routing flag."""
-    old = pipeline.USE_FASTPATH
-    pipeline.USE_FASTPATH = False
+def _run(fill, html, uri):
+    """One kernel path with `extract_document`'s decode, truncation and
+    error-row handling around it."""
+    res = ExtractResult()
     try:
-        return extract_document(html, uri)
-    finally:
-        pipeline.USE_FASTPATH = old
+        text = pipeline._decode(html)
+        if len(text) > pipeline.MAX_CHARS:
+            text = text[:pipeline.MAX_CHARS]
+            res.truncated = True
+        fill(res, text)
+    except Exception as exc:
+        res.ok = False
+        res.err = f"{type(exc).__name__}: {exc}"[:500]
+    return res
+
+
+def _object_path(html, uri=""):
+    """The OBJECT pipeline in its default writer mode."""
+    return _run(lambda res, text: pipeline._object_extract(
+        res, text, uri, None, "", None), html, uri)
 
 
 def _fast_path(html, uri=""):
-    old = pipeline.USE_FASTPATH
-    pipeline.USE_FASTPATH = True
-    try:
-        return extract_document(html, uri)
-    finally:
-        pipeline.USE_FASTPATH = old
+    """The array kernel, which `extract_document` runs by default."""
+    res = _run(fast_extract, html, uri)
+    default = extract_document(html, uri)
+    for f in _FIELDS:
+        assert getattr(res, f) == getattr(default, f), f
+    return res
 
 
 _FIELDS = ExtractResult.__slots__

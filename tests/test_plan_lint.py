@@ -87,3 +87,36 @@ def test_python_boundary_is_arrow_batched(plans):
     # actually sees the Python boundary rather than trivially passing
     assert "extract_pages" in crossing
     assert "warc_extract" in crossing
+
+
+# The page-kernel runner (`job._page_udf`) is the one place a per-page
+# operator's batch loop lives; `_decode_routed_batches` (three input
+# columns) is the one batch loop outside it.
+RUNNER_ONLY = ("gc.disable", "RecordBatch.from_arrays")
+RUNNER_HOMES = {("job.py", "_page_udf"), ("job.py", "_decode_routed_batches")}
+
+
+def _runner_only_calls():
+    """(file, top-level def, call) for every RUNNER_ONLY call in the
+    package source."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "lexor_spark"
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        for top in tree.body:
+            for node in ast.walk(top):
+                if not (isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)):
+                    continue
+                call = ast.unparse(node.func)
+                if call.endswith(RUNNER_ONLY):
+                    yield (path.name, getattr(top, "name", None), call)
+
+
+def test_batch_loops_live_in_the_runner():
+    """No operator hand-copies the GC switch or the batch build: both
+    appear in the package only inside the runner and the routed decode."""
+    calls = list(_runner_only_calls())
+    assert {(f, d) for f, d, _ in calls} == RUNNER_HOMES, calls
