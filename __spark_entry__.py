@@ -3934,8 +3934,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     two rounds.  Historical r1–r4 allocation rationale: the git
     history of this docstring (commit ce4a1ea and earlier)."""
     rq = RELATIONAL_QUERIES
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-        # ---- group A: last driver-green r01/r02 ----
+    return {
+        # ---- driver window: the first 50 entries ----
         "parts_shipped": rq["parts_shipped"],
         "pricing_summary": rq["pricing_summary"],
         "ann_bucketed": _q_ann_bucketed,
@@ -3953,7 +3953,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_features": _q_text_features,
         "url_filter": _q_url_filter,
         "url_stats": _q_url_stats,
-        # ---- group B: non-relational r03-green, displaced in r4 ----
         "ann_ivf": _q_ann_ivf,
         "ann_ivfpq": _q_ann_ivfpq,
         "ann_pq": _q_ann_pq,
@@ -3982,19 +3981,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "span_dedup": _q_span_dedup,
         "temperature_sample": _q_temperature_sample,
         "url_canonical": _q_url_canonical,
-        # ---- group C: relational r03 family carriers ----
         "cube_status": rq["cube_status"],
         "event_sessions": rq["event_sessions"],
         "supplier_only_nations": rq["supplier_only_nations"],
-        # ---- group D: r5 module-changed carriers ----
         "lr_auc": _q_lr_auc,
         "doremi_sample": _q_doremi_sample,
-    }
-    assert len(out) == 50
-    # ---- window boundary: the 50 entries above are driver-recorded ----
-    # r04-driver-green entries rotate just past the boundary (verified
-    # last round, still swept every round by scripts/check_oracles.py)
-    out.update({
+        # ---- past the window: value-oracled by the full sweep ----
         "pq_codes": _q_pq_codes,
         "cdx_lookup": _q_cdx_lookup,
         "pack_firstfit": _q_pack_firstfit,
@@ -4044,36 +4036,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "density_extract": _q_density_extract,
         "quality_verdict": _q_quality_verdict,
         "cm_topk": _q_cm_topk,
-    })
-    # the bpe_merges / ann_bucketed group-2 rotation slots and
-    # robots_sitemaps' slot went to the session-tail never-verified
-    # operators mime_sniff, cache_plan and sitemap_refetch
-    # (never-verified outranks refreshing prior-green entries;
-    # robots_sitemaps' sitemap_entries code path now runs IN-window
-    # end-to-end inside sitemap_refetch, and robots.py keeps four
-    # other in-window entries); all three wait just past the boundary,
-    # still swept by scripts/check_oracles.py
-    # the pricing_summary / parts_shipped group-2 rotation slots went to
-    # the late-r4 microdata_extract + recrawl_schedule (never-verified
-    # operators outrank refreshing r01/r02-green entries); both wait
-    # just past the boundary, still swept by scripts/check_oracles.py
-    rel = dict(RELATIONAL_QUERIES)
-    # ---- window boundary: the 50 entries above are driver-recorded ----
-    # rotated past the window: r03-green and unchanged since (the
-    # remaining relational entries + lr_scores); still value-oracled by
-    # scripts/check_oracles.py every round
-    out.update(rel)
-    out.update({
-        # url_filter's and cosine_dup_pairs' group-2 rotation slots went
-        # to outline_extract and link_context (never-verified outranks
-        # r01/r02-green refresh; the urlfns family stays in-window via
-        # url_stats + url_bloom, the cosine family via cosine_topk +
-        # ann_bucketed)
-        "robots_sitemaps": _q_robots_sitemaps,
-        # displaced by the final-session eight (readability …
-        # srcset_assets): never-driver-verified but module-delta-free;
-        # wait just past the boundary, still swept every round by
-        # scripts/check_oracles.py
+        "shipping_priority": rq["shipping_priority"],
+        "region_volume": rq["region_volume"],
+        "latest_order_per_customer": rq["latest_order_per_customer"],
+        "running_revenue": rq["running_revenue"],
+        "rollup_status": rq["rollup_status"],
+        "customers_no_urgent_orders": rq["customers_no_urgent_orders"],
+        "event_type_matrix": rq["event_type_matrix"],
+        "promo_revenue": rq["promo_revenue"],
+        "small_quantity_revenue": rq["small_quantity_revenue"],
+        "order_count_distribution": rq["order_count_distribution"],
+        "top_supplier": rq["top_supplier"],
+        "rich_idle_customers": rq["rich_idle_customers"],
+        "late_order_priority": rq["late_order_priority"],
+        "big_orders": rq["big_orders"],
+        "hot_parts": rq["hot_parts"],
+        "priority_customer_breadth": rq["priority_customer_breadth"],
+        "corpus_stats": rq["corpus_stats"],
         "url_bloom": _q_url_bloom,
         "jsonld_extract": _q_jsonld,
         "microdata_extract": _q_microdata,
@@ -4083,37 +4062,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "link_context": _q_link_context,
         "minhash_est": _q_minhash_est,
         "feed_entries": _q_feed_entries,
-        # hits' slot pulled ngram_counts back inside the boundary; the
-        # fixture-graph HITS recipe is hyperball's in-window sibling
         "hits": _q_hits,
-        # displaced by the session-tail postings_index/phrase_hits/
-        # code_detect (never-verified new code outranks re-verifying
-        # these three, whose modules stay in-window via siblings)
-        "robots_rules": _q_robots_rules,
-        "cdx_fetch_list": _q_cdx_fetch_list,
-        # displaced by the round-4 continuation trio lr_auc/
-        # doremi_weights/cm_topk (brand-new evals/sampling/sketches
-        # code outranks these never-verified-but-sibling-covered rows;
-        # all three swept every round by scripts/check_oracles.py)
         "phrase_hits": _q_phrase_hits,
         "sitemap_refetch": _q_sitemap_refetch,
         "ngram_counts": _q_ngram_counts,
         "cdx_diff": _q_cdx_diff,
-        # new this session, value-oracled from birth but past the
-        # boundary (the window's never-verified budget went to the
-        # lr_auc/doremi/cm_topk/hll_distinct quartet; the sampling.py
-        # delta is in-window via doremi_weights)
         "epoch_shuffle": _q_epoch_shuffle,
-        "doremi_sample": _q_doremi_sample,
         "mixture_coverage": _q_mixture_coverage,
         "crawl_delays": _q_crawl_delays,
-        "bpe_merges": _q_bpe_merges,
         "bpe_merges_fast": _q_bpe_merges_fast,
-        "ann_bucketed": _q_ann_bucketed,
-        # session-tail additions: wait here for round-5 window slots
-        # (the 50 in-window entries are all never-driver-verified too;
-        # lang_consistency's new kernel code — the html_lang walk — IS
-        # in-window via page_directives)
         "lang_consistency": _q_lang_consistency,
         "snippet_topk": _q_snippets,
         "crawl_budget": _q_crawl_budget,
@@ -4128,71 +4085,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "index_gate": _q_index_gate,
         "truncated_fetch": _q_truncated_fetch,
         "mojibake_stats": _q_mojibake,
-        "url_filter": _q_url_filter,
-        "cosine_dup_pairs": _q_cosine_dup_pairs,
-        # dedup_jaccard_pairs'/simhash'/cosine_topk's/sample_stratified's
-        # group-2 rotation slots went to the late-r4 redirect_resolve,
-        # soft404_detect, crawl_traps and alias_collapse (never-verified
-        # outranks r01/r02-green refresh; the dedup family stays
-        # in-window via dedup_exact, dup_clusters and minhash_est, the
-        # cosine family via ann_bucketed, the sampling family via
-        # hash_split)
-        "dedup_jaccard_pairs": _q_jaccard_pairs,
-        "simhash": _q_simhash,
-        "cosine_topk": _q_cosine_topk,
-        "sample_stratified": _q_sample_stratified,
-        # url_stats' slot went to feed_entries (urlfns host/path family
-        # stays in-window via host_quality/host_filter_docs/crawl_traps)
-        "url_stats": _q_url_stats,
-        # decontam_overlap's slot went to http_headers (the dedup.py
-        # n-gram family stays in-window via dedup_exact/dup_clusters)
-        "decontam_overlap": _q_decontam,
-        # pii_redact's and text_features' slots went to extract_eval
-        # and containment_pairs (the textfns family stays in-window via
-        # script_profile/gopher_filter/lm_buckets)
-        "pii_redact": _q_pii_redact,
-        "text_features": _q_text_features,
-        # dup_clusters' slot went to revisit_records (the dedup family
-        # stays in-window via dedup_exact/minhash_est/containment_pairs)
-        "dup_clusters": _q_dup_clusters,
-        # hash_split's slot went to mixture_plan (sampling.py's r4 delta
-        # IS mixture_plan, which covers the module in-window)
-        "hash_split": _q_hash_split,
-        # dedup_exact's slot went to cluster_keepers (exact fingerprint
-        # machinery stays pytest-pinned; the dedup family is in-window
-        # via minhash_est/containment_pairs/cluster_keepers)
-        "dedup_exact": _q_exact_dedup,
-        "lm_score": _q_lm_score,
-        "repetition_stats": _q_repetition_stats,
-        "pack_bins": _q_pack_bins,
-        "bm25_search": _q_bm25_search,
-        "robots_filter": _q_robots_filter,
         "corpus_card": _q_corpus_card,
         "zipf_fit": _q_zipf_fit,
         "collocations": _q_collocations,
         "sitemap_index": _q_sitemap_index,
-        "sitemap_entries": _q_sitemap_entries,
-        "pagerank": _q_pagerank,
-        "cdx_parse": _q_cdx_parse,
-        "ann_ivfpq": _q_ann_ivfpq,
-        "kmeans_clusters": _q_kmeans_clusters,
-        "domain_cap": _q_domain_cap,
-        "url_canonical": _q_url_canonical,
-        "dsir_weights": _q_dsir_weights,
-        "semantic_dedup": _q_semantic_dedup,
         "emb_from_text": _q_emb_from_text,
         "semantic_dedup_text": _q_semantic_dedup_text,
-        "ann_pq": _q_ann_pq,
-        "minhash_signature": _q_minhash_sig,
-        "dedup_lsh_pairs": _q_lsh_pairs,
-        "chunk_passages": _q_chunk_passages,
-        "span_dedup": _q_span_dedup,
-        "ann_ivf": _q_ann_ivf,
-        "ann_recall": _q_ann_recall,
-        "lr_scores": _q_lr_scores,
-        "dsir_sample": _q_dsir_sample,
-        "temperature_sample": _q_temperature_sample,
-        "lr_weights": _q_lr_weights,
         # extraction (kernel; rows-only check — not ANSI-SQL-expressible)
         "extract_pages": _q_extract_pages,
         "extract_metrics": _q_extract_metrics,
@@ -4255,8 +4153,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stream_dedup": _q_stream_dedup,
         "stream_sessions": _q_stream_sessions,
         "stream_cdx_fetch": _q_stream_cdx_fetch,
-    })
-    return out
+    }
 
 
 def oracle_sql() -> dict[str, str]:

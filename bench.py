@@ -13,6 +13,10 @@ action dominates Spark fixed costs.  Results are sunk with the ``noop``
 datasource: full execution, zero driver collection — the measured time is
 the distributed plan, not a ``collect()``.
 
+Every other timed query is a ``__spark_entry__.queries()`` entry, looked
+up by name from ``TIMED``: the bench times exactly the plans that the
+oracle sweep and the plan lint check.
+
 Extra keys beyond the contract (``docs_per_sec``, ``n_docs``, ``cpus``)
 ride along for BENCH/BASELINE.md scaling bookkeeping.
 """
@@ -29,6 +33,42 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 REPEAT = int(os.environ.get("BENCH_REPEAT", "24"))
+
+# gate entries timed by name: ``queries()[name](spark, SF_DIR)`` is the
+# same plan the oracle sweep and the plan lint check
+TIMED = ("text_features", "dedup_exact", "minhash_signature",
+         "dedup_lsh_pairs", "span_dedup", "dup_clusters", "lm_score",
+         "bpe_merges", "simhash", "cosine_topk", "ann_bucketed",
+         "kmeans_clusters", "ann_ivf", "pq_codes", "ann_pq",
+         "ann_ivfpq", "bm25_search", "dsir_weights",
+         "temperature_sample", "tfidf_keywords", "pack_bins",
+         "pack_firstfit", "cdx_diff", "fetch_schedule",
+         "gopher_filter", "script_profile", "lm_buckets",
+         "host_boilerplate", "robots_filter", "charset_sniff",
+         "html_tables", "page_meta", "density_extract",
+         "jsonld_extract", "ngram_counts", "url_bloom",
+         "quality_verdict", "containment_pairs", "cluster_keepers",
+         "mixture_plan", "crawl_traps", "revisit_records",
+         "extract_eval", "redirect_resolve", "mime_sniff",
+         "cache_plan", "sitemap_refetch", "extract_routed",
+         "surt_keys", "c4_filter", "frontier_queue", "index_gate",
+         "truncated_fetch", "mojibake_stats", "postings_index",
+         "phrase_hits", "code_detect", "lang_consistency",
+         "snippet_topk", "serp_dedup", "crawl_budget", "ranking_eval",
+         "winnow_fp", "postings_merge", "crawl_loop",
+         "crawl_loop_full", "hyperball", "readability", "zipf_fit",
+         "heaps_law", "lsh_tuning", "article_stitch",
+         "hreflang_clusters", "srcset_assets", "outline_extract",
+         "microdata_extract", "feed_entries", "recrawl_schedule",
+         "link_context", "minhash_est", "hits", "host_rank",
+         "tokenize_pack", "extractor_diff", "lr_calibration",
+         "corpus_card", "extract_consensus", "lsh_recall",
+         "bm25_indexed", "collocations", "lr_auc", "doremi_weights",
+         "cm_topk", "hll_distinct", "epoch_shuffle",
+         "bpe_merges_fast", "emb_from_text", "semantic_dedup_text",
+         "rdfa_extract", "mixture_coverage", "doremi_sample",
+         "pricing_summary", "shipping_priority", "region_volume",
+         "latest_order_per_customer", "event_sessions")
 
 
 def _sf_of(path: str) -> float:
@@ -74,16 +114,9 @@ def timed(make_df) -> float:
 
 
 def main() -> None:
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from lexor_spark import (bpe, cdx, dedup, dsir, frontier,  # noqa: F401
-                             lm, packing, robots, sampling, search, sim,
-                             textfns)
-    import __spark_entry__ as _entry
-    from lexor_spark.job import (extract_pages, partition_metrics,
-                                 sniff_charsets)
-    from lexor_spark.pages import encoded_pages_df, materialized_pages
-    from lexor_spark.queries import RELATIONAL_QUERIES
+    from __spark_entry__ import queries
+    from lexor_spark.job import css_select, extract_pages, partition_metrics
+    from lexor_spark.pages import materialized_pages
 
     spark = make_spark(CPUS)
     timings: dict[str, float] = {}
@@ -101,181 +134,15 @@ def main() -> None:
     timings["extract_metrics"] = timed(
         lambda: partition_metrics(extract_pages(pages, salt_buckets=256)))
 
-    from lexor_spark.job import css_select
     timings["css_select"] = timed(
         lambda: css_select(pages, ["nav.nav a", "#main p",
                                    "main blockquote, article blockquote"],
                            salt_buckets=256))
 
-    # -- training-data operators ------------------------------------------
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
-        .repartition(CPUS)  # single-row-group file scans as one task
-    ops = {
-        "text_features": lambda: docs.select(
-            "doc_id",
-            textfns.token_count(F.col("text")).alias("n_tokens"),
-            textfns.word_count(F.col("text")).alias("n_words"),
-            textfns.lang_id(F.col("text")).alias("lang_guess"),
-            textfns.quality_score(F.col("text")).alias("quality"),
-            textfns.fingerprint(F.col("text")).alias("fp")),
-        "dedup_exact": lambda: dedup.exact_dedup(docs),
-        "minhash_signature": lambda: dedup.minhash_signature(docs).drop("sh"),
-        "dedup_lsh_pairs": lambda: dedup.lsh_pairs(docs, threshold=0.2),
-        "span_dedup": lambda: dedup.span_dedup(docs),
-        "dup_clusters": lambda: dedup.dup_clusters(docs, threshold=0.2),
-        "lm_score": lambda: lm.lm_score(docs),
-        "bpe_merges": lambda: bpe.bpe_train(docs, n_merges=12),
-        "simhash": lambda: dedup.simhash_df(docs),
-        "cosine_topk": lambda: sim.cosine_topk(spark, SF_DIR, query_id=0, k=10),
-        "ann_bucketed": lambda: sim.ann_bucketed(spark, SF_DIR, query_id=0, k=10),
-        "kmeans_clusters": lambda: sim.kmeans_clusters(spark, SF_DIR, k=8, iters=3),
-        "ann_ivf": lambda: sim.ann_ivf(spark, SF_DIR, query_id=0, k=10),
-        "pq_codes": lambda: sim.pq_codes(spark, SF_DIR),
-        "ann_pq": lambda: sim.ann_pq(spark, SF_DIR, query_id=0, topk=10),
-        "ann_ivfpq": lambda: sim.ann_ivfpq(spark, SF_DIR, query_id=0,
-                                           topk=10),
-        "bm25_search": lambda: search.bm25_topk(
-            docs, "spark join window", k=15),
-        "dsir_weights": lambda: dsir.dsir_weights(
-            docs, target=docs.filter(F.col("lang") == "en")),
-        "temperature_sample": lambda: sampling.temperature_sample(
-            docs, alpha=0.5),
-        "tfidf_keywords": lambda: search.tfidf_keywords(docs, k=3),
-        "pack_bins": lambda: packing.pack_bins(docs, budget=2048,
-                                               chunk=4096),
-        "pack_firstfit": lambda: packing.pack_firstfit(docs, budget=2048,
-                                                       chunk=4096),
-        "cdx_diff": lambda: cdx.cdx_diff(
-            cdx.cdx_snapshot_df(spark, SF_DIR, "old"),
-            cdx.cdx_snapshot_df(spark, SF_DIR, "new")),
-        "fetch_schedule": lambda: frontier.fetch_schedule(
-            cdx.cdx_fetch_list(cdx.cdx_fixture_df(spark, SF_DIR)),
-            robots.crawl_delays(robots.robots_fixture_df(spark, SF_DIR))),
-        "gopher_filter": lambda: docs.select(
-            "doc_id", *[v.alias(k) for k, v in
-                        textfns.gopher_signals(F.col("text")).items()]),
-        "script_profile": lambda: docs.select(
-            "doc_id", *[v.alias(k) for k, v in
-                        textfns.script_profile(F.col("text")).items()]),
-        "lm_buckets": lambda: lm.lm_buckets(docs),
-        "host_boilerplate": lambda: dedup.host_boilerplate(
-            docs.select("doc_id", F.concat(
-                F.lit("https://site"),
-                (F.col("doc_id") % 97).cast("string"), F.lit(".example/"),
-                F.col("source"), F.lit("/p"),
-                F.col("doc_id").cast("string")).alias("url"), "text")),
-        "robots_filter": lambda: robots.robots_filter(
-            docs.select(F.concat(
-                F.lit("https://site"),
-                (F.col("doc_id") % 97).cast("string"), F.lit(".example/"),
-                F.col("source"), F.lit("/p"),
-                F.col("doc_id").cast("string")).alias("url")),
-            robots.robots_fixture_df(spark, SF_DIR)),
-        "charset_sniff": lambda: sniff_charsets(
-            encoded_pages_df(spark, SF_DIR), salt_buckets=256),
-        # gate-fixture shapes (deterministic injected tables / heads
-        # over the sf documents, one kernel parse per page)
-        "html_tables": lambda: _entry._q_html_tables(spark, SF_DIR),
-        "page_meta": lambda: _entry._q_page_meta(spark, SF_DIR),
-        "density_extract": lambda: _entry._q_density_extract(spark, SF_DIR),
-        "jsonld_extract": lambda: _entry._q_jsonld(spark, SF_DIR),
-        "ngram_counts": lambda: search.ngram_counts(docs, n=3, min_df=2,
-                                                    k=100),
-        "url_bloom": lambda: _entry._q_url_bloom(spark, SF_DIR),
-        "quality_verdict": lambda: _entry._q_quality_verdict(spark, SF_DIR),
-        # round-4 crawl-ecosystem / curation additions
-        "containment_pairs": lambda: _entry._q_containment(spark, SF_DIR),
-        "cluster_keepers": lambda: dedup.cluster_keepers(docs,
-                                                         threshold=0.2),
-        "mixture_plan": lambda: _entry._q_mixture_plan(spark, SF_DIR),
-        "crawl_traps": lambda: _entry._q_crawl_traps(spark, SF_DIR),
-        "revisit_records": lambda: _entry._q_revisit(spark, SF_DIR),
-        "extract_eval": lambda: _entry._q_extract_eval(spark, SF_DIR),
-        "redirect_resolve": lambda: _entry._q_redirect_resolve(spark,
-                                                               SF_DIR),
-        "mime_sniff": lambda: _entry._q_mime_sniff(spark, SF_DIR),
-        "cache_plan": lambda: _entry._q_cache_plan(spark, SF_DIR),
-        "sitemap_refetch": lambda: _entry._q_sitemap_refetch(spark,
-                                                             SF_DIR),
-        "extract_routed": lambda: _entry._q_extract_routed(spark, SF_DIR),
-        "surt_keys": lambda: _entry._q_surt_keys(spark, SF_DIR),
-        "c4_filter": lambda: _entry._q_c4_filter(spark, SF_DIR),
-        "frontier_queue": lambda: _entry._q_frontier_queue(spark, SF_DIR),
-        "index_gate": lambda: _entry._q_index_gate(spark, SF_DIR),
-        "truncated_fetch": lambda: _entry._q_truncated_fetch(spark,
-                                                             SF_DIR),
-        "mojibake_stats": lambda: _entry._q_mojibake(spark, SF_DIR),
-        # session-tail: positional index, phrase probe, code routing
-        "postings_index": lambda: search.build_postings(docs),
-        "phrase_hits": lambda: search.phrase_search(docs, "fast table",
-                                                    k=15),
-        "code_detect": lambda: _entry._q_code_detect(spark, SF_DIR),
-        "lang_consistency": lambda: _entry._q_lang_consistency(spark,
-                                                               SF_DIR),
-        "snippet_topk": lambda: search.snippets(
-            docs, "spark join window", width=8, k=12),
-        "serp_dedup": lambda: _entry._q_serp_dedup(spark, SF_DIR),
-        "crawl_budget": lambda: _entry._q_crawl_budget(spark, SF_DIR),
-        "ranking_eval": lambda: _entry._q_ranking_eval(spark, SF_DIR),
-        "winnow_fp": lambda: dedup.winnow_fingerprints(docs, k=3, w=4),
-        "postings_merge": lambda: _entry._q_postings_merge(spark,
-                                                           SF_DIR),
-        "crawl_loop": lambda: _entry._q_crawl_loop(spark, SF_DIR),
-        "crawl_loop_full": lambda: _entry._q_crawl_loop_full(spark,
-                                                             SF_DIR),
-        "hyperball": lambda: _entry._q_hyperball(spark, SF_DIR),
-        # corpus diagnostics + asset/i18n tail
-        "readability": lambda: _entry._q_readability(spark, SF_DIR),
-        "zipf_fit": lambda: _entry._q_zipf_fit(spark, SF_DIR),
-        "heaps_law": lambda: _entry._q_heaps_law(spark, SF_DIR),
-        "lsh_tuning": lambda: _entry._q_lsh_tuning(spark, SF_DIR),
-        "article_stitch": lambda: _entry._q_article_stitch(spark, SF_DIR),
-        "hreflang_clusters": lambda: _entry._q_hreflang_clusters(spark,
-                                                                 SF_DIR),
-        "srcset_assets": lambda: _entry._q_srcset_assets(spark, SF_DIR),
-        "outline_extract": lambda: _entry._q_outline(spark, SF_DIR),
-        "microdata_extract": lambda: _entry._q_microdata(spark, SF_DIR),
-        "feed_entries": lambda: _entry._q_feed_entries(spark, SF_DIR),
-        "recrawl_schedule": lambda: _entry._q_recrawl(spark, SF_DIR),
-        "link_context": lambda: _entry._q_link_context(spark, SF_DIR),
-        "minhash_est": lambda: _entry._q_minhash_est(spark, SF_DIR),
-        "hits_centrality": lambda: _entry._q_hits(spark, SF_DIR),
-        "host_rank": lambda: _entry._q_host_rank(spark, SF_DIR),
-        "tokenize_pack": lambda: _entry._q_tokenize_pack(spark, SF_DIR),
-        "extractor_diff": lambda: _entry._q_extractor_diff(spark, SF_DIR),
-        "lr_calibration": lambda: _entry._q_lr_calibration(spark, SF_DIR),
-        "corpus_card": lambda: _entry._q_corpus_card(spark, SF_DIR),
-        "extract_consensus": lambda: _entry._q_extract_consensus(spark,
-                                                                 SF_DIR),
-        # exhaustive-jaccard truth side makes this the heaviest dedup
-        # audit — timed so a regression in the pair machinery shows
-        "lsh_recall": lambda: _entry._q_lsh_recall(spark, SF_DIR),
-        "bm25_indexed": lambda: _entry._q_bm25_indexed(spark, SF_DIR),
-        "collocations": lambda: _entry._q_collocations(spark, SF_DIR),
-        # round-4 continuation: rank-sum AUC, DoReMi mixture update,
-        # Count-Min heavy hitters
-        "lr_auc": lambda: _entry._q_lr_auc(spark, SF_DIR),
-        "doremi_weights": lambda: _entry._q_doremi(spark, SF_DIR),
-        "cm_topk": lambda: _entry._q_cm_topk(spark, SF_DIR),
-        "hll_distinct": lambda: _entry._q_hll_distinct(spark, SF_DIR),
-        "epoch_shuffle": lambda: sampling.epoch_shuffle(docs, n_shards=8),
-        # round-5 operators
-        "bpe_merges_fast": lambda: bpe.bpe_train_fast(docs, n_merges=12),
-        "emb_from_text": lambda: sim.emb_from_text(docs, dim=16),
-        "semantic_dedup_text": lambda: _entry._q_semantic_dedup_text(
-            spark, SF_DIR),
-        "rdfa_extract": lambda: _entry._q_rdfa(spark, SF_DIR),
-        "mixture_coverage": lambda: _entry._q_mixture_coverage(spark,
-                                                               SF_DIR),
-        "doremi_sample": lambda: _entry._q_doremi_sample(spark, SF_DIR),
-    }
-    for name, fn in ops.items():
-        timings[name] = timed(fn)
-
-    # -- relational harness -------------------------------------------------
-    for name in ("pricing_summary", "shipping_priority", "region_volume",
-                 "latest_order_per_customer", "event_sessions"):
-        timings[name] = timed(lambda: RELATIONAL_QUERIES[name](spark, SF_DIR))
+    # -- gate entries --------------------------------------------------------
+    qs = queries()
+    for n in TIMED:
+        timings[n] = timed(lambda: qs[n](spark, SF_DIR))
 
     total = round(sum(timings.values()), 3)
     print(json.dumps({

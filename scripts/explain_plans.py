@@ -18,6 +18,27 @@ sys.path.insert(0, REPO)
 
 SF_DIR = "/root/testdata/sf0.01"
 
+# the plans dumped, in EXPLAINS.md order; every name is a queries() entry
+PLANS = ("extract_pages", "pricing_summary", "shipping_priority",
+         "region_volume", "dedup_lsh_pairs", "cosine_topk",
+         "cosine_dup_pairs", "repetition_stats", "domain_cap",
+         "decontam_overlap", "ann_ivf", "css_select",
+         "span_dedup", "lm_score", "hash_split",
+         "sample_stratified", "semantic_dedup", "ann_pq",
+         "ann_ivfpq", "pagerank", "bm25_search", "dsir_weights",
+         "temperature_sample", "tfidf_keywords", "robots_filter",
+         "lr_weights", "pack_bins", "mime_sniff",
+         "frontier_queue", "index_gate", "extract_routed",
+         "postings_index", "phrase_hits", "code_detect",
+         "serp_dedup", "host_rank", "tokenize_pack",
+         "zipf_fit", "heaps_law", "readability",
+         "srcset_assets", "hreflang_clusters",
+         "bm25_indexed", "lr_auc", "doremi_weights", "cm_topk",
+         "hll_distinct", "epoch_shuffle", "winnow_fp",
+         "extractor_diff", "extract_consensus", "doremi_sample",
+         "crawl_loop_full", "emb_from_text",
+         "semantic_dedup_text", "rdfa_extract")
+
 NOTES = {
     "extract_pages": (
         "One exchange (the salt), then the fused kernel (MapInArrow). "
@@ -357,25 +378,7 @@ def main() -> None:
            "",
            f"Generated by `scripts/explain_plans.py` at sf_dir={SF_DIR}. ",
            "What to look for in each plan is annotated above it.", ""]
-    for name in ("extract_pages", "pricing_summary", "shipping_priority",
-                 "region_volume", "dedup_lsh_pairs", "cosine_topk",
-                 "cosine_dup_pairs", "repetition_stats", "domain_cap",
-                 "decontam_overlap", "ann_ivf", "css_select",
-                 "span_dedup", "lm_score", "hash_split",
-                 "sample_stratified", "semantic_dedup", "ann_pq",
-                 "ann_ivfpq", "pagerank", "bm25_search", "dsir_weights",
-                 "temperature_sample", "tfidf_keywords", "robots_filter",
-                 "lr_weights", "pack_bins", "mime_sniff",
-                 "frontier_queue", "index_gate", "extract_routed",
-                 "postings_index", "phrase_hits", "code_detect",
-                 "serp_dedup", "host_rank", "tokenize_pack",
-                 "zipf_fit", "heaps_law", "readability",
-                 "srcset_assets", "hreflang_clusters",
-                 "bm25_indexed", "lr_auc", "doremi_weights", "cm_topk",
-                 "hll_distinct", "epoch_shuffle", "winnow_fp",
-                 "extractor_diff", "extract_consensus", "doremi_sample",
-                 "crawl_loop_full", "emb_from_text",
-                 "semantic_dedup_text", "rdfa_extract"):
+    for name in PLANS:
         df = qs[name](spark, SF_DIR)
         buf = io.StringIO()
         with redirect_stdout(buf):
