@@ -3888,54 +3888,70 @@ def _srcset_assets_sql() -> str:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Oracle-backed entries FIRST (the driver's correctness file
-    records the first 50 entries); rows-only entries after the
-    boundary.  Every value-oracled entry — in-window or not — is
-    verified every round by the scripts/check_oracles.py full sweep;
-    the window decides only which 50 get this round's DRIVER hash.
+    """The gate registry: one ordered dict, each name once.
 
-    ROUND-5 allocation (VERDICT r4 'Next round' #1: pay the
-    verification-rotation debt — slots go strictly by verification
-    age, oldest first; new r5 operators no longer outrank rotation):
-
-    * group A (17): every entry whose last driver-green record is
-      r01/r02 — parts_shipped (r01); pricing_summary, ann_bucketed,
-      bpe_merges, cosine_dup_pairs, cosine_topk, decontam_overlap,
-      dedup_exact, dedup_jaccard_pairs, dup_clusters, hash_split,
-      pii_redact, sample_stratified, simhash, text_features,
-      url_filter, url_stats (r02).
-    * group B (28): every NON-relational r03-green row displaced by
-      the r4 window — the full list the r4 verdict named plus its
-      ellipsis: ann_ivf, ann_ivfpq, ann_pq, ann_recall, bm25_search,
-      cdx_fetch_list, cdx_parse, chunk_passages, dedup_lsh_pairs,
-      domain_cap, dsir_sample, dsir_weights, kmeans_clusters,
-      lm_score, lr_scores, lr_weights, minhash_signature, pack_bins,
-      pagerank, repetition_stats, robots_filter, robots_rules,
-      robots_sitemaps, semantic_dedup, sitemap_entries, span_dedup,
-      temperature_sample, url_canonical.
-    * group C (3): relational r03 rows chosen so queries.py's
-      distinct plan families stay in-window (cube/rollup, session
-      windows, anti-join set ops): cube_status, event_sessions,
-      supplier_only_nations.  65 age-qualified candidates competed
-      for 50 slots; the 17 relational r03 rows left out are the
-      lowest-risk exclusions — queries.py is unchanged since r1 and
-      keeps FIVE in-window carriers (groups A+C) — and every one
-      stays green in the local sweep.
-    * group D (2): module-changed carriers (the r4 policy's rule b) —
-      lr_auc re-verifies evals.py's r5 delta (overflow-safe
-      decimal/hugeint rank-sum) and doremi_sample re-verifies
-      sampling.py's r5 delta (mixture_apply's explicit left-join
-      missing-domain contract) through previously-driver-green paths.
-
-    Round-5 additions (bpe_merges_fast, emb_from_text,
-    semantic_dedup_text, rdfa_extract, mixture_coverage) enter PAST
-    the boundary, value-oracled from birth by the sweep.  After this
-    window runs, no value-oracled entry's driver record is older than
-    two rounds.  Historical r1–r4 allocation rationale: the git
-    history of this docstring (commit ce4a1ea and earlier)."""
+    The driver's correctness file records the first 50 entries; every
+    value-oracled entry, in the window or not, is checked every round
+    by the scripts/check_oracles.py sweep.  Round-6 window, in order:
+    the five round-5 operators (bpe_merges_fast … mixture_coverage),
+    the 17 relational rows missing from CORRECTNESS_r05.json
+    (shipping_priority … corpus_stats), then the first 28 entries of
+    CORRECTNESS_r04.json not in CORRECTNESS_r05.json (pq_codes …
+    mime_sniff)."""
     rq = RELATIONAL_QUERIES
     return {
         # ---- driver window: the first 50 entries ----
+        "bpe_merges_fast": _q_bpe_merges_fast,
+        "emb_from_text": _q_emb_from_text,
+        "semantic_dedup_text": _q_semantic_dedup_text,
+        "rdfa_extract": _q_rdfa,
+        "mixture_coverage": _q_mixture_coverage,
+        "shipping_priority": rq["shipping_priority"],
+        "region_volume": rq["region_volume"],
+        "latest_order_per_customer": rq["latest_order_per_customer"],
+        "running_revenue": rq["running_revenue"],
+        "rollup_status": rq["rollup_status"],
+        "customers_no_urgent_orders": rq["customers_no_urgent_orders"],
+        "event_type_matrix": rq["event_type_matrix"],
+        "promo_revenue": rq["promo_revenue"],
+        "small_quantity_revenue": rq["small_quantity_revenue"],
+        "order_count_distribution": rq["order_count_distribution"],
+        "top_supplier": rq["top_supplier"],
+        "rich_idle_customers": rq["rich_idle_customers"],
+        "late_order_priority": rq["late_order_priority"],
+        "big_orders": rq["big_orders"],
+        "hot_parts": rq["hot_parts"],
+        "priority_customer_breadth": rq["priority_customer_breadth"],
+        "corpus_stats": rq["corpus_stats"],
+        "pq_codes": _q_pq_codes,
+        "cdx_lookup": _q_cdx_lookup,
+        "pack_firstfit": _q_pack_firstfit,
+        "pagerank_links": _q_pagerank_links,
+        "robots_filter_ua": _q_robots_filter_ua,
+        "lr_calibration": _q_lr_calibration,
+        "readability": _q_readability,
+        "bm25_indexed": _q_bm25_indexed,
+        "heaps_law": _q_heaps_law,
+        "lsh_tuning": _q_lsh_tuning,
+        "lsh_recall": _q_lsh_recall,
+        "article_stitch": _q_article_stitch,
+        "hreflang_clusters": _q_hreflang_clusters,
+        "srcset_assets": _q_srcset_assets,
+        "tfidf_keywords": _q_tfidf_keywords,
+        "host_rank": _q_host_rank,
+        "tokenize_pack": _q_tokenize_pack,
+        "hll_distinct": _q_hll_distinct,
+        "fetch_schedule": _q_fetch_schedule,
+        "postings_index": _q_postings,
+        "code_detect": _q_code_detect,
+        "hyperball": _q_hyperball,
+        "redirect_resolve": _q_redirect_resolve,
+        "soft404_detect": _q_soft404,
+        "crawl_traps": _q_crawl_traps,
+        "alias_collapse": _q_alias_collapse,
+        "http_headers": _q_http_headers,
+        "mime_sniff": _q_mime_sniff,
+        # ---- past the window: value-oracled by the full sweep ----
         "parts_shipped": rq["parts_shipped"],
         "pricing_summary": rq["pricing_summary"],
         "ann_bucketed": _q_ann_bucketed,
@@ -3986,35 +4002,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "supplier_only_nations": rq["supplier_only_nations"],
         "lr_auc": _q_lr_auc,
         "doremi_sample": _q_doremi_sample,
-        # ---- past the window: value-oracled by the full sweep ----
-        "pq_codes": _q_pq_codes,
-        "cdx_lookup": _q_cdx_lookup,
-        "pack_firstfit": _q_pack_firstfit,
-        "pagerank_links": _q_pagerank_links,
-        "robots_filter_ua": _q_robots_filter_ua,
-        "lr_calibration": _q_lr_calibration,
-        "readability": _q_readability,
-        "bm25_indexed": _q_bm25_indexed,
-        "heaps_law": _q_heaps_law,
-        "lsh_tuning": _q_lsh_tuning,
-        "lsh_recall": _q_lsh_recall,
-        "article_stitch": _q_article_stitch,
-        "hreflang_clusters": _q_hreflang_clusters,
-        "srcset_assets": _q_srcset_assets,
-        "tfidf_keywords": _q_tfidf_keywords,
-        "host_rank": _q_host_rank,
-        "tokenize_pack": _q_tokenize_pack,
-        "hll_distinct": _q_hll_distinct,
-        "fetch_schedule": _q_fetch_schedule,
-        "postings_index": _q_postings,
-        "code_detect": _q_code_detect,
-        "hyperball": _q_hyperball,
-        "redirect_resolve": _q_redirect_resolve,
-        "soft404_detect": _q_soft404,
-        "crawl_traps": _q_crawl_traps,
-        "alias_collapse": _q_alias_collapse,
-        "http_headers": _q_http_headers,
-        "mime_sniff": _q_mime_sniff,
         "cache_plan": _q_cache_plan,
         "doremi_weights": _q_doremi,
         "extract_eval": _q_extract_eval,
@@ -4036,27 +4023,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "density_extract": _q_density_extract,
         "quality_verdict": _q_quality_verdict,
         "cm_topk": _q_cm_topk,
-        "shipping_priority": rq["shipping_priority"],
-        "region_volume": rq["region_volume"],
-        "latest_order_per_customer": rq["latest_order_per_customer"],
-        "running_revenue": rq["running_revenue"],
-        "rollup_status": rq["rollup_status"],
-        "customers_no_urgent_orders": rq["customers_no_urgent_orders"],
-        "event_type_matrix": rq["event_type_matrix"],
-        "promo_revenue": rq["promo_revenue"],
-        "small_quantity_revenue": rq["small_quantity_revenue"],
-        "order_count_distribution": rq["order_count_distribution"],
-        "top_supplier": rq["top_supplier"],
-        "rich_idle_customers": rq["rich_idle_customers"],
-        "late_order_priority": rq["late_order_priority"],
-        "big_orders": rq["big_orders"],
-        "hot_parts": rq["hot_parts"],
-        "priority_customer_breadth": rq["priority_customer_breadth"],
-        "corpus_stats": rq["corpus_stats"],
         "url_bloom": _q_url_bloom,
         "jsonld_extract": _q_jsonld,
         "microdata_extract": _q_microdata,
-        "rdfa_extract": _q_rdfa,
         "recrawl_schedule": _q_recrawl,
         "outline_extract": _q_outline,
         "link_context": _q_link_context,
@@ -4068,9 +4037,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ngram_counts": _q_ngram_counts,
         "cdx_diff": _q_cdx_diff,
         "epoch_shuffle": _q_epoch_shuffle,
-        "mixture_coverage": _q_mixture_coverage,
         "crawl_delays": _q_crawl_delays,
-        "bpe_merges_fast": _q_bpe_merges_fast,
         "lang_consistency": _q_lang_consistency,
         "snippet_topk": _q_snippets,
         "crawl_budget": _q_crawl_budget,
@@ -4089,8 +4056,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "zipf_fit": _q_zipf_fit,
         "collocations": _q_collocations,
         "sitemap_index": _q_sitemap_index,
-        "emb_from_text": _q_emb_from_text,
-        "semantic_dedup_text": _q_semantic_dedup_text,
         # extraction (kernel; rows-only check — not ANSI-SQL-expressible)
         "extract_pages": _q_extract_pages,
         "extract_metrics": _q_extract_metrics,
