@@ -21,7 +21,8 @@ Architecture (SURVEY.md §7, BASELINE.json ``north_rule``):
   the last commit.  On a real cluster the commit unit is an Iceberg
   snapshot append (``df.writeTo(tbl).append()``); this sandbox has no
   Iceberg runtime, so the fallback is a parquet dir per group + a
-  ``_COMMITTED_<g>`` marker — same atomicity contract, same resume logic.
+  ``_lineage/group-<g>.json`` marker — same atomicity contract, same
+  resume logic.
 
 **Adding a page operator.**  Declare the output once as a ``pa.schema``
 (the public Spark schema is ``from_arrow_schema`` of it).  Write the
@@ -43,7 +44,7 @@ from bisect import bisect_left
 from typing import Iterator, Optional
 
 import pyarrow as pa
-from pyspark.errors import AnalysisException
+from pyspark.errors import AnalysisException, SparkRuntimeException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
@@ -690,48 +691,64 @@ def _group_record(written: DataFrame, g: int, n_groups: int,
     }
 
 
-def run_job(spark: SparkSession, pages: DataFrame, output_dir: str,
-            n_groups: int = 8, salt_buckets: int = 256,
-            partitions: Optional[int] = None,
-            max_groups: Optional[int] = None) -> dict:
-    """Process ``pages`` in url-hash groups with commit-per-group.
-
-    Group predicate and salt use the same ``xxhash64(url)`` so group
-    filtering is a cheap scan-side predicate while salting still spreads
-    within the group.  Returns a lineage summary dict.
-
-    ``max_groups`` limits how many *new* groups to process this call —
-    that is how tests simulate a kill between commits."""
-    os.makedirs(os.path.join(output_dir, "_lineage"), exist_ok=True)
-    done = committed_groups(output_dir)
+def _commit_groups(pages: DataFrame, n_groups: int, work, committed,
+                   write, seal, salt_buckets: int,
+                   partitions: Optional[int],
+                   max_groups: Optional[int]) -> dict:
+    """The commit loop of `run_job` and `run_job_table`: for each group
+    of ``work`` not in ``committed()``, at most ``max_groups`` of them,
+    extract its pages, ``write(g, extracted)`` → the rows as written,
+    aggregate the lineage record from them (no kernel recompute) and
+    ``seal(g, record)``.  Group filter and salt hash the same
+    ``xxhash64(url)``, so the filter is scan-side."""
+    done = committed()
     group_col = F.pmod(F.xxhash64("url"), F.lit(n_groups))
     processed: list[dict] = []
-    for g in range(n_groups):
+    for g in work:
         if g in done:
             continue
         if max_groups is not None and len(processed) >= max_groups:
             break
         t0 = time.time()
-        part = pages.filter(group_col == g)
-        extracted = extract_pages(part, salt_buckets, partitions)
+        extracted = extract_pages(pages.filter(group_col == g),
+                                  salt_buckets, partitions)
+        record = _group_record(write(g, extracted), g, n_groups, t0,
+                               salt_buckets)
+        seal(g, record)
+        processed.append(record)
+    return {
+        "processed": processed,
+        "skipped_committed": sorted(done),
+        "complete": set(work) <= committed(),
+    }
+
+
+def run_job(spark: SparkSession, pages: DataFrame, output_dir: str,
+            n_groups: int = 8, salt_buckets: int = 256,
+            partitions: Optional[int] = None,
+            max_groups: Optional[int] = None) -> dict:
+    """Process ``pages`` in url-hash groups with commit-per-group: each
+    group is a parquet dir, sealed by its lineage marker.  ``max_groups``
+    caps the new groups this call processes (how tests simulate a kill).
+    Returns a lineage summary dict."""
+    os.makedirs(os.path.join(output_dir, "_lineage"), exist_ok=True)
+
+    def write(g: int, extracted: DataFrame) -> DataFrame:
         data_path = os.path.join(output_dir, f"group={g}")
         extracted.write.mode("overwrite").parquet(data_path)
-        # metrics come from the *written* files (no recompute of the
-        # kernel): one cheap aggregate per committed group
-        record = _group_record(spark.read.parquet(data_path), g, n_groups,
-                               t0, salt_buckets)
+        return spark.read.parquet(data_path)
+
+    def seal(g: int, record: dict) -> None:
         # marker write is the commit point: data is fully on disk first
         marker = os.path.join(output_dir, "_lineage", f"group-{g}.json")
         tmp = marker + ".tmp"
         with open(tmp, "w") as fh:
             json.dump(record, fh)
         os.replace(tmp, marker)
-        processed.append(record)
-    return {
-        "processed": processed,
-        "skipped_committed": sorted(done),
-        "complete": len(committed_groups(output_dir)) == n_groups,
-    }
+
+    return _commit_groups(pages, n_groups, range(n_groups),
+                          lambda: committed_groups(output_dir), write, seal,
+                          salt_buckets, partitions, max_groups)
 
 
 # ---------------------------------------------------------------------------
@@ -752,6 +769,8 @@ def committed_groups_table(spark: SparkSession, table: str) -> set[int]:
 # "Cannot write into v1 table": the V2 writer's refusal of a session-
 # catalog (V1) table
 _V1_TABLE_WRITE_REFUSED = "_LEGACY_ERROR_TEMP_1012"
+# a managed table's location exists but the catalog has no such table
+_STALE_LOCATION = "LOCATION_ALREADY_EXISTS"
 
 
 def run_job_table(spark: SparkSession, pages: DataFrame, table: str,
@@ -774,46 +793,60 @@ def run_job_table(spark: SparkSession, pages: DataFrame, table: str,
     Committed-ness is derived from data rows, so the work list is the
     set of NON-EMPTY groups (one cheap distinct over the url-hash
     column) — a group no url hashes to can never be pending forever."""
-    done = committed_groups_table(spark, table)
     group_col = F.pmod(F.xxhash64("url"), F.lit(n_groups))
-    expected = {int(r["g"]) for r in
-                pages.select(group_col.alias("g")).distinct().collect()}
-    processed: list[dict] = []
-    for g in sorted(expected):
-        if g in done:
-            continue
-        if max_groups is not None and len(processed) >= max_groups:
-            break
-        t0 = time.time()
-        part = pages.filter(group_col == g)
-        extracted = extract_pages(part, salt_buckets, partitions) \
-            .withColumn("group", F.lit(g))
-        if spark.catalog.tableExists(table):
+    expected = sorted({int(r["g"]) for r in
+                       pages.select(group_col.alias("g")).distinct().collect()})
+
+    def write(g: int, extracted: DataFrame) -> DataFrame:
+        extracted = extracted.withColumn("group", F.lit(g))
+        if not spark.catalog.tableExists(table):
+            _create_table(spark, extracted, table, provider)
+        else:
             try:
                 extracted.writeTo(table).append()
             except AnalysisException as exc:
                 # the session catalog serves V1 tables, which the V2
-                # writer refuses with this error class; a real
-                # Iceberg/V2 catalog takes the writeTo path above.  Any
-                # other error propagates.  insertInto matches the
-                # table's existing partitioning positionally.
+                # writer refuses with this error class; a real Iceberg/V2
+                # catalog takes the writeTo path above.  Any other error
+                # propagates.  insertInto matches the table's existing
+                # partitioning positionally.
                 if exc.getCondition() != _V1_TABLE_WRITE_REFUSED:
                     raise
                 extracted.write.mode("append").insertInto(table)
-        else:
-            # partition by group so the per-group stats scan and any
-            # downstream group predicate prune instead of full-scanning
-            extracted.writeTo(table).using(provider) \
-                .partitionedBy(F.col("group")).create()
-        record = _group_record(
-            spark.table(table).filter(F.col("group") == g),
-            g, n_groups, t0, salt_buckets)
-        processed.append(record)
-    return {
-        "processed": processed,
-        "skipped_committed": sorted(done),
-        "complete": expected <= committed_groups_table(spark, table),
-    }
+        return spark.table(table).filter(F.col("group") == g)
+
+    # the append is the commit: nothing to seal
+    return _commit_groups(pages, n_groups, expected,
+                          lambda: committed_groups_table(spark, table),
+                          write, lambda g, record: None,
+                          salt_buckets, partitions, max_groups)
+
+
+def _create_table(spark: SparkSession, extracted: DataFrame, table: str,
+                  provider: str) -> None:
+    """First append = table create, partitioned by group so the
+    per-group stats scan and any downstream group predicate prune
+    instead of full-scanning.  A run killed in the middle of a create
+    leaves the managed location on disk with no catalog entry, and Spark
+    then refuses the create with ``LOCATION_ALREADY_EXISTS``.  Nothing
+    there is committed (the committed set is read through the catalog),
+    so that location is cleared and the create retried once; any other
+    error propagates."""
+    def create() -> None:
+        extracted.writeTo(table).using(provider) \
+            .partitionedBy(F.col("group")).create()
+    try:
+        create()
+    except SparkRuntimeException as exc:
+        if (exc.getCondition() != _STALE_LOCATION
+                or spark.catalog.tableExists(table)):
+            raise
+        jvm = spark.sparkContext._jvm
+        loc = jvm.org.apache.hadoop.fs.Path(
+            exc.getMessageParameters()["location"].strip("'"))
+        loc.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()) \
+            .delete(loc, True)
+        create()
 
 
 # ---------------------------------------------------------------------------

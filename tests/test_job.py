@@ -183,3 +183,28 @@ def test_table_commit_empty_groups_complete(spark, pages):
         assert r2["processed"] == [] and r2["complete"]
     finally:
         spark.sql(f"drop table if exists {table}")
+
+
+def test_table_create_clears_stale_location(spark, pages):
+    """A kill in the middle of a create leaves the managed location on
+    disk with no catalog entry; the next run clears it and creates the
+    table, with no manual cleanup."""
+    import os
+    from urllib.parse import urlparse
+
+    from lexor_spark.job import run_job_table
+
+    table = "sg_test_stale_loc"
+    spark.sql(f"drop table if exists {table}")
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    stale = os.path.join(warehouse, table, "group=0")
+    os.makedirs(stale, exist_ok=True)
+    with open(os.path.join(stale, "part-00000.parquet"), "wb") as fh:
+        fh.write(b"partial write from a killed create")
+    assert not spark.catalog.tableExists(table)
+    try:
+        r = run_job_table(spark, pages, table, n_groups=4, partitions=8)
+        assert r["complete"]
+        assert spark.table(table).count() == pages.count()
+    finally:
+        spark.sql(f"drop table if exists {table}")
