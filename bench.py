@@ -34,8 +34,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 REPEAT = int(os.environ.get("BENCH_REPEAT", "24"))
 
-# gate entries timed by name: ``queries()[name](spark, SF_DIR)`` is the
-# same plan the oracle sweep and the plan lint check
 TIMED = ("text_features", "dedup_exact", "minhash_signature",
          "dedup_lsh_pairs", "span_dedup", "dup_clusters", "lm_score",
          "bpe_merges", "simhash", "cosine_topk", "ann_bucketed",
