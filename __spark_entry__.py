@@ -37,9 +37,10 @@ from lexor_spark.queries import RELATIONAL_QUERIES, RELATIONAL_SQL  # noqa: E402
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: build the Common-Crawl-shaped pages table from sf0.001
-    documents and run the salted, Arrow-batched extraction job."""
+    documents and run the url-hash repartitioned, Arrow-batched
+    extraction job."""
     pages = pages_df(spark, "/root/testdata/sf0.001")
-    out = extract_pages(pages, salt_buckets=64)
+    out = extract_pages(pages)
     return out.select("url", "title", "text", "n_nodes", "n_chars_out",
                       "ok", "codes")
 
@@ -185,8 +186,7 @@ def _q_charset_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-variant non-ASCII marker in the decoded prefix); the DuckDB
     oracle recomputes the expected labels from the fixture rule
     (doc_id % 7) — ground truth, not a mirror of the sniffer."""
-    sniffed = sniff_charsets(encoded_pages_df(spark, sf_dir),
-                             salt_buckets=64)
+    sniffed = sniff_charsets(encoded_pages_df(spark, sf_dir))
     v = F.pmod(F.col("doc_id"), F.lit(7))
     marker = (F.when(v == 0, F.lit("café"))
               .when(v == 1, F.lit("Привет"))
@@ -2466,7 +2466,7 @@ def _q_crawl_loop_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape at 10^12 docs: the dispatch list is diff-sized (a crawl's
     churn, not the corpus), so the fetch join prunes the pages scan to
-    it; html crosses the wire once into the salted kernel exchange; the
+    it; html crosses the wire once into the url-hash kernel exchange; the
     quality gate is pure scan-side HOFs; the postings agg shuffles only
     (term, url) rows for KEPT pages."""
     sched = _q_crawl_loop(spark, sf_dir)

@@ -119,23 +119,22 @@ def main() -> None:
     spark = make_spark(CPUS)
     timings: dict[str, float] = {}
 
-    # -- flagship: salted Arrow-batched extraction over tiled pages --------
+    # -- flagship: Arrow-batched extraction over tiled pages ---------------
     # Materialized to parquet (untimed, cached across runs) so the timed
-    # section is scan→salt→extract — the shape of the production job.
+    # section is scan→exchange→extract — the shape of the production job.
     bench_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench")
     pages = materialized_pages(spark, SF_DIR, REPEAT, bench_dir)
     n_docs = pages.count()          # also warms the JVM/parquet footer cache
     run_noop(extract_pages(pages.limit(2000)))  # spin up Python workers
-    t_extract = timed(lambda: extract_pages(pages, salt_buckets=256))
+    t_extract = timed(lambda: extract_pages(pages))
     timings["extract_pages"] = t_extract
 
     timings["extract_metrics"] = timed(
-        lambda: partition_metrics(extract_pages(pages, salt_buckets=256)))
+        lambda: partition_metrics(extract_pages(pages)))
 
     timings["css_select"] = timed(
         lambda: css_select(pages, ["nav.nav a", "#main p",
-                                   "main blockquote, article blockquote"],
-                           salt_buckets=256))
+                                   "main blockquote, article blockquote"]))
 
     # -- gate entries --------------------------------------------------------
     qs = queries()

@@ -9,7 +9,7 @@ documents, re-expressed as
   build, boilerplate strip, text+span emission; zero Spark dependencies so
   it doubles as the serial correctness oracle; and
 * a **Spark harness** (``lexor_spark.job``) — Arrow-batched ``mapInArrow``
-  execution of the kernel over a Common-Crawl-style pages table, with salted
+  execution of the kernel over a Common-Crawl-style pages table, with url-hash
   repartitioning, per-partition metrics/lineage, and checkpointed resume.
 
 Plus the large-scale training-data operators a 100 TB pipeline needs

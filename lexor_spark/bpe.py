@@ -197,8 +197,9 @@ def _learn_merges(vocab: list[tuple[str, int]], n_merges: int
 def bpe_train_fast(docs: DataFrame, n_merges: int = 12,
                    text_col: str = "text") -> DataFrame:
     """:func:`bpe_train` for production vocabularies: ONE corpus pass
-    builds the distinct-word frequency table (vocabulary-sized — a few
-    MB even for web corpora), the driver collects it ONCE, and all
+    builds the distinct-word frequency table (one row per distinct
+    word, so it grows with the vocabulary, which keeps growing with
+    corpus size by Heaps' law), the driver collects it ONCE, and all
     ``n_merges`` merges are learned in-process by :func:`_learn_merges`
     with the identical greedy argmax — the merge table is bit-identical
     to the distributed loop's (pinned by test), but a 32k-merge

@@ -3,7 +3,7 @@ metadata (title / description / Open Graph / Twitter cards).
 
 Two corpus-level passes over the (url, html binary) pages table, both
 the same fused plan shape as `job.extract_pages` (scan-side projection
--> salted exchange -> one mapInArrow kernel pass, zero per-row Python):
+-> url-hash exchange -> one mapInArrow kernel pass, zero per-row Python):
 
 * :func:`extract_tables` — one output row per ``<td>``/``<th>`` cell,
   with (table_idx, row_idx, col_idx) document-order coordinates, header
@@ -19,7 +19,7 @@ the same fused plan shape as `job.extract_pages` (scan-side projection
 The reference kernel is a single-document converter with no tabular or
 metadata surface (reference ``lexor/command/to.py`` drives text/html
 targets only); these are corpus-pipeline operators built on the same
-parse.  At 10^12 pages both passes add zero shuffles beyond the salted
+parse.  At 10^12 pages both passes add zero shuffles beyond the url-hash
 exchange every kernel pass shares.
 """
 
@@ -135,7 +135,7 @@ def _table_cells(url, doc) -> list[tuple]:
 _tables_batches = _page_udf(_TABLES_ARROW, _on_dom(_table_cells))
 
 
-def extract_tables(pages: DataFrame, salt_buckets: int = 256,
+def extract_tables(pages: DataFrame,
                    partitions: Optional[int] = None) -> DataFrame:
     """One row per table cell, corpus-wide: (url, table_idx, row_idx,
     col_idx, is_header, colspan, rowspan, cell).  Coordinates are
@@ -145,7 +145,7 @@ def extract_tables(pages: DataFrame, salt_buckets: int = 256,
     <td>/<th> children).  colspan/rowspan are reported as parsed (>=1,
     malformed -> 1), not grid-expanded: expansion is presentation
     logic downstream consumers apply when they need the dense grid."""
-    salted = _salted_pages(pages, salt_buckets, partitions)
+    salted = _salted_pages(pages, partitions=partitions)
     return salted.mapInArrow(_tables_batches, TABLES_SCHEMA)
 
 
@@ -196,7 +196,7 @@ _meta_batches = _page_udf(_META_ARROW, _on_dom(
     lambda url, _: [(url,) + (None,) * (len(_META_ARROW) - 1)]))
 
 
-def extract_meta(pages: DataFrame, salt_buckets: int = 256,
+def extract_meta(pages: DataFrame,
                  partitions: Optional[int] = None) -> DataFrame:
     """One row per page: first <title> text (entities decoded,
     whitespace-normalized) + description / og:title / og:description /
@@ -204,7 +204,7 @@ def extract_meta(pages: DataFrame, salt_buckets: int = 256,
     order (crawler convention for duplicated metas).  Missing -> null.
     The head-metadata sidecar a search/preview/snippet pipeline keeps
     next to the extracted main content."""
-    salted = _salted_pages(pages, salt_buckets, partitions)
+    salted = _salted_pages(pages, partitions=partitions)
     return salted.mapInArrow(_meta_batches, META_SCHEMA)
 
 
@@ -260,7 +260,7 @@ def _jsonld_rows(url, doc) -> list[tuple]:
 _jsonld_batches = _page_udf(_JSONLD_ARROW, _on_dom(_jsonld_rows))
 
 
-def extract_jsonld(pages: DataFrame, salt_buckets: int = 256,
+def extract_jsonld(pages: DataFrame,
                    partitions: Optional[int] = None) -> DataFrame:
     """Schema.org structured data: one row per scalar leaf of every
     ``<script type="application/ld+json">`` block, with document-order
@@ -270,9 +270,9 @@ def extract_jsonld(pages: DataFrame, salt_buckets: int = 256,
     seed (products/articles/events) of a structured-pretraining corpus;
     the kernel parses <script> as raw text, so JSON bytes arrive
     verbatim (no entity decoding, per HTML raw-text rules).  Same fused
-    plan shape as every kernel pass: scan-side projection -> salted
+    plan shape as every kernel pass: scan-side projection -> url-hash
     exchange -> one mapInArrow, zero additional shuffles at 10^12 pages."""
-    salted = _salted_pages(pages, salt_buckets, partitions)
+    salted = _salted_pages(pages, partitions=partitions)
     return salted.mapInArrow(_jsonld_batches, JSONLD_SCHEMA)
 
 
@@ -378,7 +378,7 @@ _microdata_batches = _page_udf(_MICRODATA_ARROW, _on_dom(
                                 "itemtype", _md_props)))
 
 
-def extract_microdata(pages: DataFrame, salt_buckets: int = 256,
+def extract_microdata(pages: DataFrame,
                       partitions: Optional[int] = None) -> DataFrame:
     """Schema.org MICRODATA (the attribute-borne sibling of JSON-LD —
     together they are what real WAT consumers mine for structured
@@ -392,9 +392,9 @@ def extract_microdata(pages: DataFrame, salt_buckets: int = 256,
     per name; stray ``itemprop`` outside any item emits nothing.  The
     reference kernel has no structured-data surface (it is a
     single-document text converter); this is a corpus operator on the
-    same parse.  Plan shape: scan-side projection -> salted exchange ->
+    same parse.  Plan shape: scan-side projection -> url-hash exchange ->
     one mapInArrow kernel pass — zero extra shuffles at 10^12 pages."""
-    salted = _salted_pages(pages, salt_buckets, partitions)
+    salted = _salted_pages(pages, partitions=partitions)
     return salted.mapInArrow(_microdata_batches, MICRODATA_SCHEMA)
 
 
@@ -475,7 +475,7 @@ _rdfa_batches = _page_udf(_RDFA_ARROW, _on_dom(
                                 _rdfa_props)))
 
 
-def extract_rdfa(pages: DataFrame, salt_buckets: int = 256,
+def extract_rdfa(pages: DataFrame,
                  partitions: Optional[int] = None) -> DataFrame:
     """Schema.org RDFa (Lite 1.1 subset — ``typeof``/``property``/
     ``resource``/``content``) — the THIRD structured-data channel
@@ -491,9 +491,9 @@ def extract_rdfa(pages: DataFrame, salt_buckets: int = 256,
     context).  The reference kernel has no structured-data surface;
     this is a corpus operator on the same parse (clean-room; kernel
     semantics per reference core/parser.py).  Plan shape: scan-side
-    projection -> salted exchange -> one mapInArrow kernel pass —
+    projection -> url-hash exchange -> one mapInArrow kernel pass —
     zero extra shuffles at 10^12 pages."""
-    salted = _salted_pages(pages, salt_buckets, partitions)
+    salted = _salted_pages(pages, partitions=partitions)
     return salted.mapInArrow(_rdfa_batches, RDFA_SCHEMA)
 
 
@@ -532,7 +532,7 @@ _outline_batches = _page_udf(_OUTLINE_ARROW, _on_dom(
                       for idx, heading in enumerate(outline_of_doc(doc))]))
 
 
-def extract_outline(pages: DataFrame, salt_buckets: int = 256,
+def extract_outline(pages: DataFrame,
                     partitions: Optional[int] = None) -> DataFrame:
     """Document OUTLINE: one row per h1-h6 heading with its hierarchical
     section number (``2.1.3``) — the structural skeleton that section-
@@ -541,10 +541,10 @@ def extract_outline(pages: DataFrame, salt_buckets: int = 256,
     sections, not byte offsets).  Skipped heading levels number as
     literal zeros (``1.0.1``), making sloppy markup measurable.  Same
     fused plan shape as every kernel pass: scan-side projection ->
-    salted exchange -> one mapInArrow, zero extra shuffles at 10^12
+    url-hash exchange -> one mapInArrow, zero extra shuffles at 10^12
     pages.  The reference kernel has no outline surface (single-document
     converter, reference `lexor/command/to.py`)."""
-    salted = _salted_pages(pages, salt_buckets, partitions)
+    salted = _salted_pages(pages, partitions=partitions)
     return salted.mapInArrow(_outline_batches, OUTLINE_SCHEMA)
 
 
@@ -569,7 +569,7 @@ def _image_rows(url, doc) -> list[tuple]:
 _images_batches = _page_udf(_IMAGES_ARROW, _on_dom(_image_rows))
 
 
-def extract_images(pages: DataFrame, salt_buckets: int = 256,
+def extract_images(pages: DataFrame,
                    partitions: Optional[int] = None) -> DataFrame:
     """One row per ``<img>`` element in document order: src / srcset /
     alt / declared width+height — the asset-harvest channel a
@@ -577,7 +577,7 @@ def extract_images(pages: DataFrame, salt_buckets: int = 256,
     (image-text pair mining à la LAION keys on exactly (page url,
     img src, alt)).  Same fused one-pass ``mapInArrow`` plan as every
     kernel pass."""
-    salted = _salted_pages(pages, salt_buckets, partitions)
+    salted = _salted_pages(pages, partitions=partitions)
     return salted.mapInArrow(_images_batches, IMAGES_SCHEMA)
 
 

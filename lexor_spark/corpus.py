@@ -38,7 +38,6 @@ __all__ = ["build_corpus", "corpus_summary"]
 
 def build_corpus(pages: DataFrame, min_quality: float = 0.3,
                  min_chars: int = 100, jaccard_threshold: float = 0.9,
-                 salt_buckets: int = 256,
                  max_dup_line_frac: float = 0.5,
                  max_top_bigram_frac: float = 0.3,
                  domain_cap: int = None,
@@ -78,7 +77,7 @@ def build_corpus(pages: DataFrame, min_quality: float = 0.3,
                            "url")
     else:
         denied = None
-    extracted = extract_pages(pages, salt_buckets=salt_buckets).select(
+    extracted = extract_pages(pages).select(
         "url", "text", "title", "lang_attr", "ok", "err", "n_chars_out")
 
     err = extracted.filter(~F.col("ok")).select(

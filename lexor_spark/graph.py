@@ -213,7 +213,7 @@ _directives_batches = _page_udf(_DIRECTIVES_ARROW, _on_dom(
                      None)]))
 
 
-def extract_directives(pages: DataFrame, salt_buckets: int = 256,
+def extract_directives(pages: DataFrame,
                        partitions: Optional[int] = None) -> DataFrame:
     """Per-page crawl/index directives, one row per page: combined
     ``<meta name=robots>`` content (multiple metas comma-joined, as
@@ -227,18 +227,18 @@ def extract_directives(pages: DataFrame, salt_buckets: int = 256,
     attribute (trimmed/lowercased; the declared-language channel a
     metadata-vs-content language QA joins against).  Same fused one-pass
     ``mapInArrow`` plan as :func:`extract_links` — at 10^12 pages this
-    adds zero shuffles beyond the salted exchange it shares with every
+    adds zero shuffles beyond the url-hash exchange it shares with every
     kernel pass."""
-    salted = _salted_pages(pages, salt_buckets, partitions)
+    salted = _salted_pages(pages, partitions=partitions)
     return salted.mapInArrow(_directives_batches, DIRECTIVES_SCHEMA)
 
 
-def extract_links(pages: DataFrame, salt_buckets: int = 256,
+def extract_links(pages: DataFrame,
                   partitions: Optional[int] = None) -> DataFrame:
     """(url, href, abs_url, anchor) per anchor element, corpus-wide —
     the link-graph/anchor-text source table (crawl frontier, link-based
     quality priors, anchor-text training signal)."""
-    salted = _salted_pages(pages, salt_buckets, partitions)
+    salted = _salted_pages(pages, partitions=partitions)
     return salted.mapInArrow(_links_batches, LINKS_SCHEMA)
 
 
@@ -405,7 +405,7 @@ def hits_sql(edges_sql: str, iters: int = HITS_ITERS) -> str:
             f"join h{iters} on h{iters}.v = a{iters}.v\norder by node_id")
 
 
-def anchor_texts(pages: DataFrame, salt_buckets: int = 256) -> DataFrame:
+def anchor_texts(pages: DataFrame) -> DataFrame:
     """Anchor-text aggregation per link TARGET — the classic web-corpus
     relevance signal (anchor text describes the page it points AT;
     reference: anchor-text indexing as in Brin & Page 1998 §2.2 /
@@ -415,7 +415,7 @@ def anchor_texts(pages: DataFrame, salt_buckets: int = 256) -> DataFrame:
     non-empty anchor (ties broken lexicographically, so the output is
     deterministic).
 
-    Plan shape at 10^12 edges: mapInArrow extraction (salted, the
+    Plan shape at 10^12 edges: mapInArrow extraction (url-hash exchange, the
     `extract_pages` shape) → ONE dst-keyed two-level aggregate —
     count per (target, anchor) (map-side combinable; a mega-target's
     rows spread over (target, anchor) sub-keys first, the same
@@ -424,7 +424,7 @@ def anchor_texts(pages: DataFrame, salt_buckets: int = 256) -> DataFrame:
     per-anchor counts — already tiny — meet in phase 2."""
     from lexor_spark.urlfns import canonical_url
 
-    links = extract_links(pages, salt_buckets)
+    links = extract_links(pages)
     tgt = (links.select(
         canonical_url(F.col("abs_url")).alias("target"),
         F.col("anchor"))
@@ -698,13 +698,13 @@ def _alternates_rows(url, doc) -> list[tuple]:
 _alternates_batches = _page_udf(_ALTERNATES_ARROW, _on_dom(_alternates_rows))
 
 
-def extract_alternates(pages: DataFrame, salt_buckets: int = 256,
+def extract_alternates(pages: DataFrame,
                        partitions: Optional[int] = None) -> DataFrame:
     """``<link rel=alternate hreflang=…>`` edges, one row per
     declaration: (url, hreflang, href, abs_url) — the language-cluster
     channel (Google's hreflang spec).  Same fused ``mapInArrow`` plan
     as :func:`extract_links`."""
-    salted = _salted_pages(pages, salt_buckets, partitions)
+    salted = _salted_pages(pages, partitions=partitions)
     return salted.mapInArrow(_alternates_batches, ALTERNATES_SCHEMA)
 
 

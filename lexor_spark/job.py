@@ -8,10 +8,10 @@ Architecture (SURVEY.md §7, BASELINE.json ``north_rule``):
   inside one ``mapInArrow`` UDF.  There is no per-row Python dispatch at
   the Spark layer: Spark hands the UDF whole Arrow record batches; the
   per-document loop lives inside the batch.
-* **Salted repartitioning** — giant HTML blobs cluster by crawl order in
-  real tables; ``repartition(P, pmod(xxhash64(url), B))`` spreads them so
-  no executor inherits a run of megabyte pages.  Pure column expressions →
-  the exchange is planned by Catalyst, and AQE can still coalesce.
+* **Url-hash repartitioning** — giant HTML blobs cluster by crawl order
+  in real tables; ``repartition(P, "url")`` spreads them so no executor
+  inherits a run of megabyte pages.  Pure column expression → the
+  exchange is planned by Catalyst.
 * **Per-partition metrics + lineage** — each output row carries its input
   size and kernel latency; `partition_metrics` folds them with a single
   map-side-combinable aggregation.
@@ -86,28 +86,26 @@ _ARROW_SCHEMA = pa.schema([
 OUTPUT_SCHEMA = from_arrow_schema(_ARROW_SCHEMA)
 
 
-def _salted_pages(pages: DataFrame, salt_buckets: int,
-                  partitions: Optional[int],
+def _salted_pages(pages: DataFrame, _unused: object = None,
+                  partitions: Optional[int] = None,
                   slots_mult: int = 4,
                   cols: tuple[str, ...] = ("url", "html")) -> DataFrame:
     """The shared scan-side preamble of every kernel job: column-prune
     to ``cols`` (url and the payload) BEFORE the exchange (the shuffle
-    moves only what the kernel needs), then one salted repartition on
-    ``pmod(xxhash64(url), salt_buckets)``.  Fine-grained tasks
-    (``slots_mult``× slots) hide per-task tail latency: a giant
-    document delays one small task, not 1/cores of the corpus —
-    measured +30% at local[32] over 2× slots (sweep: 4×≈8×, 16×
-    worse).  That sweep was measured while every task also paid
-    160-230 ms of worker CPU re-reading pyspark.zip (removed since by
-    ``lexor_spark.worker_imports``), a per-task cost that weighs on
-    more slots; the sweep after that fix, on a 4-vCPU host, is in
-    BENCH/BASELINE.md."""
+    moves only what the kernel needs), then one repartition on the url
+    itself.  The key is the url and never a function of the ``run_job``
+    group hash, so one group's pages still spread over every partition.
+    Fine-grained tasks (``slots_mult``× slots) hide per-task tail
+    latency: a giant document delays one small task, not 1/cores of the
+    corpus (slot sweep in BENCH/BASELINE.md).
+
+    The second parameter is ignored; it is kept only so the benchmark
+    ladder's positional call ``_salted_pages(pages, 256, None)``
+    (``perfbench/ledger.py``) still resolves."""
     sc = pages.sparkSession.sparkContext
     if partitions is None:
         partitions = sc.defaultParallelism * slots_mult
-    return (pages.select(*cols)
-            .repartition(partitions,
-                         F.pmod(F.xxhash64("url"), F.lit(salt_buckets))))
+    return pages.select(*cols).repartition(partitions, "url")
 
 
 def _page_udf(schema: pa.Schema, per_page):
@@ -193,15 +191,14 @@ def _extract_batches_wrapped(width: Optional[int], indent: str,
 _extract_batches = _extract_batches_inner = _extract_batches_wrapped(None, "")
 
 
-def extract_pages(pages: DataFrame, salt_buckets: int = 256,
-                  partitions: Optional[int] = None,
+def extract_pages(pages: DataFrame, partitions: Optional[int] = None,
                   width: Optional[int] = None,
                   indent: str = "",
                   style: Optional[str] = None) -> DataFrame:
     """pages (url, html, ...) → extraction output DataFrame.
 
     Column-prunes to (url, html) *before* the exchange so the shuffle
-    moves only what the kernel needs; the salt is a pure expression so
+    moves only what the kernel needs; the url key is a plain column so
     Catalyst plans a single hash exchange.
 
     ``width``/``indent`` switch the writer stage into the W5 wrap/indent
@@ -214,7 +211,7 @@ def extract_pages(pages: DataFrame, salt_buckets: int = 256,
     if style is not None:
         from lexor_spark.kernel.styles import style_rules
         style_rules(style)  # driver-side validation
-    salted = _salted_pages(pages, salt_buckets, partitions)
+    salted = _salted_pages(pages, partitions=partitions)
     if width is None and not indent and style is None:
         return salted.mapInArrow(_extract_batches, OUTPUT_SCHEMA)
     return salted.mapInArrow(_extract_batches_wrapped(width, indent, style),
@@ -294,12 +291,12 @@ def _nodes_page(url, html):
 _flatten_batches = _page_udf(_NODES_ARROW, _nodes_page)
 
 
-def export_nodes(pages: DataFrame, salt_buckets: int = 256,
+def export_nodes(pages: DataFrame,
                  partitions: Optional[int] = None) -> DataFrame:
     """Flatten every page's DOM into one corpus-level node table
     (url, node_id, parent_id, name, kind, attrs summary, pos) — the
     §1.3 export that lets tag/class queries run as DataFrame filters."""
-    salted = _salted_pages(pages, salt_buckets, partitions, slots_mult=8)
+    salted = _salted_pages(pages, partitions=partitions, slots_mult=8)
     return salted.mapInArrow(_flatten_batches, NODES_SCHEMA)
 
 
@@ -327,11 +324,11 @@ def _normalize_page(url, html):
 _normalize_batches = _page_udf(_NORM_ARROW, _normalize_page)
 
 
-def normalize_html(pages: DataFrame, salt_buckets: int = 256,
+def normalize_html(pages: DataFrame,
                    partitions: Optional[int] = None) -> DataFrame:
     """parse→serialize normal form per page (idempotent; the writer-path
     operator a markup→markup converter user needs)."""
-    salted = _salted_pages(pages, salt_buckets, partitions)
+    salted = _salted_pages(pages, partitions=partitions)
     return salted.mapInArrow(_normalize_batches, NORMALIZE_SCHEMA)
 
 
@@ -366,7 +363,6 @@ def _css_batches(selectors: list[str]):
 
 
 def css_select(pages: DataFrame, selectors: list[str],
-               salt_buckets: int = 256,
                partitions: Optional[int] = None) -> DataFrame:
     """Per-url match counts + first-match text for each CSS selector
     (url, selector, n_matches, first_text).
@@ -379,7 +375,7 @@ def css_select(pages: DataFrame, selectors: list[str],
     from lexor_spark.kernel.selector import tokenize
     for sel in selectors:
         tokenize(sel)  # driver-side validation
-    salted = _salted_pages(pages, salt_buckets, partitions)
+    salted = _salted_pages(pages, partitions=partitions)
     return salted.mapInArrow(_css_batches(selectors), CSS_SCHEMA)
 
 
@@ -412,7 +408,6 @@ def _rewrite_batches(selectors: list[str]):
 
 
 def css_rewrite(pages: DataFrame, remove_selectors: list[str],
-                salt_buckets: int = 256,
                 partitions: Optional[int] = None) -> DataFrame:
     """Corpus-scale selector-driven DOM rewrite: drop every element
     matching any of ``remove_selectors``, re-serialize the page
@@ -424,7 +419,7 @@ def css_rewrite(pages: DataFrame, remove_selectors: list[str],
     from lexor_spark.kernel.selector import tokenize
     for sel in remove_selectors:
         tokenize(sel)
-    salted = _salted_pages(pages, salt_buckets, partitions)
+    salted = _salted_pages(pages, partitions=partitions)
     return salted.mapInArrow(_rewrite_batches(remove_selectors),
                              REWRITE_SCHEMA)
 
@@ -450,11 +445,11 @@ _markdown_batches = _page_udf(_MD_ARROW, _on_dom(
     _markdown_rows, lambda url, _: [(url, "", 0, False)]))
 
 
-def convert_markdown(pages: DataFrame, salt_buckets: int = 256,
+def convert_markdown(pages: DataFrame,
                      partitions: Optional[int] = None) -> DataFrame:
     """html → markdown per page (`lexor file.html to markdown` at corpus
-    scale), salted + Arrow-batched like every kernel job."""
-    salted = _salted_pages(pages, salt_buckets, partitions)
+    scale), url-hash repartitioned + Arrow-batched like every kernel job."""
+    salted = _salted_pages(pages, partitions=partitions)
     return salted.mapInArrow(_markdown_batches, MARKDOWN_SCHEMA)
 
 
@@ -473,7 +468,7 @@ def _charset_page(url, html):
 _charset_batches = _page_udf(_CHARSET_ARROW, _charset_page)
 
 
-def sniff_charsets(pages: DataFrame, salt_buckets: int = 256,
+def sniff_charsets(pages: DataFrame,
                    partitions: Optional[int] = None) -> DataFrame:
     """Per-page charset sniff + decode audit over an (url, html binary)
     table — WHATWG BOM/meta-prescan/UTF-8-validation/windows-1252 chain
@@ -483,9 +478,9 @@ def sniff_charsets(pages: DataFrame, salt_buckets: int = 256,
     corpus encoding telemetry, and a decoded prefix so callers can
     verify content survived (the `charset_sniff` gate query checks a
     per-variant marker downstream as a plain Catalyst expression).
-    Scan-side projection + the same salted exchange as extraction; one
+    Scan-side projection + the same url-hash exchange as extraction; one
     fused mapInArrow pass, no per-row Python."""
-    salted = _salted_pages(pages, salt_buckets, partitions)
+    salted = _salted_pages(pages, partitions=partitions)
     return salted.mapInArrow(_charset_batches, CHARSET_SCHEMA)
 
 
@@ -513,23 +508,22 @@ def _density_page(url, html):
 _density_batches = _page_udf(_DENSITY_ARROW, _density_page)
 
 
-def extract_density_pages(pages: DataFrame, salt_buckets: int = 256,
+def extract_density_pages(pages: DataFrame,
                           partitions: Optional[int] = None) -> DataFrame:
     """jusText-style density-based main-content extraction, corpus-wide
     (`kernel/density.py`: block segmentation -> link/stop-word-density
     classification -> neighbour revision).  The DOM-heuristic SECOND
     extractor next to the rule-driven converter (`extract_pages`) — a
     quality pipeline diffs the two to find pages where tag structure
-    and text statistics disagree.  Same fused salted-mapInArrow plan,
+    and text statistics disagree.  Same fused exchange + mapInArrow plan,
     map-only at 10^12 pages; hostile bytes yield ok=false rows, never
     task failures."""
-    salted = _salted_pages(pages, salt_buckets, partitions)
+    salted = _salted_pages(pages, partitions=partitions)
     return salted.mapInArrow(_density_batches, DENSITY_SCHEMA)
 
 
 def extractor_diff(pages: DataFrame, lo_f1: float = 0.5,
                    hi_f1: float = 0.8,
-                   salt_buckets: int = 256,
                    partitions: Optional[int] = None) -> DataFrame:
     """Cross-extractor QA: run BOTH main-content extractors — the
     rule-driven converter (:func:`extract_pages`) and the jusText-style
@@ -548,15 +542,15 @@ def extractor_diff(pages: DataFrame, lo_f1: float = 0.5,
     appears exactly once — the eval join drops token-less pages, so the
     page list is left-joined back.
 
-    Scale shape: two map-only salted kernel passes over the same scan,
+    Scale shape: two map-only kernel passes over the same scan,
     one (url, token)-keyed partial-agg join (hot tokens spread by the
     url key), then a urls-sized left join; nothing corpus-sized ever
     sits in one task."""
     from lexor_spark.evals import eval_extraction
 
-    kern = extract_pages(pages, salt_buckets, partitions) \
+    kern = extract_pages(pages, partitions=partitions) \
         .select("url", "text")
-    dens = extract_density_pages(pages, salt_buckets, partitions) \
+    dens = extract_density_pages(pages, partitions=partitions) \
         .select("url", "text")
     ev = (eval_extraction(kern, dens, id_col="url", text_col="text")
           .withColumnRenamed("doc_id", "url")
@@ -584,7 +578,6 @@ def extractor_diff(pages: DataFrame, lo_f1: float = 0.5,
 
 
 def extract_consensus(pages: DataFrame, lo_f1: float = 0.5,
-                      salt_buckets: int = 256,
                       partitions: Optional[int] = None) -> DataFrame:
     """The routing SINK for :func:`extractor_diff`: one final
     extraction table per page with the production choice applied —
@@ -606,10 +599,10 @@ def extract_consensus(pages: DataFrame, lo_f1: float = 0.5,
     materialization)."""
     from lexor_spark.evals import eval_extraction
 
-    kern = (extract_pages(pages, salt_buckets, partitions)
+    kern = (extract_pages(pages, partitions=partitions)
             .select("url", F.col("text").alias("k_text"))
             .localCheckpoint(eager=True))
-    dens = (extract_density_pages(pages, salt_buckets, partitions)
+    dens = (extract_density_pages(pages, partitions=partitions)
             .select("url", F.col("text").alias("d_text"))
             .localCheckpoint(eager=True))
     ev = (eval_extraction(kern.select("url", F.col("k_text").alias("text")),
@@ -652,8 +645,7 @@ def committed_groups(output_dir: str) -> set[int]:
 
 LINEAGE_SCHEMA = ("group int, n_groups int, n_rows long, bytes_in long, "
                   "chars_out long, kernel_us_total long, kernel_us_max long, "
-                  "n_errors long, n_truncated long, wall_s double, "
-                  "salt_buckets int")
+                  "n_errors long, n_truncated long, wall_s double")
 
 
 def read_lineage(spark: SparkSession, output_dir: str) -> DataFrame:
@@ -677,7 +669,7 @@ def read_lineage(spark: SparkSession, output_dir: str) -> DataFrame:
 
 
 def _group_record(written: DataFrame, g: int, n_groups: int,
-                  t0: float, salt_buckets: int) -> dict:
+                  t0: float) -> dict:
     """One committed group's lineage record, aggregated from the rows
     actually on disk/in the table (no kernel recompute)."""
     stats = written.agg(*_metrics_aggs("n_rows")).collect()[0].asDict()
@@ -687,20 +679,18 @@ def _group_record(written: DataFrame, g: int, n_groups: int,
         "n_rows": stats.pop("n_rows"),
         **{k: int(v or 0) for k, v in stats.items()},
         "wall_s": round(time.time() - t0, 3),
-        "salt_buckets": salt_buckets,
     }
 
 
 def _commit_groups(pages: DataFrame, n_groups: int, work, committed,
-                   write, seal, salt_buckets: int,
-                   partitions: Optional[int],
+                   write, seal, partitions: Optional[int],
                    max_groups: Optional[int]) -> dict:
     """The commit loop of `run_job` and `run_job_table`: for each group
     of ``work`` not in ``committed()``, at most ``max_groups`` of them,
     extract its pages, ``write(g, extracted)`` → the rows as written,
     aggregate the lineage record from them (no kernel recompute) and
-    ``seal(g, record)``.  Group filter and salt hash the same
-    ``xxhash64(url)``, so the filter is scan-side."""
+    ``seal(g, record)``.  The group filter runs before the exchange,
+    so it is scan-side."""
     done = committed()
     group_col = F.pmod(F.xxhash64("url"), F.lit(n_groups))
     processed: list[dict] = []
@@ -711,9 +701,8 @@ def _commit_groups(pages: DataFrame, n_groups: int, work, committed,
             break
         t0 = time.time()
         extracted = extract_pages(pages.filter(group_col == g),
-                                  salt_buckets, partitions)
-        record = _group_record(write(g, extracted), g, n_groups, t0,
-                               salt_buckets)
+                                  partitions=partitions)
+        record = _group_record(write(g, extracted), g, n_groups, t0)
         seal(g, record)
         processed.append(record)
     return {
@@ -724,8 +713,7 @@ def _commit_groups(pages: DataFrame, n_groups: int, work, committed,
 
 
 def run_job(spark: SparkSession, pages: DataFrame, output_dir: str,
-            n_groups: int = 8, salt_buckets: int = 256,
-            partitions: Optional[int] = None,
+            n_groups: int = 8, partitions: Optional[int] = None,
             max_groups: Optional[int] = None) -> dict:
     """Process ``pages`` in url-hash groups with commit-per-group: each
     group is a parquet dir, sealed by its lineage marker.  ``max_groups``
@@ -748,7 +736,7 @@ def run_job(spark: SparkSession, pages: DataFrame, output_dir: str,
 
     return _commit_groups(pages, n_groups, range(n_groups),
                           lambda: committed_groups(output_dir), write, seal,
-                          salt_buckets, partitions, max_groups)
+                          partitions, max_groups)
 
 
 # ---------------------------------------------------------------------------
@@ -774,8 +762,7 @@ _STALE_LOCATION = "LOCATION_ALREADY_EXISTS"
 
 
 def run_job_table(spark: SparkSession, pages: DataFrame, table: str,
-                  n_groups: int = 8, salt_buckets: int = 256,
-                  partitions: Optional[int] = None,
+                  n_groups: int = 8, partitions: Optional[int] = None,
                   max_groups: Optional[int] = None,
                   provider: str = "parquet") -> dict:
     """`run_job` with the commit unit the north rule names: one catalog
@@ -819,7 +806,7 @@ def run_job_table(spark: SparkSession, pages: DataFrame, table: str,
     return _commit_groups(pages, n_groups, expected,
                           lambda: committed_groups_table(spark, table),
                           write, lambda g, record: None,
-                          salt_buckets, partitions, max_groups)
+                          partitions, max_groups)
 
 
 def _create_table(spark: SparkSession, extracted: DataFrame, table: str,
@@ -874,7 +861,7 @@ def _decode_routed_batches(batches: Iterator[pa.RecordBatch]
              pa.array(bodies, pa.string())], schema=_DECODED_ARROW)
 
 
-def extract_routed(pages: DataFrame, salt_buckets: int = 256,
+def extract_routed(pages: DataFrame,
                    partitions: Optional[int] = None) -> DataFrame:
     """Mixed-format corpus → text, routed per payload by MIME sniffing
     (:mod:`lexor_spark.mimesniff`): ``html_kernel`` rows run the full
@@ -896,8 +883,8 @@ def extract_routed(pages: DataFrame, salt_buckets: int = 256,
     ``unionByName``.  A production run materializes the routed frame
     once as a ``partitionBy(route)`` table so each extractor scan
     prunes to its own files — same plan, amortized scan.  The two
-    kernel branches keep their own salted exchanges (giant-blob skew
-    insurance); the decode branch reuses the identical salting."""
+    kernel branches keep their own url-hash exchanges (giant-blob skew
+    insurance); the decode branch repartitions the same way."""
     from lexor_spark.mimesniff import dispatch_expr
     route = F.col("route")
     routed = pages.select(
@@ -906,20 +893,20 @@ def extract_routed(pages: DataFrame, salt_buckets: int = 256,
 
     html = routed.filter(route == "html_kernel") \
                  .select("url", F.col("payload").alias("html"))
-    html_out = (extract_pages(html, salt_buckets, partitions)
+    html_out = (extract_pages(html, partitions=partitions)
                 .select("url", F.lit("html_kernel").alias("route"),
                         "ok", "text"))
 
     from lexor_spark.pdfjob import extract_pdfs
     pdf = routed.filter(route == "pdf_text") \
                 .select("url", F.col("payload").alias("pdf"))
-    pdf_out = (extract_pdfs(pdf, salt_buckets, partitions)
+    pdf_out = (extract_pdfs(pdf, partitions=partitions)
                .select("url", F.lit("pdf_text").alias("route"),
                        "ok", "text"))
 
     textual = (_salted_pages(
         routed.filter(route.isin("plain_text", "feed_parser")),
-        salt_buckets, partitions, cols=("url", "payload", "route"))
+        partitions=partitions, cols=("url", "payload", "route"))
         .mapInArrow(_decode_routed_batches,
                     from_arrow_schema(_DECODED_ARROW)))
     plain_out = (textual.filter(route == "plain_text")

@@ -15,7 +15,7 @@ inside an unfortunately-classed <div id="footer-like">.
 
 Pipeline shape: pure per-document kernel code (parse once, one DFS to
 segment blocks, O(blocks) classification), exposed corpus-wide through
-``job.extract_density`` — the same fused salted-mapInArrow plan as the
+``job.extract_density`` — the same fused exchange + mapInArrow plan as the
 main extraction job, map-only at any corpus size.
 
 Stages, per the paper:

@@ -93,7 +93,7 @@ def pages_df(spark: SparkSession, sf_dir: str, repeat: int = 1,
     see identical bytes.
 
     ``heavy_tail`` gives ~1% of pages a ~150× body (FIXTURES.md §4's
-    skew distribution) — the giant-blob case the salted repartition and
+    skew distribution) — the giant-blob case the url-hash repartition and
     the Arrow batch cap exist for."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     if repeat > 1:

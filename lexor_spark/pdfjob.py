@@ -1,7 +1,7 @@
 """PDF extraction job: binary PDF column → text per document.
 
-Same architecture as the HTML job (`lexor_spark/job.py`): salted
-repartition on url-hash, one fused ``mapInArrow`` UDF, cyclic GC off,
+Same architecture as the HTML job (`lexor_spark/job.py`): repartition
+on url-hash, one fused ``mapInArrow`` UDF, cyclic GC off,
 error rows instead of task failures.  The kernel is
 `lexor_spark.kernel.pdftext` (pure Python + stdlib zlib; subset
 documented there).
@@ -65,9 +65,9 @@ def _pdf_page(url, blob):
 _extract_pdf_batches = _page_udf(_PDF_ARROW, _pdf_page)
 
 
-def extract_pdfs(pdfs: DataFrame, salt_buckets: int = 256,
+def extract_pdfs(pdfs: DataFrame,
                  partitions: Optional[int] = None) -> DataFrame:
-    """(url, pdf) → extracted text, salted + Arrow-batched like the HTML
-    job."""
-    salted = _salted_pages(pdfs, salt_buckets, partitions, cols=("url", "pdf"))
+    """(url, pdf) → extracted text, url-hash repartitioned +
+    Arrow-batched like the HTML job."""
+    salted = _salted_pages(pdfs, partitions=partitions, cols=("url", "pdf"))
     return salted.mapInArrow(_extract_pdf_batches, PDF_OUTPUT_SCHEMA)

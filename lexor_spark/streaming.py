@@ -5,8 +5,8 @@ anywhere), and the production design is batch-with-snapshot-resume
 (`lexor_spark/job.py`).  This module adds the *streaming ingestion* shape a
 crawl pipeline needs: new page files land in a directory (stand-in for an
 Iceberg/Kafka feed), Structured Streaming discovers them incrementally,
-and each micro-batch runs the exact same salted Arrow-batched extraction
-as the batch job — ``foreachBatch`` reuses ``extract_pages`` verbatim, so
+and each micro-batch runs the exact same Arrow-batched extraction as the
+batch job — ``foreachBatch`` reuses ``extract_pages`` verbatim, so
 streaming output is byte-identical to batch output per url.
 
 Checkpointing: Spark's streaming checkpoint (WAL + source offsets) makes
@@ -32,8 +32,7 @@ __all__ = ["stream_extract", "stream_crawl_metrics", "stream_sessions",
 
 
 def stream_extract(spark: SparkSession, pages_dir: str, output_dir: str,
-                   checkpoint_dir: str, salt_buckets: int = 256,
-                   partitions: Optional[int] = None,
+                   checkpoint_dir: str, partitions: Optional[int] = None,
                    max_files_per_trigger: Optional[int] = None) -> int:
     """Incrementally extract all pages parquet files under ``pages_dir``.
 
@@ -55,8 +54,7 @@ def stream_extract(spark: SparkSession, pages_dir: str, output_dir: str,
     n_batches = [0]
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        out = extract_pages(batch_df, salt_buckets=salt_buckets,
-                            partitions=partitions)
+        out = extract_pages(batch_df, partitions=partitions)
         out.write.mode("overwrite").parquet(f"{output_dir}/batch={batch_id}")
         n_batches[0] += 1
 

@@ -482,13 +482,13 @@ def wat_payload_df(pages: DataFrame, fused: bool = True) -> DataFrame:
     downstream link/metadata consumer reads — head metadata plus
     sorted outlinks as a deterministic JSON document.
 
-    Default path (``fused=True``): one salted-mapInArrow kernel pass
+    Default path (``fused=True``): one exchange + mapInArrow kernel pass
     parses each page ONCE and emits the envelope directly — no second
     parse, no url join.  ``fused=False`` keeps the compositional plan
     (extract_meta ⋈ extract_links combined scan-side via ``to_json``)
     as the differential twin that pins the fused kernel's semantics."""
     if fused:
-        salted = _salted_pages(pages, 256, None)
+        salted = _salted_pages(pages)
         return salted.mapInArrow(_wat_payload_batches, _WAT_PAYLOAD_SCHEMA)
 
     meta = extract_meta(pages)

@@ -69,7 +69,7 @@ def worker(cores: int, cpuset: str, barrier_dir: str, idx: int) -> None:
     spark.sparkContext.setLogLevel("ERROR")
     pages = materialized_pages(spark, SF_DIR, REPEAT, BENCH_DIR)
     n_docs = pages.count()
-    extract_pages(pages.limit(2000), salt_buckets=256) \
+    extract_pages(pages.limit(2000)) \
         .write.mode("overwrite").format("noop").save()
     # barrier: all concurrent jobs start their timed pass together so the
     # aggregate window genuinely overlaps
@@ -78,7 +78,7 @@ def worker(cores: int, cpuset: str, barrier_dir: str, idx: int) -> None:
     while not os.path.exists(go):
         time.sleep(0.05)
     t0 = time.perf_counter()
-    extract_pages(pages, salt_buckets=256) \
+    extract_pages(pages) \
         .write.mode("overwrite").format("noop").save()
     wall = time.perf_counter() - t0
     print(json.dumps({"idx": idx, "cores": cores, "wall_s": round(wall, 3),

@@ -41,7 +41,7 @@ PLANS = ("extract_pages", "pricing_summary", "shipping_priority",
 
 NOTES = {
     "extract_pages": (
-        "One exchange (the salt), then the fused kernel (MapInArrow). "
+        "One exchange (on the url), then the fused kernel (MapInArrow). "
         "The scan here is the *documents* table because the sandbox "
         "derives pages from it (pages.py); the job itself projects to "
         "(url, html) before the exchange — over a real pages table the "
@@ -112,7 +112,7 @@ NOTES = {
         "exact cosine. On a stored index, cid is the partition column "
         "and the probe join becomes partition pruning."),
     "css_select": (
-        "Same shape as extract_pages: project to (url, html), one salted "
+        "Same shape as extract_pages: project to (url, html), one url-hash "
         "exchange, one MapInArrow — the page parses once regardless of "
         "how many selectors are probed."),
     "span_dedup": (
@@ -194,7 +194,7 @@ NOTES = {
         "filtered projection of the same columnar source with the "
         "dispatch predicate pushed down; branches reunite with a "
         "zero-shuffle Union.  The two kernel branches keep their own "
-        "salted exchanges (giant-blob skew insurance); media/skip "
+        "url-hash exchanges (giant-blob skew insurance); media/skip "
         "rows never leave the JVM."),
     "postings_index": (
         "One scan-side split+posexplode, then ObjectHashAggregate "
@@ -307,7 +307,7 @@ NOTES = {
     "extractor_diff": (
         "Cross-extractor QA: TWO independent fused kernel passes "
         "(rule converter + jusText density) over the same projected "
-        "scan — each is its own salted exchange + MapInArrow; token "
+        "scan — each is its own url-hash exchange + MapInArrow; token "
         "agreement is a (url, token)-keyed partial agg (hot tokens "
         "spread by the url key), then one urls-sized left join pins "
         "every page exactly once.  Nothing corpus-sized in one task; "
@@ -332,7 +332,7 @@ NOTES = {
         "One full incremental crawl iteration: frontier dispatch and "
         "fetch join are host-keyed with per-host state bounded and "
         "delays broadcast; the kernel extraction is the standard "
-        "salted MapInArrow pass; the Gopher gate is scan-side HOFs; "
+        "url-hash exchange + MapInArrow pass; the Gopher gate is scan-side HOFs; "
         "the postings delta aggregates (term, url) partials "
         "delta-proportionally — cost tracks the fetched slice, not "
         "the accumulated index."),
@@ -356,7 +356,7 @@ NOTES = {
         "pairs.  No pre-supplied embedding table anywhere."),
     "rdfa_extract": (
         "Third structured-data channel (after JSON-LD and microdata): "
-        "scan-side projection -> salted exchange -> ONE MapInArrow "
+        "scan-side projection -> url-hash exchange -> ONE MapInArrow "
         "kernel pass emitting (item, prop) rows — the same "
         "zero-extra-shuffle shape as every kernel operator; the "
         "gate's fixture injection is scan-side concat expressions."),

@@ -33,7 +33,6 @@ def main() -> None:
                     help="table provider on first create (iceberg on a "
                          "real catalog)")
     ap.add_argument("--groups", type=int, default=8)
-    ap.add_argument("--salt-buckets", type=int, default=256)
     ap.add_argument("--max-groups", type=int, default=None,
                     help="process at most N new groups (resume testing)")
     args = ap.parse_args()
@@ -55,12 +54,10 @@ def main() -> None:
     if args.table:
         summary = run_job_table(spark, pages, args.table,
                                 n_groups=args.groups,
-                                salt_buckets=args.salt_buckets,
                                 max_groups=args.max_groups,
                                 provider=args.provider)
     else:
         summary = run_job(spark, pages, args.output, n_groups=args.groups,
-                          salt_buckets=args.salt_buckets,
                           max_groups=args.max_groups)
     print(json.dumps(summary))
     spark.stop()

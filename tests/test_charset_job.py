@@ -20,7 +20,7 @@ EXPECT = {
 def sniffed(spark, sf_dir):
     pages = encoded_pages_df(spark, sf_dir)
     return {int(r["url"]): r for r in
-            sniff_charsets(pages, salt_buckets=16, partitions=4).collect()}
+            sniff_charsets(pages, partitions=4).collect()}
 
 
 def test_every_variant_sniffs_to_ground_truth(sniffed):
@@ -48,7 +48,7 @@ def test_extraction_over_mixed_encodings_is_lossless(spark, sf_dir):
     from lexor_spark.job import extract_pages
     pages = encoded_pages_df(spark, sf_dir).limit(140)
     rows = {int(r["url"]): r for r in
-            extract_pages(pages, salt_buckets=16, partitions=4).collect()}
+            extract_pages(pages, partitions=4).collect()}
     assert rows and all(r.ok for r in rows.values())
     for doc_id, row in rows.items():
         marker = EXPECT[doc_id % 7][2]

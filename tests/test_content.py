@@ -135,13 +135,13 @@ def tiny_pages(spark):
 def test_extract_tables_spark(tiny_pages):
     got = {(r.url, r.table_idx, r.row_idx, r.col_idx):
            (r.is_header, r.cell)
-           for r in extract_tables(tiny_pages, salt_buckets=4).collect()}
+           for r in extract_tables(tiny_pages).collect()}
     assert got == {("a", 0, 0, 0): (True, "h"), ("a", 0, 1, 0): (False, "v")}
 
 
 def test_extract_meta_spark(tiny_pages):
     rows = {r.url: r for r in
-            extract_meta(tiny_pages, salt_buckets=4).collect()}
+            extract_meta(tiny_pages).collect()}
     assert len(rows) == 3
     assert rows["b"].title == "T & t" and rows["b"].og_title == "OG"
     assert rows["a"].title is None
@@ -229,7 +229,7 @@ def test_extract_jsonld_spark(spark):
         ("c", None),
     ]
     pages = spark.createDataFrame(rows, "url string, html binary")
-    got = sorted(map(tuple, extract_jsonld(pages, salt_buckets=4).collect()))
+    got = sorted(map(tuple, extract_jsonld(pages).collect()))
     assert got == [
         ("a", 0, "@type", "Article"),
         ("a", 0, "n", "3"),
@@ -323,7 +323,7 @@ def test_extract_microdata_spark(spark):
         ("c", None),
     ]
     pages = spark.createDataFrame(rows, "url string, html binary")
-    got = sorted(map(tuple, extract_microdata(pages, salt_buckets=4).collect()))
+    got = sorted(map(tuple, extract_microdata(pages).collect()))
     assert got == [("a", 0, "T", 0, "k", "v")]
 
 
@@ -415,7 +415,7 @@ def test_extract_rdfa_spark(spark):
         ("c", None),
     ]
     pages = spark.createDataFrame(rows, "url string, html binary")
-    got = sorted(map(tuple, extract_rdfa(pages, salt_buckets=4).collect()))
+    got = sorted(map(tuple, extract_rdfa(pages).collect()))
     assert got == [("a", 0, "T", 0, "k", "v")]
 
 
@@ -459,5 +459,5 @@ def test_extract_outline_spark(spark):
     rows = [("a", b"<h1>T</h1><h2>S</h2>"), ("b", b"<p>none</p>"),
             ("c", None)]
     pages = spark.createDataFrame(rows, "url string, html binary")
-    got = sorted(map(tuple, extract_outline(pages, salt_buckets=4).collect()))
+    got = sorted(map(tuple, extract_outline(pages).collect()))
     assert got == [("a", 0, 1, "1", "T"), ("a", 1, 2, "1.1", "S")]

@@ -114,6 +114,6 @@ def test_extract_density_pages_spark(spark):
         [("a", ("<p>" + PROSE + "</p>").encode()), ("b", None)],
         "url string, html binary")
     rows = {r.url: r for r in
-            extract_density_pages(pages, salt_buckets=4).collect()}
+            extract_density_pages(pages).collect()}
     assert rows["a"].text == PROSE and rows["a"].ok
     assert rows["b"].text == "" and rows["b"].ok  # empty, not a failure

@@ -3,6 +3,9 @@ metrics — the table-level tests the reference never had (SURVEY.md §5)."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -36,7 +39,7 @@ def test_pages_deterministic(spark, sf_dir):
 def test_byte_identity_vs_serial_oracle(pages):
     """north_rule: byte-identical extracted text per url."""
     out = {r.url: (r.text, r.spans) for r in
-           extract_pages(pages, salt_buckets=32, partitions=8).collect()}
+           extract_pages(pages, partitions=8).collect()}
     src = {r.url: bytes(r.html) for r in pages.collect()}
     assert set(out) == set(src)
     for url, html in src.items():
@@ -67,8 +70,17 @@ def test_resume_after_kill(spark, pages, tmp_path):
                  partitions=8)
     assert len(r1["processed"]) == 2 and not r1["complete"]
     assert committed_groups(out_dir) == {p["group"] for p in r1["processed"]}
+    # a marker written before the lineage record lost its salt_buckets
+    # field still counts as committed and still reads as lineage
+    old = os.path.join(out_dir, "_lineage",
+                       f"group-{r1['processed'][0]['group']}.json")
+    with open(old) as fh:
+        record = json.load(fh)
+    with open(old, "w") as fh:
+        json.dump({**record, "salt_buckets": 256}, fh)
     r2 = run_job(spark, pages, out_dir, n_groups=4, partitions=8)
     assert r2["complete"]
+    assert r1["processed"][0]["group"] in r2["skipped_committed"]
     assert sorted(r2["skipped_committed"]) == sorted(
         p["group"] for p in r1["processed"])
     total = spark.read.parquet(out_dir + "/group=*")
@@ -88,6 +100,48 @@ def test_resume_after_kill(spark, pages, tmp_path):
                for r in got.values())
 
 
+@pytest.fixture(scope="module")
+def site_pages(spark):
+    """20,000 tiny pages over 97 hosts, as a crawl slice lands them."""
+    df = spark.range(20_000).select(
+        F.concat(F.lit("https://site"), (F.col("id") % 97).cast("string"),
+                 F.lit(".example/p"), F.col("id").cast("string")).alias("url"),
+        F.lit("<p>x</p>").cast("binary").alias("html")).cache()
+    df.count()
+    return df
+
+
+def _spread(extracted):
+    """(non-empty partitions, max/mean docs per non-empty partition)."""
+    n = [r.n_docs for r in partition_metrics(extracted).collect()]
+    return len(n), max(n) / (sum(n) / len(n))
+
+
+def test_exchange_spreads_table_and_group(site_pages):
+    """The kernel exchange is keyed on the url itself: the whole table
+    fills every partition evenly, and so does one ``run_job`` group,
+    whose pages all share ``pmod(xxhash64(url), n_groups)``."""
+    n_parts, ratio = _spread(extract_pages(site_pages, partitions=64))
+    assert n_parts == 64 and ratio <= 1.3
+    group = site_pages.filter(F.pmod(F.xxhash64("url"), F.lit(8)) == 0)
+    n_parts, _ = _spread(extract_pages(group, partitions=64))
+    assert n_parts == 64
+
+
+def test_salted_pages_positional_call_matches_kernel(site_pages):
+    """The benchmark ladder calls ``_salted_pages(df, 256, None)``; it
+    must place every url where ``extract_pages`` does, so the ladder's
+    exchange rung times the kernel's own exchange."""
+    from lexor_spark.job import _salted_pages
+
+    def placement(df):
+        return {r.url: r.p for r in
+                df.select("url", F.spark_partition_id().alias("p")).collect()}
+
+    assert placement(_salted_pages(site_pages, 256, None)) == \
+        placement(extract_pages(site_pages))
+
+
 def test_hostile_rows_become_data(spark):
     hostile = spark.createDataFrame(
         [("u1", bytearray(b"\xff\xfegarbage<not html")),
@@ -96,7 +150,7 @@ def test_hostile_rows_become_data(spark):
          ("u4", bytearray(("<div>" * 2000 + "deep").encode()))],
         "url string, html binary")
     rows = {r.url: r for r in
-            extract_pages(hostile, salt_buckets=4, partitions=2).collect()}
+            extract_pages(hostile, partitions=2).collect()}
     assert all(r.ok for r in rows.values())
     assert rows["u4"].text == "deep"
     assert rows["u2"].n_chars_out == 0 and rows["u3"].n_chars_out == 0
@@ -113,14 +167,13 @@ def test_heavy_tail_skew(spark, sf_dir):
     n_big = big.count()
     assert n_big >= 3  # the tail exists
 
-    out = extract_pages(pages, salt_buckets=64, partitions=16)
+    out = extract_pages(pages, partitions=16)
     rows = out.collect()
     assert all(r.ok for r in rows)
 
-    # salting spread: no partition holds more than half the corpus
+    # url-hash spread: no partition holds more than half the corpus
     from lexor_spark.job import partition_metrics
-    m = partition_metrics(extract_pages(pages, salt_buckets=64,
-                                        partitions=16)).collect()
+    m = partition_metrics(extract_pages(pages, partitions=16)).collect()
     total = sum(r.n_docs for r in m)
     assert max(r.n_docs for r in m) < total / 2
 
