@@ -196,8 +196,9 @@ exchange keyed on the url itself (uniform spread of giant-page runs),
 (bounded batch latency under megabyte blobs).
 
 Config: `spark.sql.execution.arrow.maxRecordsPerBatch=2048`,
-`spark.sql.shuffle.partitions=cores`, AQE on, partitions=4×cores, cyclic GC off in workers (trees freed by explicit
-cycle-breaking `dispose`). Host: {os.cpu_count()} cores, fixed 2.1 GHz.
+`spark.sql.shuffle.partitions=cores`, AQE on, partitions=4×cores,
+cyclic GC off in workers (trees freed by explicit cycle-breaking
+`dispose`). Host: {os.cpu_count()} cores, fixed 2.1 GHz.
 """)
     print(json.dumps({
         "levels": results,

@@ -332,7 +332,8 @@ NOTES = {
         "One full incremental crawl iteration: frontier dispatch and "
         "fetch join are host-keyed with per-host state bounded and "
         "delays broadcast; the kernel extraction is the standard "
-        "url-hash exchange + MapInArrow pass; the Gopher gate is scan-side HOFs; "
+        "url-hash exchange + MapInArrow pass; the Gopher gate is "
+        "scan-side HOFs; "
         "the postings delta aggregates (term, url) partials "
         "delta-proportionally — cost tracks the fetched slice, not "
         "the accumulated index."),
