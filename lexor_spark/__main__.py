@@ -63,16 +63,16 @@ def main(argv: list[str] | None = None) -> int:
         sys.stdout.write(body + "\n")
         return 0 if res.ok else 1
 
-    from lexor_spark.kernel.encoding import decode_html
-    text = decode_html(data)[0]
-
-    from lexor_spark.kernel.htmlparser import parse_html
-
-    doc, log = parse_html(text, args.source)
-    if args.log:
-        for e in log:
-            print(f"{args.source}:{e.line}:{e.col}: {e.code} {list(e.arg)}",
-                  file=sys.stderr)
+    # the parsed tree serves only --log and the markdown/html targets;
+    # the text target decodes and parses inside extract_document
+    if args.log or args.target != "text":
+        from lexor_spark.kernel.encoding import decode_html
+        from lexor_spark.kernel.htmlparser import parse_html
+        doc, log = parse_html(decode_html(data)[0], args.source)
+        if args.log:
+            for e in log:
+                print(f"{args.source}:{e.line}:{e.col}: {e.code} "
+                      f"{list(e.arg)}", file=sys.stderr)
 
     if args.target == "text":
         from lexor_spark.kernel.pipeline import extract_document

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from lexor_spark.job import _on_dom, _page_udf, _salted_pages
+from lexor_spark.sketches import _HLL_ALPHA, _hll_pos, _hll_rho
 
 __all__ = ["extract_links", "extract_directives", "pagerank",
            "pagerank_sql", "pagerank_links", "hits", "hits_sql",
@@ -844,24 +845,9 @@ group by l.lbl
 # ---------------------------------------------------------------------------
 
 HB_ITERS = 3
-HB_M = 16          # HLL registers per node (fixture sizing; prod uses 64+)
-_HB_ALPHA = 0.673  # standard HLL bias constant for m=16 (Flajolet et al.)
-
-
-def _hb_pos(node: Column, m: int) -> Column:
-    """Register index: first 32 md5 bits of the node id, mod m."""
-    return F.pmod(F.conv(F.substring(F.md5(node.cast("string")), 1, 8),
-                         16, 10).cast("long"), F.lit(m))
-
-
-def _hb_rho(node: Column) -> Column:
-    """HLL register value rho(w): leading zeros of the next 32 md5 bits
-    plus one — via length(bin(w)) so both engines count bits exactly
-    (no float log2 at power-of-two boundaries)."""
-    w = (F.conv(F.substring(F.md5(node.cast("string")), 9, 8), 16, 10)
-         .cast("long"))
-    return (F.when(w == 0, F.lit(33))
-            .otherwise(F.lit(33) - F.length(F.bin(w))).cast("int"))
+# HLL registers per node (fixture sizing; prod uses 64+).  Register
+# index, rho and the bias constant are `sketches.hll_distinct`'s.
+HB_M = 16
 
 
 def _hb_estimate(regs: DataFrame, nodes: DataFrame, m: int) -> DataFrame:
@@ -880,7 +866,7 @@ def _hb_estimate(regs: DataFrame, nodes: DataFrame, m: int) -> DataFrame:
               F.sum(F.pow(F.lit(0.5), F.col("val"))).alias("s_nz")))
     zr = F.lit(m) - F.coalesce(F.col("nz"), F.lit(0))
     s = F.coalesce(F.col("s_nz"), F.lit(0.0)) + zr.cast("double")
-    est = F.lit(_HB_ALPHA * m * m) / s
+    est = F.lit(_HLL_ALPHA * m * m) / s
     return (nodes.join(g, "v", "left").select("v", est.alias("e")))
 
 
@@ -918,8 +904,8 @@ def hyperball(edges: DataFrame, iters: int = HB_ITERS,
              .union(e.select(F.col("dst").alias("v")))
              .distinct().localCheckpoint())
     regs = nodes.select(
-        "v", _hb_pos(F.col("v"), m).alias("pos"),
-        _hb_rho(F.col("v")).alias("val")).localCheckpoint()
+        "v", _hll_pos(F.col("v"), m).alias("pos"),
+        _hll_rho(F.col("v")).alias("val")).localCheckpoint()
     ests = [_hb_estimate(regs, nodes, m)
             .withColumnRenamed("e", "e0").localCheckpoint()]
     for t in range(1, iters + 1):
@@ -953,7 +939,7 @@ def hyperball_sql(edges_sql: str, iters: int = HB_ITERS,
             f"g{t} as (select v, count(*) as nz, "
             f"sum(power(0.5, val)) as s_nz from c{t} group by v),\n"
             f"e{t} as (select nodes.v,\n"
-            f"  {_HB_ALPHA * m * m} / (coalesce(s_nz, 0.0)\n"
+            f"  {_HLL_ALPHA * m * m} / (coalesce(s_nz, 0.0)\n"
             f"    + ({m} - coalesce(nz, 0))) as e\n"
             f"  from nodes left join g{t} on g{t}.v = nodes.v)")
     parts = [

@@ -112,11 +112,12 @@ def _page_udf(schema: pa.Schema, per_page):
     """The ``mapInArrow`` function of a per-page operator — the one
     engine↔UDF boundary every page kernel shares.
 
-    For each input batch it reads column 0 (``url``) and column 1 (the
-    payload) with ``to_pylist``, calls ``per_page(url, payload)`` — which
-    returns that page's complete output rows as tuples in ``schema``
-    order — and builds one output batch of ``schema`` column by column
-    from the rows.
+    For each input batch it reads every column with ``to_pylist`` (the
+    scan side selects ``url`` and the payload, plus any column the body
+    needs), calls ``per_page(url, payload, ...)`` with one row's values
+    — it returns that page's complete output rows as tuples in
+    ``schema`` order — and builds one output batch of ``schema`` column
+    by column from the rows.
 
     The cyclic GC is off while the batches run: DOM trees are
     explicitly cycle-broken by the kernel (``dom.dispose``) so
@@ -132,9 +133,8 @@ def _page_udf(schema: pa.Schema, per_page):
         try:
             for batch in batches:
                 rows: list[tuple] = []
-                for url, payload in zip(batch.column(0).to_pylist(),
-                                        batch.column(1).to_pylist()):
-                    rows += per_page(url, payload)
+                for row in zip(*(c.to_pylist() for c in batch.columns)):
+                    rows += per_page(*row)
                 cols = list(zip(*rows)) or [()] * len(types)
                 yield pa.RecordBatch.from_arrays(
                     [pa.array(col, type=t) for col, t in zip(cols, types)],
@@ -169,8 +169,7 @@ def _on_dom(fn, on_error=None):
 def _extract_batches_wrapped(width: Optional[int], indent: str,
                              style: Optional[str] = None):
     """Batch-UDF factory for the extraction kernel; ``(None, "")`` is
-    the default raw-output path (bound once at module level below as
-    ``_extract_batches`` — a stable reference, no per-call closure).
+    the default raw-output path.
 
     ``style`` names a W2 writer-rule registry (`kernel/styles.py`),
     resolved worker-side so only the string crosses the closure.
@@ -187,7 +186,8 @@ def _extract_batches_wrapped(width: Optional[int], indent: str,
     return _page_udf(_ARROW_SCHEMA, per_page)
 
 
-# ``_extract_batches_inner`` is the name perfbench's stage tracer times
+# the default-mode batch function; ``_extract_batches_inner`` is the
+# name perfbench's stage tracer times
 _extract_batches = _extract_batches_inner = _extract_batches_wrapped(None, "")
 
 
@@ -211,11 +211,8 @@ def extract_pages(pages: DataFrame, partitions: Optional[int] = None,
     if style is not None:
         from lexor_spark.kernel.styles import style_rules
         style_rules(style)  # driver-side validation
-    salted = _salted_pages(pages, partitions=partitions)
-    if width is None and not indent and style is None:
-        return salted.mapInArrow(_extract_batches, OUTPUT_SCHEMA)
-    return salted.mapInArrow(_extract_batches_wrapped(width, indent, style),
-                             OUTPUT_SCHEMA)
+    return _salted_pages(pages, partitions=partitions).mapInArrow(
+        _extract_batches_wrapped(width, indent, style), OUTPUT_SCHEMA)
 
 
 def _metrics_aggs(count_as: str) -> list[Column]:
@@ -845,22 +842,6 @@ _DECODED_ARROW = pa.schema([
 ])
 
 
-def _decode_routed_batches(batches: Iterator[pa.RecordBatch]
-                           ) -> Iterator[pa.RecordBatch]:
-    """Charset-sniffed payload decode (WHATWG chain, errors=replace —
-    hostile bytes yield U+FFFD, never a task failure) for the textual
-    routes.  Arrow-batched; the same decode the HTML kernel runs."""
-    for batch in batches:
-        urls = batch.column("url").to_pylist()
-        routes = batch.column("route").to_pylist()
-        payloads = batch.column("payload").to_pylist()
-        bodies = [decode_html(p if p is not None else b"")[0]
-                  for p in payloads]
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(urls, pa.string()), pa.array(routes, pa.string()),
-             pa.array(bodies, pa.string())], schema=_DECODED_ARROW)
-
-
 def extract_routed(pages: DataFrame,
                    partitions: Optional[int] = None) -> DataFrame:
     """Mixed-format corpus → text, routed per payload by MIME sniffing
@@ -904,11 +885,14 @@ def extract_routed(pages: DataFrame,
                .select("url", F.lit("pdf_text").alias("route"),
                        "ok", "text"))
 
+    # the HTML kernel's charset-sniffed decode (WHATWG chain,
+    # errors=replace: hostile bytes yield U+FFFD, never a task failure)
+    decode = _page_udf(_DECODED_ARROW, lambda url, payload, route: [
+        (url, route, decode_html(payload or b"")[0])])
     textual = (_salted_pages(
         routed.filter(route.isin("plain_text", "feed_parser")),
         partitions=partitions, cols=("url", "payload", "route"))
-        .mapInArrow(_decode_routed_batches,
-                    from_arrow_schema(_DECODED_ARROW)))
+        .mapInArrow(decode, from_arrow_schema(_DECODED_ARROW)))
     plain_out = (textual.filter(route == "plain_text")
                  .select("url", "route", F.lit(True).alias("ok"),
                          F.col("body").alias("text")))

@@ -25,7 +25,7 @@ import re
 from typing import Callable, Optional
 
 from lexor_spark.kernel.dom import (
-    Comment, Document, Element, Entity, Node, RawText, Text, Void,
+    Document, Element, Entity, Node, RawText, Text, Void,
 )
 
 __all__ = [
@@ -73,7 +73,8 @@ _BOILER_CACHE_MAX = 16384
 
 def _attr_drop(attrs: dict) -> bool:
     """Attribute-level boilerplate tests shared by :func:`extraction_decide`
-    and the fused loop in :func:`convert` (single source of truth)."""
+    and the array kernel's parse-time drop decision (single source of
+    truth)."""
     token = attrs.get("class", "")
     idv = attrs.get("id")
     if idv:
@@ -137,14 +138,7 @@ def convert(doc: Document,
     * ``end_hook(src_element, dst_element)``, when given, is called
       after an element's children have been converted (the reference's
       ``end()`` slot, `converter.py:65-76`); returning a Node or list
-      replaces the completed element in the output.
-
-    The default rule-set runs fused into the loop (no per-node call into
-    :func:`extraction_decide` and no double ``type()`` dispatch — the
-    rule call was ~5% of kernel time); custom rules take the generic
-    path with identical semantics."""
-    fused = decide is extraction_decide and replacer is None \
-        and end_hook is None
+      replaces the completed element in the output."""
     out = Document(doc.lang, doc.uri)
     out.meta.update(doc.meta)
     # Saved frames hold (source_children, resume_index, dst_element,
@@ -160,65 +154,25 @@ def convert(doc: Document,
         while i < n:
             node = kids[i]
             i += 1
-            cls = type(node)
-            if fused:
-                # inlined extraction_decide, cheapest-first; text append
-                # merges into a trailing Text sibling and drops empties,
-                # which is exactly what per-element normalize would do —
-                # so the fused path skips normalize entirely
-                if cls is Text:
-                    data = node.data
-                    if data:
-                        dkids = dst.children
-                        if dkids and type(dkids[-1]) is Text:
-                            last = dkids[-1]
-                            last.data += data
-                            if node.end >= 0:
-                                last.end = node.end
+            d = decide(node)
+            if d == DROP:
+                continue
+            if d == REPLACE:
+                rep = replacer(node) if replacer is not None else None
+                if rep is not None:
+                    for r in (rep if isinstance(rep, list) else [rep]):
+                        if type(r) is Text:
+                            dst.append_text(r.data, r.start, r.end)
                         else:
-                            t = Text(data, node.start, node.end)
-                            t.parent = dst
-                            dkids.append(t)
-                    continue
-                if cls is Entity:
-                    ent = Entity(node.data, node.start, node.end)
-                    ent.parent = dst
-                    dst.children.append(ent)
-                    continue
-                if cls is Element or cls is Document:
-                    name = node.name
-                    if name in DROP_TAGS:
-                        continue
-                    attrs = node.attrs
-                    if attrs and _attr_drop(attrs):
-                        continue
-                    d = UNWRAP if name in UNWRAP_TAGS else COPY
-                elif cls is Void:
-                    if node.name not in ("br", "hr", "img"):
-                        continue
-                    d = COPY
-                else:
-                    continue  # Comment/DocumentType/PI/CData/RawText
-            else:
-                d = decide(node)
-                if d == DROP:
-                    continue
-                if d == REPLACE:
-                    rep = replacer(node) if replacer is not None else None
-                    if rep is not None:
-                        for r in (rep if isinstance(rep, list) else [rep]):
-                            if type(r) is Text:
-                                dst.append_text(r.data, r.start, r.end)
-                            else:
-                                dst.append_child(r)
-                    continue
-                if cls is Text:
-                    dst.append_text(node.data, node.start, node.end)
-                    continue
-                if cls is Entity:
-                    ent = Entity(node.data, node.start, node.end)
-                    dst.append_child(ent)
-                    continue
+                            dst.append_child(r)
+                continue
+            cls = type(node)
+            if cls is Text:
+                dst.append_text(node.data, node.start, node.end)
+                continue
+            if cls is Entity:
+                dst.append_child(Entity(node.data, node.start, node.end))
+                continue
             if d == UNWRAP:
                 ch = node.children
                 if ch:
@@ -230,25 +184,20 @@ def convert(doc: Document,
                 # mutates attrs, and the source tree is disposed right after
                 v = Void(node.name, node.attrs)
                 v.pos = node.pos
-                v.parent = dst
-                dst.children.append(v)
+                dst.append_child(v)
             else:  # Element / Document, COPY
                 el = Element(node.name, node.attrs)
                 el.pos = node.pos
-                el.parent = dst
-                dst.children.append(el)
+                dst.append_child(el)
                 ch = node.children
                 if ch:
                     frames.append((kids, i, dst, completing))
                     kids, i, dst = ch, 0, el
                     n = len(ch)
                     completing = (node, el)
-                elif not fused:
-                    el.normalize()
-                    if end_hook is not None:
-                        _apply_end_hook(end_hook, node, el, dst)
-        if not fused:
-            dst.normalize()
+                elif end_hook is not None:
+                    _apply_end_hook(end_hook, node, el, dst)
+        dst.normalize()
         if completing is not None and end_hook is not None:
             src_el, dst_el = completing
             parent = dst_el.parent

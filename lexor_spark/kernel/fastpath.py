@@ -21,15 +21,15 @@ from one pass over flat parallel node records:
 Byte-identity with the object path — text, spans, title, description,
 lang_attr, codes, n_nodes, truncated, ok, err — is pinned by
 ``tests/test_fastpath.py`` (full sf0.001 corpus differential + hostile
-inputs + hypothesis random HTML).  Grammar tables, regexes, and the
+inputs + hypothesis random HTML, each in four writer modes).  Grammar tables, regexes, and the
 tag/attr caches are IMPORTED from `htmlparser`/`extractor` so the two
 paths cannot drift silently; semantics citations live there.
 
 The object path remains the general API (mutation, selectors, custom
-rules/hooks, width/indent writer modes route to it); this path serves
-the default extraction — the per-document kernel of the 10^12-row job,
-where it is ~1.5× the object path serially (interleaved A/B in
-BENCH/BASELINE.md).
+rules/hooks) and runs the W2 styles; this path serves every unstyled
+extraction, the W5 width/indent writer modes included — the
+per-document kernel of the 10^12-row job, where it is ~1.5× the object
+path serially (interleaved A/B in BENCH/BASELINE.md).
 
 Round-3 refinement — parse-time drop-region skipping: records inside a
 CONVERT-dropped element's subtree are counted, not built (structure,
@@ -652,8 +652,10 @@ def _select_main_arrays(nodes: list) -> int:
     return best
 
 
-def _write_arrays(nodes: list, root_idx: int) -> tuple[str, list]:
-    """write_text over the array with convert decisions applied inline.
+def _write_arrays(nodes: list, root_idx: int, width: Optional[int] = None,
+                  indent: str = "") -> tuple[str, list]:
+    """write_text over the array with convert decisions applied inline,
+    ending in the same W5 layout step (``_TextBuilder.finish``).
 
     Adjacent surviving Text records merge exactly as the converted
     tree's per-element normalize would merge them (any surviving
@@ -795,12 +797,13 @@ def _write_arrays(nodes: list, root_idx: int) -> tuple[str, list]:
             tb.add_space()
         else:
             path, in_pre = arg
-    return tb.result(), spans
+    return tb.finish(width, indent), spans
 
 
-def fast_extract(res, text: str) -> None:
-    """Fill an `ExtractResult` from the array kernel (default writer mode
-    only — width/indent/custom hooks take the object path)."""
+def fast_extract(res, text: str, width: Optional[int] = None,
+                 indent: str = "") -> None:
+    """Fill an `ExtractResult` from the array kernel in any W5 writer
+    mode (``width``/``indent``); only W2 styles take the object path."""
     nodes, log, skipped = _parse_arrays(text)
     res.codes = [e.code for e in log]
     meta = _collect_meta_arrays(nodes)
@@ -809,5 +812,5 @@ def fast_extract(res, text: str) -> None:
     res.lang_attr = meta.get("lang")
     res.n_nodes = len(nodes) + skipped + 1  # + the document root
     main_idx = _select_main_arrays(nodes)
-    res.text, spans = _write_arrays(nodes, main_idx)
+    res.text, spans = _write_arrays(nodes, main_idx, width, indent)
     res.spans = [s.as_tuple() for s in spans]

@@ -82,9 +82,11 @@ def _object_extract(res: ExtractResult, text: str, uri: str,
                     width: Optional[int], indent: str,
                     rules: Optional[dict]) -> None:
     """Fill ``res`` from the object pipeline: ``htmlparser`` → node tree
-    → ``extractor.convert`` → ``textwriter``.  It serves the width/indent
-    writer modes and the W2 styles, and is the differential oracle of
-    ``fastpath.fast_extract`` (tests/test_fastpath.py)."""
+    → ``extractor.convert`` → ``textwriter``.  In production it serves
+    only the W2 styles (``rules``), whose writer rules take DOM nodes.
+    With ``rules=None`` it is the differential oracle of
+    ``fastpath.fast_extract`` in every width/indent mode
+    (tests/test_fastpath.py)."""
     doc = converted = None
     try:
         doc, log = parse_html(text, uri)
@@ -131,10 +133,11 @@ def extract_document(html: Union[bytes, str], uri: str = "",
     NodeWriter-rule registry (`kernel/styles.py` — writer styles as
     config, the reference's style-plugin premise, `writer.py:419-445`).
     The defaults keep the byte-pinned raw output the extraction oracle
-    verifies, and run on the array-backed kernel (`fastpath`), which is
-    byte-identical to the object path (differential-pinned by
-    tests/test_fastpath.py) and ~1.5× faster serially; the writer modes
-    and styles take the object path (`_object_extract`)."""
+    verifies.  Every unstyled call, any width/indent included, runs on
+    the array-backed kernel (`fastpath`), which is byte-identical to the
+    object path (differential-pinned in each writer mode by
+    tests/test_fastpath.py) and ~1.5× faster serially; only a style
+    takes the object path (`_object_extract`)."""
     res = ExtractResult()
     try:
         rules = None
@@ -145,8 +148,8 @@ def extract_document(html: Union[bytes, str], uri: str = "",
         if len(text) > MAX_CHARS:
             text = text[:MAX_CHARS]
             res.truncated = True
-        if width is None and not indent and rules is None:
-            fast_extract(res, text)
+        if rules is None:
+            fast_extract(res, text, width, indent)
         else:
             _object_extract(res, text, uri, width, indent, rules)
     except Exception as exc:  # hostile input → error row, not task failure

@@ -176,6 +176,19 @@ class _TextBuilder:
                 ww.write(part)
         return ww.getvalue()
 
+    def finish(self, width: Optional[int], indent: str) -> str:
+        """The W5 layout step that ends every writer: the raw result,
+        the raw result with ``indent`` prefixed to each non-empty line
+        (reference indent mode with wrap off, `writer.py:248-258`), or
+        :meth:`result_wrapped` when a ``width`` is given."""
+        if width is not None:
+            return self.result_wrapped(width, indent)
+        out = self.result()
+        if indent:
+            out = "\n".join(indent + ln if ln else ln
+                            for ln in out.split("\n"))
+        return out
+
 
 def write_text(root: Element, width: Optional[int] = None,
                indent: str = "", pre_process=None,
@@ -294,12 +307,4 @@ def write_text(root: Element, width: Optional[int] = None,
             stack.append((child, child_path, child_pre))
     if post_process is not None:
         post_process(tb, root)
-    if width is None:
-        out = tb.result()
-        if indent:
-            # indent-only mode: prefix lines, never re-wrap (reference
-            # indent mode with wrap off, `writer.py:248-258`)
-            out = "\n".join(indent + ln if ln else ln
-                            for ln in out.split("\n"))
-        return out, spans
-    return tb.result_wrapped(width, indent), spans
+    return tb.finish(width, indent), spans

@@ -171,10 +171,10 @@ from est order by est desc, term limit {k}
 # ---------------------------------------------------------------------------
 
 # m = 16 registers with the matching Flajolet bias constant — the same
-# fixture sizing (and the same md5-register / bit-length-rho / raw-
-# estimator construction) as the HyperBall neighborhood counter in
-# `lexor_spark/graph.py`; production uses 2^6..2^14 registers with the
-# general alpha formula.
+# fixture sizing as the HyperBall neighborhood counter in
+# `lexor_spark/graph.py`, which uses these register definitions
+# (md5 register, bit-length rho, alpha); production uses 2^6..2^14
+# registers with the general alpha formula.
 HLL_M = 16
 _HLL_ALPHA = 0.673
 

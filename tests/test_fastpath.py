@@ -1,6 +1,7 @@
 """Array-kernel differential: `fastpath.fast_extract` must produce
 byte-identical ExtractResults to the object pipeline on the synthetic
-corpus, hostile inputs, and hypothesis-random HTML.
+corpus, hostile inputs, and hypothesis-random HTML, in each W5 writer
+mode (``MODES``: raw, wrap, indent-only, wrap + indent).
 
 The corpus HTML here is a pure-Python replica of `pages._html_column`;
 exact replica fidelity is NOT load-bearing — the differential compares
@@ -69,37 +70,44 @@ def _run(fill, html, uri):
     return res
 
 
-def _object_path(html, uri=""):
-    """The OBJECT pipeline in its default writer mode."""
+# (width, indent) writer modes every differential runs over
+MODES = [(None, ""), (70, ""), (None, "  "), (30, "> ")]
+
+
+def _object_path(html, uri="", width=None, indent=""):
+    """The OBJECT pipeline (no style) in one writer mode."""
     return _run(lambda res, text: pipeline._object_extract(
-        res, text, uri, None, "", None), html, uri)
+        res, text, uri, width, indent, None), html, uri)
 
 
-def _fast_path(html, uri=""):
-    """The array kernel, which `extract_document` runs by default."""
-    res = _run(fast_extract, html, uri)
-    default = extract_document(html, uri)
+def _fast_path(html, uri="", width=None, indent=""):
+    """The array kernel, which `extract_document` runs for every
+    unstyled call."""
+    res = _run(lambda r, text: fast_extract(r, text, width, indent),
+               html, uri)
+    served = extract_document(html, uri, width, indent)
     for f in _FIELDS:
-        assert getattr(res, f) == getattr(default, f), f
+        assert getattr(res, f) == getattr(served, f), f
     return res
 
 
 _FIELDS = ExtractResult.__slots__
 
 
-def _assert_identical(html, uri=""):
-    a = _object_path(html, uri)
-    b = _fast_path(html, uri)
+def _assert_identical(html, uri="", width=None, indent=""):
+    a = _object_path(html, uri, width, indent)
+    b = _fast_path(html, uri, width, indent)
     for f in _FIELDS:
         assert getattr(a, f) == getattr(b, f), \
-            (f, getattr(a, f), getattr(b, f))
+            (f, width, indent, getattr(a, f), getattr(b, f))
     return a
 
 
 def test_corpus_differential():
-    """Every sf0.001 document, all four page variants: every field of
-    the result (text, spans, title, description, lang_attr, codes,
-    n_nodes, ok, err) identical between the two kernels."""
+    """Every sf0.001 document, all four page variants, every writer
+    mode: every field of the result (text, spans, title, description,
+    lang_attr, codes, n_nodes, ok, err) identical between the two
+    kernels."""
     con = duckdb.connect()
     rows = con.execute(
         f"select doc_id, text, lang from "
@@ -108,11 +116,11 @@ def test_corpus_differential():
     assert len(rows) >= 400
     n_text = 0
     for doc_id, text, lang in rows:
-        res = _assert_identical(
-            _page_html(doc_id, text, lang).encode("utf-8"),
-            f"u{doc_id}")
-        assert res.ok
-        n_text += len(res.text)
+        html = _page_html(doc_id, text, lang).encode("utf-8")
+        for width, indent in MODES:
+            res = _assert_identical(html, f"u{doc_id}", width, indent)
+            assert res.ok
+            n_text += len(res.text)
     assert n_text > 0
 
 
@@ -160,8 +168,9 @@ HOSTILE = [
 
 @pytest.mark.parametrize("html", HOSTILE)
 def test_hostile_differential(html):
-    res = _assert_identical(html, "hostile")
-    assert res.ok
+    for width, indent in MODES:
+        res = _assert_identical(html, "hostile", width, indent)
+        assert res.ok
 
 
 # random-HTML differential: tags from every rule class (drop, unwrap,
@@ -198,4 +207,5 @@ def _html_soup(draw):
 @given(html=_html_soup())
 @settings(max_examples=300, deadline=None)
 def test_random_soup_differential(html):
-    _assert_identical(html)
+    for width, indent in MODES:
+        _assert_identical(html, "", width, indent)

@@ -96,10 +96,10 @@ def boom(monkeypatch):
             raise RuntimeError("boom")
         return real_parse(text, uri)
 
-    def fast(res, text):
+    def fast(res, text, width=None, indent=""):
         if text == "BOOM":
             raise RuntimeError("boom")
-        real_fast(res, text)
+        real_fast(res, text, width, indent)
 
     def dens(html, url=""):
         if url == "boom":

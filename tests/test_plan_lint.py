@@ -90,10 +90,9 @@ def test_python_boundary_is_arrow_batched(plans):
 
 
 # The page-kernel runner (`job._page_udf`) is the one place a per-page
-# operator's batch loop lives; `_decode_routed_batches` (three input
-# columns) is the one batch loop outside it.
+# operator's batch loop lives.
 RUNNER_ONLY = ("gc.disable", "RecordBatch.from_arrays")
-RUNNER_HOMES = {("job.py", "_page_udf"), ("job.py", "_decode_routed_batches")}
+RUNNER_HOMES = {("job.py", "_page_udf")}
 
 
 def _runner_only_calls():
@@ -117,6 +116,6 @@ def _runner_only_calls():
 
 def test_batch_loops_live_in_the_runner():
     """No operator hand-copies the GC switch or the batch build: both
-    appear in the package only inside the runner and the routed decode."""
+    appear in the package only inside the runner."""
     calls = list(_runner_only_calls())
     assert {(f, d) for f, d, _ in calls} == RUNNER_HOMES, calls

@@ -238,3 +238,26 @@ def test_cli_width_flag(tmp_path, capsys):
     out = capsys.readouterr().out
     assert all(len(ln) <= 25 for ln in out.strip().split("\n"))
     assert len(out.strip().split("\n")) > 3
+
+
+def test_cli_text_target_parses_no_tree(tmp_path, capsys, monkeypatch):
+    """`to text` leaves parsing to extract_document's array kernel: the
+    CLI builds no object tree of its own."""
+    from lexor_spark.__main__ import main
+    from lexor_spark.kernel import htmlparser
+    from lexor_spark.kernel.pipeline import extract_document
+
+    calls = []
+    real_parse = htmlparser.parse_html
+
+    def parse(*args, **kwargs):
+        calls.append(args)
+        return real_parse(*args, **kwargs)
+
+    monkeypatch.setattr(htmlparser, "parse_html", parse)
+    html = b"<main><p>one</p><p>two &amp; three</p></main>"
+    f = tmp_path / "p.html"
+    f.write_bytes(html)
+    assert main([str(f), "to", "text"]) == 0
+    assert calls == []
+    assert capsys.readouterr().out == extract_document(html).text + "\n"
