@@ -25,7 +25,7 @@ import re
 from typing import Callable, Optional
 
 from lexor_spark.kernel.dom import (
-    Document, Element, Entity, Node, RawText, Text, Void,
+    Comment, Document, Element, Entity, Node, RawText, Text, Void,
 )
 
 __all__ = [

@@ -138,6 +138,9 @@ def test_operator_contract(name, boom):
     assert out[0].schema == schema
     by_url = _rows_by_url(out)
     assert by_url.get("https://site.example/valid"), "valid page found nothing"
+    if "ok" in schema.names:
+        ok = schema.names.index("ok")
+        assert all(r[ok] for r in by_url["https://site.example/valid"])
     if name in ONE_ROW:
         assert {u: len(r) for u, r in by_url.items()} == \
             {u: 1 for u in batch.column(0).to_pylist()}
