@@ -288,6 +288,20 @@ def _script_profile_sql() -> str:
             f"select doc_id,\n       {cols}\nfrom t order by doc_id")
 
 
+def _corpus_url() -> F.Column:
+    """The canonical synthetic url (same construction as pages_df);
+    ``_CORPUS_URL_SQL`` is its DuckDB spelling."""
+    did = F.col("doc_id")
+    return F.concat(
+        F.lit("https://site"), F.pmod(did, F.lit(97)).cast("string"),
+        F.lit(".example/"), F.col("source"), F.lit("/p"),
+        did.cast("string"))
+
+
+_CORPUS_URL_SQL = ("('https://site' || (doc_id % 97)::varchar || "
+                   "'.example/' || source || '/p' || doc_id::varchar)")
+
+
 def _q_page_directives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-page index/canonical directives through the REAL kernel
     parse: deterministic <head> blocks (robots metas on doc_id%3/%4,
@@ -329,19 +343,14 @@ def _q_page_directives(spark: SparkSession, sf_dir: str) -> DataFrame:
          .otherwise(F.lit("")),
         F.lit("</head><body><p>"), F.col("text"),
         F.lit("</p></body></html>"))
-    url = F.concat(
-        F.lit("https://site"),
-        F.pmod(did, F.lit(97)).cast("string"),
-        F.lit(".example/"), F.col("source"), F.lit("/p"),
-        did.cast("string"))
-    pages = docs.select(url.alias("url"),
+    pages = docs.select(_corpus_url().alias("url"),
                         F.encode(html, "UTF-8").alias("html"))
     return graph.extract_directives(pages).orderBy("url")
 
 
 def _page_directives_sql() -> str:
     return f"""
-with d as (select doc_id, {_URL_SQL} as url from documents),
+with d as (select doc_id, {_CORPUS_URL_SQL} as url from documents),
 e as (select url,
   (case when doc_id % 3 = 0 and doc_id % 4 = 0
         then 'noindex, follow,nofollow'
@@ -378,11 +387,7 @@ def _q_lang_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     dirs = _q_page_directives(spark, sf_dir).select("url", "html_lang")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     did = F.col("doc_id")
-    url = F.concat(
-        F.lit("https://site"), F.pmod(did, F.lit(97)).cast("string"),
-        F.lit(".example/"), F.col("source"), F.lit("/p"),
-        did.cast("string"))
-    det = docs.select(url.alias("url"),
+    det = docs.select(_corpus_url().alias("url"),
                       textfns.lang_id(F.col("text")).alias("detected"))
     j = dirs.join(det, "url")
     primary = F.split(F.col("html_lang"), "-").getItem(0)
@@ -400,7 +405,7 @@ def _q_lang_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _lang_consistency_sql() -> str:
     det = textfns.SQL.lang_id("text")
     return f"""
-with d as (select doc_id, {_URL_SQL} as url, text from documents),
+with d as (select doc_id, {_CORPUS_URL_SQL} as url, text from documents),
 e as (select url,
   (case when doc_id % 6 = 0 then 'de'
         when doc_id % 6 = 1 then 'en-us' end) as declared,
@@ -447,11 +452,7 @@ def _q_html_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     html = F.concat(F.lit("<html><body><p>"), F.col("text"),
                     F.lit("</p>"), table_a, table_b,
                     F.lit("</body></html>"))
-    url = F.concat(
-        F.lit("https://site"), F.pmod(did, F.lit(97)).cast("string"),
-        F.lit(".example/"), F.col("source"), F.lit("/p"),
-        did.cast("string"))
-    pages = docs.select(url.alias("url"),
+    pages = docs.select(_corpus_url().alias("url"),
                         F.encode(html, "UTF-8").alias("html"))
     return (content.extract_tables(pages)
             .orderBy("url", "table_idx", "row_idx", "col_idx"))
@@ -459,7 +460,7 @@ def _q_html_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _html_tables_sql() -> str:
     return f"""
-with d as (select doc_id, {_URL_SQL} as url from documents),
+with d as (select doc_id, {_CORPUS_URL_SQL} as url from documents),
 hdr as (
   select url, 0 as table_idx, 0 as row_idx, c.col_idx,
          true as is_header, 1 as colspan, 1 as rowspan, c.cell
@@ -525,18 +526,14 @@ def _q_page_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("</head>"))
     html = F.concat(F.lit("<html>"), head, F.lit("<body><p>"),
                     F.col("text"), F.lit("</p></body></html>"))
-    url = F.concat(
-        F.lit("https://site"), F.pmod(did, F.lit(97)).cast("string"),
-        F.lit(".example/"), F.col("source"), F.lit("/p"),
-        did.cast("string"))
-    pages = docs.select(url.alias("url"),
+    pages = docs.select(_corpus_url().alias("url"),
                         F.encode(html, "UTF-8").alias("html"))
     return content.extract_meta(pages).orderBy("url")
 
 
 def _page_meta_sql() -> str:
     return f"""
-with d as (select doc_id, {_URL_SQL} as url from documents)
+with d as (select doc_id, {_CORPUS_URL_SQL} as url from documents)
 select url,
   'Doc ' || doc_id || ' & notes' as title,
   case when doc_id % 4 = 0 then 'd' || doc_id end as description,
@@ -590,19 +587,6 @@ select g.doc_id, g.gopher_keep, b.bucket, s.prob,
 from g join b using (doc_id) join s using (doc_id)
 order by g.doc_id
 """
-
-
-def _corpus_url() -> F.Column:
-    """The canonical synthetic url (same construction as pages_df)."""
-    did = F.col("doc_id")
-    return F.concat(
-        F.lit("https://site"), F.pmod(did, F.lit(97)).cast("string"),
-        F.lit(".example/"), F.col("source"), F.lit("/p"),
-        did.cast("string"))
-
-
-_CORPUS_URL_SQL = ("'https://site' || (doc_id % 97)::varchar || "
-                   "'.example/' || source || '/p' || doc_id::varchar")
 
 
 def _q_url_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1094,10 +1078,7 @@ def _density_pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(_DENS_C2B + "</p><div>&copy; 2026 site "),
         F.pmod(did, F.lit(97)).cast("string"),
         F.lit(" all rights reserved</div></body></html>"))
-    url = F.concat(
-        F.lit("https://site"), F.pmod(did, F.lit(97)).cast("string"),
-        F.lit(".example/"), F.col("source"), F.lit("/p"), ds)
-    return docs.select(url.alias("url"),
+    return docs.select(_corpus_url().alias("url"),
                        F.encode(html, "UTF-8").alias("html"))
 
 
@@ -1113,7 +1094,7 @@ def _q_density_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _density_extract_sql() -> str:
     return f"""
-with d as (select doc_id, {_URL_SQL} as url from documents)
+with d as (select doc_id, {_CORPUS_URL_SQL} as url from documents)
 select url,
   'Section ' || doc_id || chr(10) ||
   '{_DENS_C1A}' || doc_id || '{_DENS_C1B}' || chr(10) ||
@@ -1300,16 +1281,7 @@ def _q_cosine_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _urls_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    url = F.concat(
-        F.lit("https://site"),
-        F.pmod(F.col("doc_id"), F.lit(97)).cast("string"),
-        F.lit(".example/"), F.col("source"), F.lit("/p"),
-        F.col("doc_id").cast("string"))
-    return docs.select(url.alias("url"))
-
-
-_URL_SQL = ("('https://site' || (doc_id % 97) || '.example/' || source "
-            "|| '/p' || doc_id)")
+    return docs.select(_corpus_url().alias("url"))
 
 
 def _q_url_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1362,14 +1334,12 @@ def _q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so the KERNEL-extracted edge list is SQL-reconstructible: page url ->
 # host root and host /about.  Canonicalization is the identity on these
 # URLs (no ports/params/fragments, hosts already lowercase).
-_PAGES_EDGES_SQL = """
-select 'https://site' || (doc_id % 97) || '.example/' || source
-         || '/p' || doc_id as src,
+_PAGES_EDGES_SQL = f"""
+select {_CORPUS_URL_SQL} as src,
        'https://site' || (doc_id % 97) || '.example/' as dst
 from documents
 union all
-select 'https://site' || (doc_id % 97) || '.example/' || source
-         || '/p' || doc_id as src,
+select {_CORPUS_URL_SQL} as src,
        'https://site' || (doc_id % 97) || '.example/about' as dst
 from documents
 """
@@ -1408,11 +1378,7 @@ def _q_host_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(did, F.lit(13)).cast("string"),
         F.lit('.example/deals">deals</a> '
               '<a href="/about">about</a></p></body></html>'))
-    url = F.concat(
-        F.lit("https://site"), F.pmod(did, F.lit(97)).cast("string"),
-        F.lit(".example/"), F.col("source"), F.lit("/p"),
-        did.cast("string"))
-    pages = docs.select(url.alias("url"),
+    pages = docs.select(_corpus_url().alias("url"),
                         F.encode(html, "UTF-8").alias("html"))
     return graph.host_rank(pages).orderBy("host")
 
@@ -1521,11 +1487,7 @@ def _q_alias_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
          .otherwise(F.lit("")),
         F.lit("</head><body><p>"), F.col("text"),
         F.lit("</p></body></html>"))
-    url = F.concat(
-        F.lit("https://site"), F.pmod(did, F.lit(97)).cast("string"),
-        F.lit(".example/"), F.col("source"), F.lit("/p"),
-        did.cast("string"))
-    pages = docs.select(url.alias("url"),
+    pages = docs.select(_corpus_url().alias("url"),
                         F.encode(html, "UTF-8").alias("html"))
     host = F.concat(F.lit("https://site"),
                     F.pmod(did, F.lit(97)).cast("string"),
@@ -1542,7 +1504,7 @@ def _q_alias_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _alias_collapse_sql() -> str:
     edges = f"""
-select {_URL_SQL} as src,
+select {_CORPUS_URL_SQL} as src,
        'https://site' || (doc_id % 97) || '.example/c/' || doc_id as dst
 from documents where doc_id % 2 = 0
 union all
@@ -1628,9 +1590,6 @@ def _http_responses_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     d = F.col("doc_id")
     ds = d.cast("string")
-    url = F.concat(F.lit("https://site"),
-                   F.pmod(d, F.lit(97)).cast("string"),
-                   F.lit(".example/"), F.col("source"), F.lit("/p"), ds)
     crlf = F.lit("\r\n")
     ok = F.concat(
         F.lit("HTTP/1.1 200 OK"), crlf,
@@ -1653,7 +1612,7 @@ def _http_responses_df(spark: SparkSession, sf_dir: str) -> DataFrame:
                .when(d % 11 == 0, F.concat(F.lit("oops <garbage "), ds,
                                            F.lit(">")))
                .otherwise(ok))
-    return docs.select(url.alias("url"), headers.alias("headers"))
+    return docs.select(_corpus_url().alias("url"), headers.alias("headers"))
 
 
 _HTTP_RESPONSES_SQL = """
@@ -2038,10 +1997,7 @@ def _q_index_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstruct."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     d = F.col("doc_id")
-    url = F.concat(F.lit("https://site"),
-                   F.pmod(d, F.lit(97)).cast("string"),
-                   F.lit(".example/"), F.col("source"), F.lit("/p"),
-                   d.cast("string"))
+    url = _corpus_url()
     crlf = F.lit("\r\n")
     headers = F.concat(
         F.lit("HTTP/1.1 200 OK"), crlf,
@@ -2060,7 +2016,7 @@ def _q_index_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _index_gate_sql() -> str:
     responses = f"""
-select {_URL_SQL} as url,
+select {_CORPUS_URL_SQL} as url,
   'HTTP/1.1 200 OK' || chr(13) || chr(10)
   || (case when doc_id % 7 = 0
            then 'X-Robots-Tag: noindex' || chr(13) || chr(10)
@@ -2071,7 +2027,7 @@ select {_URL_SQL} as url,
   || 'Content-Type: text/html' || chr(13) || chr(10) as headers
 from documents
 """
-    rep = (f"select {_URL_SQL} as url, (doc_id % 11 <> 0) as allowed "
+    rep = (f"select {_CORPUS_URL_SQL} as url, (doc_id % 11 <> 0) as allowed "
            f"from documents")
     return robots.index_gate_sql(_page_directives_sql(), responses, rep)
 
@@ -2127,10 +2083,7 @@ def _diff_pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
                            '<a href="/z">z</a></nav>'))))
     html = F.concat(F.lit("<html><head><title>t</title></head><body>"),
                     body, F.lit("</body></html>"))
-    url = F.concat(
-        F.lit("https://site"), F.pmod(did, F.lit(97)).cast("string"),
-        F.lit(".example/"), F.col("source"), F.lit("/p"), ds)
-    return docs.select(url.alias("url"),
+    return docs.select(_corpus_url().alias("url"),
                        F.encode(html, "UTF-8").alias("html"))
 
 
@@ -2258,15 +2211,10 @@ def _docs_urls_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents + the deterministic url column — the host-level
     curation input shape (url, lang, n_chars)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    url = F.concat(
-        F.lit("https://site"),
-        F.pmod(F.col("doc_id"), F.lit(97)).cast("string"),
-        F.lit(".example/"), F.col("source"), F.lit("/p"),
-        F.col("doc_id").cast("string"))
-    return docs.select("doc_id", url.alias("url"), "lang", "n_chars")
+    return docs.select("doc_id", _corpus_url().alias("url"), "lang", "n_chars")
 
 
-_DOCS_URLS_TABLE = (f"(select doc_id, {_URL_SQL} as url, lang, n_chars "
+_DOCS_URLS_TABLE = (f"(select doc_id, {_CORPUS_URL_SQL} as url, lang, n_chars "
                     f"from documents)")
 
 
@@ -2320,10 +2268,7 @@ def _q_host_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
                F.lit("SPECIAL OFFER today only\n")).otherwise(F.lit("")),
         F.substring("text", 121, 1_000_000), F.lit("\n"),
         F.lit("(c) site"), hostn, F.lit(".example legal"))
-    url = F.concat(F.lit("https://site"), hostn, F.lit(".example/"),
-                   F.col("source"), F.lit("/p"),
-                   F.col("doc_id").cast("string"))
-    v = docs.select("doc_id", url.alias("url"), ml.alias("text"))
+    v = docs.select("doc_id", _corpus_url().alias("url"), ml.alias("text"))
     return dedup.host_boilerplate(v).orderBy("doc_id")
 
 
@@ -2336,7 +2281,7 @@ _HOSTBP_ML = (
 
 
 def _host_boilerplate_sql() -> str:
-    inner = (f"(select doc_id, {_URL_SQL} as url, {_HOSTBP_ML} as text "
+    inner = (f"(select doc_id, {_CORPUS_URL_SQL} as url, {_HOSTBP_ML} as text "
              f"from documents)")
     return (dedup.host_boilerplate_sql(inner, "url")
             + " order by doc_id")
@@ -3186,7 +3131,7 @@ def _q_url_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_URL_STATS = f"""
-with u as (select {_URL_SQL} as url from documents),
+with u as (select {_CORPUS_URL_SQL} as url from documents),
 f as (select {urlfns.SQL_URL.DOMAIN.format(u='url')} as domain,
              {urlfns.SQL_URL.HOST.format(u='url')}   as host,
              {urlfns.SQL_URL.DEPTH.format(u='url')}  as depth,
@@ -3206,7 +3151,7 @@ def _q_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_DOMAIN_CAP = f"""
-with u as (select {_URL_SQL} as url from documents),
+with u as (select {_CORPUS_URL_SQL} as url from documents),
 d as (select url, {urlfns.SQL_URL.DOMAIN.format(u='url')} as domain from u),
 r as (select domain, url,
              row_number() over (partition by domain order by url) as rn
@@ -4202,7 +4147,7 @@ def oracle_sql() -> dict[str, str]:
         "url_stats": SQL_URL_STATS,
         "url_filter": ("select * from ("
                        + urlfns.url_filter_sql(
-                           f"(select {_URL_SQL} as url from documents)",
+                           f"(select {_CORPUS_URL_SQL} as url from documents)",
                            blocked_domains=_URL_BLOCK,
                            keyword_weights=_URL_KW, threshold=1.1)
                        + ") order by url"),
@@ -4222,7 +4167,7 @@ def oracle_sql() -> dict[str, str]:
         "alias_collapse": _alias_collapse_sql(),
         "feed_entries": _FEED_ENTRIES_SQL,
         "http_headers": httpfns.parse_http_headers_sql(
-            _HTTP_RESPONSES_SQL.format(url=_URL_SQL)),
+            _HTTP_RESPONSES_SQL.format(url=_CORPUS_URL_SQL)),
         "mime_sniff": mimesniff.sniff_mime_sql(_MIME_PAGES_SQL),
         "cache_plan": httpfns.cache_plan_sql(_CACHE_RESPONSES_SQL,
                                              now=_CACHE_NOW),

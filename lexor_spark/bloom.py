@@ -28,10 +28,10 @@ so both build and probe stay fully distributed:
   the verdict is a ``min`` over the k lookups (guaranteed no false
   negative; false positives ≈ (1-e^{-kn/m})^k).
 
-Hashing is the repo-standard engine-portable scheme (`sampling.py`):
-``conv(substr(md5(key || '#i'), 1, 8), 16, 10)`` — bit-identical in
-Spark and DuckDB, so the whole filter (every word value) is
-value-oracled, not just the verdicts.
+Hashing is the package's one engine-portable integer hash,
+``textfns.md5_u32(key || '#b<i>')`` (the first 32 bits of the salted
+md5) — bit-identical in Spark and DuckDB, so the whole filter (every
+word value) is value-oracled, not just the verdicts.
 
 Reference parity: none — the reference is a single-document converter
 (`SURVEY.md §0`); this is part of the crawl-ecosystem layer the Spark
@@ -42,6 +42,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from lexor_spark.textfns import SQL, md5_u32
 
 __all__ = ["BLOOM_M", "BLOOM_K", "bloom_build", "bloom_probe",
            "bloom_build_sql", "bloom_probe_sql"]
@@ -55,13 +57,12 @@ BLOOM_K = 5
 
 def _pos(key: Column, i: int, m: int) -> Column:
     """Bit position i: first 32 bits of md5(key || '#b<i>') mod m."""
-    h = F.conv(F.substring(F.md5(F.concat(key, F.lit(f"#b{i}"))), 1, 8),
-               16, 10).cast("long")
-    return F.pmod(h, F.lit(m))
+    return F.pmod(md5_u32(F.concat(key, F.lit(f"#b{i}"))), F.lit(m))
 
 
 def _pos_sql(key: str, i: int, m: int) -> str:
-    return (f"(('0x' || substr(md5({key} || '#b{i}'), 1, 8))::bigint % {m})")
+    h = SQL.md5_u32(f"{key} || '#b{i}'")
+    return f"({h} % {m})"
 
 
 def bloom_build(df: DataFrame, key: Column,

@@ -7,7 +7,7 @@ token features, and score the whole corpus with it.  This module is
 that loop as pure DataFrame algebra:
 
 * features: binary hashed-unigram presence buckets (first 32 md5 bits
-  mod ``B`` — the engine-portable hash of `lexor_spark/sampling.py`),
+  mod ``B`` — the DSIR bucket over the engine-portable ``md5_u32``),
   plus a bias feature at bucket ``-1`` (presence, not tf: per-feature
   gradients then carry unit weight instead of 1/doc-length, which lets
   few-round full-batch GD move past the base-rate bias);
@@ -34,17 +34,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lexor_spark import dsir
 from lexor_spark.textfns import SQL, normalize_text
 
 __all__ = ["lr_features", "lr_train", "lr_train_sql", "lr_score",
            "lr_score_sql"]
 
 _BIAS = -1
-
-
-def _bucket(g: Column, n_buckets: int) -> Column:
-    h = F.conv(F.substring(F.md5(g), 1, 8), 16, 10).cast("long")
-    return F.pmod(h, F.lit(n_buckets))
 
 
 def lr_features(docs: DataFrame, n_buckets: int = 256,
@@ -58,7 +54,8 @@ def lr_features(docs: DataFrame, n_buckets: int = 256,
         F.col(id_col),
         F.explode(F.split(normalize_text(F.col(text_col)), " "))
         .alias("tok")))
-    bk = toks.select(id_col, _bucket(F.col("tok"), n_buckets).alias("b"))
+    bk = toks.select(id_col,
+                     dsir._bucket(F.col("tok"), n_buckets).alias("b"))
     feats = bk.distinct().select(id_col, "b", F.lit(1.0).alias("x"))
     bias = docs.select(F.col(id_col), F.lit(_BIAS).cast("long").alias("b"),
                        F.lit(1.0).alias("x"))
@@ -68,7 +65,7 @@ def lr_features(docs: DataFrame, n_buckets: int = 256,
 def _features_sql(table: str, n_buckets: int, text_col: str,
                   id_col: str) -> str:
     norm = SQL.NORMALIZE.format(c=text_col)
-    b = f"((('0x' || substr(md5(tok), 1, 8))::bigint) % {n_buckets})"
+    b = dsir._bucket_sql("tok", n_buckets)
     return f"""
 ftoks as (
   select {id_col}, unnest(regexp_split_to_array({norm}, ' ')) as tok

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from lexor_spark.textfns import SQL, fingerprint, normalize_text
+from lexor_spark.textfns import SQL, fingerprint, md5_u32, normalize_text
 
 __all__ = [
     "shingles", "exact_dedup", "minhash_signature", "lsh_pairs",
@@ -781,14 +781,13 @@ _SIMHASH_BITS = 32
 def simhash_df(docs: DataFrame, text_col: str = "text",
                id_col: str = "doc_id") -> DataFrame:
     """32-bit simhash per document via explode + one groupBy (map-side
-    combinable).  Token hash = first 8 md5 hex digits as int — identical
-    in DuckDB, which is why this variant gets a full value oracle."""
+    combinable).  Token hash = ``md5_u32(tok)`` — identical in DuckDB,
+    which is why this variant gets a full value oracle."""
     docs = _spread(docs)
     toks = docs.select(
         F.col(id_col),
         F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("tok"))
-    h = F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long")
-    toks = toks.select(id_col, h.alias("h"))
+    toks = toks.select(id_col, md5_u32(F.col("tok")).alias("h"))
     bit_sums = [
         F.sum(F.when((F.floor(F.col("h") / F.lit(float(1 << b))) % 2) == 1,
                      1).otherwise(-1)).alias(f"s{b}")
@@ -817,7 +816,7 @@ with toks as (
   select {id_col}, unnest(regexp_split_to_array({norm}, ' ')) as tok
   from {table}
 ),
-h as (select {id_col}, ('0x' || substr(md5(tok), 1, 8))::bigint as h from toks),
+h as (select {id_col}, {SQL.md5_u32("tok")} as h from toks),
 agg as (select {id_col}, {sums} from h group by {id_col})
 select {id_col}, ({combine})::bigint as simhash from agg
 """
@@ -1055,8 +1054,8 @@ def winnow_fingerprints(docs: DataFrame, k: int = SHINGLE_N, w: int = 4,
     stage computes once per row); the explode emits one row per window
     but the distinct aggregation collapses the heavy repetition (each
     fingerprint is typically picked by ~w consecutive windows)
-    map-side before anything shuffles.  Hash = first 8 md5 hex digits
-    as int — bit-identical in DuckDB (the ``simhash_df`` recipe).
+    map-side before anything shuffles.  Hash = ``md5_u32(gram)`` —
+    bit-identical in DuckDB (the ``simhash_df`` recipe).
     Docs shorter than k+w-1 tokens emit nothing (no gram run fills one
     window), exactly like the serial algorithm."""
     from lexor_spark.textfns import _let
@@ -1068,9 +1067,7 @@ def winnow_fingerprints(docs: DataFrame, k: int = SHINGLE_N, w: int = 4,
             F.sequence(F.lit(1), F.size("_toks") - (k - 1)),
             lambda i: F.concat_ws(" ", F.slice(F.col("_toks"), i, k)))
     ).otherwise(F.array().cast("array<string>"))
-    hashes = _let(grams, lambda g: F.transform(
-        g, lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10)
-        .cast("long")))
+    hashes = _let(grams, lambda g: F.transform(g, lambda s: md5_u32(s)))
 
     def _windows(h: Column) -> Column:
         # guard: Spark's sequence(1, 0) REVERSES instead of emptying
@@ -1110,8 +1107,7 @@ g as (
 ),
 h as (
   select {id_col},
-         list_transform(grams,
-           s -> cast(('0x' || substr(md5(s), 1, 8)) as bigint)) as hs
+         list_transform(grams, s -> {SQL.md5_u32("s")}) as hs
   from g
 ),
 sel as (

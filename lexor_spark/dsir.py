@@ -11,7 +11,7 @@ proportionally to the (unnormalized) importance weights.
 
 Everything is exactly reproducible so the DuckDB oracle can verify
 values: the bucket hash is the first 32 bits of ``md5(gram)`` (the
-same engine-portable trick as `lexor_spark/sampling.py`), both
+package's engine-portable ``textfns.md5_u32``), both
 distributions use add-one smoothing, and the Gumbel noise is derived
 from a salted md5 of the doc id — ``g = -ln(-ln(u))`` with
 ``u = (h + 0.5) / 2^32`` — instead of an engine RNG.
@@ -33,7 +33,7 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from lexor_spark.textfns import SQL, _let, normalize_text
+from lexor_spark.textfns import SQL, _let, md5_u32, normalize_text
 
 __all__ = ["dsir_weights", "dsir_weights_sql", "dsir_sample",
            "dsir_sample_sql"]
@@ -68,12 +68,11 @@ def _grams_sql(c: str) -> str:
 def _bucket(g: Column, n_buckets: int) -> Column:
     """First 32 md5 bits of the gram, mod ``n_buckets`` — bit-identical
     in Spark and DuckDB."""
-    h = F.conv(F.substring(F.md5(g), 1, 8), 16, 10).cast("long")
-    return F.pmod(h, F.lit(n_buckets))
+    return F.pmod(md5_u32(g), F.lit(n_buckets))
 
 
 def _bucket_sql(g: str, n_buckets: int) -> str:
-    return f"((('0x' || substr(md5({g}), 1, 8))::bigint) % {n_buckets})"
+    return f"({SQL.md5_u32(g)} % {n_buckets})"
 
 
 def dsir_weights(docs: DataFrame, target: Optional[DataFrame] = None,
@@ -145,16 +144,13 @@ def _gumbel(id_col: Column) -> Column:
     """Deterministic standard Gumbel draw from a salted md5 of the doc
     id: ``-ln(-ln(u))``, ``u = (h + 0.5) / 2^32`` (offset keeps u in
     (0, 1) so both logs are finite)."""
-    h = F.conv(F.substring(F.md5(F.concat(id_col.cast("string"),
-                                          F.lit(_GUMBEL_SALT))), 1, 8),
-               16, 10).cast("long")
+    h = md5_u32(F.concat(id_col.cast("string"), F.lit(_GUMBEL_SALT)))
     u = (h + F.lit(0.5)) / F.lit(_SCALE)
     return -F.log(-F.log(u))
 
 
 def _gumbel_sql(id_expr: str) -> str:
-    h = (f"(('0x' || substr(md5({id_expr}::varchar || '{_GUMBEL_SALT}'), "
-         f"1, 8))::bigint)")
+    h = SQL.md5_u32(f"{id_expr}::varchar || '{_GUMBEL_SALT}'")
     return f"(-ln(-ln(({h} + 0.5) / {_SCALE})))"
 
 

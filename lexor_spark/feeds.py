@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["feed_entries", "feed_entries_sql"]
+__all__ = ["feed_entries"]
 
 _RSS_ITEM = r"<item[\s>][\s\S]*?</item>"
 _ATOM_ENTRY = r"<entry[\s>][\s\S]*?</entry>"
@@ -68,37 +68,3 @@ def feed_entries(feeds: DataFrame, url_col: str = "url",
                      link.alias("link"), title.alias("title"))
             .orderBy("url", "entry_idx"))
 
-
-def feed_entries_sql(feeds_sql: str, url_col: str = "url",
-                     body_col: str = "body") -> str:
-    """DuckDB mirror of :func:`feed_entries` over a SELECT producing
-    (url, body) — same regexes (RE2 and Java agree on this subset),
-    lockstep ``unnest(blocks), unnest(range(len(blocks)))`` standing in
-    for posexplode."""
-    return f"""
-with feedsrc as ({feeds_sql}),
-k as (select {url_col} as url,
-             case when contains({body_col}, '<rss') then 'rss'
-                  when contains({body_col}, '<feed') then 'atom'
-             end as kind,
-             {body_col} as body
-      from feedsrc),
-b as (select url, kind,
-             case when kind = 'rss'
-                  then regexp_extract_all(body, '{_RSS_ITEM}')
-                  else regexp_extract_all(body, '{_ATOM_ENTRY}')
-             end as blocks
-      from k where kind is not null),
-e as (select url, kind, unnest(blocks) as block,
-             unnest(range(len(blocks))) as entry_idx
-      from b)
-select url, kind, entry_idx,
-       case when kind = 'rss'
-            then regexp_extract(block,
-                 '<link>\\s*([^<\\s][^<]*?)\\s*</link>', 1)
-            else regexp_extract(block,
-                 '<link[^>]*?href="([^"]*)"', 1) end as link,
-       regexp_extract(block, '<title[^>]*>\\s*([\\s\\S]*?)\\s*</title>', 1)
-         as title
-from e order by url, entry_idx
-"""

@@ -8,7 +8,7 @@ DISPATCH SCHEDULE that preserves politeness under arbitrary cluster
 parallelism:
 
 * every URL of a host goes to the SAME worker — ``worker =
-  md5(host) % n_workers`` — so per-host serialization needs no
+  md5_u32(host) % n_workers`` — so per-host serialization needs no
   cross-executor coordination at all (the only global agreement is the
   hash function);
 * within a host, URLs are ordered deterministically (by urlkey) and the
@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from lexor_spark.textfns import SQL, md5_u32
 
 __all__ = ["fetch_schedule", "fetch_schedule_sql",
            "crawl_budget", "crawl_budget_sql",
@@ -56,9 +58,7 @@ def fetch_schedule(fetch: DataFrame, delays: DataFrame,
     w = Window.partitionBy("host").orderBy("urlkey")
     slot = F.row_number().over(w) - 1
     delay = F.coalesce(F.col("delay_s"), F.lit(float(default_delay)))
-    worker = F.pmod(
-        F.conv(F.substring(F.md5(F.col("host")), 1, 8), 16, 10)
-        .cast("long"), F.lit(n_workers)).cast("int")
+    worker = F.pmod(md5_u32(F.col("host")), F.lit(n_workers)).cast("int")
     return j.select(
         "host", "urlkey", "url",
         worker.alias("worker"),
@@ -84,8 +84,7 @@ j as (
 ),
 s as (
   select host, urlkey, url,
-         (('0x' || substr(md5(host), 1, 8))::bigint % {n_workers})::int
-           as worker,
+         ({SQL.md5_u32("host")} % {n_workers})::int as worker,
          (row_number() over (partition by host order by urlkey) - 1)
            ::bigint as slot,
          coalesce(delay_s, {float(default_delay)}) as delay

@@ -36,7 +36,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from lexor_spark.job import _on_dom, _page_udf, _salted_pages
-from lexor_spark.sketches import _HLL_ALPHA, _hll_pos, _hll_rho
+from lexor_spark.sketches import (_HLL_ALPHA, _hll_pos, _hll_pos_sql,
+                                  _hll_rho, _hll_rho_sql)
 
 __all__ = ["extract_links", "extract_directives", "pagerank",
            "pagerank_sql", "pagerank_links", "hits", "hits_sql",
@@ -945,13 +946,8 @@ def hyperball_sql(edges_sql: str, iters: int = HB_ITERS,
     parts = [
         f"e as ({edges_sql})",
         "nodes as (select src as v from e union select dst from e)",
-        f"c0 as (select v,\n"
-        f"  ('0x' || substr(md5(v::varchar), 1, 8))::bigint % {m} as pos,\n"
-        f"  case when ('0x' || substr(md5(v::varchar), 9, 8))::bigint = 0\n"
-        f"       then 33 else 33 - length(bin(\n"
-        f"         ('0x' || substr(md5(v::varchar), 9, 8))::bigint))\n"
-        f"       end as val\n"
-        f"  from nodes)",
+        f"c0 as (select v, {_hll_pos_sql('v', m)} as pos,\n"
+        f"  {_hll_rho_sql('v')} as val from nodes)",
         est(0),
     ]
     for t in range(1, iters + 1):

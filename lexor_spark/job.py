@@ -188,7 +188,7 @@ def _extract_batches_wrapped(width: Optional[int], indent: str,
 
 # the default-mode batch function; ``_extract_batches_inner`` is the
 # name perfbench's stage tracer times
-_extract_batches = _extract_batches_inner = _extract_batches_wrapped(None, "")
+_extract_batches_inner = _extract_batches_wrapped(None, "")
 
 
 def extract_pages(pages: DataFrame, partitions: Optional[int] = None,

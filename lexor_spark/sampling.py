@@ -9,7 +9,8 @@ the engine's RNG, so a resume or an engine change reshuffles the split.
 These operators instead derive the draw from a salted md5 of the row id
 — the same bytes land in the same split on any engine, any partitioning,
 any retry (md5 is bit-identical across Spark and DuckDB, which is also
-what makes the value oracle possible; cf. `lexor_spark/textfns.py`).
+what makes the value oracle possible; the integer draw is
+``textfns.md5_u32``, the package's one engine-portable hash).
 
 Scale notes (100 TB): both operators are pure per-row Catalyst
 expressions — NO shuffle, NO window, nothing per-group beyond a
@@ -27,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lexor_spark.textfns import SQL, md5_u32
+
 __all__ = ["mixture_plan", "mixture_plan_sql",
            "hash_fraction", "hash_split", "sample_by",
            "temperature_sample",
@@ -43,14 +46,13 @@ def hash_fraction(id_col: Column, salt: str) -> Column:
     ``md5(id || salt)`` as a fraction.  Distinct salts give independent
     draws, so a split and a downsample of the same table don't
     correlate."""
-    h = F.conv(F.substring(F.md5(F.concat(id_col.cast("string"),
-                                          F.lit(salt))), 1, 8), 16, 10)
-    return h.cast("long") / F.lit(_SCALE)
+    h = md5_u32(F.concat(id_col.cast("string"), F.lit(salt)))
+    return h / F.lit(_SCALE)
 
 
 def _hash_fraction_sql(id_expr: str, salt: str) -> str:
-    return (f"(('0x' || substr(md5({id_expr}::varchar || '{salt}'), 1, 8))"
-            f"::bigint / {_SCALE})")
+    h = SQL.md5_u32(f"{id_expr}::varchar || '{salt}'")
+    return f"({h} / {_SCALE})"
 
 
 _SPLIT_SALT = "#split"
@@ -376,10 +378,9 @@ def epoch_shuffle(docs: DataFrame, n_shards: int, epoch: int = 0,
     orderBy is gate presentation only — the production writer replaces
     it with partitionBy(shard)/sortWithinPartitions(pos), which the
     per-shard exchange already satisfies.)"""
-    h = F.md5(F.concat(F.col(id_col).cast("string"),
-                       F.lit(f"#shuffle{epoch}")))
-    shard = F.pmod(F.conv(F.substring(h, 1, 8), 16, 10).cast("long"),
-                   F.lit(n_shards)).cast("int")
+    key = F.concat(F.col(id_col).cast("string"), F.lit(f"#shuffle{epoch}"))
+    h = F.md5(key)
+    shard = F.pmod(md5_u32(key), F.lit(n_shards)).cast("int")
     from pyspark.sql import Window
     w = Window.partitionBy("shard").orderBy("h", id_col)
     return (docs.select(F.col(id_col), shard.alias("shard"), h.alias("h"))
@@ -392,11 +393,12 @@ def epoch_shuffle_sql(table: str, n_shards: int, epoch: int = 0,
                       id_col: str = "doc_id") -> str:
     """DuckDB mirror of :func:`epoch_shuffle` — identical salted md5,
     identical shard/rank derivation."""
-    h = f"md5({id_col}::varchar || '#shuffle{epoch}')"
+    key = f"{id_col}::varchar || '#shuffle{epoch}'"
+    h = f"md5({key})"
     return f"""
 with s as (
   select {id_col},
-         ((('0x' || substr({h}, 1, 8))::bigint % {n_shards})
+         (({SQL.md5_u32(key)} % {n_shards})
           + {n_shards}) % {n_shards} as shard,
          {h} as h
   from {table}

@@ -15,10 +15,9 @@ estimates are needed.
 Determinism: counters are plain integer sums of md5-derived bucket
 hits — order-independent, engine-independent — so the whole sketch
 AND every estimate derived from it value-oracle exactly (no float
-tolerance anywhere).  The same md5-prefix hashing trick the sampling
-and minhash families use (`lexor_spark/sampling.py`,
-`lexor_spark/dedup.py`) makes Spark and DuckDB compute bit-identical
-bucket ids.
+tolerance anywhere).  The package's one engine-portable integer hash
+(``textfns.md5_u32``, which the sampling and dedup families also read)
+makes Spark and DuckDB compute bit-identical bucket ids.
 
 No reference counterpart (the reference is a single-document
 converter); the method is the published CM sketch.
@@ -29,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from lexor_spark.textfns import SQL, normalize_text
+from lexor_spark.textfns import SQL, md5_u32, normalize_text
 
 __all__ = ["CM_DEPTH", "CM_WIDTH", "cm_build", "cm_topk", "cm_topk_sql",
            "HLL_M", "hll_distinct", "hll_distinct_sql"]
@@ -44,15 +43,13 @@ def _bucket(term: Column, row: int, width: int) -> Column:
     """Row-``row`` bucket id of a term: first 32 bits of
     md5(term || '#cm<row>') mod width.  Bit-identical in DuckDB (see
     :func:`_bucket_sql`)."""
-    h = F.conv(F.substring(F.md5(F.concat(term, F.lit(f"#cm{row}"))),
-                           1, 8), 16, 10).cast("long")
+    h = md5_u32(F.concat(term, F.lit(f"#cm{row}")))
     return (h % width).cast("int")
 
 
 def _bucket_sql(term: str, row: int, width: int) -> str:
-    return (f"((('0x' || substr(md5({term} || '#cm{row}'), 1, 8))::bigint)"
-            f" % {width})::int"
-            )
+    h = SQL.md5_u32(f"{term} || '#cm{row}'")
+    return f"({h} % {width})::int"
 
 
 def _terms(docs: DataFrame, text_col: str) -> DataFrame:
@@ -181,18 +178,26 @@ _HLL_ALPHA = 0.673
 
 def _hll_pos(item: Column, m: int) -> Column:
     """Register index: first 32 md5 bits of the item, mod m."""
-    h = F.conv(F.substring(F.md5(item.cast("string")), 1, 8), 16, 10)
-    return (h.cast("long") % m).cast("int")
+    return (md5_u32(item.cast("string")) % m).cast("int")
+
+
+def _hll_pos_sql(item: str, m: int) -> str:
+    h = SQL.md5_u32(f"{item}::varchar")
+    return f"({h} % {m})::int"
 
 
 def _hll_rho(item: Column) -> Column:
     """rho(w): leading zeros of the next 32 md5 bits plus one, counted
     via length(bin(w)) so both engines count bits exactly (no float
     log2 at power-of-two boundaries)."""
-    w = (F.conv(F.substring(F.md5(item.cast("string")), 9, 8), 16, 10)
-         .cast("long"))
+    w = md5_u32(item.cast("string"), at=9)
     return (F.when(w == 0, F.lit(33))
             .otherwise(F.lit(33) - F.length(F.bin(w))).cast("int"))
+
+
+def _hll_rho_sql(item: str) -> str:
+    w = SQL.md5_u32(f"{item}::varchar", at=9)
+    return f"(case when {w} = 0 then 33 else 33 - length(bin({w})) end)::int"
 
 
 def hll_distinct(df: DataFrame, group_col: str = "host",
@@ -250,14 +255,8 @@ def hll_distinct_sql(src_sql: str, group_col: str = "host",
 with base as (select {group_col} as grp, {item_col} as item
               from ({src_sql})),
 regs as (
-  select grp,
-         (('0x' || substr(md5(item::varchar), 1, 8))::bigint % {m})::int
-           as pos,
-         max(case when ('0x' || substr(md5(item::varchar), 9, 8))::bigint
-                       = 0 then 33
-                  else 33 - length(bin(
-                       ('0x' || substr(md5(item::varchar), 9, 8))::bigint))
-                  end)::int as val
+  select grp, {_hll_pos_sql("item", m)} as pos,
+         max({_hll_rho_sql("item")}) as val
   from base group by 1, 2
 ),
 g as (

@@ -10,6 +10,12 @@ Operators: token counting (whitespace + word-regex), language ID
 (stop-word marker heuristic), quality scoring (length/alpha/stopword
 features à la C4/Gopher filters), document fingerprinting (normalized
 md5 — md5 is bit-identical across engines, unlike xxhash64).
+
+``md5_u32`` is the package's one integer hash: every bucket, draw,
+position and register an operator derives from md5 (sampling splits,
+Bloom bits, sketch rows, DSIR buckets, simhash and winnow grams, fetch
+workers, HLL registers) reads it, and ``SQL.md5_u32`` is its DuckDB
+mirror, so the two engines agree bit for bit.
 """
 
 from __future__ import annotations
@@ -24,7 +30,7 @@ __all__ = [
     "gopher_signals", "GOPHER_KEEP_RULE", "c4_signals",
     "mojibake_count", "mojibake_flag", "code_signals", "readability",
     "script_profile", "SCRIPT_RANGES",
-    "redact_pii", "pii_count",
+    "redact_pii", "pii_count", "md5_u32",
     "SQL",
 ]
 
@@ -81,6 +87,15 @@ def bpe_token_count(col: Column) -> Column:
 def fingerprint(col: Column) -> Column:
     """Deterministic content fingerprint on the normalized text."""
     return F.md5(normalize_text(col))
+
+
+def md5_u32(col: Column, at: int = 1) -> Column:
+    """The unsigned 32-bit integer in hex digits ``at``..``at+7`` of
+    ``md5(col)``, as a long (NULL in, NULL out).  Callers keep their own
+    salts and outer arithmetic (``pmod``, ``/ 2^32``, casts).  Pass it
+    to ``F.transform`` as ``lambda s: md5_u32(s)``: given the bare
+    function, Spark passes the element index as ``at``."""
+    return F.conv(F.substring(F.md5(col), at, 8), 16, 10).cast("long")
 
 
 # Marker stop-words per language; scores are raw marker counts.  The
@@ -620,6 +635,10 @@ class SQL:
     BPE_COUNT = ("len(regexp_extract_all({c}, '"
                  + _BPE_PAT.replace("'", "''") + "'))")
     FINGERPRINT = "md5(" + NORMALIZE + ")"
+
+    @staticmethod
+    def md5_u32(expr: str, at: int = 1) -> str:
+        return f"(('0x' || substr(md5({expr}), {at}, 8))::bigint)"
 
     @staticmethod
     def redact_pii(c: str) -> str:

@@ -1,6 +1,7 @@
 """Mimic the driver's correctness gate: run every queries() entry at
 sf0.01 and compare against oracle_sql() in DuckDB (row count, schema
-names, order-insensitive value comparison).
+names, order-insensitive value comparison).  The last line is the
+tally: ``OK n / rows-only n (empty k) / FAIL n``.
 
 Usage: PYTHONPATH=/root/repo python scripts/check_oracles.py [name ...]
 """
@@ -87,6 +88,7 @@ def main() -> int:
     spark = (SparkSession.builder.master("local[8]")
              .config("spark.sql.shuffle.partitions", "16")
              .config("spark.ui.enabled", "false")
+             .config("spark.ui.showConsoleProgress", "false")
              .appName("oracle-check").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -97,7 +99,7 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     only = set(sys.argv[1:])
-    failures = 0
+    failures = ok = rows_only = rows_empty = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -111,6 +113,8 @@ def main() -> int:
             continue
         if name not in oracles:
             print(f"rows  {name}: {len(srows)} rows (no oracle — rows-only)")
+            rows_only += 1
+            rows_empty += not srows
             continue
         try:
             res = con.execute(oracles[name])
@@ -142,7 +146,10 @@ def main() -> int:
             failures += 1
             continue
         print(f"OK    {name}: {len(srows)} rows match")
+        ok += 1
     spark.stop()
+    print(f"OK {ok} / rows-only {rows_only} (empty {rows_empty}) "
+          f"/ FAIL {failures}")
     return 1 if failures else 0
 
 

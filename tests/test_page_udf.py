@@ -48,7 +48,7 @@ REMOVE = ["nav", "footer"]
 # name -> (batch function, output schema, rows of the failed page)
 # ``None`` rows: the operator's own error row is checked below.
 OPERATORS = {
-    "extract": (job._extract_batches, job._ARROW_SCHEMA, None),
+    "extract": (job._extract_batches_inner, job._ARROW_SCHEMA, None),
     "export_nodes": (job._flatten_batches, job._NODES_ARROW, []),
     "normalize": (job._normalize_batches, job._NORM_ARROW,
                   [("boom", "", 4, 0)]),

@@ -119,3 +119,19 @@ def test_batch_loops_live_in_the_runner():
     appear in the package only inside the runner."""
     calls = list(_runner_only_calls())
     assert {(f, d) for f, d, _ in calls} == RUNNER_HOMES, calls
+
+
+# The md5-prefix integer hash is spelled once, in `textfns.md5_u32` and
+# its DuckDB mirror `textfns.SQL.md5_u32`; every other module calls them.
+MD5_PREFIX = ("F.substring(F.md5(", "substr(md5(")
+
+
+def test_md5_prefix_lives_in_textfns():
+    """No module but textfns spells the md5-prefix hash, docstrings
+    included."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "lexor_spark"
+    homes = {path.name for path in pkg.rglob("*.py")
+             for spelling in MD5_PREFIX if spelling in path.read_text()}
+    assert homes == {"textfns.py"}, sorted(homes)

@@ -98,3 +98,44 @@ def test_code_signals_branches(spark):
     assert not got[4].is_code and got[4].kw_hits >= 3
     # empty text: zero everything, not code
     assert not got[5].is_code and got[5].n_lines == 0
+
+
+def test_md5_u32_matches_duckdb(spark):
+    """The package's one integer hash agrees across engines and with
+    hashlib: empty, ASCII, multi-byte UTF-8, a salted key, a high-bit
+    value (first hex digit >= 8, which a signed 32-bit read would turn
+    negative), the second word (``at=9``), and NULL -> NULL."""
+    import hashlib
+
+    import duckdb
+
+    from lexor_spark.textfns import SQL, md5_u32
+
+    vals = ["", "a", "é漢", "17", "b", None]
+    salt = "#split"
+
+    def ref(s, at):
+        if s is None:
+            return None
+        return int(hashlib.md5(s.encode()).hexdigest()[at - 1:at + 7], 16)
+
+    want = [(i, ref(s, 1), ref(s, 9),
+             None if s is None else ref(s + salt, 1))
+            for i, s in enumerate(vals)]
+    assert want[4][1] >= 1 << 31                    # 'b': high bit set
+
+    df = spark.createDataFrame(list(enumerate(vals)), "i int, s string")
+    got_spark = sorted(tuple(r) for r in df.select(
+        "i", md5_u32(F.col("s")), md5_u32(F.col("s"), at=9),
+        md5_u32(F.concat(F.col("s"), F.lit(salt)))).collect())
+
+    con = duckdb.connect()
+    rows = ", ".join(f"({i}, {'NULL' if s is None else repr(s)})"
+                     for i, s in enumerate(vals))
+    got_duck = sorted(con.execute(
+        f"select i, {SQL.md5_u32('s')}, {SQL.md5_u32('s', at=9)}, "
+        f"{SQL.md5_u32(f's || {salt!r}')} "
+        f"from (values {rows}) t(i, s)").fetchall())
+
+    assert got_spark == want
+    assert got_duck == want
