@@ -386,7 +386,6 @@ def _q_lang_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     primary subtag disagrees."""
     dirs = _q_page_directives(spark, sf_dir).select("url", "html_lang")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
     det = docs.select(_corpus_url().alias("url"),
                       textfns.lang_id(F.col("text")).alias("detected"))
     j = dirs.join(det, "url")
@@ -2211,11 +2210,12 @@ def _docs_urls_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents + the deterministic url column — the host-level
     curation input shape (url, lang, n_chars)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return docs.select("doc_id", _corpus_url().alias("url"), "lang", "n_chars")
+    return docs.select("doc_id", _corpus_url().alias("url"), "lang",
+                       "n_chars")
 
 
-_DOCS_URLS_TABLE = (f"(select doc_id, {_CORPUS_URL_SQL} as url, lang, n_chars "
-                    f"from documents)")
+_DOCS_URLS_TABLE = (f"(select doc_id, {_CORPUS_URL_SQL} as url, lang, "
+                    f"n_chars from documents)")
 
 
 def _q_host_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2281,8 +2281,8 @@ _HOSTBP_ML = (
 
 
 def _host_boilerplate_sql() -> str:
-    inner = (f"(select doc_id, {_CORPUS_URL_SQL} as url, {_HOSTBP_ML} as text "
-             f"from documents)")
+    inner = (f"(select doc_id, {_CORPUS_URL_SQL} as url, "
+             f"{_HOSTBP_ML} as text from documents)")
     return (dedup.host_boilerplate_sql(inner, "url")
             + " order by doc_id")
 
@@ -4147,7 +4147,8 @@ def oracle_sql() -> dict[str, str]:
         "url_stats": SQL_URL_STATS,
         "url_filter": ("select * from ("
                        + urlfns.url_filter_sql(
-                           f"(select {_CORPUS_URL_SQL} as url from documents)",
+                           f"(select {_CORPUS_URL_SQL} as url "
+                           f"from documents)",
                            blocked_domains=_URL_BLOCK,
                            keyword_weights=_URL_KW, threshold=1.1)
                        + ") order by url"),
