@@ -1,56 +1,51 @@
-"""Array-backed fused extraction kernel (the SURVEY §7 'kernel step 3').
+"""One-pass extraction kernel: parse, select and write in one scan.
 
-The object pipeline (`pipeline.extract_document`) builds a Node tree,
-rewrites it into a second converted tree, selects main content, writes
-text, and then disposes both trees.  This module produces THE SAME BYTES
-from one pass over flat parallel node records:
+The object pipeline (`pipeline._object_extract`) builds a Node tree,
+rewrites it into a converted tree, selects the main element and writes
+its text.  This module produces THE SAME BYTES from one streaming pass
+over the decoded page.  The pass is the object parser's master-regex
+loop (same stack discipline, recovery and diagnostics), and at each
+token it applies the converter's decisions, so no node record is built:
 
-* the parser appends ``[kind, name, attrs, data, a, b, subend]`` slots
-  to ONE preorder list — no per-node objects, no children lists, no
-  parent back-refs (nothing to dispose: no reference cycles exist);
-* ``subend`` (index just past a node's subtree) makes every later stage
-  a linear index walk with O(1) subtree skips, so the CONVERT stage
-  disappears: DROP is an index jump, UNWRAP is a no-op marker, and the
-  writer applies the decisions inline — the converted tree is never
-  materialized;
-* select_main's cascade and text-mass fallback run over the same array
-  (masses via an accumulator stack over surviving text leaves — the
-  same associative (total, lead, trail) fold `extractor._stripped_masses`
-  uses, provably equal on any split of the text).
+* drop decisions (DROP_TAGS, boilerplate class/id) are made at the
+  start tag; inside a dropped subtree only structure, diagnostics, the
+  node count and the metadata constructs (<title>, <meta>, <html lang>)
+  are tracked, and rawtext bodies other than <title> are never sliced;
+* the whole document is written while it is parsed: adjacent surviving
+  text merges into runs (across UNWRAP tags, dropped subtrees, comments,
+  rawtext and voids other than br/hr/img, as the converted tree's
+  normalize merges it), each run goes straight into a `_TextBuilder`,
+  spans are emitted as ``(start, end, path)`` tuples, and each surviving
+  non-UNWRAP element applies its break, cell and path/<pre> scope
+  effects at its open and close;
+* the `extractor.select_main` cascade is decided on the way: the first
+  <main>/[role=main], <article> and content-token element are noted at
+  their start tags, and the text mass of every open div/section/td/
+  blockquote is folded in O(1) per text from two counters (surviving
+  text characters so far, end of the last non-whitespace character) and
+  the candidate's first non-whitespace position — the quantity
+  `extractor._stripped_masses` computes, entities counted as raw source.
+
+Every root candidate records where its content starts and ends in the
+pass's output.  The picked root's text is that slice, cut to what a
+writer started at the root produces: the break and space parts before
+its first content are dropped, the one-space lead prefix of that first
+part is stripped (unless it is a <pre> part), the builder state is the
+pass's state at the root's close, and the W5 marks are re-indexed; the
+unchanged `_TextBuilder.finish` then lays it out in every writer mode.
+Span paths lose the root's parent path.  The pass writes a root that
+sits under a <pre> ancestor verbatim, a root writer writes it inline,
+so for such a root the pass reruns with the <pre> state reset there.
 
 Byte-identity with the object path — text, spans, title, description,
 lang_attr, codes, n_nodes, truncated, ok, err — is pinned by
 ``tests/test_fastpath.py`` (full sf0.001 corpus differential + hostile
-inputs + hypothesis random HTML, each in four writer modes).  Grammar tables, regexes, and the
-tag/attr caches are IMPORTED from `htmlparser`/`extractor` so the two
-paths cannot drift silently; semantics citations live there.
-
-The object path remains the general API (mutation, selectors, custom
-rules/hooks) and runs the W2 styles; this path serves every unstyled
-extraction, the W5 width/indent writer modes included — the
-per-document kernel of the 10^12-row job, where it is ~1.5× the object
-path serially (interleaved A/B in BENCH/BASELINE.md).
-
-Round-3 refinement — parse-time drop-region skipping: records inside a
-CONVERT-dropped element's subtree are counted, not built (structure,
-diagnostics, and the few meta-feeding records excepted), non-title
-rawtext bodies (script/style payloads) are never sliced, and the drop
-decision is computed once at parse (slot 8) instead of once per walk.
-On the synthetic corpus this is performance-NEUTRAL (order-balanced
-pinned A/B median 1.03, range 0.89-1.17 on a noisy shared host) — its
-value is allocation shape at scale: record count and string slicing no
-longer grow with boilerplate mass, which on real crawl pages (script/
-style routinely 50-80% of bytes, navigation DOM in the hundreds of
-elements) is most of the document.  Byte-identity is pinned by the
-same differential suite either way.
-
-Round-4 refinement (kernel step 4) — fused start-tag cache + guarded
-writer flushes: every start tag resolves (attrs, attr-drop verdict,
-self-close) with ONE dict hit on the raw attr string, attrs dicts are
-shared across records instead of copied per element, and the writer's
-merge-boundary flushes skip the call when no text is pending.
-Order-balanced core-pinned A/B vs the round-3 kernel: median 1.046
-(16 pairs, range 0.93-1.19); byte-identity differential green.
+inputs + hypothesis random HTML, each in four writer modes).  Grammar
+tables, regexes and the tag/attr caches are IMPORTED from `htmlparser`/
+`extractor` so the two paths cannot drift silently; semantics citations
+live there.  The object path remains the general API (mutation,
+selectors, custom rules/hooks) and runs the W2 styles; this pass serves
+every unstyled extraction, the W5 width/indent modes included.
 """
 
 from __future__ import annotations
@@ -70,58 +65,59 @@ from lexor_spark.kernel.htmlparser import (_ATTR, _ATTRS_CACHE,
                                            _RAWTEXT_CLOSE, _TAG_NAME,
                                            _WS_GT, SILENT_CONTAINER,
                                            LogEntry)
-from lexor_spark.kernel.textwriter import _BLOCK_LEVEL, _CELL_TAGS
+from lexor_spark.kernel.textwriter import (_BLOCK_LEVEL, _CELL_TAGS, Span,
+                                           _TextBuilder)
 
 __all__ = ["fast_extract"]
 
-# kernel step 4 — fused start-tag cache: raw attr string -> (attrs,
-# attr_drop, self_close).  One dict hit replaces the old per-start-tag
-# sequence (self-close strip, _ATTRS_CACHE get, dict(cached) COPY,
-# separate attr-drop cache get); the _attr_drop regex — the costliest
-# per-element check — now runs once per distinct raw string ever.
-# The attrs dict is SHARED across records — safe because the array
-# kernel only reads attrs (`.get`), never mutates them (the object path
-# keeps its per-Element copies; its `_ATTRS_CACHE` entries are never
-# mutated by either path).  The attr-drop half is attrs-only
-# (`extractor._attr_drop`); the name-based DROP_TAGS check stays
-# outside the cache.
+# Fused start-tag cache: raw attr string -> (attr_drop, self_close,
+# pick).  One dict hit per start tag; the attr parse, the _attr_drop
+# regex and the cascade's attribute tests run once per distinct raw
+# string ever.  ``pick`` bit 1: role="main"; bit 2: a content token in
+# class/id.  The name-based DROP_TAGS check stays outside the cache.
 _START_CACHE: dict = {}
+_EMPTY_START = (0, False, 0)
 
 
 def _start_tag(raw: str) -> tuple:
-    """(attrs, attr_drop, self_close) for a start tag's raw attr
-    string — cache miss path (hot loop inlines the `.get`)."""
+    """(attr_drop, self_close, pick) for a start tag's raw attr string —
+    cache miss path (the hot loop inlines the `.get`)."""
     self_close = raw[-1] == "/"
-    body = raw[:-1] if self_close else raw
-    attrs: dict = {}
-    if body and not body.isspace():
-        cached = _ATTRS_CACHE.get(body)
-        if cached is not None:
-            attrs = cached                     # shared, read-only
-        else:
-            for am in _ATTR.finditer(body):
-                key = am.group(1).lower()
-                if key not in attrs:
-                    g2, g3, g4 = am.group(2, 3, 4)
-                    attrs[key] = (g2 if g2 is not None else
-                                  g3 if g3 is not None else
-                                  g4 if g4 is not None else "")
-            if len(_ATTRS_CACHE) < _ATTRS_CACHE_MAX:
-                _ATTRS_CACHE[body] = attrs     # share, don't copy
-    ent = (attrs, 1 if (attrs and _attr_drop(attrs)) else 0, self_close)
+    attrs = _parse_attrs(raw[:-1] if self_close else raw)
+    pick = 0
+    if attrs:
+        if attrs.get("role") == "main":
+            pick = 1
+        token = attrs.get("class", "")
+        idv = attrs.get("id")
+        if idv:
+            token = token + " " + idv
+        if token and _CONTENT_TOKEN.search(token.lower()):
+            pick |= 2
+    ent = (1 if (attrs and _attr_drop(attrs)) else 0, self_close, pick)
     if len(_START_CACHE) < _ATTRS_CACHE_MAX:
         _START_CACHE[raw] = ent
     return ent
 
 
-_EMPTY_START = ({}, 0, False)
-
-# node kinds
-_ELEM, _VOID, _TEXT, _ENTITY_K, _RAWTEXT, _OTHER = 0, 1, 2, 3, 4, 5
-
-# writer constants (identical tables to textwriter)
-_PARA = 2
-_LINE = 1
+def _parse_attrs(raw: str) -> dict:
+    """The object parser's attr grammar and first-occurrence rule,
+    through its shared (read-only) parsed-attr cache."""
+    attrs: dict = {}
+    if raw and not raw.isspace():
+        cached = _ATTRS_CACHE.get(raw)
+        if cached is not None:
+            return cached
+        for am in _ATTR.finditer(raw):
+            key = am.group(1).lower()
+            if key not in attrs:
+                g2, g3, g4 = am.group(2, 3, 4)
+                attrs[key] = (g2 if g2 is not None else
+                              g3 if g3 is not None else
+                              g4 if g4 is not None else "")
+        if len(_ATTRS_CACHE) < _ATTRS_CACHE_MAX:
+            _ATTRS_CACHE[raw] = attrs          # share, don't copy
+    return attrs
 
 
 class _ALog:
@@ -150,667 +146,450 @@ class _ALog:
         self.log.append(LogEntry(code, line, col, arg))
 
 
-def _parse_arrays(text: str) -> tuple[list, list[LogEntry], int]:
-    """Single-pass parse into preorder node records.
+_MASS_TAGS = frozenset(("div", "section", "td", "blockquote"))
+# Per-spelling tag cache of the pass: the `htmlparser` tag info (name,
+# kind, closers) plus the converter role (0 written, 1 UNWRAP, 2
+# DROP_TAGS, 3 <html>), the writer's break level (-1: table cell) and
+# cascade flags (1 <main>, 2 <article>, 4 mass candidate, 8 <pre>).
+_PASS_INFO: dict[str, tuple] = {}
 
-    Mirrors `_Parser.run` event for event (same master-regex scan, same
-    recovery semantics, same diagnostics); every construct the object
-    parser would create becomes one ``[kind, name, attrs, data, a, b,
-    subend, drop]`` record.  ``a``/``b`` are (start, end) for
-    Text/Entity and (pos, 0) for the rest.  ``drop`` (Elements only) is
-    the CONVERT-stage drop decision (`extraction_decide`: DROP_TAGS or
-    boilerplate class/id), computed ONCE here and read by both walks.
 
-    Inside a dropped element's subtree the structural scan continues in
-    full (stack discipline, auto-close, every W100/E100/W101/W102
-    diagnostic at the same offsets) but records are NOT materialized —
-    no text slicing, no attr parsing, no appends; the parser only
-    counts what the object parser would have built (returned as
-    ``skipped``, so n_nodes stays exact).  Exceptions that ARE
-    materialized inside dropped regions because `_collect_meta_arrays`
-    scans the whole record list: ``<title>`` RawText, ``<meta>`` voids,
-    and ``<html>`` elements.  A dropped root's ``subend`` therefore
-    lands just past those few survivors, and the walks' existing
-    subtree jump stays O(1) and byte-identical."""
+def _pass_info(raw: str) -> tuple:
+    name, kind, closers = _hp._TAG_INFO.get(raw) or _hp._tag_info(raw)
+    role = (3 if name == "html" else 2 if name in DROP_TAGS else
+            1 if name in UNWRAP_TAGS else 0)
+    level = _BLOCK_LEVEL.get(name, 0) or (-1 if name in _CELL_TAGS else 0)
+    flags = ((name == "main") | (name == "article") << 1
+             | (name in _MASS_TAGS) << 2 | (name == "pre") << 3)
+    info = (name, kind, closers, role, level, flags)
+    if len(_PASS_INFO) < _hp._TAG_INFO_MAX:
+        _PASS_INFO[raw] = info
+    return info
+
+
+# root-candidate record slots: preorder ordinal, name, then at the open
+# the output position (parts, spans), the span-path cut and whether a
+# <pre> ancestor is open, the first non-whitespace text position (-1
+# while unseen; None: not a mass candidate), and at the close the output
+# position and the builder's trailing-space and pending-break state
+_ORD, _NAME, _P0, _S0, _CUT, _PRE, _FIRST, _P1, _S1, _TRAIL, _PEND = \
+    range(11)
+
+
+class _Pass:
+    """One page after the pass: the whole-document writer state, the
+    picked root's record (None: the whole document), metadata, the
+    diagnostic log and the node count.  ``len()`` is 0: the pass builds
+    no node records."""
+
+    __slots__ = ("text", "tb", "spans", "root", "meta", "log", "n_nodes")
+
+    def __len__(self) -> int:
+        return 0
+
+
+def _pass(text: str, reset: int = 0) -> _Pass:
+    """Parse, select and write ``text`` in one scan.  ``reset`` is the
+    ordinal of a root whose subtree is written with <pre> state reset
+    (0: none)."""
     n = len(text)
-    nodes: list = []
-    append = nodes.append
     log = _ALog(text)
-    # stack of open-element RECORDS (dropped ones are never appended to
-    # `nodes` but still participate in the open/close protocol); None
-    # is the virtual root
-    stack: list = [None]
-    # index of a trailing Text record owned by the CURRENT top, or -1
-    # (the parser's merge-with-trailing-Text rule)
-    merge_idx = -1
-    # drop region state: drop_at = stack length at the dropped root
-    # (0 = not dropping); skipped = records counted but not built;
-    # drop_merge mirrors merge_idx for phantom Text merging
-    drop_at = 0
-    skipped = 0
-    drop_merge = False
+    tb = _TextBuilder()
+    parts = tb.parts
+    add_inline = tb.add_inline
+    request_break = tb.request_break
+    spans: list = []
+    span_append = spans.append
+    # open elements: (name, pos) when the element writes nothing (UNWRAP,
+    # dropped, inside a dropped subtree), else (name, pos, level, outer
+    # path, outer in_pre, root record); level -1 is a table cell
+    stack: list = [("#document", -1)]
+    pop = stack.pop
+    drop_at = 0          # stack depth of the open dropped root (0: none)
+    texting = False      # the last construct was text (parser merge)
+    count = 0            # node records the object parser would build
+    path, in_pre = "#document", False
+    run, run_s, run_e = "", 0, 0   # the merged text run being written
+    title = desc = lang = None
+    main = article = token = best = None
+    best_mass = 0
+    ordinal = 0
+    # text-mass fold (until the first cascade hit): text characters
+    # while a candidate is open, end of the last non-whitespace one, and
+    # open candidates whose first non-whitespace position is unseen
+    folding = True
+    ncand = tot = last = 0
+    unresolved: list = []
     search = _MASTER.search
     ent_match = _ENTITY.match
     tag_match = _TAG_NAME.match
-    tag_info = _hp._TAG_INFO
+    tag_info = _PASS_INFO
     start_cache = _START_CACHE
     caret = 0
-    while caret < n:
+    while True:
         m = search(text, caret)
-        if m is None:
-            if n > caret:
-                if drop_at:
-                    if not drop_merge:
-                        skipped += 1
-                        drop_merge = True
-                elif merge_idx >= 0:
-                    nd = nodes[merge_idx]
-                    nd[3] += text[caret:n]
-                    nd[5] = n
-                else:
-                    append([_TEXT, None, None, text[caret:n], caret, n,
-                            0, 0])
-            caret = n
-            break
-        i = m.start()
-        if i > caret:
-            if drop_at:
-                if not drop_merge:
-                    skipped += 1
-                    drop_merge = True
-            elif merge_idx >= 0:
-                nd = nodes[merge_idx]
-                nd[3] += text[caret:i]
-                nd[5] = i
+        # a '<' or '&' that opens nothing stays in the text
+        while m is not None and m.lastindex is None:
+            i = m.start()
+            if text[i] == "&":
+                em = ent_match(text, i)
+                if em is not None:
+                    break
             else:
-                merge_idx = len(nodes)
-                append([_TEXT, None, None, text[caret:i], caret, i, 0, 0])
-        is_close, raw_name, raw = m.group(1, 2, 3)
-        if raw_name is not None:
-            info = tag_info.get(raw_name)
-            if info is None:
-                info = _hp._tag_info(raw_name)
-            end = m.end()
-            name = info[0]
-            if is_close:  # end tag
-                top = stack[-1]
-                if top is not None and top[1] == name:
-                    top[6] = len(nodes)
-                    stack.pop()
-                    caret = end
+                nxt = text[i + 1: i + 2]
+                if nxt == "!" or nxt == "?":
+                    break
+                if tag_match(text, i) is not None:
+                    log.msg("W102", i)
+            m = search(text, i + 1)
+        i = n if m is None else m.start()
+        if i > caret:
+            if not texting:
+                count += 1
+                texting = True
+            if not drop_at:
+                d = text[caret:i]
+                if run:
+                    run += d
                 else:
-                    # unbalanced-close slow path (W100/W101/silent)
-                    depth = -1
-                    for k in range(len(stack) - 1, 0, -1):
-                        if stack[k][1] == name:
-                            depth = k
-                            break
-                    if depth == -1:
-                        # stray end tag creates no node and pops nothing:
-                        # a following text still merges with the trailing
-                        # Text (object parser parity)
-                        log.msg("W101", i, (name,))
-                        caret = end
-                        continue
-                    silent = SILENT_CONTAINER.get(name, ())
-                    here = len(nodes)
-                    for k in range(len(stack) - 1, depth, -1):
-                        forced = stack[k]
-                        if forced[1] not in silent:
-                            cl, cc = log.linecol(i)
-                            log.msg("W100", forced[4],
-                                    (forced[1], cl, cc))
-                        forced[6] = here
-                        stack.pop()
-                    stack[-1][6] = here
-                    stack.pop()
-                    caret = end
-                if drop_at and len(stack) < drop_at:
-                    drop_at = 0
-                merge_idx = -1
-                drop_merge = False
+                    run, run_s = d, caret
+                run_e = i
+                if ncand:
+                    r = len(d.rstrip())
+                    if r:
+                        if unresolved:
+                            f = tot + len(d) - len(d.lstrip())
+                            for c in unresolved:
+                                c[_FIRST] = f
+                            unresolved.clear()
+                        last = tot + r
+                    tot += len(d)
+        if m is None or m.lastindex:
+            # a tag or the end of input: close elements first
+            if m is None:
+                for e in stack[1:]:
+                    log.msg("E100", e[1], (e[0],))
+                keep = 1
+            else:
+                is_close, raw_name, raw = m.group(1, 2, 3)
+                info = tag_info.get(raw_name)
+                if info is None:
+                    info = _pass_info(raw_name)
+                name = info[0]
+                caret = m.end()
+                keep = len(stack)
+                if is_close:
+                    if stack[-1][0] == name:
+                        keep -= 1
+                    else:
+                        # unbalanced-close slow path (W100/W101/silent)
+                        keep = -1
+                        for k in range(len(stack) - 1, 0, -1):
+                            if stack[k][0] == name:
+                                keep = k
+                                break
+                        if keep == -1:
+                            # stray end tag: no node, nothing popped, and
+                            # the text merge goes on (parser parity)
+                            log.msg("W101", i, (name,))
+                            continue
+                        silent = SILENT_CONTAINER.get(name, ())
+                        for k in range(len(stack) - 1, keep, -1):
+                            forced = stack[k]
+                            if forced[0] not in silent:
+                                cl, cc = log.linecol(i)
+                                log.msg("W100", forced[1],
+                                        (forced[0], cl, cc))
+                else:
+                    closers = info[2]
+                    if closers is not None:
+                        while keep > 1 and stack[keep - 1][0] in closers:
+                            keep -= 1
+            while len(stack) > keep:
+                e = pop()
+                if len(e) > 2:
+                    if run:
+                        if (tb.add_verbatim(run) if in_pre
+                                else add_inline(run)):
+                            span_append((run_s, run_e, path))
+                        run = ""
+                    level, path, in_pre, rec = e[2:]
+                    if rec is not None:
+                        rec[_P1], rec[_S1] = len(parts), len(spans)
+                        rec[_TRAIL], rec[_PEND] = \
+                            tb.trailing_space, tb.pending
+                        if folding and rec[_FIRST] is not None:
+                            ncand -= 1
+                            f = rec[_FIRST]
+                            if f < 0:
+                                unresolved.pop()
+                            else:
+                                mass = last - f
+                                if mass > best_mass or (
+                                        mass == best_mass and mass
+                                        and rec[_ORD] < best[_ORD]):
+                                    best, best_mass = rec, mass
+                    if level > 0:
+                        request_break(level)
+                    elif level:
+                        tb.add_space()
+            if drop_at and len(stack) < drop_at:
+                drop_at = 0
+            if m is None:
+                break
+            texting = False
+            if is_close:
                 continue
             # start tag
             kind = info[1]
-            closers = info[2]
-            if closers is not None:
-                here = len(nodes)
-                while len(stack) > 1 and stack[-1][1] in closers:
-                    stack[-1][6] = here
-                    stack.pop()
-                if drop_at and len(stack) < drop_at:
-                    drop_at = 0
-            if drop_at:
-                # inside a dropped subtree: structure only, no records
-                drop_merge = False
-                self_close = bool(raw) and raw[-1] == "/"
-                if kind == 0:
-                    if name == "html":
-                        attrs = _parse_attrs(raw[:-1] if self_close
-                                             else raw)
-                        idx = len(nodes)
-                        rec = [_ELEM, name, attrs, None, i, 0, 0, 0]
-                        append(rec)
-                        if not self_close:
-                            stack.append(rec)
-                        else:
-                            rec[6] = idx + 1
-                    else:
-                        skipped += 1
-                        if not self_close:
-                            stack.append([_ELEM, name, None, None, i,
-                                          0, 0, 0])
-                    caret = end
-                    continue
-                if kind == 1:
-                    if name == "meta":
-                        attrs = _parse_attrs(raw[:-1] if self_close
-                                             else raw)
-                        append([_VOID, name, attrs, None, i, 0,
-                                len(nodes) + 1, 0])
-                    else:
-                        skipped += 1
-                    caret = end
-                    continue
-                # rawtext element inside a dropped subtree
+            count += 1
+            if kind == 2:
+                # rawtext: never written; only a <title> body is read
                 pat = _RAWTEXT_CLOSE.get(name)
                 if pat is None:
                     pat = _RAWTEXT_CLOSE[name] = re.compile(
                         "</" + name, re.IGNORECASE)
-                cm = pat.search(text, end)
-                j = cm.start() if cm else -1
-                if j == -1:
-                    if name == "title":
-                        append([_RAWTEXT, name, None, text[end:], i, 0,
-                                len(nodes) + 1, 0])
-                    else:
-                        skipped += 1
+                cm = pat.search(text, caret)
+                if cm is None:
+                    if title is None and name == "title":
+                        title = text[caret:]
                     log.msg("E100", i, (name,))
                     caret = n
-                    continue
-                if name == "title":
-                    append([_RAWTEXT, name, None, text[end:j], i, 0,
-                            len(nodes) + 1, 0])
                 else:
-                    skipped += 1
-                wm = _WS_GT.match(text, j + 2 + len(name))
-                caret = wm.end() if wm else j + 2 + len(name)
+                    j = cm.start()
+                    if title is None and name == "title":
+                        title = text[caret:j]
+                    wm = _WS_GT.match(text, j + 2 + len(name))
+                    caret = wm.end() if wm else j + 2 + len(name)
+                continue
+            if kind == 1:
+                if name == "meta":
+                    if desc is None:
+                        attrs = _parse_attrs(
+                            raw[:-1] if raw[-1:] == "/" else raw)
+                        if attrs.get("name", "").lower() == "description":
+                            desc = attrs.get("content", "").strip()
+                elif drop_at:
+                    pass
+                elif name == "br" or name == "hr" or name == "img":
+                    if run:
+                        if (tb.add_verbatim(run) if in_pre
+                                else add_inline(run)):
+                            span_append((run_s, run_e, path))
+                        run = ""
+                    if name != "img":
+                        request_break(1 if name == "br" else 2)
+                continue
+            role = info[3]
+            if role == 3 and lang is None:
+                lang = _parse_attrs(
+                    raw[:-1] if raw[-1:] == "/" else raw).get("lang") or None
+            if drop_at:
+                if raw[-1:] != "/":
+                    stack.append((name, i))
                 continue
             if raw:
                 ent = start_cache.get(raw)
                 if ent is None:
                     ent = _start_tag(raw)
-                attrs, adrop, self_close = ent
+                adrop, self_close, pick = ent
             else:
-                attrs, adrop, self_close = _EMPTY_START
-            merge_idx = -1
-            if kind == 0:
-                drop = 1 if name in DROP_TAGS else adrop
-                idx = len(nodes)
-                rec = [_ELEM, name, attrs, None, i, 0, 0, drop]
-                append(rec)
+                adrop, self_close, pick = _EMPTY_START
+            if adrop or role == 2:
                 if not self_close:
-                    stack.append(rec)
-                    if drop:
-                        drop_at = len(stack)
-                        drop_merge = False
-                else:
-                    rec[6] = idx + 1
-                caret = end
+                    stack.append((name, i))
+                    drop_at = len(stack)
                 continue
-            if kind == 1:
-                append([_VOID, name, attrs, None, i, 0, len(nodes) + 1, 0])
-                caret = end
+            if role:
+                if not self_close:
+                    stack.append((name, i))
                 continue
-            # rawtext element
-            pat = _RAWTEXT_CLOSE.get(name)
-            if pat is None:
-                pat = _RAWTEXT_CLOSE[name] = re.compile(
-                    "</" + name, re.IGNORECASE)
-            cm = pat.search(text, end)
-            j = cm.start() if cm else -1
-            idx = len(nodes)
-            # only <title> bodies are ever read (by _collect_meta_arrays);
-            # script/style payloads are dropped by conversion, so their
-            # (often huge) slices are never materialized
-            if j == -1:
-                append([_RAWTEXT, name, attrs,
-                        text[end:] if name == "title" else None, i, 0,
-                        idx + 1, 0])
-                log.msg("E100", i, (name,))
-                caret = n
+            # a surviving element: a merge boundary with its own effects
+            if run:
+                if tb.add_verbatim(run) if in_pre else add_inline(run):
+                    span_append((run_s, run_e, path))
+                run = ""
+            ordinal += 1
+            level, flags = info[4:]
+            if level > 0:
+                request_break(level)
+            rec = None
+            if main is None:
+                slot = (1 if flags & 1 or pick & 1 else
+                        2 if article is None and flags & 2 else
+                        3 if token is None and pick & 2 else 0)
+                if slot or (folding and flags & 4 and not self_close):
+                    rec = [ordinal, name, len(parts), len(spans),
+                           len(path) + 1, in_pre, None, 0, 0, False, 0]
+                    if slot == 1:
+                        main = rec
+                    elif slot == 2:
+                        article = rec
+                    elif slot == 3:
+                        token = rec
+                    else:
+                        rec[_FIRST] = -1
+                        unresolved.append(rec)
+                        ncand += 1
+                    if slot:
+                        folding, ncand = False, 0
+            if self_close:
+                if rec is not None:
+                    rec[_P1], rec[_S1] = rec[_P0], rec[_S0]
+                if level < 0:
+                    tb.add_space()
                 continue
-            append([_RAWTEXT, name, attrs,
-                    text[end:j] if name == "title" else None, i, 0,
-                    idx + 1, 0])
-            wm = _WS_GT.match(text, j + 2 + len(name))
-            caret = wm.end() if wm else j + 2 + len(name)
+            stack.append((name, i, level, path, in_pre, rec))
+            path = path + "/" + name
+            if ordinal == reset:
+                in_pre = name == "pre"
+            elif flags & 8:
+                in_pre = True
             continue
-        c = text[i]
-        if c == "&":
-            em = ent_match(text, i)
-            if em is None:
-                if drop_at:
-                    if not drop_merge:
-                        skipped += 1
-                        drop_merge = True
-                elif merge_idx >= 0:
-                    nd = nodes[merge_idx]
-                    nd[3] += "&"
-                    nd[5] = i + 1
-                else:
-                    merge_idx = len(nodes)
-                    append([_TEXT, None, None, "&", i, i + 1, 0, 0])
-                caret = i + 1
-            else:
-                j = em.end()
-                if drop_at:
-                    skipped += 1
-                    drop_merge = False
-                else:
-                    append([_ENTITY_K, None, None, text[i:j], i, j,
-                            len(nodes) + 1, 0])
-                    merge_idx = -1
-                caret = j
+        texting = False
+        count += 1
+        if text[i] == "&":
+            caret = j = em.end()
+            if not drop_at:
+                if run:
+                    if tb.add_verbatim(run) if in_pre else add_inline(run):
+                        span_append((run_s, run_e, path))
+                    run = ""
+                if ncand:
+                    if unresolved:
+                        for c in unresolved:
+                            c[_FIRST] = tot
+                        unresolved.clear()
+                    tot += j - i
+                    last = tot
+                if add_inline(_html.unescape(text[i:j])):
+                    span_append((i, j, path))
             continue
-        nxt = text[i + 1: i + 2]
-        if nxt == "!" or nxt == "?":
-            merge_idx = -1
-            drop_merge = False
-            if nxt == "!":
-                if text.startswith("<!--", i):
-                    j = text.find("-->", i + 4)
-                    if j == -1:
-                        if drop_at:
-                            skipped += 1
-                        else:
-                            append([_OTHER, "#comment", None, None, i, 0,
-                                    len(nodes) + 1, 0])
-                        log.msg("E100", i, ("#comment",))
-                        caret = n
-                    else:
-                        if drop_at:
-                            skipped += 1
-                        else:
-                            append([_OTHER, "#comment", None, None, i, 0,
-                                    len(nodes) + 1, 0])
-                        caret = j + 3
-                    continue
-                if _DOCTYPE.match(text, i):
-                    j = text.find(">", i + 9)
-                    if j == -1:
-                        log.msg("E100", i, ("#doctype",))
-                        caret = n
-                    else:
-                        if drop_at:
-                            skipped += 1
-                        else:
-                            append([_OTHER, "#doctype", None, None, i, 0,
-                                    len(nodes) + 1, 0])
-                        caret = j + 1
-                    continue
-                if text.startswith("<![CDATA[", i):
-                    j = text.find("]]>", i + 9)
-                    if j == -1:
-                        if drop_at:
-                            skipped += 1
-                        else:
-                            append([_OTHER, "#cdata", None, None, i, 0,
-                                    len(nodes) + 1, 0])
-                        log.msg("E100", i, ("#cdata-section",))
-                        caret = n
-                    else:
-                        if drop_at:
-                            skipped += 1
-                        else:
-                            append([_OTHER, "#cdata", None, None, i, 0,
-                                    len(nodes) + 1, 0])
-                        caret = j + 3
-                    continue
-                # bogus comment: "<!" to '>'
-                j = text.find(">", i + 2)
-                if j == -1:
-                    log.msg("E100", i, ("#comment",))
-                    if drop_at:
-                        skipped += 1
-                    else:
-                        append([_OTHER, "#comment", None, None, i, 0,
-                                len(nodes) + 1, 0])
-                    caret = n
-                else:
-                    if drop_at:
-                        skipped += 1
-                    else:
-                        append([_OTHER, "#comment", None, None, i, 0,
-                                len(nodes) + 1, 0])
-                    caret = j + 1
-                continue
+        if text[i + 1] == "?":
             # processing instruction
             j = text.find("?>", i + 2)
             if j == -1:
+                count -= 1
                 log.msg("E100", i, ("#pi",))
                 caret = n
             else:
-                if drop_at:
-                    skipped += 1
-                else:
-                    append([_OTHER, "#pi", None, None, i, 0,
-                            len(nodes) + 1, 0])
                 caret = j + 2
-            continue
-        # '<' that opens nothing
-        if tag_match(text, i) is not None:
-            log.msg("W102", i)
-        if drop_at:
-            if not drop_merge:
-                skipped += 1
-                drop_merge = True
-        elif merge_idx >= 0:
-            nd = nodes[merge_idx]
-            nd[3] += "<"
-            nd[5] = i + 1
-        else:
-            merge_idx = len(nodes)
-            append([_TEXT, None, None, "<", i, i + 1, 0, 0])
-        caret = i + 1
-    # EOF sweep: E100 per unclosed node, outermost first; close subtrees
-    total = len(nodes)
-    for k in range(1, len(stack)):
-        nd = stack[k]
-        log.msg("E100", nd[4], (nd[1],))
-        nd[6] = total
-    return nodes, log.log, skipped
-
-
-def _parse_attrs(raw: str) -> dict:
-    """Attr parse for the few records materialized inside dropped
-    regions (title/meta/html) — same grammar and first-occurrence rule
-    as the hot-path inline version."""
-    attrs: dict = {}
-    if raw and not raw.isspace():
-        cached = _ATTRS_CACHE.get(raw)
-        if cached is not None:
-            return cached                      # shared, read-only
-        for am in _ATTR.finditer(raw):
-            key = am.group(1).lower()
-            if key not in attrs:
-                g2, g3, g4 = am.group(2, 3, 4)
-                attrs[key] = (g2 if g2 is not None else
-                              g3 if g3 is not None else
-                              g4 if g4 is not None else "")
-        if len(_ATTRS_CACHE) < _ATTRS_CACHE_MAX:
-            _ATTRS_CACHE[raw] = attrs          # share, don't copy
-    return attrs
-
-
-_BR_HR_IMG = frozenset(("br", "hr", "img"))
-_MASS_TAGS = frozenset(("div", "section", "td", "blockquote"))
-
-
-def _collect_meta_arrays(nodes: list) -> dict:
-    meta: dict = {}
-    missing = 3
-    for nd in nodes:
-        kind = nd[0]
-        if kind == _RAWTEXT and nd[1] == "title" and "title" not in meta:
-            meta["title"] = _META_WS.sub(
-                " ", _html.unescape(nd[3])).strip()
-            missing -= 1
-        elif kind == _VOID and nd[1] == "meta":
-            if nd[2].get("name", "").lower() == "description" and \
-                    "description" not in meta:
-                meta["description"] = nd[2].get("content", "").strip()
-                missing -= 1
-        elif kind == _ELEM and nd[1] == "html" and "lang" not in meta:
-            lang = nd[2].get("lang")
-            if lang:
-                meta["lang"] = lang
-                missing -= 1
-        if not missing:
-            break
-    return meta
-
-
-def _select_main_arrays(nodes: list) -> int:
-    """Index of the selected main element, or -1 for the whole document
-    (the object cascade of `extractor.select_main`, run over surviving
-    nodes: <main>/[role=main] → <article> → content-ish class/id →
-    highest text-mass div/section/td/blockquote, preorder-first ties)."""
-    n = len(nodes)
-    first_main = first_article = first_token = -1
-    # text-mass fallback accumulators: stack of [idx, end, total, lead,
-    # trail] for open candidate elements; candidates collected as
-    # (idx, mass) in preorder.
-    cand_stack: list = []
-    cands: list[tuple[int, int]] = []
-    i = 0
-    while i < n:
-        nd = nodes[i]
-        kind = nd[0]
-        while cand_stack and cand_stack[-1][1] <= i:
-            idx, _e, t, l, tr = cand_stack.pop()
-            cands.append((idx, 0 if l == t else t - l - tr))
-        if kind == _ELEM:
-            name = nd[1]
-            attrs = nd[2]
-            if nd[7]:
-                i = nd[6]  # DROP (parse-time decision): skip subtree
-                continue
-            if name not in UNWRAP_TAGS:
-                # surviving element: cascade tests
-                if first_main == -1 and (
-                        name == "main" or attrs.get("role") == "main"):
-                    first_main = i
-                    break  # first rule hit in document order wins
-                if first_article == -1 and name == "article":
-                    first_article = i
-                if first_token == -1 and attrs:
-                    token = attrs.get("class", "")
-                    idv = attrs.get("id")
-                    if idv:
-                        token = token + " " + idv
-                    if token and _CONTENT_TOKEN.search(token.lower()):
-                        first_token = i
-                if name in _MASS_TAGS:
-                    cand_stack.append([i, nd[6], 0, 0, 0])
-        elif kind == _TEXT or kind == _ENTITY_K:
-            if cand_stack:
-                d = nd[3]
-                ct = len(d)
-                if ct:
-                    cl = ct - len(d.lstrip())
-                    ctr = ct - len(d.rstrip())
-                    for acc in cand_stack:
-                        if acc[3] == acc[2]:   # everything so far is ws
-                            acc[3] = acc[2] + cl
-                        acc[2] += ct
-                        acc[4] = ct + acc[4] if cl == ct else ctr
-        elif kind == _VOID:
-            if nd[1] not in _BR_HR_IMG:
-                i += 1
-                continue
-        else:  # RawText / other: dropped (leaf records)
-            i += 1
-            continue
-        i += 1
-    if first_main != -1:
-        return first_main
-    if first_article != -1:
-        return first_article
-    if first_token != -1:
-        return first_token
-    while cand_stack:
-        idx, _e, t, l, tr = cand_stack.pop()
-        cands.append((idx, 0 if l == t else t - l - tr))
-    best = -1
-    best_mass = 0
-    # preorder-first tie-break: smallest index among maximal masses
-    for idx, mass in cands:
-        if mass > best_mass or (mass == best_mass and mass > 0
-                                and idx < best):
-            best, best_mass = idx, mass
-    return best
-
-
-def _write_arrays(nodes: list, root_idx: int, width: Optional[int] = None,
-                  indent: str = "") -> tuple[str, list]:
-    """write_text over the array with convert decisions applied inline,
-    ending in the same W5 layout step (``_TextBuilder.finish``).
-
-    Adjacent surviving Text records merge exactly as the converted
-    tree's per-element normalize would merge them (any surviving
-    non-Text event is a merge boundary), so span tuples come out
-    identical to the object path."""
-    from lexor_spark.kernel.textwriter import _TextBuilder, Span
-    tb = _TextBuilder()
-    spans: list = []
-    add_inline = tb.add_inline
-    request_break = tb.request_break
-    span_append = spans.append
-    block_level = _BLOCK_LEVEL.get
-    n = len(nodes)
-    if root_idx < 0:
-        i, end, root_name = 0, n, "#document"
-        # whole-document fallback: children's span paths are rooted at
-        # the Document's name, as the object writer produces
-        path0 = "#document"
-    else:
-        root = nodes[root_idx]
-        i, end, root_name = root_idx, root[6], root[1]
-        path0 = ""
-    # close-event stack: (subtree_end, action, arg) — action 0: break
-    # level, 1: cell space, 2: path/pre scope pop
-    closes: list[tuple] = []
-    path = path0
-    in_pre = root_name == "pre"
-    # pending merged text: [data, start, end, path, in_pre]
-    pend: Optional[list] = None
-
-    def _flush() -> None:
-        nonlocal pend
-        if pend is None:
-            return
-        data, s, e, ppath, ppre = pend
-        pend = None
-        if ppre:
-            if tb.add_verbatim(data) and s >= 0:
-                span_append(Span(s, e, ppath))
-        else:
-            if add_inline(data) and s >= 0:
-                span_append(Span(s, e, ppath))
-
-    # root element open effects (write_text treats the root like any
-    # element: break request + close event + path extension)
-    if root_idx >= 0:
-        level = block_level(root_name, 0)
-        if level:
-            request_break(level)  # no content yet: no-op, kept for parity
-            closes.append((end, 0, level))
-        elif root_name in _CELL_TAGS:
-            closes.append((end, 1, 0))
-        path = root_name
-        i = root_idx + 1
-    while True:
-        # fire close events whose subtree ended at or before i; every
-        # close is a merge boundary (texts inside and outside a
-        # surviving element are not siblings in the converted tree)
-        while closes and closes[-1][0] <= i:
-            _e, action, arg = closes.pop()
-            if pend is not None:
-                _flush()
-            if action == 0:
-                request_break(arg)
-            elif action == 1:
-                tb.add_space()
+        elif text.startswith("<!--", i):
+            j = text.find("-->", i + 4)
+            if j == -1:
+                log.msg("E100", i, ("#comment",))
+                caret = n
             else:
-                path, in_pre = arg
-        if i >= end:
-            break
-        nd = nodes[i]
-        kind = nd[0]
-        if kind == _TEXT:
-            data = nd[3]
-            if data:
-                if pend is not None:
-                    pend[0] += data
-                    if nd[5] >= 0:
-                        pend[2] = nd[5]
-                else:
-                    pend = [data, nd[4], nd[5], path, in_pre]
-            i += 1
-            continue
-        if kind == _ENTITY_K:
-            if pend is not None:
-                _flush()
-            decoded = _html.unescape(nd[3])
-            if add_inline(decoded) and nd[4] >= 0:
-                span_append(Span(nd[4], nd[5], path))
-            i += 1
-            continue
-        if kind == _ELEM:
-            name = nd[1]
-            if nd[7]:
-                i = nd[6]
-                continue
-            if name in UNWRAP_TAGS:
-                i += 1  # children hoist: descend with no scope change
-                continue
-            if pend is not None:
-                _flush()
-            sub = nd[6]
-            level = block_level(name, 0)
-            if level:
-                request_break(level)
-                closes.append((sub, 0, level))
-            elif name in _CELL_TAGS:
-                closes.append((sub, 1, 0))
-            new_pre = in_pre or name == "pre"
-            if sub > i + 1:  # children exist: open a path/pre scope
-                closes.append((sub, 2, (path, in_pre)))
-                path = path + "/" + name if path else name
-                in_pre = new_pre
-            i += 1
-            continue
-        if kind == _VOID:
-            name = nd[1]
-            if name == "br":
-                if pend is not None:
-                    _flush()
-                request_break(_LINE)
-            elif name == "hr":
-                if pend is not None:
-                    _flush()
-                request_break(_PARA)
-            elif name == "img":
-                if pend is not None:
-                    _flush()  # img survives, writes nothing
-            i += 1
-            continue
-        # RawText / other: dropped by conversion
-        i += 1
-    _flush()
-    while closes:
-        _e, action, arg = closes.pop()
-        if action == 0:
-            request_break(arg)
-        elif action == 1:
-            tb.add_space()
+                caret = j + 3
+        elif _DOCTYPE.match(text, i):
+            j = text.find(">", i + 9)
+            if j == -1:
+                count -= 1
+                log.msg("E100", i, ("#doctype",))
+                caret = n
+            else:
+                caret = j + 1
+        elif text.startswith("<![CDATA[", i):
+            j = text.find("]]>", i + 9)
+            if j == -1:
+                log.msg("E100", i, ("#cdata-section",))
+                caret = n
+            else:
+                caret = j + 3
         else:
-            path, in_pre = arg
+            # bogus comment: "<!" to '>'
+            j = text.find(">", i + 2)
+            if j == -1:
+                log.msg("E100", i, ("#comment",))
+                caret = n
+            else:
+                caret = j + 1
+    if run:
+        if tb.add_verbatim(run) if in_pre else add_inline(run):
+            span_append((run_s, run_e, path))
+    p = _Pass()
+    p.text, p.tb, p.spans, p.log, p.n_nodes = text, tb, spans, log.log, \
+        count + 1
+    p.root = main or article or token or best
+    meta = p.meta = {}
+    if title is not None:
+        meta["title"] = _META_WS.sub(" ", _html.unescape(title)).strip()
+    if desc is not None:
+        meta["description"] = desc
+    if lang is not None:
+        meta["lang"] = lang
+    return p
+
+
+def _slice(p: _Pass, rec: Optional[list], width: Optional[int],
+           indent: str) -> tuple:
+    """(text, span tuples) of root record ``rec``: the whole-document
+    output (None), or the root's slice of it as a writer started at the
+    root produces it."""
+    if rec is None:
+        return p.tb.finish(width, indent), p.spans
+    if rec[_PRE] and rec[_NAME] != "pre":
+        p = _pass(p.text, rec[_ORD])
+        rec = p.root
+    parts, marks = p.tb.parts, p.tb.marks
+    a, b = rec[_P0], rec[_P1]
+    while a < b and not parts[a].strip():
+        a += 1                  # break/space parts before the content
+    tb = _TextBuilder()
+    if a < b:
+        k0, k1 = bisect_left(marks, (a, 0)), bisect_left(marks, (b, 0))
+        tb.marks = [(k - a, kind) for k, kind in marks[k0:k1]]
+        first = parts[a]
+        if first[0] == " " and marks[k0:k0 + 1] != [(a, 1)]:
+            first = first[1:]   # the lead space after earlier content
+        tb.parts = [first] + parts[a + 1:b]
+        tb.has_content = True
+        tb.trailing_space, tb.pending = rec[_TRAIL], rec[_PEND]
+    if rec[_NAME] in _CELL_TAGS:
+        tb.add_space()          # the root's own close
+    # cut each distinct path once: spans of one scope share its string
+    cut, cuts, spans = rec[_CUT], {}, []
+    for s, e, q in p.spans[rec[_S0]:rec[_S1]]:
+        r = cuts.get(q)
+        if r is None:
+            r = cuts[q] = q[cut:]
+        spans.append((s, e, r))
     return tb.finish(width, indent), spans
+
+
+def _parse_arrays(text: str) -> tuple:
+    """The serial stage tracer's interface (`perfbench/stages.py`) times
+    the kernel's four phases one by one: this pass (``(pass, log,
+    skipped)``, no records built, so every node counts as skipped),
+    `_collect_meta_arrays`, the root pick `_select_main_arrays` and the
+    slice `_write_arrays` (with `Span` objects)."""
+    p = _pass(text)
+    return p, p.log, p.n_nodes - 1
+
+
+def _collect_meta_arrays(p: _Pass) -> dict:
+    return p.meta
+
+
+def _select_main_arrays(p: _Pass) -> Optional[list]:
+    return p.root
+
+
+def _write_arrays(p: _Pass, root: Optional[list],
+                  width: Optional[int] = None, indent: str = "") -> tuple:
+    out, spans = _slice(p, root, width, indent)
+    return out, [Span(*s) for s in spans]
 
 
 def fast_extract(res, text: str, width: Optional[int] = None,
                  indent: str = "") -> None:
-    """Fill an `ExtractResult` from the array kernel in any W5 writer
+    """Fill an `ExtractResult` from the one-pass kernel in any W5 writer
     mode (``width``/``indent``); only W2 styles take the object path."""
-    nodes, log, skipped = _parse_arrays(text)
-    res.codes = [e.code for e in log]
-    meta = _collect_meta_arrays(nodes)
+    p = _pass(text)
+    res.codes = [e.code for e in p.log]
+    meta = p.meta
     res.title = meta.get("title")
     res.description = meta.get("description")
     res.lang_attr = meta.get("lang")
-    res.n_nodes = len(nodes) + skipped + 1  # + the document root
-    main_idx = _select_main_arrays(nodes)
-    res.text, spans = _write_arrays(nodes, main_idx, width, indent)
-    res.spans = [s.as_tuple() for s in spans]
+    res.n_nodes = p.n_nodes
+    res.text, res.spans = _slice(p, p.root, width, indent)

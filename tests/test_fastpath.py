@@ -10,6 +10,8 @@ the two kernel paths on the same string, whatever it is.
 
 from __future__ import annotations
 
+import time
+
 import duckdb
 import pytest
 from hypothesis import given, settings
@@ -163,6 +165,29 @@ HOSTILE = [
     b"<nav/><p>after selfclose</p>",
     # rawtext inside a dropped region (script body never sliced)
     b"<footer><script>var x='</div>';</script>tail</footer><p>k</p>",
+    # root pick and root slice of the one-pass kernel:
+    # a root under <pre> is written inline, not verbatim
+    b"<pre><article> a  b\n  c </article></pre>",
+    # <main> after <article> still wins
+    b"<article>art text</article><main>main text</main>",
+    # <article> wins over an earlier content-token div
+    b'<div class="post">token first</div><article>art</article>',
+    # equal masses: the first in preorder wins, nested and siblings
+    b"<div>abcd</div><section>wxyz</section>",
+    b"<div><div> same </div></div><div>same</div>",
+    # a whitespace-only candidate has no mass
+    b"<div>  \n </div><p>loose text</p>",
+    # self-closing <main/> is an empty root
+    b"<p>before</p><main/><p>after</p>",
+    # a td root: the cell's own close and a pending break inside it
+    b"<table><tr><td>short</td><td>the longest cell<br></td></tr></table>",
+    # the root's first text starts with whitespace after earlier content
+    b"<div class=x>intro</div><article> lead</article>",
+    # runs of &nbsp; entities only
+    b"<div>&nbsp;&nbsp;</div><div class=content>&nbsp; &nbsp;</div>",
+    b"<div id=main>x<hr>y<br>z</div>",
+    # 300-deep nesting with one text per level
+    ("".join(f"<div>t{k} " for k in range(300)) + "</div>" * 300).encode(),
 ]
 
 
@@ -173,18 +198,29 @@ def test_hostile_differential(html):
         assert res.ok
 
 
+def test_deep_nesting_is_linear():
+    """8,000 nested divs with a text per level (160 KB): the text-mass
+    fold must not touch every open candidate per text, which made this
+    page cost seconds of CPU and a 2 MB one minutes."""
+    html = "<div>" * 8000 + "word <br>" * 8000 + "</div>" * 8000
+    t0 = time.process_time()
+    res = extract_document(html)
+    assert time.process_time() - t0 < 2.0
+    assert res.ok and res.text.count("word") == 8000
+
+
 # random-HTML differential: tags from every rule class (drop, unwrap,
 # copy, void, rawtext, implied-end), malformed nesting included
-_TAGS = ["div", "p", "span", "b", "ul", "li", "td", "tr", "table",
-         "main", "article", "nav", "script", "pre", "br", "img", "h2",
-         "blockquote", "section"]
+_TAGS = ["div", "p", "span", "b", "ul", "li", "td", "th", "tr", "table",
+         "main", "article", "nav", "script", "pre", "br", "hr", "img",
+         "h2", "blockquote", "section"]
 
 
 @st.composite
 def _html_soup(draw):
     parts = []
     for _ in range(draw(st.integers(1, 25))):
-        kind = draw(st.integers(0, 5))
+        kind = draw(st.integers(0, 6))
         tag = draw(st.sampled_from(_TAGS))
         if kind == 0:
             parts.append(f"<{tag}>")
@@ -194,13 +230,18 @@ def _html_soup(draw):
             parts.append(draw(st.text(
                 alphabet="ab c\n&<;é#", min_size=0, max_size=12)))
         elif kind == 3:
-            cls = draw(st.sampled_from(
-                ["content", "nav", "sidebar", "x", "menu promo"]))
-            parts.append(f'<{tag} class="{cls}">')
+            attr = draw(st.sampled_from(
+                ['class="content"', 'class="nav"', 'class="sidebar"',
+                 'class="x"', 'class="menu promo"', 'class="post"',
+                 'id="main"', 'role="main"']))
+            close = draw(st.sampled_from([">", "/>"]))
+            parts.append(f"<{tag} {attr}{close}")
         elif kind == 4:
             parts.append("<!-- c -->")
+        elif kind == 5:
+            parts.append(f"<{tag}/>")
         else:
-            parts.append("&amp;")
+            parts.append(draw(st.sampled_from(["&amp;", "&nbsp;"])))
     return "".join(parts)
 
 
