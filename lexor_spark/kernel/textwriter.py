@@ -102,25 +102,23 @@ class _TextBuilder:
         visible character was produced (drives span recording)."""
         if not s:
             return False
-        # " ".join(s.split()), without the per-word split when the only
-        # whitespace is lone spaces (most prose runs): every whitespace
-        # character but " " is unprintable
-        body = (s.strip(" ") if s.isprintable() and "  " not in s
-                else " ".join(s.split()))
-        if not body:
+        lead = s[0].isspace() or s[0] == "\xa0"
+        trail = s[-1].isspace() or s[-1] == "\xa0"
+        words = s.split()
+        if not words:
             # whitespace-only: becomes a single tentative space
             if self.has_content and not self.trailing_space and not self.pending:
                 self.parts.append(" ")
                 self.trailing_space = True
             return False
-        if self.pending:
-            self._flush_break()
-        if s[0].isspace() and self.has_content and not self.trailing_space:
+        self._flush_break()
+        body = " ".join(words)
+        if lead and self.has_content and not self.trailing_space:
             body = " " + body
         self.parts.append(body)
         self.has_content = True
         self.trailing_space = False
-        if s[-1].isspace():
+        if trail:
             self.parts.append(" ")
             self.trailing_space = True
         return True

@@ -4,13 +4,10 @@ mechanism, `/root/reference/lexor/command/test.py:254-294`)."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings
-from hypothesis import strategies as st
-
 from lexor_spark.kernel import extract_document
 from lexor_spark.kernel.extractor import collect_meta, convert, select_main
 from lexor_spark.kernel.htmlparser import parse_html
-from lexor_spark.kernel.textwriter import _TextBuilder, write_text
+from lexor_spark.kernel.textwriter import write_text
 
 
 def _extract(html: str) -> str:
@@ -72,29 +69,6 @@ def test_empty_blocks_collapse():
 def test_whitespace_collapsing():
     out = _extract("<article><p>  a\n\t b   c </p></article>")
     assert out == "a b c"
-
-
-@given(st.text(alphabet="ab é\n\t\xa0\u3000\x85\x1c\u200b", max_size=12),
-       st.booleans())
-@settings(max_examples=400, deadline=None)
-def test_add_inline_collapses_every_unicode_space(s, after_content):
-    """add_inline's lone-space shortcut gives " ".join(s.split()): one
-    space per whitespace run, a lead/trail space only between content."""
-    tb = _TextBuilder()
-    if after_content:
-        tb.add_inline("x")
-    visible = tb.add_inline(s)
-    tb.add_inline("y")
-    body = " ".join(s.split())
-    assert visible == bool(body)
-    if not body:
-        want = "x y" if after_content and s else "xy" if after_content \
-            else "y"
-    else:
-        lead = " " if after_content and s[0].isspace() else ""
-        trail = " " if s[-1].isspace() else ""
-        want = ("x" if after_content else "") + lead + body + trail + "y"
-    assert tb.result() == want
 
 
 def test_pre_verbatim():
@@ -185,7 +159,7 @@ def test_writer_hooks_w2():
     """W2 hook slots (reference writer.py:395-400): pre sees the empty
     builder, post sees it before final assembly and may append."""
     from lexor_spark.kernel.htmlparser import parse_html
-    from lexor_spark.kernel.textwriter import _TextBuilder, write_text
+    from lexor_spark.kernel.textwriter import write_text
 
     doc, _ = parse_html("<p>body text</p>")
     calls = []
