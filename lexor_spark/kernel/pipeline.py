@@ -136,10 +136,10 @@ def extract_document(html: Union[bytes, str], uri: str = "",
     verifies.  Every unstyled call, any width/indent included, runs on
     the one-pass kernel (`fastpath`), which is byte-identical to the
     object path (differential-pinned in each writer mode by
-    tests/test_fastpath.py) and 1.56× faster serially on `crawl_mix`
-    pages, 1.61× on template pages (min of 4 interleaved runs, seed 7,
-    one 4-vCPU x86 host); only a style takes the object path
-    (`_object_extract`)."""
+    tests/test_fastpath.py) and 1.66–1.80× faster serially on
+    `crawl_mix` pages, 1.76× on template pages (min of 4 interleaved
+    runs per set, seed 7, one 4-vCPU x86 host); only a style takes the
+    object path (`_object_extract`)."""
     res = ExtractResult()
     try:
         rules = None
