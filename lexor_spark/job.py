@@ -14,7 +14,9 @@ Architecture (SURVEY.md §7, BASELINE.json ``north_rule``):
   exchange is planned by Catalyst.
 * **Per-partition metrics + lineage** — each output row carries its input
   size and kernel latency; `partition_metrics` folds them with a single
-  map-side-combinable aggregation.
+  map-side-combinable aggregation, and each committed group's lineage
+  record is the same aggregation observed on its write (one Spark job per
+  group, no read-back).
 * **Checkpointed resume** — the corpus is processed in ``n_groups``
   url-hash groups; each group commits atomically (data files first, then a
   marker).  ``run_job`` skips committed groups, so a killed run restarts at
@@ -45,7 +47,7 @@ from typing import Iterator, Optional
 
 import pyarrow as pa
 from pyspark.errors import AnalysisException, SparkRuntimeException
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
@@ -655,21 +657,18 @@ def read_lineage(spark: SparkSession, output_dir: str) -> DataFrame:
     snapshot metadata; here they are the marker files.  Zero committed
     groups (fresh dir, or killed before the first commit) is a valid
     state: returns an empty DataFrame, not a missing-path error."""
-    lineage_dir = os.path.join(output_dir, "_lineage")
-    has_any = os.path.isdir(lineage_dir) and any(
-        n.startswith("group-") and n.endswith(".json")
-        for n in os.listdir(lineage_dir))
-    if not has_any:
+    if not committed_groups(output_dir):
         return spark.createDataFrame([], LINEAGE_SCHEMA)
     return (spark.read.schema(LINEAGE_SCHEMA)
-            .json(f"{lineage_dir}/group-*.json"))
+            .json(os.path.join(output_dir, "_lineage", "group-*.json")))
 
 
-def _group_record(written: DataFrame, g: int, n_groups: int,
+def _group_record(obs: Observation, g: int, n_groups: int,
                   t0: float) -> dict:
-    """One committed group's lineage record, aggregated from the rows
-    actually on disk/in the table (no kernel recompute)."""
-    stats = written.agg(*_metrics_aggs("n_rows")).collect()[0].asDict()
+    """One committed group's lineage record: the `_metrics_aggs` that
+    ``obs`` observed on the group's frame while its write ran (no second
+    job, no read-back).  ``wall_s`` ends when the write returns."""
+    stats = obs.get
     return {
         "group": g,
         "n_groups": n_groups,
@@ -684,10 +683,12 @@ def _commit_groups(pages: DataFrame, n_groups: int, work, committed,
                    max_groups: Optional[int]) -> dict:
     """The commit loop of `run_job` and `run_job_table`: for each group
     of ``work`` not in ``committed()``, at most ``max_groups`` of them,
-    extract its pages, ``write(g, extracted)`` → the rows as written,
-    aggregate the lineage record from them (no kernel recompute) and
-    ``seal(g, record)``.  The group filter runs before the exchange,
-    so it is scan-side."""
+    extract its pages, ``write(g, extracted)`` with an `Observation` of
+    `_metrics_aggs` attached, build the lineage record from what the
+    write observed and ``seal(g, record)`` — one Spark job per group.
+    The observation counts a row once per task that succeeded: a failed
+    attempt's partial counts are dropped, so a retried task counts once.
+    The group filter runs before the exchange, so it is scan-side."""
     done = committed()
     group_col = F.pmod(F.xxhash64("url"), F.lit(n_groups))
     processed: list[dict] = []
@@ -697,9 +698,11 @@ def _commit_groups(pages: DataFrame, n_groups: int, work, committed,
         if max_groups is not None and len(processed) >= max_groups:
             break
         t0 = time.time()
+        obs = Observation()
         extracted = extract_pages(pages.filter(group_col == g),
                                   partitions=partitions)
-        record = _group_record(write(g, extracted), g, n_groups, t0)
+        write(g, extracted.observe(obs, *_metrics_aggs("n_rows")))
+        record = _group_record(obs, g, n_groups, t0)
         seal(g, record)
         processed.append(record)
     return {
@@ -718,10 +721,9 @@ def run_job(spark: SparkSession, pages: DataFrame, output_dir: str,
     Returns a lineage summary dict."""
     os.makedirs(os.path.join(output_dir, "_lineage"), exist_ok=True)
 
-    def write(g: int, extracted: DataFrame) -> DataFrame:
-        data_path = os.path.join(output_dir, f"group={g}")
-        extracted.write.mode("overwrite").parquet(data_path)
-        return spark.read.parquet(data_path)
+    def write(g: int, extracted: DataFrame) -> None:
+        extracted.write.mode("overwrite").parquet(
+            os.path.join(output_dir, f"group={g}"))
 
     def seal(g: int, record: dict) -> None:
         # marker write is the commit point: data is fully on disk first
@@ -772,7 +774,8 @@ def run_job_table(spark: SparkSession, pages: DataFrame, table: str,
     there; the default ``parquet`` exercises the identical code path on
     this sandbox's built-in catalog (where append atomicity is
     approximate — which is why the marker-file `run_job` remains the
-    local-mode default).  Returns the same lineage summary shape.
+    local-mode default).  Returns the same lineage summary shape, each
+    record observed on its group's append.
 
     Committed-ness is derived from data rows, so the work list is the
     set of NON-EMPTY groups (one cheap distinct over the url-hash
@@ -781,7 +784,7 @@ def run_job_table(spark: SparkSession, pages: DataFrame, table: str,
     expected = sorted({int(r["g"]) for r in
                        pages.select(group_col.alias("g")).distinct().collect()})
 
-    def write(g: int, extracted: DataFrame) -> DataFrame:
+    def write(g: int, extracted: DataFrame) -> None:
         extracted = extracted.withColumn("group", F.lit(g))
         if not spark.catalog.tableExists(table):
             _create_table(spark, extracted, table, provider)
@@ -797,7 +800,6 @@ def run_job_table(spark: SparkSession, pages: DataFrame, table: str,
                 if exc.getCondition() != _V1_TABLE_WRITE_REFUSED:
                     raise
                 extracted.write.mode("append").insertInto(table)
-        return spark.table(table).filter(F.col("group") == g)
 
     # the append is the commit: nothing to seal
     return _commit_groups(pages, n_groups, expected,
@@ -808,9 +810,8 @@ def run_job_table(spark: SparkSession, pages: DataFrame, table: str,
 
 def _create_table(spark: SparkSession, extracted: DataFrame, table: str,
                   provider: str) -> None:
-    """First append = table create, partitioned by group so the
-    per-group stats scan and any downstream group predicate prune
-    instead of full-scanning.  A run killed in the middle of a create
+    """First append = table create, partitioned by group so any
+    downstream group predicate prunes instead of full-scanning.  A run killed in the middle of a create
     leaves the managed location on disk with no catalog entry, and Spark
     then refuses the create with ``LOCATION_ALREADY_EXISTS``.  Nothing
     there is committed (the committed set is read through the catalog),

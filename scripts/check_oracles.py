@@ -1,7 +1,8 @@
 """Mimic the driver's correctness gate: run every queries() entry at
 sf0.01 and compare against oracle_sql() in DuckDB (row count, schema
-names, order-insensitive value comparison).  The last line is the
-tally: ``OK n / rows-only n (empty k) / FAIL n``.
+names, order-insensitive value comparison).  Each entry's result line is
+followed by its Spark and DuckDB walls; the last line is the tally:
+``OK n / rows-only n (empty k) / FAIL n / sweep <s> s``.
 
 Usage: PYTHONPATH=/root/repo python scripts/check_oracles.py [name ...]
 """
@@ -10,6 +11,7 @@ from __future__ import annotations
 
 import math
 import sys
+import time
 
 import duckdb
 
@@ -80,6 +82,10 @@ def dtype_mismatches(sdf, d_schema):
     return bad
 
 
+def wall(seconds) -> str:
+    return "-" if seconds is None else f"{seconds:.2f} s"
+
+
 def main() -> int:
     from pyspark.sql import SparkSession
 
@@ -100,56 +106,67 @@ def main() -> int:
     oracles = entrymod.oracle_sql()
     only = set(sys.argv[1:])
     failures = ok = rows_only = rows_empty = 0
+    t_sweep = time.perf_counter()
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        spark_s = duck_s = None
+        t0 = time.perf_counter()
         try:
-            sdf = fn(spark, SF_DIR)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-        except Exception as exc:
-            print(f"FAIL  {name}: spark error: {type(exc).__name__}: {str(exc)[:200]}")
-            failures += 1
-            continue
-        if name not in oracles:
-            print(f"rows  {name}: {len(srows)} rows (no oracle — rows-only)")
-            rows_only += 1
-            rows_empty += not srows
-            continue
-        try:
-            res = con.execute(oracles[name])
-            dcols = [d[0] for d in res.description]
-            dtable = res.fetch_arrow_table()
-            dtype_bad = dtype_mismatches(sdf, dtable.schema)
-            drows = [tuple(d[c] for c in dcols) for d in dtable.to_pylist()]
-        except Exception as exc:
-            print(f"FAIL  {name}: duckdb error: {type(exc).__name__}: {str(exc)[:200]}")
-            failures += 1
-            continue
-        if dtype_bad:
-            print(f"FAIL  {name}: dtype mismatch: {dtype_bad}")
-            failures += 1
-            continue
-        if sorted(scols) != sorted(dcols):
-            print(f"FAIL  {name}: schema mismatch spark={sorted(scols)} duck={sorted(dcols)}")
-            failures += 1
-            continue
-        if len(srows) != len(drows):
-            print(f"FAIL  {name}: rowcount spark={len(srows)} duck={len(drows)}")
-            failures += 1
-            continue
-        a = norm_rows(scols, srows)
-        b = norm_rows(dcols, drows)
-        if a != b:
-            diff = [(x, y) for x, y in zip(a, b) if x != y][:3]
-            print(f"FAIL  {name}: value mismatch, first diffs: {diff}")
-            failures += 1
-            continue
-        print(f"OK    {name}: {len(srows)} rows match")
-        ok += 1
+            try:
+                sdf = fn(spark, SF_DIR)
+                scols = sdf.columns
+                srows = [tuple(r) for r in sdf.collect()]
+            except Exception as exc:
+                spark_s = time.perf_counter() - t0
+                print(f"FAIL  {name}: spark error: {type(exc).__name__}: {str(exc)[:200]}")
+                failures += 1
+                continue
+            spark_s = time.perf_counter() - t0
+            if name not in oracles:
+                print(f"rows  {name}: {len(srows)} rows (no oracle — rows-only)")
+                rows_only += 1
+                rows_empty += not srows
+                continue
+            t0 = time.perf_counter()
+            try:
+                res = con.execute(oracles[name])
+                dcols = [d[0] for d in res.description]
+                dtable = res.fetch_arrow_table()
+                duck_s = time.perf_counter() - t0
+                dtype_bad = dtype_mismatches(sdf, dtable.schema)
+                drows = [tuple(d[c] for c in dcols) for d in dtable.to_pylist()]
+            except Exception as exc:
+                duck_s = time.perf_counter() - t0
+                print(f"FAIL  {name}: duckdb error: {type(exc).__name__}: {str(exc)[:200]}")
+                failures += 1
+                continue
+            if dtype_bad:
+                print(f"FAIL  {name}: dtype mismatch: {dtype_bad}")
+                failures += 1
+                continue
+            if sorted(scols) != sorted(dcols):
+                print(f"FAIL  {name}: schema mismatch spark={sorted(scols)} duck={sorted(dcols)}")
+                failures += 1
+                continue
+            if len(srows) != len(drows):
+                print(f"FAIL  {name}: rowcount spark={len(srows)} duck={len(drows)}")
+                failures += 1
+                continue
+            a = norm_rows(scols, srows)
+            b = norm_rows(dcols, drows)
+            if a != b:
+                diff = [(x, y) for x, y in zip(a, b) if x != y][:3]
+                print(f"FAIL  {name}: value mismatch, first diffs: {diff}")
+                failures += 1
+                continue
+            print(f"OK    {name}: {len(srows)} rows match")
+            ok += 1
+        finally:
+            print(f"      {name}: spark {wall(spark_s)} / duckdb {wall(duck_s)}")
     spark.stop()
     print(f"OK {ok} / rows-only {rows_only} (empty {rows_empty}) "
-          f"/ FAIL {failures}")
+          f"/ FAIL {failures} / sweep {time.perf_counter() - t_sweep:.0f} s")
     return 1 if failures else 0
 
 
