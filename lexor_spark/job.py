@@ -14,9 +14,8 @@ Architecture (SURVEY.md §7, BASELINE.json ``north_rule``):
   exchange is planned by Catalyst.
 * **Per-partition metrics + lineage** — each output row carries its input
   size and kernel latency; `partition_metrics` folds them with a single
-  map-side-combinable aggregation, and each committed group's lineage
-  record is the same aggregation observed on its write (one Spark job per
-  group, no read-back).
+  map-side-combinable aggregation, which each group commit also observes
+  on its write as the group's lineage record.
 * **Checkpointed resume** — the corpus is processed in ``n_groups``
   url-hash groups; each group commits atomically (data files first, then a
   marker).  ``run_job`` skips committed groups, so a killed run restarts at
@@ -665,9 +664,8 @@ def read_lineage(spark: SparkSession, output_dir: str) -> DataFrame:
 
 def _group_record(obs: Observation, g: int, n_groups: int,
                   t0: float) -> dict:
-    """One committed group's lineage record: the `_metrics_aggs` that
-    ``obs`` observed on the group's frame while its write ran (no second
-    job, no read-back).  ``wall_s`` ends when the write returns."""
+    """One committed group's lineage record: `_metrics_aggs` as ``obs``
+    saw them on the write (no read-back); ``wall_s`` ends as it returns."""
     stats = obs.get
     return {
         "group": g,
@@ -683,12 +681,10 @@ def _commit_groups(pages: DataFrame, n_groups: int, work, committed,
                    max_groups: Optional[int]) -> dict:
     """The commit loop of `run_job` and `run_job_table`: for each group
     of ``work`` not in ``committed()``, at most ``max_groups`` of them,
-    extract its pages, ``write(g, extracted)`` with an `Observation` of
-    `_metrics_aggs` attached, build the lineage record from what the
-    write observed and ``seal(g, record)`` — one Spark job per group.
-    The observation counts a row once per task that succeeded: a failed
-    attempt's partial counts are dropped, so a retried task counts once.
-    The group filter runs before the exchange, so it is scan-side."""
+    extract its pages, ``write(g, extracted)`` with `_metrics_aggs`
+    observed on it — one Spark job, and a retried task counts once — and
+    ``seal(g, record)`` the lineage record built from them.  The group
+    filter runs before the exchange, so it is scan-side."""
     done = committed()
     group_col = F.pmod(F.xxhash64("url"), F.lit(n_groups))
     processed: list[dict] = []
@@ -774,8 +770,7 @@ def run_job_table(spark: SparkSession, pages: DataFrame, table: str,
     there; the default ``parquet`` exercises the identical code path on
     this sandbox's built-in catalog (where append atomicity is
     approximate — which is why the marker-file `run_job` remains the
-    local-mode default).  Returns the same lineage summary shape, each
-    record observed on its group's append.
+    local-mode default).  Returns the same observed lineage summary.
 
     Committed-ness is derived from data rows, so the work list is the
     set of NON-EMPTY groups (one cheap distinct over the url-hash
@@ -811,12 +806,12 @@ def run_job_table(spark: SparkSession, pages: DataFrame, table: str,
 def _create_table(spark: SparkSession, extracted: DataFrame, table: str,
                   provider: str) -> None:
     """First append = table create, partitioned by group so any
-    downstream group predicate prunes instead of full-scanning.  A run killed in the middle of a create
-    leaves the managed location on disk with no catalog entry, and Spark
-    then refuses the create with ``LOCATION_ALREADY_EXISTS``.  Nothing
-    there is committed (the committed set is read through the catalog),
-    so that location is cleared and the create retried once; any other
-    error propagates."""
+    downstream group predicate prunes instead of full-scanning.  A run
+    killed in the middle of a create leaves the managed location on disk
+    with no catalog entry, and Spark then refuses the create with
+    ``LOCATION_ALREADY_EXISTS``.  Nothing there is committed (the
+    committed set is read through the catalog), so that location is
+    cleared and the create retried once; any other error propagates."""
     def create() -> None:
         extracted.writeTo(table).using(provider) \
             .partitionedBy(F.col("group")).create()

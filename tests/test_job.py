@@ -5,12 +5,15 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-from lexor_spark.job import (committed_groups, extract_pages,
-                             partition_metrics, run_job)
+from lexor_spark.job import (_metrics_aggs, committed_groups, extract_pages,
+                             partition_metrics, read_lineage, run_job)
 from lexor_spark.kernel import extract_document
 from lexor_spark.pages import pages_df
 
@@ -64,6 +67,19 @@ def test_metrics(pages):
     assert m.errs == 0
 
 
+def _assert_observed(record, rows):
+    """The seven aggregates the write observed equal `_metrics_aggs`
+    over the committed ``rows``."""
+    back = rows.agg(*_metrics_aggs("n_rows")).collect()[0].asDict()
+    assert {k: record[k] for k in back} == \
+        {k: int(v or 0) for k, v in back.items()}
+
+
+def _marker(out_dir, g):
+    with open(os.path.join(out_dir, "_lineage", f"group-{g}.json")) as fh:
+        return json.load(fh)
+
+
 def test_resume_after_kill(spark, pages, tmp_path):
     out_dir = str(tmp_path / "out")
     r1 = run_job(spark, pages, out_dir, n_groups=4, max_groups=2,
@@ -89,8 +105,11 @@ def test_resume_after_kill(spark, pages, tmp_path):
     # idempotent third run
     r3 = run_job(spark, pages, out_dir, n_groups=4, partitions=8)
     assert r3["processed"] == [] and r3["complete"]
+    # each marker's observed record is what its group dir holds
+    for g in range(4):
+        _assert_observed(_marker(out_dir, g),
+                         spark.read.parquet(os.path.join(out_dir, f"group={g}")))
     # lineage table: one row per committed group, conserved row count
-    from lexor_spark.job import read_lineage
     lin = read_lineage(spark, out_dir)
     assert lin.count() == 4
     got = {r["group"]: r for r in lin.collect()}
@@ -183,10 +202,95 @@ def test_heavy_tail_skew(spark, sf_dir):
         {r.url: r.text for r in rows}[sample.url]
 
 
+@pytest.mark.parametrize("kill", ["data_without_marker", "orphaned_tmp_marker"])
+def test_resume_redoes_unsealed_group(spark, pages, tmp_path, kill):
+    """A kill after a group's data files landed but before its marker
+    was sealed: the group dir holds data files (here also a stray copy
+    of one, as a killed overwrite may leave) and no marker, or the
+    marker is a half-written ``group-<g>.json.tmp``.  The group is not
+    committed, `read_lineage` ignores the ``.tmp``, and resume redoes
+    exactly that group with every url once."""
+    out_dir, g = str(tmp_path / "out"), 2
+    run_job(spark, pages, out_dir, n_groups=4, partitions=8)
+    marker = os.path.join(out_dir, "_lineage", f"group-{g}.json")
+    with open(marker) as fh:
+        sealed = fh.read()
+    os.remove(marker)
+    if kill == "data_without_marker":
+        data = os.path.join(out_dir, f"group={g}")
+        part = next(n for n in sorted(os.listdir(data)) if n.startswith("part-"))
+        shutil.copy(os.path.join(data, part), os.path.join(data, "part-99999-" + part))
+    else:
+        with open(marker + ".tmp", "w") as fh:
+            fh.write(sealed[:len(sealed) // 2])
+    assert committed_groups(out_dir) == {0, 1, 3}
+    assert {r["group"] for r in read_lineage(spark, out_dir).collect()} == {0, 1, 3}
+    r = run_job(spark, pages, out_dir, n_groups=4, partitions=8)
+    assert [p["group"] for p in r["processed"]] == [g] and r["complete"]
+    assert sorted(r["skipped_committed"]) == [0, 1, 3]
+    assert not os.path.exists(marker + ".tmp")
+    total = spark.read.parquet(out_dir + "/group=*")
+    assert total.count() == pages.count()
+    assert total.select("url").distinct().count() == pages.count()
+    assert read_lineage(spark, out_dir).count() == 4
+    _assert_observed(_marker(out_dir, g),
+                     spark.read.parquet(os.path.join(out_dir, f"group={g}")))
+
+
+# Runs `run_job` in its own local[2,2] session (a task may fail once)
+# with a pass after the kernel that lets every row through and then
+# fails the first attempt of partitions 0 and 3, leaving a flag file.
+_RETRY_CHILD = """
+import os, sys
+from pyspark import TaskContext
+from pyspark.sql import SparkSession
+from lexor_spark import job
+from lexor_spark.pages import pages_df
+
+sf_dir, out_dir, flags = sys.argv[1:]
+spark = (SparkSession.builder.master("local[2,2]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+extract = job.extract_pages
+
+def fail_first_attempt(batches):
+    yield from batches
+    ctx = TaskContext.get()
+    if ctx.partitionId() % 3 == 0 and ctx.attemptNumber() == 0:
+        open(os.path.join(flags, f"{ctx.stageId()}-{ctx.partitionId()}"), "w").close()
+        raise RuntimeError("forced first-attempt failure")
+
+job.extract_pages = lambda pages, partitions=None: extract(
+    pages, partitions=partitions).mapInArrow(fail_first_attempt,
+                                             job.OUTPUT_SCHEMA)
+job.run_job(spark, pages_df(spark, sf_dir).limit(150), out_dir,
+            n_groups=2, partitions=6)
+spark.stop()
+"""
+
+
+def test_observed_record_counts_retried_task_once(spark, sf_dir, tmp_path):
+    """A task whose first attempt failed after its rows passed the
+    observation counts once: each marker equals its group's rows."""
+    out_dir, flags = str(tmp_path / "out"), tmp_path / "failed_attempts"
+    flags.mkdir()
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(
+        filter(None, [root, os.environ.get("PYTHONPATH")]))}
+    subprocess.run([sys.executable, "-c", _RETRY_CHILD, sf_dir, out_dir,
+                    str(flags)], env=env, check=True, timeout=600,
+                   capture_output=True)
+    # partitions 0 and 3 of both groups' write failed once, then passed
+    assert sorted(int(n.split("-")[1]) for n in os.listdir(flags)) == \
+        [0, 0, 3, 3]
+    assert committed_groups(out_dir) == {0, 1}
+    for g in (0, 1):
+        _assert_observed(_marker(out_dir, g),
+                         spark.read.parquet(os.path.join(out_dir, f"group={g}")))
+
+
 def test_read_lineage_empty_dir(spark, tmp_path):
     """Zero committed groups is a valid state: empty DataFrame, not a
     missing-path crash."""
-    from lexor_spark.job import read_lineage
     lin = read_lineage(spark, str(tmp_path / "never_ran"))
     assert lin.count() == 0
     assert "group" in lin.columns and "n_rows" in lin.columns
@@ -214,6 +318,8 @@ def test_resume_table_commit(spark, pages):
         assert total.count() == pages.count()
         assert total.select("url").distinct().count() == pages.count()
         assert total.select("group").distinct().count() == 4
+        for p in r1["processed"] + r2["processed"]:
+            _assert_observed(p, total.filter(F.col("group") == p["group"]))
         r3 = run_job_table(spark, pages, table, n_groups=4, partitions=8)
         assert r3["processed"] == [] and r3["complete"]
     finally:
@@ -259,5 +365,10 @@ def test_table_create_clears_stale_location(spark, pages):
         r = run_job_table(spark, pages, table, n_groups=4, partitions=8)
         assert r["complete"]
         assert spark.table(table).count() == pages.count()
+        # the first group's observed frame ran again after the refused
+        # create; its record still counts its rows once
+        for p in r["processed"]:
+            _assert_observed(p, spark.table(table)
+                             .filter(F.col("group") == p["group"]))
     finally:
         spark.sql(f"drop table if exists {table}")
