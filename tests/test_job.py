@@ -75,9 +75,12 @@ def _assert_observed(record, rows):
         {k: int(v or 0) for k, v in back.items()}
 
 
-def _marker(out_dir, g):
+def _assert_marker_observed(spark, out_dir, g):
+    """Group ``g``'s marker holds the aggregates of its group dir."""
     with open(os.path.join(out_dir, "_lineage", f"group-{g}.json")) as fh:
-        return json.load(fh)
+        record = json.load(fh)
+    _assert_observed(record,
+                     spark.read.parquet(os.path.join(out_dir, f"group={g}")))
 
 
 def test_resume_after_kill(spark, pages, tmp_path):
@@ -107,8 +110,7 @@ def test_resume_after_kill(spark, pages, tmp_path):
     assert r3["processed"] == [] and r3["complete"]
     # each marker's observed record is what its group dir holds
     for g in range(4):
-        _assert_observed(_marker(out_dir, g),
-                         spark.read.parquet(os.path.join(out_dir, f"group={g}")))
+        _assert_marker_observed(spark, out_dir, g)
     # lineage table: one row per committed group, conserved row count
     lin = read_lineage(spark, out_dir)
     assert lin.count() == 4
@@ -233,8 +235,7 @@ def test_resume_redoes_unsealed_group(spark, pages, tmp_path, kill):
     assert total.count() == pages.count()
     assert total.select("url").distinct().count() == pages.count()
     assert read_lineage(spark, out_dir).count() == 4
-    _assert_observed(_marker(out_dir, g),
-                     spark.read.parquet(os.path.join(out_dir, f"group={g}")))
+    _assert_marker_observed(spark, out_dir, g)
 
 
 # Runs `run_job` in its own local[2,2] session (a task may fail once)
@@ -284,8 +285,7 @@ def test_observed_record_counts_retried_task_once(spark, sf_dir, tmp_path):
         [0, 0, 3, 3]
     assert committed_groups(out_dir) == {0, 1}
     for g in (0, 1):
-        _assert_observed(_marker(out_dir, g),
-                         spark.read.parquet(os.path.join(out_dir, f"group={g}")))
+        _assert_marker_observed(spark, out_dir, g)
 
 
 def test_read_lineage_empty_dir(spark, tmp_path):
