@@ -3452,10 +3452,10 @@ def _q_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WARC source surfaced in the gate (rows-only): pack the pages
     table into Common-Crawl-layout ``.warc.gz`` shards with the
     DISTRIBUTED shard packer (`warc_shards` applyInPandas — page bodies
-    never collect to the driver; only shard blobs do, in `write_warc`),
-    then run the read path: binaryFile scan → mapInPandas record split
-    → extraction.  Output must equal the parquet-sourced extraction
-    per url."""
+    never collect to the driver; `write_warc` streams the shard blobs,
+    one shuffle partition's at a time), then run the read path:
+    binaryFile scan → mapInPandas record split → extraction.  Output
+    must equal the parquet-sourced extraction per url."""
     import tempfile
 
     from lexor_spark.warc import read_warc, write_warc

@@ -343,41 +343,40 @@ def warc_shards(pages: DataFrame, url_col: str = "url",
         _pack, schema="shard long, n_records long, warc binary")
 
 
+def _write_shards(blobs: DataFrame, blob_col: str, output_dir: str,
+                  stem: str, compress: bool) -> int:
+    """Write each ``(shard, <blob_col>)`` row of ``blobs`` to
+    ``output_dir/<stem % shard>[.gz]``; returns the shard count.  The
+    rows reach the driver through ``toLocalIterator``: it holds one
+    shuffle partition's shard blobs at a time, never the whole corpus."""
+    import os
+
+    os.makedirs(output_dir, exist_ok=True)
+    n = 0
+    for row in blobs.toLocalIterator():
+        name = stem % row.shard + (".gz" if compress else "")
+        with open(os.path.join(output_dir, name), "wb") as fh:
+            fh.write(bytes(row[blob_col]))
+        n += 1
+    return n
+
+
 def write_warc(pages: DataFrame, output_dir: str, **kwargs) -> int:
-    """Materialize `warc_shards` as ``.warc(.gz)`` files under
-    ``output_dir``; returns the shard count.  Only shard BLOBS reach
-    the driver (bounded by the shard count), never row objects."""
-    import os
-
-    os.makedirs(output_dir, exist_ok=True)
-    n = 0
-    for row in warc_shards(pages, **kwargs).collect():
-        name = f"shard-{row.shard:05d}.warc"
-        if kwargs.get("compress", True):
-            name += ".gz"
-        with open(os.path.join(output_dir, name), "wb") as fh:
-            fh.write(bytes(row.warc))
-        n += 1
-    return n
+    """Materialize `warc_shards` as ``shard-NNNNN.warc(.gz)`` files under
+    ``output_dir``; returns the shard count.  The driver holds one
+    shuffle partition's shard blobs at a time (`_write_shards`), never
+    row objects and never the whole corpus."""
+    return _write_shards(warc_shards(pages, **kwargs), "warc", output_dir,
+                         "shard-%05d.warc", kwargs.get("compress", True))
 
 
-def write_wet(extracted: DataFrame, output_dir: str,
-              **kwargs) -> int:
-    """Materialize `wet_shards` as real ``.warc.wet.gz`` files under
-    ``output_dir`` (local-FS helper; named by shard id so a re-run
-    overwrites identically).  Returns the number of shards written."""
-    import os
-
-    os.makedirs(output_dir, exist_ok=True)
-    n = 0
-    for row in wet_shards(extracted, **kwargs).collect():
-        name = f"part-{row.shard:05d}.warc.wet"
-        if kwargs.get("compress", True):
-            name += ".gz"
-        with open(os.path.join(output_dir, name), "wb") as fh:
-            fh.write(bytes(row.wet))
-        n += 1
-    return n
+def write_wet(extracted: DataFrame, output_dir: str, **kwargs) -> int:
+    """Materialize `wet_shards` as ``part-NNNNN.warc.wet(.gz)`` files
+    under ``output_dir`` (named by shard id, so a re-run overwrites
+    identically); returns the shard count.  The driver holds one shuffle
+    partition's shard blobs at a time (`_write_shards`)."""
+    return _write_shards(wet_shards(extracted, **kwargs), "wet", output_dir,
+                         "part-%05d.warc.wet", kwargs.get("compress", True))
 
 
 # --- WAT output (metadata sidecar: the third Common-Crawl artifact) --------

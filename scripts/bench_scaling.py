@@ -1,242 +1,107 @@
-"""Two-parallelism scaling benchmark (BASELINE.json north_rule evidence).
+"""N→4N scaling verdict on perfbench's closed loop.
 
-No real multi-node cluster exists in this sandbox, so — per the driver's
-instruction — the N→4N *cluster-size* criterion is evidenced by running the
-IDENTICAL extraction job at two local parallelism levels on the SAME input
-and reporting throughput at both plus efficiency = (thru_4N / thru_N) / 4.
+Usage (from the repository root)::
 
-Each measurement is a fresh ``spark-submit``-equivalent subprocess (fresh
-JVM, fresh Python workers) so no warm-cache leaks between levels.
+    python3 scripts/bench_scaling.py
 
-Usage:
-    python scripts/bench_scaling.py              # run 8 vs 32, write BENCH/BASELINE.md
-    python scripts/bench_scaling.py --worker N   # internal: one measurement
+The levels come from this process's CPU affinity: 4N is the CPU count
+rounded down to a multiple of four and N is a quarter of it, so (1, 4) on
+four CPUs and (4, 16) on sixteen.  For every workload in
+``BENCHMARK.json`` the script runs ``abba.MIN_PAIRS`` pairs.  Pair ``i``
+runs both levels with seed ``1000 + i``, N first in even pairs and 4N
+first in odd ones (ABBA order).  Each run is one fresh
+``perfbench/run.py --trace 0`` pinned to the first N or 4N CPUs: the
+child inherits this process's affinity, so ``perfbench.session`` starts
+``local[N]`` or ``local[4N]``.
+
+A pair's efficiency is (docs_per_s at 4N / docs_per_s at N) / 4.  Per
+workload the script prints the efficiencies' median and quartiles, the
+verdict (MET when q1 >= 0.8, NOT MET when q3 < 0.8, else UNRESOLVED) and
+the median docs_per_s and cpu_us_per_doc at each level.  Every run's
+result is appended to ``.perfbench/scaling/runs.jsonl``.  The exit code
+is non-zero when a run raises or its output is not correct; NOT MET is a
+result, not a failure.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
+import statistics
 import sys
-import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-REPEAT = int(os.environ.get("BENCH_REPEAT", "96"))
-# (N, 4N) pairs to evidence; 4→16 is primary (within the box's linear
-# region), 8→32 reported alongside (saturates the whole host — see the
-# analysis written into BENCH/BASELINE.md).
-PAIRS = ((4, 16), (8, 32))
+from perfbench import abba  # noqa: E402
+
+TARGET = 0.8
+SEED0 = 1000
+LOG = os.path.join(ROOT, ".perfbench", "scaling", "runs.jsonl")
 
 
-def measure(cores: int) -> None:
-    """One timed extraction run at local[cores]; prints a JSON line."""
-    from pyspark.sql import functions as F  # noqa: F401
-    from pyspark.sql import SparkSession
-
-    from lexor_spark.job import extract_pages
-    from lexor_spark.pages import materialized_pages
-
-    spark = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(f"scaling-{cores}")
-        .config("spark.sql.shuffle.partitions", str(max(cores, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        # per-core-proportional heap: a real 4N-executor cluster brings
-        # 4N× the memory, so per-core memory is CONSTANT across cluster
-        # sizes — this is the honest single-box model of the N→4N rule.
-        # NOT a performance lever: run U (BENCH/BASELINE.md) A/B'd 8g vs
-        # 32g at 16 cores and measured a wash (ratio 0.895).
-        .config("spark.driver.memory",
-                os.environ.get("BENCH_DRIVER_MEM", f"{2 * cores}g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    pages = materialized_pages(spark, SF_DIR, REPEAT,
-                               os.path.join(REPO, ".bench"))
-    n_docs = pages.count()
-    total_bytes = pages.select(F.sum(F.length("html"))).collect()[0][0]
-    # warm-up pass: JIT + Python worker pool spin-up excluded from timing,
-    # exactly as cluster steady-state throughput would be measured
-    warm = pages.limit(2000)
-    extract_pages(warm).write.mode("overwrite").format("noop").save()
-    # best-of-3: the sandbox host shows run-to-run jitter (shared VM);
-    # min-wall is the standard throughput estimator under external noise
-    wall = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        extract_pages(pages).write.mode("overwrite").format("noop").save()
-        wall = min(wall, time.perf_counter() - t0)
-    print(json.dumps({
-        "cores": cores, "n_docs": n_docs, "html_bytes": int(total_bytes),
-        "wall_s": round(wall, 3), "docs_per_sec": round(n_docs / wall, 1),
-    }))
-    spark.stop()
+def levels(n_cpus: int) -> tuple[int, int]:
+    """(N, 4N) for a host with ``n_cpus`` CPUs."""
+    wide = n_cpus // 4 * 4
+    if wide < 4:
+        raise SystemExit(f"bench_scaling: N→4N needs at least 4 CPUs, "
+                         f"this process has {n_cpus}")
+    return wide // 4, wide
 
 
-def _ambient() -> dict:
-    """Host-condition snapshot (1-min loadavg + cumulative non-idle CPU
-    jiffies): recorded around every measurement so each run documents
-    its own validity — a shared-VM epoch that depresses one level shows
-    up here instead of being argued about after the fact."""
-    with open("/proc/loadavg") as fh:
-        load1 = float(fh.read().split()[0])
-    with open("/proc/stat") as fh:
-        parts = fh.readline().split()[1:]
-    vals = [int(x) for x in parts]
-    busy = sum(vals) - vals[3] - (vals[4] if len(vals) > 4 else 0)
-    return {"load1": load1, "busy_jiffies": busy}
+def verdict(efficiencies: list[float]) -> str:
+    q1, _, q3 = abba.quartiles(efficiencies)
+    if q1 >= TARGET:
+        return "MET"
+    return "NOT MET" if q3 < TARGET else "UNRESOLVED"
 
 
-def run_level(cores: int) -> dict:
-    # taskset confines the WHOLE process tree (JVM + Python workers) to
-    # `cores` CPUs — an N-core cluster does not get spare cores for shuffle
-    # and Arrow IPC, so neither may the N-core measurement.
-    amb0 = _ambient()
-    t0 = time.time()
-    out = subprocess.run(
-        ["taskset", "-c", f"0-{cores - 1}",
-         sys.executable, os.path.abspath(__file__), "--worker", str(cores)],
-        capture_output=True, text=True, cwd=REPO, timeout=1800,
-        env={**os.environ, "PYTHONPATH": REPO},
-    )
-    amb1 = _ambient()
-    line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
-    res = json.loads(line)
-    # whole-host CPU utilisation over the measurement window, in cores;
-    # subtracting the pinned allotment approximates EXTERNAL load
-    dt = max(time.time() - t0, 1e-9)
-    host_cores_busy = (amb1["busy_jiffies"] - amb0["busy_jiffies"]) / 100.0 / dt
-    res["ambient"] = {"load1_before": amb0["load1"],
-                      "load1_after": amb1["load1"],
-                      "host_cores_busy": round(host_cores_busy, 2),
-                      "external_est": round(max(0.0, host_cores_busy - cores), 2)}
-    return res
+def pinned_run(workload: str, seed: int, cpus: int, seconds: float) -> dict:
+    """One perfbench run whose process tree is pinned to ``cpus`` CPUs."""
+    saved = os.sched_getaffinity(0)
+    os.sched_setaffinity(0, sorted(saved)[:cpus])
+    try:
+        return abba.run_once(ROOT, workload, seed, seconds)
+    finally:
+        os.sched_setaffinity(0, saved)
 
 
-def main() -> None:
-    if len(sys.argv) >= 3 and sys.argv[1] == "--worker":
-        measure(int(sys.argv[2]))
-        return
-    if len(sys.argv) >= 2 and sys.argv[1] == "--interleaved":
-        interleaved(reps=int(os.environ.get("BENCH_INTERLEAVED_REPS", "3")))
-        return
-    cores = {c for pair in PAIRS for c in pair}
-    results = {c: run_level(c) for c in sorted(cores)}
-
-    def eff(lo: int, hi: int) -> float:
-        return (results[hi]["docs_per_sec"] / results[lo]["docs_per_sec"]) / (hi / lo)
-
-    pair_rows = []
-    for lo, hi in PAIRS:
-        e = eff(lo, hi)
-        pair_rows.append(
-            f"| local[{lo}] → local[{hi}] | {results[lo]['docs_per_sec']} | "
-            f"{results[hi]['docs_per_sec']} | **{e:.3f}** | "
-            f"{'MET' if e >= 0.8 else 'NOT MET'} |")
-    lo0, hi0 = PAIRS[0]
-    n_docs = results[lo0]["n_docs"]
-    level_rows = "\n".join(
-        f"| local[{c}] | {results[c]['wall_s']} | {results[c]['docs_per_sec']} | "
-        f"{results[c]['docs_per_sec'] / c:.0f} |" for c in sorted(cores))
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    # single-run report; BENCH/BASELINE.md is the curated multi-run
-    # document (assembled from these) and is not overwritten here
-    md = os.path.join(REPO, "BENCH", "last_run.md")
-    with open(md, "w") as fh:
-        fh.write(f"""# BENCH/last_run.md — one scaling-protocol run
-
-Protocol: BASELINE.md §Measurement protocol. Identical extraction job
-(`lexor_spark.job.extract_pages`: repartition on the url hash →
-`mapInArrow` fused kernel → noop sink), same
-input ({n_docs} pages, {results[lo0]['html_bytes']:,} html bytes, pages
-table materialized once to parquet from `pages_df('{SF_DIR}',
-repeat={REPEAT})`), each parallelism level a fresh JVM subprocess pinned
-with `taskset -c 0-(cores-1)` so an N-core measurement gets exactly N CPUs
-(JVM + Python workers included), as an N-executor cluster would. Sandbox
-stand-in for N vs 4N executors per driver instruction (no real cluster
-here). Warm-up pass (2k docs) excluded from timing — steady-state
-throughput, as on a cluster; timed section is the full distributed
-scan→exchange→extract action.
-
-## Per-level throughput
-
-| parallelism | wall (s) | docs/sec | docs/sec/core |
-|---|---|---|---|
-{level_rows}
-
-## N → 4N scaling efficiency, eff = (thru_4N / thru_N) / 4
-
-| pair | thru_N | thru_4N | efficiency | ≥0.8? |
-|---|---|---|---|---|
-{chr(10).join(pair_rows)}
-
-## Reading the numbers
-
-The primary pair is **4 → 16 cores**: per-core throughput is flat across
-that whole range (see table — the work is embarrassingly parallel per
-url; no shared state, no shuffle bottleneck: the url-hash exchange is
-<5% of wall at every level). The 8 → 32 pair is reported too: its lower
-efficiency is a single-box measurement artifact, not a pipeline property —
-at 32-of-32 cores the Spark driver JVM, the OS, and the measurement
-harness contend with the 32 Python kernel workers for the machine's
-cores and memory bandwidth (a pure-`multiprocessing` run of the same
-kernel with no Spark at all shows the same knee: ~2000
-docs/sec/proc at 1-16 procs, ~1360 at 32). On a real cluster, 4N
-executors bring 4N cores *and* 4N memory channels, so the 4→16 regime —
-not the saturated 8→32 one — is the faithful stand-in. Design properties
-that carry to 10^12 docs: per-url purity (no cross-partition state),
-exchange keyed on the url itself (uniform spread of giant-page runs),
-4×-slots task granularity (tail hiding), Arrow batch cap 2048 rows
-(bounded batch latency under megabyte blobs).
-
-Config: `spark.sql.execution.arrow.maxRecordsPerBatch=2048`,
-`spark.sql.shuffle.partitions=cores`, AQE on, partitions=4×cores,
-cyclic GC off in workers (trees freed by explicit cycle-breaking
-`dispose`). Host: {os.cpu_count()} cores, fixed 2.1 GHz.
-""")
-    print(json.dumps({
-        "levels": results,
-        "pairs": {f"{lo}->{hi}": round(eff(lo, hi), 3) for lo, hi in PAIRS},
-        "met_primary": eff(*PAIRS[0]) >= 0.8,
-    }))
-
-
-def interleaved(lo: int = 4, hi: int = 16, reps: int = 3) -> None:
-    """Jitter-robust estimator for the primary pair: alternate the two
-    levels in time so a noisy host epoch hits both levels alike, then
-    take per-level medians.  Each subprocess is one full confined
-    measurement (fresh JVM, warm-up, best-of-3).
-
-    Within-pair order is COUNTERBALANCED (ABBA: rep 0 runs lo,hi; rep 1
-    runs hi,lo; ...).  A fixed lo-first order protects the ratio only
-    under a stationary epoch; run X (BENCH/BASELINE.md) decayed
-    monotonically through its ~50-minute window and the level run
-    second in every pair — always the wide one — absorbed the whole
-    drift.  Balanced ordering makes linear drift cancel in the
-    per-level medians instead of loading onto one level."""
-    import statistics
-    seq: list[tuple[int, float]] = []
-    for rep in range(reps):
-        order = (lo, hi) if rep % 2 == 0 else (hi, lo)
-        for cores in order:
-            r = run_level(cores)
-            seq.append((cores, r["docs_per_sec"]))
-            print(json.dumps({"cores": cores,
-                              "docs_per_sec": r["docs_per_sec"],
-                              "ambient": r.get("ambient")}),
-                  flush=True)
-    med = {c: statistics.median(v for cc, v in seq if cc == c)
-           for c in (lo, hi)}
-    eff = (med[hi] / med[lo]) / (hi / lo)
-    print(json.dumps({"interleaved": seq, "median": med,
-                      "efficiency": round(eff, 3), "met": eff >= 0.8}))
+def main() -> int:
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
+        spec = json.load(fh)
+    lo, hi = levels(len(os.sched_getaffinity(0)))
+    os.makedirs(os.path.dirname(LOG), exist_ok=True)
+    with open(LOG, "a") as log:
+        for workload in (w["name"] for w in spec["workloads"]):
+            runs: dict[int, list[dict]] = {lo: [], hi: []}
+            for i in range(abba.MIN_PAIRS):
+                for cpus in ((lo, hi) if i % 2 == 0 else (hi, lo)):
+                    r = pinned_run(workload, SEED0 + i, cpus, spec["run_seconds"])
+                    log.write(json.dumps({"workload": workload, "pair": i,
+                                          "cpus": cpus, "result": r}) + "\n")
+                    log.flush()
+                    if not r["correct"]:
+                        print(f"{workload} pair {i} local[{cpus}]: output not correct",
+                              file=sys.stderr)
+                        return 1
+                    runs[cpus].append(r)
+                    print(f"{workload} pair {i} local[{cpus}] seed {SEED0 + i}: "
+                          f"{r['metrics']['docs_per_s']['value']:.1f} docs/s",
+                          file=sys.stderr, flush=True)
+            docs = {c: [r["metrics"]["docs_per_s"]["value"] for r in runs[c]]
+                    for c in (lo, hi)}
+            effs = [(w / n) / (hi / lo) for n, w in zip(docs[lo], docs[hi])]
+            q1, med, q3 = abba.quartiles(effs)
+            print(f"{workload}: local[{lo}] → local[{hi}] efficiency {med:.3f} "
+                  f"[{q1:.3f}, {q3:.3f}] over {len(effs)} pairs: {verdict(effs)}")
+            print(f"  per pair: {', '.join(f'{e:.3f}' for e in effs)}")
+            for c in (lo, hi):
+                cpu = [r["metrics"]["cpu_us_per_doc"]["value"] for r in runs[c]]
+                print(f"  local[{c}]: docs_per_s {statistics.median(docs[c]):.1f}, "
+                      f"cpu_us_per_doc {statistics.median(cpu):.1f}, "
+                      f"docs per run {statistics.median(r['attempted'] for r in runs[c]):.0f}")
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
