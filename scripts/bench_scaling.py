@@ -97,9 +97,10 @@ def main() -> int:
             print(f"  per pair: {', '.join(f'{e:.3f}' for e in effs)}")
             for c in (lo, hi):
                 cpu = [r["metrics"]["cpu_us_per_doc"]["value"] for r in runs[c]]
+                attempted = [r["attempted"] for r in runs[c]]
                 print(f"  local[{c}]: docs_per_s {statistics.median(docs[c]):.1f}, "
                       f"cpu_us_per_doc {statistics.median(cpu):.1f}, "
-                      f"docs per run {statistics.median(r['attempted'] for r in runs[c]):.0f}")
+                      f"docs per run {statistics.median(attempted):.0f}")
     return 0
 
 
