@@ -309,54 +309,51 @@ def _md_value(el) -> str:
     return _node_text(el)
 
 
-def _md_props(item, out: list) -> None:
-    """Document-order (path, value) properties of one top-level item.
+def _item_props(item, scope: str, prop: str, value_of) -> list:
+    """Document-order (path, value) properties of one top-level item —
+    the one walk behind microdata (``itemscope``/``itemprop``) and RDFa
+    Lite 1.1 (``typeof``/``property``, the subset real
+    schema.org-in-RDFa markup uses).
 
     Iterative DFS (hostile nesting must not recurse); each stack entry
     carries the dotted prefix its subtree's props emit under.  Per the
-    WHATWG crawl rules: an ``itemprop`` WITHOUT ``itemscope`` emits a
-    value (one row per whitespace-separated name) and its subtree keeps
-    contributing to the SAME item; an ``itemprop`` WITH ``itemscope``
-    is a nested item — its subtree's props emit under ``name.`` — and
-    an ``itemscope`` without ``itemprop`` below an item is a DIFFERENT
-    top-level item, so its subtree is skipped here (it gets its own
-    item_idx from the outer scan)."""
+    WHATWG crawl rules: a ``prop`` WITHOUT ``scope`` emits
+    ``value_of(el)`` (one row per whitespace-separated name) and its
+    subtree keeps contributing to the SAME item; a ``prop`` WITH
+    ``scope`` is a nested item — its subtree's props emit under
+    ``name.`` — and a ``scope`` without ``prop`` below an item is a
+    DIFFERENT top-level item, so its subtree is skipped here (it gets
+    its own item_idx from :func:`_item_rows`)."""
+    out = []
     stack = [(c, "") for c in reversed(item.children)]
     while stack:
         nd, pfx = stack.pop()
         attrs = getattr(nd, "attrs", None)
         if attrs is None:
-            continue  # text/comment/entity nodes carry no microdata
-        names = (attrs.get("itemprop") or "").split()
-        scoped = "itemscope" in attrs
-        if names and scoped:
-            kids = getattr(nd, "children", None)
-            if kids:
-                # push once per name, reversed so multi-name prefixes
-                # emit in attribute order
-                for nm in reversed(names):
-                    npfx = f"{pfx}{nm}."
-                    stack.extend((c, npfx) for c in reversed(kids))
-        elif names:
-            for nm in names:
-                out.append((pfx + nm, _md_value(nd)))
-            kids = getattr(nd, "children", None)
-            if kids:
-                stack.extend((c, pfx) for c in reversed(kids))
-        elif scoped:
+            continue  # text/comment/entity nodes carry no properties
+        names = (attrs.get(prop) or "").split()
+        scoped = scope in attrs
+        if scoped and not names:
             continue  # someone else's top-level item
-        else:
-            kids = getattr(nd, "children", None)
-            if kids:
-                stack.extend((c, pfx) for c in reversed(kids))
+        kids = getattr(nd, "children", None) or ()
+        if names and scoped:
+            # push once per name, reversed so multi-name prefixes emit
+            # in attribute order
+            for nm in reversed(names):
+                npfx = f"{pfx}{nm}."
+                stack.extend((c, npfx) for c in reversed(kids))
+            continue
+        out += [(pfx + nm, value_of(nd)) for nm in names]
+        stack.extend((c, pfx) for c in reversed(kids))
+    return out
 
 
 def _item_rows(url, doc, scope: str, prop: str, type_attr: str,
-               props_of) -> list[tuple]:
+               value_of) -> list[tuple]:
     """Rows of every top-level item — an element carrying the ``scope``
     attribute but not the ``prop`` one — numbered in document order,
-    typed by its ``type_attr`` value, with ``props_of(item, out)``
-    supplying its (path, value) pairs."""
+    typed by its ``type_attr`` value, with :func:`_item_props` supplying
+    its (path, value) pairs through ``value_of``."""
     rows = []
     item_idx = 0
     for el in doc.iter():
@@ -365,17 +362,16 @@ def _item_rows(url, doc, scope: str, prop: str, type_attr: str,
             continue
         kind = attrs.get(type_attr)
         kind = kind.strip() if kind else None
-        props: list = []
-        props_of(el, props)
         rows += [(url, item_idx, kind, prop_idx, path, value)
-                 for prop_idx, (path, value) in enumerate(props)]
+                 for prop_idx, (path, value) in enumerate(
+                     _item_props(el, scope, prop, value_of))]
         item_idx += 1
     return rows
 
 
 _microdata_batches = _page_udf(_MICRODATA_ARROW, _on_dom(
     lambda url, doc: _item_rows(url, doc, "itemscope", "itemprop",
-                                "itemtype", _md_props)))
+                                "itemtype", _md_value)))
 
 
 def extract_microdata(pages: DataFrame,
@@ -432,47 +428,9 @@ def _rdfa_value(el) -> str:
     return _node_text(el)
 
 
-def _rdfa_props(item, out: list) -> None:
-    """Document-order (path, value) properties of one top-level RDFa
-    item — the ``typeof``/``property`` analogue of :func:`_md_props`
-    (RDFa Lite 1.1, the subset real schema.org-in-RDFa markup uses).
-    Iterative DFS; each stack entry carries its dotted prefix.  An
-    element with ``property`` WITHOUT ``typeof`` emits one row per
-    whitespace-separated property name and its subtree keeps feeding
-    the same item; ``property`` WITH ``typeof`` is a nested item whose
-    subtree emits under ``name.``; ``typeof`` without ``property`` is
-    a DIFFERENT top-level item, so its subtree is skipped here."""
-    stack = [(c, "") for c in reversed(item.children)]
-    while stack:
-        nd, pfx = stack.pop()
-        attrs = getattr(nd, "attrs", None)
-        if attrs is None:
-            continue  # text/comment/entity nodes carry no RDFa
-        names = (attrs.get("property") or "").split()
-        typed = "typeof" in attrs
-        if names and typed:
-            kids = getattr(nd, "children", None)
-            if kids:
-                for nm in reversed(names):
-                    npfx = f"{pfx}{nm}."
-                    stack.extend((c, npfx) for c in reversed(kids))
-        elif names:
-            for nm in names:
-                out.append((pfx + nm, _rdfa_value(nd)))
-            kids = getattr(nd, "children", None)
-            if kids:
-                stack.extend((c, pfx) for c in reversed(kids))
-        elif typed:
-            continue  # someone else's top-level item
-        else:
-            kids = getattr(nd, "children", None)
-            if kids:
-                stack.extend((c, pfx) for c in reversed(kids))
-
-
 _rdfa_batches = _page_udf(_RDFA_ARROW, _on_dom(
     lambda url, doc: _item_rows(url, doc, "typeof", "property", "typeof",
-                                _rdfa_props)))
+                                _rdfa_value)))
 
 
 def extract_rdfa(pages: DataFrame,

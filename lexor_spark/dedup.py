@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from lexor_spark.textfns import SQL, fingerprint, md5_u32, normalize_text
 
 __all__ = [
-    "shingles", "exact_dedup", "minhash_signature", "lsh_pairs",
+    "exact_dedup", "minhash_signature", "lsh_pairs",
     "jaccard_pairs", "containment_pairs",
     "containment_pairs_sql", "simhash_df", "decontam_overlap", "span_dedup",
     "host_boilerplate", "dup_clusters", "cluster_keepers",
@@ -64,25 +64,6 @@ def _spread(docs: DataFrame) -> DataFrame:
     if current >= target:
         return docs
     return docs.repartition(target)
-
-
-def shingles(col: Column, n: int = SHINGLE_N) -> Column:
-    """Distinct word n-gram shingles of the normalized text (array<string>).
-    Documents shorter than n words get their whole text as one shingle so
-    they still participate in dedup.
-
-    PERF HAZARD: ``toks`` is inlined into the transform lambda, so the
-    full normalize+split recomputes PER SHINGLE — O(len²) per document.
-    Production call sites use :func:`shingles_df`, which materializes
-    the token array behind a projection boundary first; this Column
-    form survives for single-expression contexts and as the semantics
-    reference for the SQL mirror."""
-    toks = F.split(normalize_text(col), " ")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-    )
-    return F.array_distinct(grams)
 
 
 def shingles_df(docs: DataFrame, cols: list, text_col: str = "text",

@@ -318,7 +318,7 @@ def dup_line_char_fraction(col: Column) -> Column:
 
 
 def _bigrams(col: Column) -> Column:
-    """Word 2-grams WITH multiplicity (unlike dedup.shingles, which is
+    """Word 2-grams WITH multiplicity (unlike dedup.shingles_df, which is
     distinct and pads short docs); < 2 words → empty array.  Token
     split is let-bound: inlined into the transform lambda it would
     re-run per bigram — O(len²) per row."""

@@ -201,26 +201,86 @@ def read_warc(spark, path: str, responses_only: bool = True) -> DataFrame:
     return warc_records(shards, responses_only=responses_only)
 
 
+_EPOCH = "1970-01-01T00:00:00Z"  # WARC-Date of records without a timestamp
+
+
+def _records(warc_type: str, content_type: str, records,
+             compress: bool) -> bytes:
+    """Serialize (url, iso_ts, body_bytes) triples as WARC records of
+    one type — the one record writer behind `build_warc`,
+    `build_wet` and `build_wat`.  Headers are UTF-8 (ISO 28500 permits
+    it): IRI urls with non-Latin characters are common in crawl data and
+    must not fail the packing task.  Deterministic bytes; one gzip
+    member per record (mtime pinned to 0) when ``compress``, the
+    Common-Crawl layout."""
+    out = []
+    for url, ts, body in records:
+        head = ("WARC/1.0\r\n"
+                f"WARC-Type: {warc_type}\r\n"
+                f"WARC-Target-URI: {url}\r\n"
+                f"WARC-Date: {ts}\r\n"
+                f"Content-Type: {content_type}\r\n"
+                f"Content-Length: {len(body)}\r\n\r\n").encode("utf-8")
+        rec = head + body + b"\r\n\r\n"
+        out.append(gzip.compress(rec, mtime=0) if compress else rec)
+    return b"".join(out)
+
+
 def build_warc(records: list[tuple[str, str, bytes]],
                compress: bool = False) -> bytes:
     """Serialize (url, iso_ts, html_bytes) triples into a valid WARC
     shard (response records wrapping an HTTP/1.1 200).  Test/benchmark
     generator — deterministic bytes, per-record gzip members when
     ``compress`` (the Common-Crawl layout)."""
-    out = []
-    for url, ts, html in records:
-        http = (b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
-                b"Content-Length: " + str(len(html)).encode() +
-                b"\r\n\r\n" + html)
-        head = ("WARC/1.0\r\n"
-                "WARC-Type: response\r\n"
-                f"WARC-Target-URI: {url}\r\n"
-                f"WARC-Date: {ts}\r\n"
-                "Content-Type: application/http; msgtype=response\r\n"
-                f"Content-Length: {len(http)}\r\n\r\n").encode("utf-8")
-        rec = head + http + b"\r\n\r\n"
-        out.append(gzip.compress(rec, mtime=0) if compress else rec)
-    return b"".join(out)
+    http = (b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
+            b"Content-Length: %d\r\n\r\n")
+    return _records("response", "application/http; msgtype=response",
+                    ((url, ts, http % len(html) + html)
+                     for url, ts, html in records), compress)
+
+
+def _shards(df: DataFrame, url_col: str, payload, ts_col: Optional[str],
+            shards: Optional[int], build, blob_col: str,
+            compress: bool) -> DataFrame:
+    """The one shard packer behind `warc_shards`, `wet_shards` and
+    `wat_shards`: one row per shard, ``(shard, n_records, <blob_col>
+    binary)``, the blob being ``build(records, compress=compress)`` over
+    the shard's (url, iso_ts, payload) triples.
+
+    Shared contract: rows without a url are dropped (WARC cannot
+    address them; degrade, don't fail) and a missing ``ts_col`` or value
+    reads as the epoch.  Shard membership is ``pmod(xxhash64(url),
+    shards)``, so one shuffle on that key and one Arrow-batched
+    grouped-map pandas task per shard.  Each shard is stable-sorted on
+    the total key ``(url, ts, payload)``: re-fetches of one url never
+    leave record order to shuffle arrival, so a re-run, a resume or a
+    different input partitioning gives byte-identical shards.  Blobs as
+    rows are the portable form at 100 TB: any sink can write them
+    without executor filesystem access, and page bodies never land in
+    driver memory (`write_warc` / `write_wet` materialize local
+    files)."""
+    import pandas as pd
+
+    if shards is None:
+        shards = df.sparkSession.sparkContext.defaultParallelism
+    ts = (F.date_format(F.col(ts_col), "yyyy-MM-dd'T'HH:mm:ss'Z'")
+          if ts_col else F.lit(_EPOCH))
+    rows = (df.filter(F.col(url_col).isNotNull())
+            .select(F.col(url_col).alias("url"), payload.alias("payload"),
+                    F.coalesce(ts, F.lit(_EPOCH)).alias("ts"),
+                    F.pmod(F.xxhash64(url_col), F.lit(shards))
+                    .alias("shard")))
+
+    def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(["url", "ts", "payload"], kind="mergesort")
+        blob = build(list(zip(pdf["url"], pdf["ts"], pdf["payload"])),
+                     compress=compress)
+        return pd.DataFrame({"shard": [int(pdf["shard"].iloc[0])],
+                             "n_records": [len(pdf)],
+                             blob_col: [blob]})
+
+    return rows.groupBy("shard").applyInPandas(
+        _pack, schema=f"shard long, n_records long, {blob_col} binary")
 
 
 # --- WET output (the Common-Crawl round-trip's write side) -----------------
@@ -229,73 +289,21 @@ def build_wet(records: list[tuple[str, str, str]],
               compress: bool = True) -> bytes:
     """Serialize (url, iso_ts, text) triples as a WET shard — WARC
     ``conversion`` records with a ``text/plain`` payload, the layout
-    Common Crawl publishes extracted text in.  Deterministic bytes
-    (gzip mtime pinned to 0); per-record gzip members when
-    ``compress``."""
-    out = []
-    for url, ts, text in records:
-        body = (text or "").encode("utf-8")
-        # headers are UTF-8 (ISO 28500 permits it): IRI urls with
-        # non-Latin characters are common in crawl data and must not
-        # fail the packing task
-        head = ("WARC/1.0\r\n"
-                "WARC-Type: conversion\r\n"
-                f"WARC-Target-URI: {url}\r\n"
-                f"WARC-Date: {ts}\r\n"
-                "Content-Type: text/plain\r\n"
-                f"Content-Length: {len(body)}\r\n\r\n").encode("utf-8")
-        rec = head + body + b"\r\n\r\n"
-        out.append(gzip.compress(rec, mtime=0) if compress else rec)
-    return b"".join(out)
+    Common Crawl publishes extracted text in (None text → empty)."""
+    return _records("conversion", "text/plain",
+                    ((url, ts, (text or "").encode("utf-8"))
+                     for url, ts, text in records), compress)
 
 
 def wet_shards(extracted: DataFrame, url_col: str = "url",
                text_col: str = "text", ts_col: str = None,
                shards: int = None, compress: bool = True) -> DataFrame:
     """Pack extracted text into WET shard blobs: one row per shard,
-    ``(shard, n_records, wet binary)``.
-
-    Spark-first shape: rows are bucketed by ``pmod(xxhash64(url),
-    shards)`` (deterministic shard membership — a re-run or resume
-    produces byte-identical shards regardless of task placement, because
-    each shard's records are sorted by url before packing), shuffled
-    once on that key, and each shard is assembled by one task inside an
-    Arrow-batched ``applyInPandas``.  The blobs-as-rows form is the
-    portable one at 100 TB: any sink (parquet/Iceberg/object-store
-    uploader) can write it without executors needing filesystem access;
-    `write_wet` is the local-FS convenience that materializes real
-    ``.warc.wet.gz`` files from it."""
-    import pandas as pd
-
-    spark = extracted.sparkSession
-    if shards is None:
-        shards = spark.sparkContext.defaultParallelism
-    ts = (F.date_format(F.col(ts_col), "yyyy-MM-dd'T'HH:mm:ss'Z'")
-          if ts_col else F.lit("1970-01-01T00:00:00Z"))
-    rows = (extracted
-            # degrade-don't-fail: a record without a URI cannot be
-            # addressed in WARC (dropped); null text becomes empty
-            .filter(F.col(url_col).isNotNull())
-            .select(F.col(url_col).alias("url"),
-                    F.coalesce(F.col(text_col), F.lit("")).alias("text"),
-                    F.coalesce(ts, F.lit("1970-01-01T00:00:00Z"))
-                    .alias("ts"),
-                    F.pmod(F.xxhash64(url_col), F.lit(shards))
-                    .alias("shard")))
-
-    def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        # total sort key + stable sort: duplicate urls (re-fetches) must
-        # not leave record order to shuffle arrival, or re-runs produce
-        # different shard bytes
-        pdf = pdf.sort_values(["url", "ts", "text"], kind="mergesort")
-        blob = build_wet(list(zip(pdf["url"], pdf["ts"], pdf["text"])),
-                         compress=compress)
-        return pd.DataFrame({"shard": [int(pdf["shard"].iloc[0])],
-                             "n_records": [len(pdf)],
-                             "wet": [blob]})
-
-    return rows.groupBy("shard").applyInPandas(
-        _pack, schema="shard long, n_records long, wet binary")
+    ``(shard, n_records, wet binary)``; null text packs as empty.  See
+    `_shards` for the distributed contract."""
+    return _shards(extracted, url_col,
+                   F.coalesce(F.col(text_col), F.lit("")), ts_col, shards,
+                   build_wet, "wet", compress)
 
 
 def warc_shards(pages: DataFrame, url_col: str = "url",
@@ -304,43 +312,14 @@ def warc_shards(pages: DataFrame, url_col: str = "url",
     """Pack a pages table into WARC response-shard blobs: one row per
     shard, ``(shard, n_records, warc binary)`` — the `wet_shards` shape
     on the INPUT side (response records wrapping HTTP 200 around the
-    raw html bytes).
-
-    Same distributed contract: deterministic shard membership by
-    ``pmod(xxhash64(url), shards)``, one shuffle, one packing task per
-    shard inside ``applyInPandas``, records sorted by url before
-    packing so re-runs produce byte-identical shards.  Replaces the
-    driver-side collect-and-pack fixture loop — page bodies never land
-    in driver memory (VERDICT r2 'What's wrong' #5)."""
-    import pandas as pd
-
-    spark = pages.sparkSession
-    if shards is None:
-        shards = spark.sparkContext.defaultParallelism
-    ts = (F.date_format(F.col(ts_col), "yyyy-MM-dd'T'HH:mm:ss'Z'")
-          if ts_col else F.lit("1970-01-01T00:00:00Z"))
-    rows = (pages
-            .filter(F.col(url_col).isNotNull()
-                    & F.col(html_col).isNotNull())
-            .select(F.col(url_col).alias("url"),
-                    F.col(html_col).alias("html"),
-                    F.coalesce(ts, F.lit("1970-01-01T00:00:00Z"))
-                    .alias("ts"),
-                    F.pmod(F.xxhash64(url_col), F.lit(shards))
-                    .alias("shard")))
-
-    def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["url", "ts"], kind="mergesort")
-        blob = build_warc(
-            [(u, t, bytes(h)) for u, t, h in
-             zip(pdf["url"], pdf["ts"], pdf["html"])],
-            compress=compress)
-        return pd.DataFrame({"shard": [int(pdf["shard"].iloc[0])],
-                             "n_records": [len(pdf)],
-                             "warc": [blob]})
-
-    return rows.groupBy("shard").applyInPandas(
-        _pack, schema="shard long, n_records long, warc binary")
+    raw html bytes; rows with null html are dropped).  See `_shards`
+    for the distributed contract."""
+    return _shards(
+        pages.filter(F.col(html_col).isNotNull()), url_col, F.col(html_col),
+        ts_col, shards,
+        lambda recs, compress: build_warc(
+            [(url, ts, bytes(html)) for url, ts, html in recs], compress),
+        "warc", compress)
 
 
 def _write_shards(blobs: DataFrame, blob_col: str, output_dir: str,
@@ -386,56 +365,22 @@ def build_wat(records: list[tuple[str, str, str]],
     """Serialize (url, iso_ts, json_payload) triples as a WAT shard —
     WARC ``metadata`` records with an ``application/json`` payload, the
     layout Common Crawl publishes page metadata (head metas, links) in.
-    Deterministic bytes (gzip mtime 0, payload passed in pre-built so
-    the caller controls key order)."""
-    out = []
-    for url, ts, payload in records:
-        body = (payload or "{}").encode("utf-8")
-        head = ("WARC/1.0\r\n"
-                "WARC-Type: metadata\r\n"
-                f"WARC-Target-URI: {url}\r\n"
-                f"WARC-Date: {ts}\r\n"
-                "Content-Type: application/json\r\n"
-                f"Content-Length: {len(body)}\r\n\r\n").encode("utf-8")
-        rec = head + body + b"\r\n\r\n"
-        out.append(gzip.compress(rec, mtime=0) if compress else rec)
-    return b"".join(out)
+    The payload is passed in pre-built so the caller controls key order
+    (None → ``{}``)."""
+    return _records("metadata", "application/json",
+                    ((url, ts, (payload or "{}").encode("utf-8"))
+                     for url, ts, payload in records), compress)
 
 
 def wat_shards(meta: DataFrame, url_col: str = "url",
                payload_col: str = "wat_json", ts_col: str = None,
                shards: int = None, compress: bool = True) -> DataFrame:
-    """Pack per-page metadata JSON into WAT shard blobs — identical
-    distributed contract to :func:`wet_shards` (deterministic url-hash
-    shard membership, one shuffle, per-shard total-order sort, one
-    Arrow-batched packing task per shard, blobs-as-rows so any sink can
-    write them)."""
-    import pandas as pd
-
-    spark = meta.sparkSession
-    if shards is None:
-        shards = spark.sparkContext.defaultParallelism
-    ts = (F.date_format(F.col(ts_col), "yyyy-MM-dd'T'HH:mm:ss'Z'")
-          if ts_col else F.lit("1970-01-01T00:00:00Z"))
-    rows = (meta.filter(F.col(url_col).isNotNull())
-            .select(F.col(url_col).alias("url"),
-                    F.coalesce(F.col(payload_col), F.lit("{}"))
-                    .alias("payload"),
-                    F.coalesce(ts, F.lit("1970-01-01T00:00:00Z"))
-                    .alias("ts"),
-                    F.pmod(F.xxhash64(url_col), F.lit(shards))
-                    .alias("shard")))
-
-    def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["url", "ts", "payload"], kind="mergesort")
-        blob = build_wat(list(zip(pdf["url"], pdf["ts"], pdf["payload"])),
-                         compress=compress)
-        return pd.DataFrame({"shard": [int(pdf["shard"].iloc[0])],
-                             "n_records": [len(pdf)],
-                             "wat": [blob]})
-
-    return rows.groupBy("shard").applyInPandas(
-        _pack, schema="shard long, n_records long, wat binary")
+    """Pack per-page metadata JSON into WAT shard blobs: one row per
+    shard, ``(shard, n_records, wat binary)``; null payload packs as
+    ``{}``.  See `_shards` for the distributed contract."""
+    return _shards(meta, url_col,
+                   F.coalesce(F.col(payload_col), F.lit("{}")), ts_col,
+                   shards, build_wat, "wat", compress)
 
 
 _WAT_ARROW = pa.schema([("url", pa.string()), ("wat_json", pa.string())])

@@ -4,18 +4,20 @@ names, order-insensitive value comparison).  Each entry's result line is
 followed by its Spark and DuckDB walls; the last line is the tally:
 ``OK n / rows-only n (empty k) / FAIL n / sweep <s> s``.
 
-Usage: PYTHONPATH=/root/repo python scripts/check_oracles.py [name ...]
+Usage: python scripts/check_oracles.py [name ...]  (imports its own checkout)
 """
 
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = ("region nation customer supplier part orders lineitem events "

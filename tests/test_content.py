@@ -242,22 +242,11 @@ def test_extract_jsonld_spark(spark):
 
 def _microdata(html: str):
     """(item_idx, itemtype, path, value) rows via the same walk the
-    Arrow kernel runs (content._md_props)."""
-    from lexor_spark.content import _md_props
+    Arrow kernel runs (content._item_rows)."""
+    from lexor_spark.content import _item_rows, _md_value
     doc, _ = parse_html(html, "u")
-    out = []
-    item_idx = 0
-    for el in doc.iter():
-        attrs = getattr(el, "attrs", None)
-        if not attrs or "itemscope" not in attrs or "itemprop" in attrs:
-            continue
-        itype = (attrs.get("itemtype") or "").strip() or None
-        props: list = []
-        _md_props(el, props)
-        for path, value in props:
-            out.append((item_idx, itype, path, value))
-        item_idx += 1
-    return out
+    return [(i, t, path, v) for _, i, t, _, path, v in _item_rows(
+        "u", doc, "itemscope", "itemprop", "itemtype", _md_value)]
 
 
 def test_microdata_nested_item_dotted_path_and_value_rules():
@@ -331,22 +320,11 @@ def test_extract_microdata_spark(spark):
 
 def _rdfa(html: str):
     """(item_idx, typeof, path, value) rows via the same walk the
-    Arrow kernel runs (content._rdfa_props)."""
-    from lexor_spark.content import _rdfa_props
+    Arrow kernel runs (content._item_rows)."""
+    from lexor_spark.content import _item_rows, _rdfa_value
     doc, _ = parse_html(html, "u")
-    out = []
-    item_idx = 0
-    for el in doc.iter():
-        attrs = getattr(el, "attrs", None)
-        if not attrs or "typeof" not in attrs or "property" in attrs:
-            continue
-        ty = (attrs.get("typeof") or "").strip() or None
-        props: list = []
-        _rdfa_props(el, props)
-        for path, value in props:
-            out.append((item_idx, ty, path, value))
-        item_idx += 1
-    return out
+    return [(i, t, path, v) for _, i, t, _, path, v in _item_rows(
+        "u", doc, "typeof", "property", "typeof", _rdfa_value)]
 
 
 def test_rdfa_nested_item_dotted_path_and_content_override():

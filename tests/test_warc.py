@@ -207,6 +207,20 @@ def test_wet_duplicate_urls_stable_bytes(spark):
     assert mk(1) == mk(7)
 
 
+def test_warc_duplicate_urls_stable_bytes(spark):
+    """Re-fetched pages (same url, no timestamp, different html): WARC
+    shard bytes must be partitioning-invariant too (the packer's total
+    sort key, stable sort)."""
+    from lexor_spark.warc import warc_shards
+
+    rows = [("http://dup/a", f"<p>version {i}</p>".encode())
+            for i in range(6)] + [("http://other/b", b"<p>x</p>")]
+    mk = lambda parts: {r.shard: bytes(r.warc) for r in warc_shards(
+        spark.createDataFrame(rows, ["url", "html"]).repartition(parts),
+        ts_col=None, shards=2).collect()}
+    assert mk(1) == mk(7)
+
+
 def test_duplicate_header_continuation_dropped():
     """A continuation line following a DUPLICATE header must be dropped
     with the duplicate (first occurrence wins), not folded into the
